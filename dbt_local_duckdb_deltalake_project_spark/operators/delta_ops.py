@@ -209,8 +209,9 @@ def scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Schema evolution: a later append carries a NEW column; reading with
-    # schema merge surfaces it as NULL for pre-evolution files — no
+    # Schema evolution: a later append carries a NEW column; the log
+    # schema (the evolved union) surfaces it as NULL for pre-evolution
+    # files on read — no
     # rewrite of history (the Delta additive-evolution contract). At
     # 100 TB this is why adding a column is O(1), not O(table).
     tbl = DeltaLikeTable(workdir(sf_dir, "delta_evolution"))
@@ -228,7 +229,7 @@ def delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="append",
         merge_schema=True,  # adding a column requires the explicit opt-in
     )
-    return tbl.read(spark, merge_schema=True).select(
+    return tbl.read(spark).select(
         "o_orderkey", "o_totalprice", "channel"
     )
 

@@ -8,9 +8,12 @@ dbt project). Here each model is a Python function
 materializes it:
 
 - ``view``        → ``createOrReplaceTempView`` (logical only)
-- ``table``       → overwrite-write to versioned storage, re-read, register
-- ``incremental`` → high-watermark append (or MERGE when ``unique_key``)
-                    into versioned storage
+- ``table``       → overwrite-write to versioned storage, read the new
+                    version back (a log-only read: file list and schema
+                    come from the Delta log), register
+- ``incremental`` → high-watermark append (or MERGE when ``unique_key``,
+                    whose returned state is registered as is) into
+                    versioned storage
 - ``ephemeral``   → not materialized; DataFrame inlined into consumers
                     (Catalyst sees one fused plan — the CTE analogue)
 
@@ -216,32 +219,25 @@ class ModelGraph:
             df.createOrReplaceTempView(m.name)
             return df
         tbl = DeltaLikeTable(os.path.join(self.storage_root, m.name))
-        if m.materialized == "table":
-            tbl.write(df, mode="overwrite")
-        elif m.materialized == "incremental":
-            try:
-                current = tbl.read(spark)
-                exists = True
-            except Exception:  # noqa: BLE001 — first run, nothing to read
-                exists = False
-            if not exists:
-                tbl.write(df, mode="overwrite")
-            elif m.unique_key:
-                tbl.merge(
-                    spark,
-                    df,
-                    on=m.unique_key,
-                    evolve_schema=(m.on_schema_change == "append_new_columns"),
-                )
-            else:
-                new = df
-                if m.watermark_col:
-                    hw = current.agg(F.max(m.watermark_col)).collect()[0][0]
-                    if hw is not None:
-                        new = df.filter(F.col(m.watermark_col) > F.lit(hw))
-                tbl.write(new, mode="append")
-        else:
+        if m.materialized not in ("table", "incremental"):
             raise ValueError(f"unknown materialization {m.materialized}")
-        out = tbl.read(spark)
+        if m.materialized == "table" or tbl.latest_version < 0:
+            tbl.write(df, mode="overwrite")
+            out = tbl.read(spark)
+        elif m.unique_key:
+            out = tbl.merge(
+                spark,
+                df,
+                on=m.unique_key,
+                evolve_schema=(m.on_schema_change == "append_new_columns"),
+            )
+        else:
+            new = df
+            if m.watermark_col:
+                hw = tbl.read(spark).agg(F.max(m.watermark_col)).collect()[0][0]
+                if hw is not None:
+                    new = df.filter(F.col(m.watermark_col) > F.lit(hw))
+            tbl.write(new, mode="append")
+            out = tbl.read(spark)
         out.createOrReplaceTempView(m.name)
         return out

@@ -20,15 +20,22 @@ Capabilities the stack exercises:
 - DELETE / MERGE upsert (copy-on-write rewrites, like Delta)
 - OPTIMIZE-style compaction and VACUUM of unreachable files
 
+Every operation derives table state from one ``Snapshot`` — the log
+replayed through a version, as Delta's own readers do. A handle keeps its
+latest snapshot and, on each operation, lists ``_delta_log`` and replays
+only the commits newer than it, so commits made through other handles
+are always seen and no operation replays the log twice. Reads take the
+schema from the snapshot's metaData, never from the data files.
+
 Scale notes (100 TB): reads are plain multi-path parquet scans, so column
 pruning / predicate pushdown all still fire; the log is O(#commits)
-driver-side JSON (a real deployment adds checkpoint parquet every N
-commits — same replay semantics), never shipped to executors. Commit =
-atomic rename of the next numbered log file, exactly the spec's
-put-if-absent contract. MERGE shuffles both sides on the key — on a
-cluster you'd bucket the target by the merge key to make re-merges
-shuffle-free; with delta-spark installed the same calls map 1:1 onto
-``DeltaTable`` operations and these tables are readable as real Delta.
+driver-side JSON with a parquet checkpoint every ``CHECKPOINT_INTERVAL``
+commits, never shipped to executors. Commit = atomic rename of the next
+numbered log file, exactly the spec's put-if-absent contract. MERGE
+shuffles both sides on the key — on a cluster you'd bucket the target by
+the merge key to make re-merges shuffle-free; with delta-spark installed
+the same calls map 1:1 onto ``DeltaTable`` operations and these tables
+are readable as real Delta.
 """
 
 from __future__ import annotations
@@ -40,9 +47,12 @@ import shutil
 import struct
 import time
 import uuid
+from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -95,6 +105,7 @@ def _checkpoint_arrow_schema():
                         ("format", pa.struct([("provider", pa.string())])),
                         ("schemaString", pa.string()),
                         ("partitionColumns", pa.list_(pa.string())),
+                        ("configuration", pa.map_(pa.string(), pa.string())),
                         ("createdTime", pa.int64()),
                     ]
                 ),
@@ -182,19 +193,232 @@ def _file_stats(path: str) -> str:
     )
 
 
+def _remove(path: str, now: int) -> dict:
+    return {"remove": {"path": path, "deletionTimestamp": now, "dataChange": True}}
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """The table state at ``version``: the log replayed through it.
+
+    Immutable — ``advance`` returns a new snapshot. Everything an
+    operation needs to know about the table (schema, configuration,
+    constraints, column mapping, generated columns, txn high-water marks,
+    the live file set) is read off one snapshot, so an operation derives
+    table state once."""
+
+    version: int = -1
+    protocol: dict = field(default_factory=lambda: dict(PROTOCOL))
+    metadata: dict | None = None
+    adds: dict[str, dict] = field(default_factory=dict)  # live adds by path
+    txns: dict[str, int] = field(default_factory=dict)  # appId → version
+
+    def advance(self, version: int, actions: list[dict]) -> Snapshot:
+        """The state after applying ``actions`` (commits up to ``version``)."""
+        protocol, metadata = self.protocol, self.metadata
+        adds, txns = dict(self.adds), dict(self.txns)
+        for act in actions:
+            if "add" in act:
+                adds[act["add"]["path"]] = act["add"]
+            elif "remove" in act:
+                adds.pop(act["remove"]["path"], None)
+            elif "metaData" in act:
+                metadata = act["metaData"]
+            elif "txn" in act:
+                t_ = act["txn"]
+                txns[t_["appId"]] = max(
+                    txns.get(t_["appId"], -1), int(t_.get("version", -1))
+                )
+            elif "protocol" in act:
+                protocol = act["protocol"]
+        return Snapshot(version, protocol, metadata, adds, txns)
+
+    @cached_property
+    def fields(self) -> list[dict]:
+        if self.metadata is None:
+            return []
+        return json.loads(self.metadata["schemaString"])["fields"]
+
+    @cached_property
+    def schema(self) -> StructType | None:
+        if self.metadata is None:
+            return None
+        return StructType.fromJson({"type": "struct", "fields": self.fields})
+
+    @property
+    def configuration(self) -> dict:
+        return dict((self.metadata or {}).get("configuration") or {})
+
+    @property
+    def constraints(self) -> dict[str, str]:
+        prefix = "delta.constraints."
+        return {
+            k[len(prefix):]: v
+            for k, v in self.configuration.items()
+            if k.startswith(prefix)
+        }
+
+    @property
+    def generated_columns(self) -> dict[str, str]:
+        return {
+            f["name"]: f["metadata"]["delta.generationExpression"]
+            for f in self.fields
+            if (f.get("metadata") or {}).get("delta.generationExpression")
+        }
+
+    @property
+    def mapping(self) -> list[tuple[str, str]] | None:
+        """[(logical, physical)] when column mapping is active, else None.
+
+        Physical names are what the parquet files carry; logical names
+        are what readers see. The mapping lives in the schemaString's
+        per-field ``delta.columnMapping.physicalName`` metadata, exactly
+        the protocol's name-mapping mode."""
+        if self.configuration.get(_COLUMN_MAPPING_KEY) != "name":
+            return None
+        return [
+            (
+                f["name"],
+                (f.get("metadata") or {}).get(_PHYSICAL_NAME_KEY, f["name"]),
+            )
+            for f in self.fields
+        ]
+
+    @cached_property
+    def read_schema(self) -> StructType:
+        """The parquet read schema: the log schema under the files'
+        physical column names, without field metadata."""
+        phys = dict(self.mapping or [])
+        return StructType(
+            [
+                StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
+                for f in self.schema.fields
+            ]
+        )
+
+
+def _prune(
+    active: list[dict],
+    partition_filter: dict[str, str] | None,
+    stats_filter: dict[str, tuple] | None,
+) -> list[dict]:
+    """The adds whose partitionValues match ``partition_filter`` and
+    whose per-file min/max stats can overlap ``stats_filter``."""
+    if partition_filter:
+        active = [
+            a
+            for a in active
+            if all(
+                a.get("partitionValues", {}).get(k) == v
+                for k, v in partition_filter.items()
+            )
+        ]
+    if not stats_filter:
+        return active
+
+    def comparable(x, y):
+        """Coerce a (file-stat, bound) pair to comparable types.
+
+        Stats land in the log as JSON strings for temporal
+        columns; a lexicographic compare would prune a file whose
+        min is '2000-01-01 00:00:00' against hi='2000-01-01' even
+        though the instants are equal. Parse both sides as ISO
+        timestamps when possible (a bare date parses as its
+        midnight instant); on any parse failure fall back to the
+        raw values, which keeps numeric stats exact."""
+        import datetime as _dt
+
+        def parse(v):
+            if isinstance(v, _dt.datetime):
+                dt = v
+            elif isinstance(v, _dt.date):
+                dt = _dt.datetime(v.year, v.month, v.day)
+            elif isinstance(v, str):
+                dt = _dt.datetime.fromisoformat(v.replace("T", " "))
+            else:
+                raise ValueError
+            if dt.tzinfo is not None:  # aware → naive UTC instant
+                dt = dt.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+            return dt
+        try:
+            return parse(x), parse(y)
+        except (ValueError, TypeError):
+            return x, y
+
+    def overlaps(a: dict) -> bool:
+        raw = a.get("stats")
+        if not raw:
+            return True  # no stats → cannot skip
+        st = json.loads(raw)
+        for col, (lo, hi) in stats_filter.items():
+            fmin = st.get("minValues", {}).get(col)
+            fmax = st.get("maxValues", {}).get(col)
+            if fmin is None or fmax is None:
+                continue
+            if hi is not None:
+                a_, b_ = comparable(fmin, hi)
+                if a_ > b_:
+                    return False
+            if lo is not None:
+                a_, b_ = comparable(fmax, lo)
+                if a_ < b_:
+                    return False
+        return True
+
+    return [a for a in active if overlaps(a)]
+
+
+def _base_path(paths: list[str]) -> str:
+    """basePath for hive partition-column re-materialization.
+
+    A shallow clone's add actions carry ABSOLUTE paths under the SOURCE
+    table's root, so the clone's own root is not an ancestor of them
+    (Spark rejects that basePath outright). Derive the base from the
+    files instead: strip the filename and every trailing ``col=value``
+    partition segment, then take the common ancestor — for an ordinary
+    table this is exactly the table root; for a clone it is the source
+    root; for a clone plus its own appends it is their common ancestor,
+    safe because only ``k=v`` segments below basePath become partition
+    columns."""
+    roots = set()
+    for p in paths:
+        d = os.path.dirname(os.path.abspath(p))
+        while "=" in os.path.basename(d):
+            d = os.path.dirname(d)
+        roots.add(d)
+    return os.path.commonpath(sorted(roots))
+
+
 class DeltaLikeTable:
     def __init__(self, path: str):
         self.path = path
         self._log_dir = os.path.join(path, "_delta_log")
+        self._cache: Snapshot | None = None  # the latest snapshot seen
 
     # -- commit log -------------------------------------------------------
-    def _commit_files(self) -> list[str]:
-        if not os.path.isdir(self._log_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._log_dir)
-            if f.endswith(".json") and not f.startswith(".")
-        )
+    def _commit_path(self, version: int) -> str:
+        return os.path.join(self._log_dir, f"{version:020d}.json")
+
+    def _listing(self) -> tuple[list[int], list[int]]:
+        """(commit versions, checkpoint versions) in ``_delta_log``."""
+        try:
+            names = os.listdir(self._log_dir)
+        except FileNotFoundError:
+            return [], []
+        commits, checkpoints = [], []
+        for name in names:
+            if not name[:20].isdigit():
+                continue
+            if name.endswith(".checkpoint.parquet"):
+                checkpoints.append(int(name[:20]))
+            elif name.endswith(".json"):
+                commits.append(int(name[:20]))
+        return sorted(commits), sorted(checkpoints)
+
+    @property
+    def latest_version(self) -> int:
+        commits, _ = self._listing()
+        return commits[-1] if commits else -1
 
     def _last_checkpoint(self) -> dict | None:
         try:
@@ -203,7 +427,11 @@ class DeltaLikeTable:
         except (OSError, ValueError):
             return None
 
-    def _read_checkpoint(self, version: int) -> list[dict]:
+    def _read_commit(self, version: int) -> list[dict]:
+        with open(self._commit_path(version)) as f:
+            return [json.loads(ln) for ln in f if ln.strip()]
+
+    def _read_checkpoint(self, version: int) -> Snapshot:
         import pyarrow.parquet as pq
 
         path = os.path.join(self._log_dir, f"{version:020d}.checkpoint.parquet")
@@ -216,208 +444,205 @@ class DeltaLikeTable:
                 if kind == "add":
                     val = dict(val)
                     val["partitionValues"] = dict(val.get("partitionValues") or [])
+                elif kind == "metaData":
+                    val = dict(val)
+                    val["configuration"] = dict(val.get("configuration") or [])
                 acts.append({kind: val})
-        return acts
+        return Snapshot().advance(version, acts)
 
-    def _write_checkpoint(self, version: int) -> None:
-        """Compact the log state at ``version`` into
-        ``<v>.checkpoint.parquet`` + ``_last_checkpoint`` (both the
-        protocol's names). The checkpoint holds the REPLAYED state —
-        protocol, latest metaData, live add set — so a reader starts
-        there and only replays newer JSON commits. JSON commit files are
-        kept (history/time-travel before the checkpoint still works);
-        VACUUM owns physical cleanup."""
+    def _write_checkpoint(self, snap: Snapshot) -> None:
+        """Write ``snap`` as ``<v>.checkpoint.parquet`` + ``_last_checkpoint``
+        (both the protocol's names): protocol, latest metaData, the newest
+        txn per appId and the live add set, so a reader starts there and
+        only replays newer JSON commits. JSON commit files are kept
+        (history/time-travel before the checkpoint still works); VACUUM
+        owns physical cleanup."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        acts = self._replay_json(upto=version)
-        protocol = PROTOCOL
-        metadata = None
-        live: dict[str, dict] = {}
-        txns: dict[str, int] = {}
-        for act in acts:
-            if "protocol" in act:
-                protocol = act["protocol"]
-            elif "metaData" in act:
-                metadata = act["metaData"]
-            elif "txn" in act:
-                # the spec: checkpoints carry the newest txn per appId so
-                # idempotent writers stay deduped past checkpointed commits
-                t_ = act["txn"]
-                txns[t_["appId"]] = max(
-                    txns.get(t_["appId"], -1), int(t_.get("version", -1))
-                )
-            elif "add" in act:
-                live[act["add"]["path"]] = act["add"]
-            elif "remove" in act:
-                live.pop(act["remove"]["path"], None)
-        rows: list[dict] = [{"protocol": protocol}, {"metaData": metadata}]
+        meta = snap.metadata
+        if meta is not None:
+            meta = {
+                "id": meta.get("id"),
+                "format": {"provider": meta.get("format", {}).get("provider")},
+                "schemaString": meta.get("schemaString"),
+                "partitionColumns": meta.get("partitionColumns", []),
+                "configuration": list((meta.get("configuration") or {}).items()),
+                "createdTime": meta.get("createdTime"),
+            }
+        rows: list[dict] = [{"protocol": snap.protocol}, {"metaData": meta}]
         rows += [
-            {"txn": {"appId": k, "version": v}} for k, v in sorted(txns.items())
+            {"txn": {"appId": k, "version": v}} for k, v in sorted(snap.txns.items())
         ]
-        rows += [{"add": a} for a in live.values()]
+        rows += [
+            {"add": {**a, "partitionValues": list(
+                (a.get("partitionValues") or {}).items()
+            )}}
+            for a in snap.adds.values()
+        ]
         schema = _checkpoint_arrow_schema()
-        cols: dict[str, list] = {name: [] for name in schema.names}
-        for row in rows:
-            for name in schema.names:
-                val = row.get(name)
-                if name == "add" and val is not None:
-                    val = {**val, "partitionValues": list(
-                        (val.get("partitionValues") or {}).items()
-                    )}
-                if name == "metaData" and val is not None:
-                    val = {
-                        "id": val.get("id"),
-                        "format": {"provider": val.get("format", {}).get("provider")},
-                        "schemaString": val.get("schemaString"),
-                        "partitionColumns": val.get("partitionColumns", []),
-                        "createdTime": val.get("createdTime"),
-                    }
-                cols[name].append(val)
+        cols = {name: [row.get(name) for row in rows] for name in schema.names}
         table = pa.Table.from_pydict(cols, schema=schema)
         cp_path = os.path.join(
-            self._log_dir, f"{version:020d}.checkpoint.parquet"
+            self._log_dir, f"{snap.version:020d}.checkpoint.parquet"
         )
         tmp = cp_path + f".tmp-{uuid.uuid4().hex}"
         pq.write_table(table, tmp)
         os.replace(tmp, cp_path)
         lc_tmp = os.path.join(self._log_dir, f".lc-{uuid.uuid4().hex}")
         with open(lc_tmp, "w") as f:
-            json.dump({"version": version, "size": len(rows)}, f)
+            json.dump({"version": snap.version, "size": len(rows)}, f)
         os.replace(lc_tmp, os.path.join(self._log_dir, _LAST_CHECKPOINT))
 
-    def _replay_json(self, upto: int | None = None, start: int = 0) -> list[dict]:
-        files = self._commit_files()
-        files = files[start : upto + 1 if upto is not None else None]
-        acts: list[dict] = []
-        for fname in files:
-            with open(os.path.join(self._log_dir, fname)) as f:
-                acts.extend(json.loads(ln) for ln in f if ln.strip())
-        return acts
+    def _snapshot(self, as_of: int | None = None) -> Snapshot:
+        """The table state at ``as_of`` (default: latest).
 
-    def _actions(self, upto: int | None = None) -> list[dict]:
-        """All actions of commits 0..upto (default: all), in order.
-
-        Starts from the newest parquet checkpoint at or before ``upto``
-        when one exists — pre-checkpoint JSON commits are never opened —
-        and falls back to full JSON replay otherwise (e.g. time travel to
-        a version older than the checkpoint)."""
-        cp = self._last_checkpoint()
-        if cp is not None and (upto is None or cp["version"] <= upto):
-            try:
-                base = self._read_checkpoint(cp["version"])
-            except OSError:
-                return self._guard_protocol(self._replay_json(upto=upto))
-            return self._guard_protocol(
-                base + self._replay_json(upto=upto, start=cp["version"] + 1)
+        Lists ``_delta_log`` first, so commits made through any handle are
+        seen. Starts from this handle's cached snapshot when it is not
+        newer than the target (commit files are immutable, so it stays
+        valid), else from the newest checkpoint at or before it, else
+        from an empty table, and replays only the JSON commits after that
+        start. PROTOCOL.md reader requirement: a client MUST refuse a
+        table whose protocol demands a reader version above what it
+        implements — silently proceeding returns wrong results once an
+        unsupported feature changes file interpretation."""
+        commits, checkpoints = self._listing()
+        latest = commits[-1] if commits else -1
+        version = latest if as_of is None else as_of
+        if not -1 <= version <= latest:
+            raise ValueError(
+                f"version {as_of} does not exist in {self.path} "
+                f"(latest is {latest})"
             )
-        return self._guard_protocol(self._replay_json(upto=upto))
-
-    def _guard_protocol(self, actions: list[dict]) -> list[dict]:
-        """PROTOCOL.md reader requirement: a client MUST refuse to read a
-        table whose protocol action demands a reader version above what
-        it implements — silently proceeding returns wrong results once
-        an unsupported feature (e.g. deletion vectors at reader v3 in
-        real Delta) changes file interpretation. Checked on every replay
-        so a foreign writer's protocol upgrade mid-log is honored."""
+        snap = self._cache
+        if snap is None or snap.version > version:
+            cp = max((c for c in checkpoints if c <= version), default=None)
+            snap = Snapshot() if cp is None else self._read_checkpoint(cp)
+        if snap.version < version:
+            snap = snap.advance(version, [
+                act
+                for v in range(snap.version + 1, version + 1)
+                for act in self._read_commit(v)
+            ])
         supported = PROTOCOL["minReaderVersion"]
-        for act in actions:
-            p = act.get("protocol")
-            if p and int(p.get("minReaderVersion") or 1) > supported:
-                raise ValueError(
-                    f"table at {self.path} requires minReaderVersion "
-                    f"{p['minReaderVersion']}; this reader supports "
-                    f"{supported} — upgrade the reader, do not guess"
-                )
-        return actions
+        if int(snap.protocol.get("minReaderVersion") or 1) > supported:
+            raise ValueError(
+                f"table at {self.path} requires minReaderVersion "
+                f"{snap.protocol['minReaderVersion']}; this reader supports "
+                f"{supported} — upgrade the reader, do not guess"
+            )
+        if as_of is None and version >= 0:
+            self._cache = snap
+        return snap
 
     def _active_files(self, as_of: int | None = None) -> list[dict]:
-        """Replay add/remove actions → the live ``add`` set at a version."""
-        live: dict[str, dict] = {}
-        for act in self._actions(upto=as_of):
-            if "add" in act:
-                live[act["add"]["path"]] = act["add"]
-            elif "remove" in act:
-                live.pop(act["remove"]["path"], None)
-        return list(live.values())
+        """The live ``add`` set at a version."""
+        return list(self._snapshot(as_of).adds.values())
 
-    def _commit(self, actions: list[dict], operation: str | None = None) -> int:
+    def _commit(
+        self,
+        actions: list[dict],
+        operation: str | None = None,
+        snap: Snapshot | None = None,
+        blind_append: bool = False,
+    ) -> int:
         """Optimistic-concurrency commit (the spec's put-if-absent
         contract): stage the actions to a temp file, then publish with
         ``os.link`` — which FAILS if the target commit number already
         exists (``os.replace`` would silently clobber a concurrent
-        writer's commit). On collision, re-read the log and retry at the
+        writer's commit). On collision, re-list the log and retry at the
         next version, exactly Delta's optimistic retry loop. Object
-        stores swap the hard-link for their native if-none-match put."""
+        stores swap the hard-link for their native if-none-match put.
+
+        ``snap`` is the state the operation read. The commitInfo action
+        carries the commit timestamp (ms) that timestampAsOf resolves
+        against, the operation name DESCRIBE HISTORY reports, the read
+        version, whether the commit is a blind append, and Delta's
+        operationMetrics. Replay ignores it."""
+        if snap is None:
+            snap = self._snapshot()
+        adds = [a["add"] for a in actions if "add" in a]
+        info: dict = {"isBlindAppend": blind_append, "operationMetrics": {
+            "numFiles": len(adds),
+            "numOutputRows": sum(
+                json.loads(a["stats"])["numRecords"] for a in adds if a.get("stats")
+            ),
+            "numOutputBytes": sum(a.get("size") or 0 for a in adds),
+            "numRemovedFiles": sum(1 for a in actions if "remove" in a),
+        }}
+        if operation is not None:
+            info["operation"] = operation
+        if snap.version >= 0:
+            info["readVersion"] = snap.version
         os.makedirs(self._log_dir, exist_ok=True)
         tmp = os.path.join(self._log_dir, f".tmp-{uuid.uuid4().hex}")
+        version = snap.version + 1
         while True:
-            version = len(self._commit_files())
-            staged = actions
-            if not any("commitInfo" in a for a in staged):
-                # The spec's commitInfo action: carries the commit
-                # timestamp (ms) that timestampAsOf resolves against, so
-                # resolution does not depend on filesystem mtimes
-                # surviving copies/restores, plus the operation name
-                # DESCRIBE HISTORY reports. Replay ignores it.
-                ci: dict = {"timestamp": int(time.time() * 1000)}
-                if operation is not None:
-                    ci["operation"] = operation
-                staged = [{"commitInfo": ci}, *staged]
+            staged = [
+                {"commitInfo": {"timestamp": int(time.time() * 1000), **info}},
+                *actions,
+            ]
             if version == 0:
                 staged = [{"protocol": PROTOCOL}, *staged]
             with open(tmp, "w") as f:
                 for act in staged:
                     f.write(json.dumps(act) + "\n")
-            final = os.path.join(self._log_dir, f"{version:020d}.json")
             try:
-                os.link(tmp, final)  # atomic put-if-absent
+                os.link(tmp, self._commit_path(version))  # atomic put-if-absent
+                break
             except FileExistsError:
-                continue  # lost the race — recompute version and retry
+                version = self.latest_version + 1  # lost the race — retry
             finally:
-                if os.path.exists(tmp):
-                    os.remove(tmp)
-            if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-                self._write_checkpoint(version)
-            return version
+                os.remove(tmp)
+        if version == snap.version + 1:
+            committed = self._cache = snap.advance(version, staged)
+        else:
+            committed = self._snapshot(as_of=version)
+        if version > 0 and version % CHECKPOINT_INTERVAL == 0:
+            self._write_checkpoint(committed)
+        return version
 
-    def commit_timestamp(self, version: int) -> int:
-        """Commit timestamp in epoch-ms: the commitInfo action's
-        timestamp when present (written by every commit since r4), else
-        the log file's mtime — the same fallback Delta itself uses for
-        tables whose writers predate in-commit timestamps."""
-        path = os.path.join(self._log_dir, f"{version:020d}.json")
+    def _commit_info(self, version: int) -> dict:
+        """Commit ``version``'s commitInfo action, its ``timestamp``
+        (epoch-ms) falling back to the log file's mtime — the same
+        fallback Delta itself uses for tables whose writers predate
+        in-commit timestamps."""
+        path = self._commit_path(version)
+        info: dict = {}
         with open(path) as f:
             for ln in f:
                 act = json.loads(ln)
                 if "commitInfo" in act:
-                    ts = act["commitInfo"].get("timestamp")
-                    if ts is not None:
-                        return int(ts)
-        return int(os.path.getmtime(path) * 1000)
+                    info = act["commitInfo"]
+                    break
+        if info.get("timestamp") is None:
+            info = {**info, "timestamp": os.path.getmtime(path) * 1000}
+        return {**info, "timestamp": int(info["timestamp"])}
+
+    def commit_timestamp(self, version: int) -> int:
+        """Commit timestamp in epoch-ms (see ``_commit_info``)."""
+        return self._commit_info(version)["timestamp"]
 
     def history(self) -> list[dict]:
         """``DESCRIBE HISTORY`` — one row per commit, newest first (the
-        order Delta presents), from the commitInfo actions alone: O(log)
-        driver work, no data file is opened. Commits written before the
-        operation field existed report the protocol's placeholder."""
+        order Delta presents), from the commitInfo actions alone: each
+        commit file is opened once, no data file is. Rows carry the
+        operation (the protocol's placeholder ``WRITE`` for commits
+        written before the field existed), timestamp, and — where the
+        commit recorded them — readVersion, isBlindAppend and
+        operationMetrics."""
         rows = []
         for v in range(self.latest_version + 1):
-            path = os.path.join(self._log_dir, f"{v:020d}.json")
-            op = None
-            with open(path) as f:
-                for ln in f:
-                    act = json.loads(ln)
-                    if "commitInfo" in act:
-                        op = act["commitInfo"].get("operation")
-                        break
-            rows.append(
-                {
-                    "version": v,
-                    "timestamp": self.commit_timestamp(v),
-                    "operation": op or "WRITE",
-                }
-            )
+            info = self._commit_info(v)
+            row = {
+                "version": v,
+                "timestamp": info["timestamp"],
+                "operation": info.get("operation") or "WRITE",
+            }
+            for key in ("readVersion", "isBlindAppend", "operationMetrics"):
+                if key in info:
+                    row[key] = info[key]
+            rows.append(row)
         rows.reverse()
         return rows
 
@@ -439,10 +664,6 @@ class DeltaLikeTable:
                 f"({self.commit_timestamp(0)}) of {self.path}"
             )
         return resolved
-
-    @property
-    def latest_version(self) -> int:
-        return len(self._commit_files()) - 1
 
     # -- writes -----------------------------------------------------------
     def _stage_data_files(
@@ -507,60 +728,58 @@ class DeltaLikeTable:
     def _metadata_action(
         self,
         df: DataFrame,
-        partition_by: list[str] | None = None,
-        schema_string: str | None = None,
+        partition_by: list[str] | None,
+        snap: Snapshot,
+        append: bool,
     ) -> dict:
-        if schema_string is None:
-            # preserve per-field metadata (generation expressions etc.)
-            # across writes — df.schema alone would drop it
-            sj = json.loads(df.schema.json())
-            prev = self._latest_metadata()
-            if prev is not None:
-                prev_fields = {
-                    f["name"]: f
-                    for f in json.loads(prev["schemaString"])["fields"]
-                }
-                for f in sj["fields"]:
-                    pf = prev_fields.get(f["name"])
-                    if pf and pf.get("metadata"):
-                        f["metadata"] = {
-                            **pf["metadata"],
-                            **(f.get("metadata") or {}),
-                        }
-            schema_string = json.dumps(sj)
+        """The write's metaData action. Its schema is ``df``'s, keeping
+        each existing field's metadata (generation expressions, physical
+        names) — df.schema alone would drop it. An append also keeps
+        every current column, so the log schema is always the evolved
+        union of the live files and readers take it as is. Table
+        configuration (constraints, properties) survives writes — only
+        explicit ALTERs change it, as in Delta."""
+        by_name = {f["name"]: f for f in snap.fields}
+        fields = json.loads(df.schema.json())["fields"]
+        if append:
+            fields = snap.fields + [f for f in fields if f["name"] not in by_name]
+        else:
+            fields = [
+                {**f, "metadata": {
+                    **(by_name[f["name"]].get("metadata") or {}),
+                    **(f.get("metadata") or {}),
+                }} if f["name"] in by_name else f
+                for f in fields
+            ]
         return {
             "metaData": {
                 "id": str(uuid.uuid4()),
                 "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_string,
+                "schemaString": json.dumps({"type": "struct", "fields": fields}),
                 "partitionColumns": partition_by or [],
-                # Table configuration (constraints, properties) survives
-                # writes — only explicit ALTERs change it, as in Delta.
-                "configuration": self._latest_configuration(),
+                "configuration": snap.configuration,
                 "createdTime": int(time.time() * 1000),
             }
         }
 
-    def _latest_configuration(self) -> dict:
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            return {}
-        return dict(metas[-1].get("configuration") or {})
+    def _current_metadata(self) -> tuple[Snapshot, dict]:
+        snap = self._snapshot()
+        if snap.metadata is None:
+            raise ValueError(f"no schema committed yet at {self.path}")
+        return snap, snap.metadata
+
+    def _alter_configuration(self, snap: Snapshot, cfg: dict, operation: str) -> int:
+        meta = {**snap.metadata, "configuration": {**snap.configuration, **cfg}}
+        return self._commit([{"metaData": meta}], operation, snap)
 
     def add_check_constraint(self, name: str, expr_sql: str) -> int:
         """``ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)``: stored
         as ``delta.constraints.<name>`` in the metaData configuration
         (the protocol's representation), enforced by every subsequent
         write. Metadata-only commit — O(1) regardless of table size."""
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            raise ValueError(f"cannot ALTER empty table {self.path}")
-        meta = dict(metas[-1])
-        cfg = dict(meta.get("configuration") or {})
-        cfg[f"delta.constraints.{name}"] = expr_sql
-        meta["configuration"] = cfg
-        return self._commit(
-            [{"metaData": meta}], operation="ADD CONSTRAINT"
+        snap, _ = self._current_metadata()
+        return self._alter_configuration(
+            snap, {f"delta.constraints.{name}": expr_sql}, "ADD CONSTRAINT"
         )
 
     def set_properties(self, props: dict[str, str]) -> int:
@@ -568,37 +787,24 @@ class DeltaLikeTable:
         the metaData configuration — one metadata-only commit, O(1) in
         table size, and (like constraints) the configuration is carried
         forward by every subsequent write."""
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            raise ValueError(f"cannot ALTER empty table {self.path}")
-        meta = dict(metas[-1])
-        cfg = dict(meta.get("configuration") or {})
-        cfg.update({str(k): str(v) for k, v in props.items()})
-        meta["configuration"] = cfg
-        return self._commit(
-            [{"metaData": meta}], operation="SET TBLPROPERTIES"
+        snap, _ = self._current_metadata()
+        return self._alter_configuration(
+            snap, {str(k): str(v) for k, v in props.items()}, "SET TBLPROPERTIES"
         )
 
     def properties(self) -> dict[str, str]:
-        return dict(self._latest_configuration())
+        return self._snapshot().configuration
 
     def check_constraints(self) -> dict[str, str]:
-        prefix = "delta.constraints."
-        return {
-            k[len(prefix):]: v
-            for k, v in self._latest_configuration().items()
-            if k.startswith(prefix)
-        }
+        return self._snapshot().constraints
 
-    def _enforce_constraints(self, df: DataFrame) -> None:
+    def _enforce_constraints(self, df: DataFrame, snap: Snapshot) -> None:
         """CHECK semantics (SQL standard, as Delta enforces them): a row
         violates only when the expression evaluates FALSE — NULL passes.
         The probe is a limit-1 existence scan per constraint pushed into
         the incoming frame's plan, so a clean 100 TB append costs one
         extra pass over the NEW data only, never the table."""
-        from pyspark.sql import functions as F
-
-        for name, expr in self.check_constraints().items():
+        for name, expr in snap.constraints.items():
             bad = df.filter(F.expr(expr).eqNullSafe(F.lit(False))).limit(1)
             if bad.count() > 0:
                 raise ValueError(
@@ -606,45 +812,7 @@ class DeltaLikeTable:
                     f"to {self.path}"
                 )
 
-    def _latest_schema(self):
-        from pyspark.sql.types import StructType
-
-        metas = [a["metaData"] for a in self._actions() if "metaData" in a]
-        if not metas:
-            return None
-        return StructType.fromJson(json.loads(metas[-1]["schemaString"]))
-
     # -- column mapping (metadata-only rename / drop) ----------------------
-    def _latest_metadata(self, as_of: int | None = None) -> dict | None:
-        metas = [
-            a["metaData"] for a in self._actions(upto=as_of) if "metaData" in a
-        ]
-        return metas[-1] if metas else None
-
-    def _mapped_fields(
-        self, as_of: int | None = None
-    ) -> list[tuple[str, str]] | None:
-        """[(logical, physical)] when column mapping is active, else None.
-
-        Physical names are what the parquet files carry; logical names
-        are what readers see. The mapping lives in the schemaString's
-        per-field ``delta.columnMapping.physicalName`` metadata, exactly
-        the protocol's name-mapping mode."""
-        meta = self._latest_metadata(as_of=as_of)
-        if meta is None:
-            return None
-        cfg = meta.get("configuration") or {}
-        if cfg.get(_COLUMN_MAPPING_KEY) != "name":
-            return None
-        sj = json.loads(meta["schemaString"])
-        return [
-            (
-                f["name"],
-                (f.get("metadata") or {}).get(_PHYSICAL_NAME_KEY, f["name"]),
-            )
-            for f in sj["fields"]
-        ]
-
     def _mapping_metadata_action(
         self, meta: dict, fields: list[dict]
     ) -> dict:
@@ -662,7 +830,9 @@ class DeltaLikeTable:
             }
         }
 
-    def _guard_constraint_references(self, col: str, action: str) -> None:
+    def _guard_constraint_references(
+        self, col: str, action: str, snap: Snapshot
+    ) -> None:
         """Refuse ALTERs on a column a CHECK constraint or a generated
         column's expression references (the stored expressions name the
         LOGICAL column; renaming or dropping it would silently break
@@ -672,13 +842,13 @@ class DeltaLikeTable:
         references from OTHER columns' expressions block the ALTER."""
         import re
 
-        for name, expr in self.check_constraints().items():
+        for name, expr in snap.constraints.items():
             if re.search(rf"\b{re.escape(col)}\b", expr):
                 raise ValueError(
                     f"cannot {action} column {col!r}: referenced by CHECK "
                     f"constraint {name!r} ({expr}); DROP CONSTRAINT first"
                 )
-        for gname, expr in self._generated_columns().items():
+        for gname, expr in snap.generated_columns.items():
             if gname == col:
                 continue
             if re.search(rf"\b{re.escape(col)}\b", expr):
@@ -699,9 +869,7 @@ class DeltaLikeTable:
         value is rejected atomically), so derived partitioning/bucketing
         keys stay trustworthy however many writers feed the table.
         Metadata-only commit."""
-        meta = self._latest_metadata()
-        if meta is None:
-            raise ValueError(f"no schema committed yet at {self.path}")
+        snap, meta = self._current_metadata()
         sj = json.loads(meta["schemaString"])
         if name in [f["name"] for f in sj["fields"]]:
             raise ValueError(f"column {name!r} already exists")
@@ -715,21 +883,12 @@ class DeltaLikeTable:
         )
         return self._commit(
             [{"metaData": {**meta, "schemaString": json.dumps(sj)}}],
-            operation="ADD COLUMN",
+            "ADD COLUMN",
+            snap,
         )
 
-    def _generated_columns(self) -> dict[str, str]:
-        meta = self._latest_metadata()
-        if meta is None:
-            return {}
-        return {
-            f["name"]: f["metadata"]["delta.generationExpression"]
-            for f in json.loads(meta["schemaString"])["fields"]
-            if (f.get("metadata") or {}).get("delta.generationExpression")
-        }
-
-    def _apply_generated_columns(self, df: DataFrame) -> DataFrame:
-        for name, expr in self._generated_columns().items():
+    def _apply_generated_columns(self, df: DataFrame, snap: Snapshot) -> DataFrame:
+        for name, expr in snap.generated_columns.items():
             if name not in df.columns:
                 df = df.withColumn(name, F.expr(expr))
             else:
@@ -752,10 +911,8 @@ class DeltaLikeTable:
         schemaString changes, so renaming a column of a 100 TB table is
         one O(1) metaData commit, no file touched. Readers re-alias at
         scan time (a projection Catalyst collapses into the scan)."""
-        self._guard_constraint_references(old, "rename")
-        meta = self._latest_metadata()
-        if meta is None:
-            raise ValueError(f"no schema committed yet at {self.path}")
+        snap, meta = self._current_metadata()
+        self._guard_constraint_references(old, "rename", snap)
         fields = json.loads(meta["schemaString"])["fields"]
         names = [f["name"] for f in fields]
         if old not in names:
@@ -768,8 +925,7 @@ class DeltaLikeTable:
             if f["name"] == old:
                 f["name"] = new
         return self._commit(
-            [self._mapping_metadata_action(meta, fields)],
-            operation="RENAME COLUMN",
+            [self._mapping_metadata_action(meta, fields)], "RENAME COLUMN", snap
         )
 
     def drop_column(self, name: str) -> int:
@@ -777,10 +933,8 @@ class DeltaLikeTable:
         the field leaves the logical schema; the physical column stays in
         the files (unreachable, reclaimed at the next rewrite), which is
         how Delta drops a column from a 100 TB table instantly."""
-        self._guard_constraint_references(name, "drop")
-        meta = self._latest_metadata()
-        if meta is None:
-            raise ValueError(f"no schema committed yet at {self.path}")
+        snap, meta = self._current_metadata()
+        self._guard_constraint_references(name, "drop", snap)
         fields = json.loads(meta["schemaString"])["fields"]
         if name not in [f["name"] for f in fields]:
             raise ValueError(f"no column {name!r}")
@@ -791,19 +945,19 @@ class DeltaLikeTable:
             if f["name"] != name:
                 kept.append(f)
         return self._commit(
-            [self._mapping_metadata_action(meta, kept)],
-            operation="DROP COLUMN",
+            [self._mapping_metadata_action(meta, kept)], "DROP COLUMN", snap
         )
 
-    def _enforce_schema(self, df: DataFrame, merge_schema: bool) -> None:
+    def _enforce_schema(
+        self, df: DataFrame, merge_schema: bool, snap: Snapshot
+    ) -> None:
         """Delta's schema-on-write: an append may not change a column's
         type, and may only ADD columns when schema merging is opted in
         (``mergeSchema``). Missing nullable columns are allowed (they
         read as NULL). Overwrites replace the schema freely."""
-        current = self._latest_schema()
-        if current is None:
+        if snap.schema is None:
             return
-        cur = {f.name: f.dataType for f in current.fields}
+        cur = {f.name: f.dataType for f in snap.schema.fields}
         inc = {f.name: f.dataType for f in df.schema.fields}
         mismatched = sorted(
             n for n in cur.keys() & inc.keys() if cur[n] != inc[n]
@@ -827,12 +981,7 @@ class DeltaLikeTable:
         each commit with (appId, version) and skips any batch at or
         below the stored high-water mark — exactly-once sink semantics
         for streaming/retry loops without an external ledger."""
-        v = -1
-        for act in self._actions():
-            txn = act.get("txn")
-            if txn and txn.get("appId") == app_id:
-                v = max(v, int(txn.get("version", -1)))
-        return v
+        return self._snapshot().txns.get(app_id, -1)
 
     def write_idempotent(
         self,
@@ -872,37 +1021,25 @@ class DeltaLikeTable:
     ) -> int:
         """Commit ``df`` as a new version; returns the version number."""
         assert mode in ("append", "overwrite")
-        if operation is None:
-            operation = "WRITE" if mode == "append" else "OVERWRITE"
-        df = self._apply_generated_columns(df)
-        if mode == "append":
-            self._enforce_schema(df, merge_schema)
-        if self.check_constraints():
-            self._enforce_constraints(df)
+        append = mode == "append"
+        snap = self._snapshot()
+        df = self._apply_generated_columns(df, snap)
+        if append:
+            self._enforce_schema(df, merge_schema, snap)
+        self._enforce_constraints(df, snap)
         os.makedirs(self.path, exist_ok=True)
-        actions: list[dict] = []
-        if mode == "overwrite":
-            now = int(time.time() * 1000)
-            actions.extend(
-                {
-                    "remove": {
-                        "path": a["path"],
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                    }
-                }
-                for a in self._active_files()
-            )
-        staged_df, schema_string = self._physicalize(df, mode)
-        actions.extend(self._stage_data_files(staged_df, partition_by))
-        actions.append(
-            self._metadata_action(
-                df, partition_by, schema_string=schema_string
-            )
-        )
+        now = int(time.time() * 1000)
+        actions = [] if append else [_remove(p, now) for p in snap.adds]
+        actions += self._stage_data_files(self._physicalize(df, snap), partition_by)
+        actions.append(self._metadata_action(df, partition_by, snap, append))
         if txn is not None:
             actions.append({"txn": txn})
-        return self._commit(actions, operation=operation)
+        return self._commit(
+            actions,
+            operation or ("WRITE" if append else "OVERWRITE"),
+            snap,
+            blind_append=append,
+        )
 
     def write_dynamic_partition_overwrite(
         self,
@@ -919,59 +1056,32 @@ class DeltaLikeTable:
         beyond the O(live add actions) log walk — at 100 TB a one-day
         backfill commits O(that day's files), never O(table). The
         remove+add pair is one commit, so readers never see a gap."""
-        df = self._apply_generated_columns(df)
-        self._enforce_schema(df, False)
-        if self.check_constraints():
-            self._enforce_constraints(df)
-        staged_df, schema_string = self._physicalize(df, "append")
-        adds = self._stage_data_files(staged_df, partition_by)
+        snap = self._snapshot()
+        df = self._apply_generated_columns(df, snap)
+        self._enforce_schema(df, False, snap)
+        self._enforce_constraints(df, snap)
+        adds = self._stage_data_files(self._physicalize(df, snap), partition_by)
         touched = {
             tuple(sorted(a["add"]["partitionValues"].items())) for a in adds
         }
         now = int(time.time() * 1000)
         actions: list[dict] = [
-            {
-                "remove": {
-                    "path": a["path"],
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-            }
-            for a in self._active_files()
+            _remove(p, now)
+            for p, a in snap.adds.items()
             if tuple(sorted((a.get("partitionValues") or {}).items()))
             in touched
         ]
         actions.extend(adds)
-        actions.append(
-            self._metadata_action(
-                df, partition_by, schema_string=schema_string
-            )
-        )
-        return self._commit(actions, operation=operation)
+        actions.append(self._metadata_action(df, partition_by, snap, True))
+        return self._commit(actions, operation, snap)
 
-    def _physicalize(self, df: DataFrame, mode: str):
+    def _physicalize(self, df: DataFrame, snap: Snapshot) -> DataFrame:
         """Under column mapping, writers receive LOGICAL names but files
-        must carry PHYSICAL names (so old files and new files agree).
-        Returns (df-with-physical-names, mapping-aware schemaString), or
-        (df, None) when mapping is off."""
-        mapping = self._mapped_fields()
-        if not mapping:
-            return df, None
-        phys = dict(mapping)
-        staged = df.select(
-            [F.col(c).alias(phys.get(c, c)) for c in df.columns]
-        )
-        meta = self._latest_metadata()
-        sj = json.loads(meta["schemaString"])
-        by_name = {f["name"]: f for f in sj["fields"]}
-        df_fields = json.loads(df.schema.json())["fields"]
-        if mode == "overwrite":
-            fields = [by_name.get(f["name"], f) for f in df_fields]
-        else:  # append keeps the full logical schema, adds evolved cols
-            fields = sj["fields"] + [
-                f for f in df_fields if f["name"] not in by_name
-            ]
-        return staged, json.dumps({**sj, "fields": fields})
+        must carry PHYSICAL names (so old files and new files agree)."""
+        phys = dict(snap.mapping or [])
+        if not phys:
+            return df
+        return df.select([F.col(c).alias(phys.get(c, c)) for c in df.columns])
 
     # -- reads ------------------------------------------------------------
     def live_files(
@@ -988,84 +1098,22 @@ class DeltaLikeTable:
         is the file-scan cost of a predicate under the current layout,
         which is how OPTIMIZE ZORDER's benefit is measured at 100 TB
         without touching data."""
-        active = self._active_files(as_of=as_of)
-        if partition_filter:
-            active = [
-                a
-                for a in active
-                if all(
-                    a.get("partitionValues", {}).get(k) == v
-                    for k, v in partition_filter.items()
-                )
-            ]
-        if not stats_filter:
-            return active
-
-        def comparable(x, y):
-            """Coerce a (file-stat, bound) pair to comparable types.
-
-            Stats land in the log as JSON strings for temporal
-            columns; a lexicographic compare would prune a file whose
-            min is '2000-01-01 00:00:00' against hi='2000-01-01' even
-            though the instants are equal. Parse both sides as ISO
-            timestamps when possible (a bare date parses as its
-            midnight instant); on any parse failure fall back to the
-            raw values, which keeps numeric stats exact."""
-            import datetime as _dt
-
-            def parse(v):
-                if isinstance(v, _dt.datetime):
-                    dt = v
-                elif isinstance(v, _dt.date):
-                    dt = _dt.datetime(v.year, v.month, v.day)
-                elif isinstance(v, str):
-                    dt = _dt.datetime.fromisoformat(v.replace("T", " "))
-                else:
-                    raise ValueError
-                if dt.tzinfo is not None:  # aware → naive UTC instant
-                    dt = dt.astimezone(_dt.timezone.utc).replace(
-                        tzinfo=None
-                    )
-                return dt
-            try:
-                return parse(x), parse(y)
-            except (ValueError, TypeError):
-                return x, y
-
-        def overlaps(a: dict) -> bool:
-            raw = a.get("stats")
-            if not raw:
-                return True  # no stats → cannot skip
-            st = json.loads(raw)
-            for col, (lo, hi) in stats_filter.items():
-                fmin = st.get("minValues", {}).get(col)
-                fmax = st.get("maxValues", {}).get(col)
-                if fmin is None or fmax is None:
-                    continue
-                if hi is not None:
-                    a_, b_ = comparable(fmin, hi)
-                    if a_ > b_:
-                        return False
-                if lo is not None:
-                    a_, b_ = comparable(fmax, lo)
-                    if a_ < b_:
-                        return False
-            return True
-
-        return [a for a in active if overlaps(a)]
+        return _prune(self._active_files(as_of), partition_filter, stats_filter)
 
     def read(
         self,
         spark: SparkSession,
         as_of: int | None = None,
-        merge_schema: bool = False,
         partition_filter: dict[str, str] | None = None,
         stats_filter: dict[str, tuple] | None = None,
     ) -> DataFrame:
-        """Table state at version ``as_of`` (default: latest), by action
-        replay. ``merge_schema`` unions schemas across live files (Delta
-        schema evolution: columns added by later appends surface as NULL
-        for earlier files).
+        """Table state at version ``as_of`` (default: latest), from one
+        log snapshot: its live adds are the files, and its metaData
+        schema — the evolved union every write keeps — is handed to the
+        parquet reader, so no footer is opened and no Spark job runs to
+        infer a schema. Columns added by later writes read as NULL for
+        earlier files (Delta schema evolution). The protocol requires a
+        metaData action, so a log without one is an error.
 
         ``partition_filter`` ({col: value}) prunes on the log's
         ``partitionValues`` metadata BEFORE any file is listed or opened
@@ -1080,65 +1128,31 @@ class DeltaLikeTable:
         kept, and the caller still applies the row-level filter; the
         win is unopened files, which on a date-sorted 100 TB table is
         most of them."""
-        if not self._commit_files():
+        snap = self._snapshot(as_of)
+        if snap.version < 0:
             raise ValueError(f"empty table at {self.path}")
-        unpruned = self._active_files(as_of=as_of)
-        partitioned = any(a.get("partitionValues") for a in unpruned)
-        active = self.live_files(
-            as_of=as_of,
-            partition_filter=partition_filter,
-            stats_filter=stats_filter,
-        )
-
-        def base_path(paths: list[str]) -> str:
-            """basePath for hive partition-column re-materialization.
-
-            A shallow clone's add actions carry ABSOLUTE paths under the
-            SOURCE table's root, so the clone's own root is not an
-            ancestor of them (Spark rejects that basePath outright).
-            Derive the base from the files instead: strip the filename
-            and every trailing ``col=value`` partition segment, then take
-            the common ancestor — for an ordinary table this is exactly
-            the table root; for a clone it is the source root; for a
-            clone plus its own appends it is their common ancestor, safe
-            because only ``k=v`` segments below basePath become
-            partition columns."""
-            roots = set()
-            for p in paths:
-                d = os.path.dirname(os.path.abspath(p))
-                while "=" in os.path.basename(d):
-                    d = os.path.dirname(d)
-                roots.add(d)
-            return os.path.commonpath(sorted(roots)) if roots else self.path
-
-        files = [os.path.join(self.path, a["path"]) for a in active]
-        if not files:
-            if unpruned:
-                # every file pruned away — an EMPTY relation with the
-                # table schema, not an error (a filter can match nothing)
-                first = os.path.join(self.path, unpruned[0]["path"])
-                reader = spark.read
-                if partitioned:
-                    reader = reader.option("basePath", base_path([first]))
-                return reader.parquet(first).limit(0)
+        if snap.metadata is None:
+            raise ValueError(f"no metaData action in the log of {self.path}")
+        unpruned = list(snap.adds.values())
+        if not unpruned:
             raise ValueError(f"no live files at version {as_of} in {self.path}")
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        if partitioned:
-            reader = reader.option("basePath", base_path(files))
+        active = _prune(unpruned, partition_filter, stats_filter)
+        # every file pruned away: read one for an EMPTY relation with the
+        # table schema, not an error (a filter can match nothing)
+        files = [os.path.join(self.path, a["path"]) for a in active or unpruned[:1]]
+        reader = spark.read.schema(snap.read_schema)
+        if any(a.get("partitionValues") for a in unpruned):
+            reader = reader.option("basePath", _base_path(files))
         df = reader.parquet(*files)
+        if not active:
+            df = df.limit(0)
         dv_adds = [a for a in active if a.get("deletionVector")]
         if dv_adds:
             df = self._apply_deletion_vectors(spark, df, dv_adds)
-        mapping = self._mapped_fields(as_of=as_of)
-        if mapping:
-            # physical→logical re-alias (and dropped-column subset): a
-            # projection Catalyst collapses into the scan — column
-            # pruning still reaches the parquet reader
-            df = df.select(
-                [F.col(p).alias(l) for l, p in mapping if p in df.columns]
-            )
+        if snap.mapping:
+            # physical→logical re-alias: a projection Catalyst collapses
+            # into the scan — column pruning still reaches the parquet reader
+            df = df.select([F.col(p).alias(l) for l, p in snap.mapping])
         return df
 
     def _dv_file_uri(self, add: dict) -> str:
@@ -1224,30 +1238,25 @@ class DeltaLikeTable:
         Partitioned tables use ``delete`` (hive-materialized partition
         columns are not in the physical file, so the predicate could not
         be evaluated against raw per-file reads uniformly)."""
-        active = self._active_files()
+        snap = self._snapshot()
+        active = list(snap.adds.values())
         if any(a.get("partitionValues") for a in active):
             raise ValueError(
                 "DV delete on partitioned tables is not supported; "
                 "use delete() (copy-on-write)"
             )
         by_uri = {self._dv_file_uri(a): a for a in active}
-        files = [
-            os.path.join(self.path, a["path"])
-            if not os.path.isabs(a["path"])
-            else a["path"]
-            for a in active
-        ]
+        files = [os.path.join(self.path, a["path"]) for a in active]
         base = (
-            spark.read.parquet(*files)
+            spark.read.schema(snap.read_schema).parquet(*files)
             .withColumn("_fp", F.col("_metadata.file_path"))
             .withColumn("_ri", F.col("_metadata.row_index"))
         )
-        mapping = self._mapped_fields()
-        if mapping:
+        if snap.mapping:
             # the raw scan carries PHYSICAL names; the caller's predicate
             # speaks LOGICAL — re-alias before evaluating it
             base = base.select(
-                [F.col(p).alias(l) for l, p in mapping if p in base.columns]
+                [F.col(p).alias(l) for l, p in snap.mapping]
                 + [F.col("_fp"), F.col("_ri")]
             )
         # Rows already masked by an existing DV may re-match the
@@ -1298,19 +1307,11 @@ class DeltaLikeTable:
                     "sizeInBytes": len(payload),
                     "cardinality": len(idxs),
                 }
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                    }
-                }
-            )
+            actions.append(_remove(add["path"], now))
             actions.append({"add": {**add, "deletionVector": desc}})
         if not actions:
-            return self.latest_version
-        return self._commit(actions, operation="DELETE")
+            return snap.version
+        return self._commit(actions, "DELETE", snap)
 
     def restore(self, version: int) -> int:
         """``RESTORE TABLE ... TO VERSION AS OF version``: commit a new
@@ -1320,20 +1321,13 @@ class DeltaLikeTable:
         work, exactly Delta's RESTORE). The restore is itself a new
         commit: history stays intact and time-travelable, and restoring
         past a VACUUM fails on read just as in Delta (the old files are
-        physically gone)."""
-        target = {a["path"]: a for a in self._active_files(as_of=version)}
-        current = {a["path"]: a for a in self._active_files()}
+        physically gone). The version's metaData is restored with its
+        files, so the log schema describes them."""
+        snap, old = self._snapshot(), self._snapshot(as_of=version)
+        target, current = old.adds, snap.adds
         now = int(time.time() * 1000)
         actions: list[dict] = [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-            }
-            for p in current
-            if p not in target
+            _remove(p, now) for p in current if p not in target
         ]
         def _canon(a: dict) -> dict:
             # drop null-valued keys (a checkpoint round trip materializes
@@ -1348,7 +1342,9 @@ class DeltaLikeTable:
             for p, add in target.items()
             if p not in current or _canon(current[p]) != _canon(add)
         )
-        return self._commit(actions, operation="RESTORE")
+        if old.metadata is not None and old.metadata != snap.metadata:
+            actions.append({"metaData": old.metadata})
+        return self._commit(actions, "RESTORE", snap)
 
     def clone_to(self, target_path: str, as_of: int | None = None) -> "DeltaLikeTable":
         """SHALLOW CLONE: a new table whose first commit re-ADDs the
@@ -1362,8 +1358,9 @@ class DeltaLikeTable:
         root."""
         clone = DeltaLikeTable(target_path)
         os.makedirs(target_path, exist_ok=True)
+        snap = self._snapshot(as_of)
         actions: list[dict] = []
-        for a in self._active_files(as_of=as_of):
+        for a in snap.adds.values():
             src = os.path.join(self.path, a["path"])
             add = {**a, "path": os.path.abspath(src)}
             dv = a.get("deletionVector")
@@ -1380,10 +1377,9 @@ class DeltaLikeTable:
                     ),
                 }
             actions.append({"add": add})
-        metas = [m for m in self._actions(upto=as_of) if "metaData" in m]
-        if metas:
-            actions.append(metas[-1])
-        clone._commit(actions, operation="CLONE")
+        if snap.metadata is not None:
+            actions.append({"metaData": snap.metadata})
+        clone._commit(actions, "CLONE")
         return clone
 
     # -- maintenance ------------------------------------------------------
@@ -1427,8 +1423,9 @@ class DeltaLikeTable:
         cutoff = (
             int(time.time() * 1000) if now_ms is None else now_ms
         ) - retention_ms
-        active = self._active_files()
-        live = {a["path"] for a in active}
+        snap = self._snapshot()
+        active = snap.adds.values()
+        live = set(snap.adds)
         # DV sidecars the CURRENT snapshot still resolves — never touched
         live_dv = {
             a["deletionVector"]["pathOrInlineDv"]
@@ -1444,47 +1441,44 @@ class DeltaLikeTable:
         # without this tracking, since no remove action ever names it.
         pending_dv: dict[str, str] = {}
         dv_orphaned: dict[str, tuple[int, int]] = {}
-        for i, fname in enumerate(self._commit_files()):
-            fpath = os.path.join(self._log_dir, fname)
+        for i in range(snap.version + 1):
             # Per-commit timestamp: commitInfo (first action since r4)
             # overrides below; pre-r4/foreign commits without one fall
             # back to the file's mtime (same rule as commit_timestamp)
             # instead of carrying a stale value across commits — a
             # superseded sidecar must be gated on ITS commit's clock or
             # it can be reclaimed before its retention window elapses.
-            commit_ts = int(os.path.getmtime(fpath) * 1000)
-            with open(fpath) as f:
-                for ln in f:
-                    act = json.loads(ln)
-                    if "commitInfo" in act:
-                        commit_ts = int(
-                            act["commitInfo"].get("timestamp") or 0
-                        )
-                    elif "add" in act:
-                        a = act["add"]
-                        added_at.setdefault(a["path"], i)
-                        dv = a.get("deletionVector") or {}
-                        side = (
-                            dv.get("pathOrInlineDv")
-                            if dv.get("storageType") == "p"
-                            else None
-                        )
-                        old_side = pending_dv.get(a["path"])
-                        if old_side and old_side != side:
-                            # superseded without a remove (RESTORE path):
-                            # gate on the superseding commit's timestamp
-                            dv_orphaned[old_side] = (commit_ts, i)
-                        if side:
-                            pending_dv[a["path"]] = side
-                        else:
-                            pending_dv.pop(a["path"], None)
-                    elif "remove" in act:
-                        r = act["remove"]
-                        ts = int(r.get("deletionTimestamp") or 0)
-                        removed_ts[r["path"]] = ts
-                        old_side = pending_dv.pop(r["path"], None)
-                        if old_side:
-                            dv_orphaned[old_side] = (ts, i)
+            commit_ts = int(os.path.getmtime(self._commit_path(i)) * 1000)
+            for act in self._read_commit(i):
+                if "commitInfo" in act:
+                    commit_ts = int(
+                        act["commitInfo"].get("timestamp") or 0
+                    )
+                elif "add" in act:
+                    a = act["add"]
+                    added_at.setdefault(a["path"], i)
+                    dv = a.get("deletionVector") or {}
+                    side = (
+                        dv.get("pathOrInlineDv")
+                        if dv.get("storageType") == "p"
+                        else None
+                    )
+                    old_side = pending_dv.get(a["path"])
+                    if old_side and old_side != side:
+                        # superseded without a remove (RESTORE path):
+                        # gate on the superseding commit's timestamp
+                        dv_orphaned[old_side] = (commit_ts, i)
+                    if side:
+                        pending_dv[a["path"]] = side
+                    else:
+                        pending_dv.pop(a["path"], None)
+                elif "remove" in act:
+                    r = act["remove"]
+                    ts = int(r.get("deletionTimestamp") or 0)
+                    removed_ts[r["path"]] = ts
+                    old_side = pending_dv.pop(r["path"], None)
+                    if old_side:
+                        dv_orphaned[old_side] = (ts, i)
         reclaimed: set[int] = set()
         root = os.path.abspath(self.path)
 

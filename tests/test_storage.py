@@ -389,14 +389,14 @@ def test_append_schema_enforcement(spark, tbl):
     widened = spark.createDataFrame([(2, "b", "x")], "k int, v string, w string")
     with pytest.raises(ValueError, match="merge_schema"):
         tbl.write(widened, mode="append")
-    # with the opt-in → lands; merged read surfaces NULL for old files
+    # with the opt-in → lands; the read surfaces NULL for old files
     tbl.write(widened, mode="append", merge_schema=True)
-    got = {r.k: r.w for r in tbl.read(spark, merge_schema=True).collect()}
+    got = {r.k: r.w for r in tbl.read(spark).collect()}
     assert got == {1: None, 2: "x"}
     # missing (nullable) column is fine, like Delta
     tbl.write(spark.createDataFrame([(3,)], "k int"), mode="append")
     assert sorted(
-        r.k for r in tbl.read(spark, merge_schema=True).collect()
+        r.k for r in tbl.read(spark).collect()
     ) == [1, 2, 3]
 
 
@@ -848,7 +848,7 @@ def test_generated_column_computed_and_validated(spark, tbl):
     assert tbl.latest_version == v
     assert sorted(r.k for r in tbl.read(spark).collect()) == [1, 2, 3]
     # the generation expression survives unrelated writes
-    assert tbl._generated_columns() == {"v2": "v * 2"}
+    assert tbl._snapshot().generated_columns == {"v2": "v * 2"}
 
 
 def test_vacuum_reclaims_orphaned_dv_sidecar(spark, tbl):
@@ -964,3 +964,209 @@ def test_dynamic_partition_overwrite_new_partition_is_pure_append(
     after = {a["path"] for a in tbl._active_files()}
     assert before <= after  # nothing removed
     assert tbl.read(spark).count() == 2
+
+
+# -- one log snapshot per operation ------------------------------------------
+
+
+def test_history_reports_commit_metrics(spark, tbl, monkeypatch):
+    # every commitInfo records the version it read, whether it is a blind
+    # append, and Delta's operationMetrics; history() returns them and
+    # opens each commit file once
+    import os
+
+    from dbt_local_duckdb_deltalake_project_spark.sources import deltalike
+
+    tbl.write(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), mode="overwrite")
+    tbl.write(_df(spark, [(3, "c")]).coalesce(1), mode="append")
+    tbl.merge(spark, _df(spark, [(1, "z")]), on="k")
+    merged_bytes = sum(a["size"] for a in tbl.live_files())
+    merged_files = len(tbl.live_files())
+    tbl.add_check_constraint("pos", "k > 0")
+    opened = []
+    monkeypatch.setattr(
+        deltalike, "open",
+        lambda p, *a, **k: opened.append(p) or open(p, *a, **k),
+        raising=False,
+    )
+    hist = {h["version"]: h for h in tbl.history()}
+    assert sorted(opened) == [tbl._commit_path(v) for v in range(4)]
+    assert "readVersion" not in hist[0]
+    assert [hist[v]["readVersion"] for v in (1, 2, 3)] == [0, 1, 2]
+    assert [hist[v]["isBlindAppend"] for v in range(4)] == [
+        False, True, False, False,
+    ]
+    m = {v: hist[v]["operationMetrics"] for v in hist}
+    assert m[0]["numFiles"] == 1 and m[0]["numOutputRows"] == 2
+    assert m[0]["numRemovedFiles"] == 0
+    assert m[0]["numOutputBytes"] == os.path.getsize(
+        os.path.join(tbl.path, tbl.live_files(as_of=0)[0]["path"])
+    )
+    assert m[1]["numFiles"] == 1 and m[1]["numOutputRows"] == 1
+    assert m[2]["numOutputRows"] == 3 and m[2]["numRemovedFiles"] == 2
+    assert m[2]["numFiles"] == merged_files
+    assert m[2]["numOutputBytes"] == merged_bytes
+    assert m[3] == {
+        "numFiles": 0, "numOutputRows": 0, "numOutputBytes": 0,
+        "numRemovedFiles": 0,
+    }
+
+
+def test_checkpoint_written_from_snapshot_not_full_replay(spark, tbl):
+    # a checkpoint is the post-commit snapshot: it never re-reads commits
+    # an earlier checkpoint already covers, so a damaged pre-checkpoint
+    # commit cannot stop the next one
+    import os
+
+    from dbt_local_duckdb_deltalake_project_spark.sources.deltalike import (
+        CHECKPOINT_INTERVAL,
+    )
+
+    tbl.write(_df(spark, [(0, "x")]), mode="overwrite")
+    for i in range(1, CHECKPOINT_INTERVAL + 2):
+        tbl.write(_df(spark, [(i, "x")]), mode="append")
+    with open(os.path.join(tbl._log_dir, f"{3:020d}.json"), "w") as f:
+        f.write("NOT JSON\n")
+    for i in range(CHECKPOINT_INTERVAL + 2, 2 * CHECKPOINT_INTERVAL + 1):
+        tbl.write(_df(spark, [(i, "x")]), mode="append")
+    assert tbl.latest_version == 2 * CHECKPOINT_INTERVAL
+    assert os.path.exists(os.path.join(
+        tbl._log_dir, f"{2 * CHECKPOINT_INTERVAL:020d}.checkpoint.parquet"
+    ))
+    assert tbl._last_checkpoint()["version"] == 2 * CHECKPOINT_INTERVAL
+    expect = list(range(2 * CHECKPOINT_INTERVAL + 1))
+    assert sorted(r.k for r in tbl.read(spark).collect()) == expect
+    fresh = DeltaLikeTable(tbl.path)
+    assert sorted(r.k for r in fresh.read(spark).collect()) == expect
+
+
+def _jobs_during(spark, fn):
+    """(fn(), ids of the Spark jobs started while fn ran)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, barrier = f"t-{uuid.uuid4().hex}", f"t-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "under test")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(barrier, "barrier")
+    # the status store sees jobs in start order: once the barrier job is
+    # visible, every job fn started is too
+    spark.range(1).count()
+    deadline = time.time() + 30
+    while not sc.statusTracker().getJobIdsForGroup(barrier):
+        assert time.time() < deadline
+        time.sleep(0.05)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _read_case(spark, tbl, case):
+    """Build ``case``'s table; return (read thunk, expected rows)."""
+    if case == "partitioned":
+        df = spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "a")], "k int, pt string"
+        )
+        tbl.write(df, mode="overwrite", partition_by=["pt"])
+        return lambda: tbl.read(spark), [(1, "a"), (2, "b"), (3, "a")]
+    tbl.write(_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
+    if case == "plain":
+        tbl.write(_df(spark, [(3, "c")]), mode="append")
+        return lambda: tbl.read(spark), [(1, "a"), (2, "b"), (3, "c")]
+    if case == "column_mapped":
+        tbl.rename_column("v", "value")
+        tbl.write(
+            spark.createDataFrame([(3, "c")], "k int, value string"),
+            mode="append",
+        )
+        return lambda: tbl.read(spark), [(1, "a"), (2, "b"), (3, "c")]
+    if case == "deletion_vectors":
+        tbl.delete_with_dv(spark, F.col("k") == 2)
+        return lambda: tbl.read(spark), [(1, "a")]
+    if case == "as_of":
+        tbl.write(_df(spark, [(9, "z")]), mode="overwrite")
+        return lambda: tbl.read(spark, as_of=0), [(1, "a"), (2, "b")]
+    assert case == "merge_schema"
+    tbl.write(
+        spark.createDataFrame([(3, "c", "x")], "k int, v string, w string"),
+        mode="append", merge_schema=True,
+    )
+    return lambda: tbl.read(spark), [
+        (1, "a", None), (2, "b", None), (3, "c", "x"),
+    ]
+
+
+@pytest.mark.parametrize("case", [
+    "plain", "partitioned", "column_mapped", "deletion_vectors", "as_of",
+    "merge_schema",
+])
+def test_read_starts_no_spark_job(spark, tbl, case):
+    # the schema comes from the log's metaData: no footer-inference job
+    read, expect = _read_case(spark, tbl, case)
+    df, jobs = _jobs_during(spark, read)
+    assert jobs == []
+    assert sorted(tuple(r) for r in df.collect()) == expect
+
+
+def test_model_graph_reads_each_table_at_most_twice(spark, tmp_path, monkeypatch):
+    # existence is a log listing and MERGE's returned state is registered
+    # as is: an incremental unique_key model reads its table at most
+    # twice (inside MERGE), a table model once
+    import os
+
+    reads = []
+    real_read = DeltaLikeTable.read
+
+    def counting(self, *a, **k):
+        reads.append(os.path.basename(self.path))
+        return real_read(self, *a, **k)
+
+    monkeypatch.setattr(DeltaLikeTable, "read", counting)
+    g = ModelGraph(str(tmp_path / "g"))
+    src = {}
+    g.model("s", materialized="incremental", unique_key="k")(
+        lambda spark, deps: src["df"]
+    )
+    g.model("t", deps=["s"], materialized="table")(
+        lambda spark, deps: deps["s"].agg(F.count(F.lit(1)).alias("n"))
+    )
+    src["df"] = _df(spark, [(1, "a"), (2, "b")])
+    g.run(spark, {})
+    reads.clear()
+    src["df"] = _df(spark, [(2, "B"), (3, "c")])
+    out = g.run(spark, {})
+    assert reads.count("s") <= 2
+    assert reads.count("t") == 1
+    assert sorted((r.k, r.v) for r in out["s"].collect()) == [
+        (1, "a"), (2, "B"), (3, "c"),
+    ]
+    assert out["t"].collect()[0].n == 3
+
+
+def test_write_replays_log_once(spark, tbl, monkeypatch):
+    # one write derives table state from one snapshot: a new handle opens
+    # each commit file once, a warm one opens none
+    tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
+    tbl.add_check_constraint("pos", "k > 0")
+    tbl.add_generated_column("k2", "k * 2", dtype="integer")
+    loads, opened = [], []
+    real_snapshot = DeltaLikeTable._snapshot
+    real_read_commit = DeltaLikeTable._read_commit
+    monkeypatch.setattr(
+        DeltaLikeTable, "_snapshot",
+        lambda self, *a, **k: loads.append(1) or real_snapshot(self, *a, **k),
+    )
+    monkeypatch.setattr(
+        DeltaLikeTable, "_read_commit",
+        lambda self, v: opened.append(v) or real_read_commit(self, v),
+    )
+    fresh = DeltaLikeTable(tbl.path)
+    fresh.write(_df(spark, [(2, "b")]), mode="append")
+    assert (len(loads), opened) == (1, [0, 1, 2])
+    loads.clear()
+    opened.clear()
+    fresh.write(_df(spark, [(3, "c")]), mode="overwrite")
+    assert (len(loads), opened) == (1, [])
+    assert sorted((r.k, r.k2) for r in fresh.read(spark).collect()) == [(3, 6)]
