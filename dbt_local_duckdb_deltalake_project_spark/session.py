@@ -12,6 +12,12 @@ Design notes (100 TB posture):
   oracle (DuckDB timestamps are naive/UTC).
 - Arrow on for every Python↔JVM exchange (toPandas, pandas_udf,
   applyInPandas).
+- Codegen cache: Spark keeps compiled classes in an LRU of
+  ``spark.sql.codegen.cache.maxEntries`` (default 100). At 100, Janino
+  recompiled 182-194 classes on every 16-op analyst pass and 91 per
+  medallion cycle. It caches code, not results, and the working set is
+  set by the plans, not the data, so a constant 1024 (≈5× the largest
+  set) holds at any scale.
 """
 
 from __future__ import annotations
@@ -24,7 +30,7 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "dbt-local-duckdb-deltalake-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 16,
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
@@ -32,17 +38,14 @@ def get_spark(
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        # Local sizing: every shuffle stage pays ~task-launch × partitions;
-        # at the fixture scales that floor dominates (measured: 32 → 8
-        # initial partitions halves cheap-query wall-clock). 16 keeps
-        # CPU-bound stages parallel while AQE coalesces the rest. On a
-        # real cluster set this 2–3× total cores and let AQE coalesce.
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "16"))
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        # Local sizing: every shuffle stage pays ~task-launch × partitions;
+        # at the fixture scales that floor dominates (measured: 32 → 8
+        # initial partitions halves cheap-query wall-clock). 16 keeps
+        # CPU-bound stages parallel while AQE coalesces the rest.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -57,15 +60,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # FAIR scheduling (optimization guide §2.6): the bench drains
-        # 468 queries through a 16-thread pool; under FIFO a query
-        # built from many tiny SEQUENTIAL jobs (the tokenizer learners'
-        # one-job-per-round loops) queues each job behind whole stages
-        # of concurrent queries — measured 94 s pooled elapsed for an
-        # 8 s serial query. FAIR time-slices task slots across jobs so
-        # sequential chains progress; single-query runs see no change.
-        .config("spark.scheduler.mode", os.environ.get(
-            "SPARK_GRAFT_SCHEDULER", "FAIR"))
+        # FAIR scheduling (optimization guide §2.6): under FIFO a query
+        # built from many tiny SEQUENTIAL jobs queues each job behind
+        # whole stages of concurrent queries (measured 94 s pooled for an
+        # 8 s serial query); FAIR time-slices task slots across jobs.
+        .config("spark.scheduler.mode", "FAIR")
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -3,12 +3,21 @@
 
 Runs each named query (or the N most expensive per BENCH_DETAIL.json)
 SERIALLY in one warm session against $SPARK_GRAFT_SF_DIR through the
-noop sink, prints per-query wall seconds, and (with --plans DIR) writes
-`<query>_<tag>.txt` files containing explain("formatted") output.
+noop sink, prints per-query wall seconds and Janino compiles, and (with
+--plans DIR) writes `<query>_<tag>.txt` files containing
+explain("formatted") output.
+
+``--repeat N`` runs the whole list N times, as passes, and prints every
+pass; the closing total takes each query's best pass. Passes, not N
+back-to-back runs of one query, because a recurring workload interleaves
+queries: a query repeated alone always hits Spark's codegen cache, while
+a pass shows whether the list's generated classes fit in it (a non-zero
+compile count after the first pass means they do not).
 
 Usage:
     python scripts/profile_queries.py q1 q2 ...           # time these
     python scripts/profile_queries.py --top 30            # top-30 by sidecar
+    python scripts/profile_queries.py --repeat 3 q1 q2    # three passes
     python scripts/profile_queries.py --plans plans/r13 --tag before q1 q2
 """
 
@@ -23,6 +32,23 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+
+def _write_plan(df, plans_dir: str, name: str, tag: str) -> None:
+    os.makedirs(plans_dir, exist_ok=True)
+    try:
+        txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"
+        )
+    except Exception:  # noqa: BLE001
+        txt = df._jdf.queryExecution().explainString(  # noqa: SLF001
+            getattr(
+                df._sc._jvm.org.apache.spark.sql.execution,  # noqa: SLF001
+                "ExplainMode",
+            ).fromString("formatted")
+        )
+    with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
+        f.write(txt)
 
 
 def main() -> None:
@@ -60,41 +86,30 @@ def main() -> None:
     ).save()
 
     own_session_markers = ("_streamed", "stream_")
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+        .METRIC_COMPILATION_TIME()
+    )
     results: dict[str, float] = {}
-    for name in names:
-        s = (
-            spark.newSession()
-            if name.startswith(own_session_markers[1])
-            or name.endswith(own_session_markers[0])
-            else spark
-        )
-        best = None
-        for _ in range(max(1, args.repeat)):
+    for p in range(max(1, args.repeat)):
+        print(f"# pass {p + 1}: wall_s  janino_compiles  query", flush=True)
+        for name in names:
+            s = (
+                spark.newSession()
+                if name.startswith(own_session_markers[1])
+                or name.endswith(own_session_markers[0])
+                else spark
+            )
             spark.sparkContext.setJobDescription(f"profile:{name}")
+            c0 = compiles.getCount()
             t0 = time.perf_counter()
             df = qs[name](s, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        results[name] = round(best, 3)
-        print(f"{best:8.3f}  {name}", flush=True)
-        if args.plans:
-            os.makedirs(os.path.join(_REPO, args.plans), exist_ok=True)
-            try:
-                txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                    df._jdf.queryExecution(), "formatted"
-                )
-            except Exception:  # noqa: BLE001
-                txt = df._jdf.queryExecution().explainString(  # noqa: SLF001
-                    getattr(
-                        df._sc._jvm.org.apache.spark.sql.execution,  # noqa: SLF001
-                        "ExplainMode",
-                    ).fromString("formatted")
-                )
-            with open(
-                os.path.join(_REPO, args.plans, f"{name}_{args.tag}.txt"), "w"
-            ) as f:
-                f.write(txt)
+            results[name] = round(min(dt, results.get(name, dt)), 3)
+            print(f"{dt:8.3f}  {compiles.getCount() - c0:5d}  {name}", flush=True)
+            if args.plans and p == 0:
+                _write_plan(df, os.path.join(_REPO, args.plans), name, args.tag)
     print(json.dumps({"total": round(sum(results.values()), 3), "n": len(results)}))
     spark.stop()
 
