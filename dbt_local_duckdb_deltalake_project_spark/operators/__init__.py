@@ -1,5 +1,7 @@
 """Operator inventory (SURVEY.md §2). Importing this package populates the
-registry; add new operator modules to _MODULES as they land."""
+registry in registration order; add new operator modules to _MODULES as
+they land. The driver's verification order lives in
+``__spark_entry__.queries()``."""
 
 from __future__ import annotations
 
@@ -30,309 +32,3 @@ _MODULES = [
 
 for _m in _MODULES:
     import_module(f"{__name__}.{_m}")
-
-# ---------------------------------------------------------------------------
-# Registry ordering. The round driver verifies a prefix window of the
-# registry (50 queries in round 1), so ids that still lack a driver
-# CORRECTNESS row are surfaced to the front; everything already proven
-# green in CORRECTNESS_r01.json keeps local pytest coverage and rotates to
-# the back. Within the window, cheaper queries come first in case the
-# window is time-budgeted. Rotate this list each round as rows come back.
-_WINDOW_FIRST = [
-    # --- r14 window head: ids the r14 OPTIMIZATION round changed
-    # (implementation rewritten/retuned, values proven identical:
-    # driver sims MATCH at sf0.01 + sf0.1 in fresh vanilla processes,
-    # full-registry sf0.01 sim 468/468 on the changed tree — see
-    # OPTIMIZATION_r14.md). Cheaper ids first.
-    # Broadcast-pinned iterative graph family (+ long node keys on
-    # pagerank/bfs):
-    "graph_kcore_peel", "graph_label_propagation", "graph_modularity",
-    "graph_hits", "graph_pagerank", "graph_bfs_shortest_path",
-    "graph_personalized_pagerank",
-    # inner stream-stream twin skips the no-data finalization batch;
-    # the two OUTER twins re-prove the shared run_stream_to_batch
-    # wrapper (they are the ops whose null emission DEPENDS on the
-    # no-data batch the flag controls — 16/16 consumer sim green):
-    "stream_stream_join", "stream_left_outer_join",
-    "stream_full_outer_join",
-    # distinct-substring-scored unigram learner (the VERDICT r13 item-1
-    # rewrite) and the BPE learner's empty-argmax guard (ADVICE item;
-    # fixture values unchanged):
-    "llm_unigram_lm_learn", "llm_bpe_learn",
-    # --- the rest of the 50-slot window fills automatically with the
-    # stalest driver-green ids (every registry id has a record since
-    # r12; llm_bpe_apply re-checks via _FORCE_RECHECK@14 — the one
-    # r13 verification gap VERDICT flagged). ---
-]
-
-# The round whose driver row SATISFIES a _WINDOW_FIRST entry: once an id
-# has a CORRECTNESS record from this round or later, its fresh row has
-# landed and it self-clears out of the front (demoting to the greens
-# rotation) — the next round's 50 slots all go to the backlog without
-# waiting for a manual list edit. Bump when repopulating _WINDOW_FIRST
-# for a new round's changes.
-_WINDOW_FIRST_ROUND = 14
-
-
-# Directly behind the window: first the regression breadth mix (one-plus
-# per §2 family, preferring ids near code touched this round — deltalike
-# internals, catalog tz pin, events consumers — all driver-green in
-# r1–r3; they re-check first if the window is wider than 50), then the
-# r3-window ids; the already-proven relational core rotates to the very
-# back (local pytest still covers everything).
-_WINDOW_SECOND = [
-    # --- r6 window plan (VERDICT r4 task 2): the rotation below is now
-    # AUTOMATIC (never-checked ids float ahead of greens; greens sort by
-    # last-checked round), so this list only fixes the RELATIVE order of
-    # never-checked ids. r6's window = any r5 FAILs hoisted into
-    # _WINDOW_FIRST, then the first ~50 never-checked ids below
-    # (mode-upgraded cosine variants + displaced r5-window ids first);
-    # the tail (the new-r5 block) rolls to r7 ---
-    "llm_cosine_topk_blocked", "llm_cosine_topk_lsh",
-    "llm_cosine_topk_ivf",
-    "stream_watermark_late", "stream_session_streamed",
-    "stream_funnel_stateful",
-    "mm_dedup_phash", "llm_token_entropy",
-    "dbt_snapshot_timestamp", "dbt_store_failures", "dbt_profile_table",
-    "llm_ngram_novelty", "join_asof_tolerance", "agg_regression_trend",
-    "stream_change_data_feed", "join_null_safe_eq",
-    "scan_parquet_merge_schema", "delta_merge_schema_evolution",
-    "delta_concurrent_writers", "agg_higher_moments", "scan_csv_gzip",
-    "sink_json_lines", "fn_tz_convert", "llm_chunk_reassemble",
-    "llm_minhash_signature_sql", "delta_merge_insert_only",
-    "join_dynamic_partition_pruning", "agg_boolean_aggs",
-    "llm_dedup_editdistance", "delta_replace_where",
-    "llm_sample_per_class_k", "win_pareto_analysis",
-    "stream_checkpoint_recovery", "cte_reuse_exchange",
-    "scan_range_source", "llm_bm25_search",
-    "stream_foreachbatch_multi_sink", "win_interval_merge",
-    "delta_table_properties", "agg_wilson_interval",
-    "llm_dataset_diff", "win_yoy_growth", "udf_pandas_scalar_iter",
-    "delta_deep_clone", "agg_cuped_adjustment", "llm_prompt_render",
-    "llm_vocab_coverage",
-    "tpch_q4", "tpch_q6", "tpch_q14", "tpch_q18", "tpch_q19",
-    # --- new r5 operators (never checked); the tail past r6's 50-slot
-    # window rolls into r7's ---
-    "graph_connected_components", "agg_count_min_sketch",
-    "llm_mix_temperature", "llm_importance_resample",
-    "llm_dedup_semantic",
-    "join_spatial_grid", "llm_simhash_portable", "scan_text",
-    "win_lead_lag_ignore_nulls", "stream_session_dynamic_gap",
-    "llm_dpo_pair_builder", "llm_fingerprint_winnow_sql", "fn_geohash",
-    "stream_corpus_ingest_dedup", "udtf_polymorphic",
-    "llm_span_corruption_mask", "delta_merge_matched_delete",
-    "llm_dedup_cross_split", "delta_cdf_downstream_sync",
-    "agg_gini_by_segment", "win_running_drawdown",
-    "agg_entropy_by_group", "fn_base64", "agg_bootstrap_ci",
-    "subq_not_in_nulls", "win_ntile_deciles",
-    "agg_markov_transition", "llm_bigram_nll",
-    # --- r6 operators (never checked; first driver rows land in r7).
-    # Order = risk: the three whose implementation changed AFTER their
-    # full-pass sim lead (each re-simmed green individually); the two
-    # simplest, most-re-verified ops sit last — with a 52-id backlog
-    # against a 50-slot window they are the two that roll to r8. ---
-    "llm_filter_gopher", "llm_dedup_clusters_incremental",
-    "graph_bfs_shortest_path",
-    "stream_left_outer_join", "llm_dedup_keep_best",
-    "llm_dedup_containment", "llm_tokenizer_fertility",
-    "llm_linear_classifier_score", "llm_ccnet_bucket", "llm_eval_rouge2",
-    "win_rolling_median", "agg_winsorized_mean",
-    "graph_common_neighbors",
-    "dbt_docs_generate", "dbt_incremental_on_schema_change",
-    "dbt_state_modified", "dbt_run_hooks", "dbt_snapshot_hard_deletes",
-    "mm_aspect_bucket", "sink_csv_roundtrip",
-    # --- r6 session-3 operators (never checked; behind everything
-    # above so the r6/r7 windows and the measured 52-id backlog
-    # accounting are untouched — these land in r8's window). ---
-    "llm_eval_token_f1", "llm_eval_bleu", "llm_readability",
-    "llm_embed_outliers", "llm_eval_confusion",
-    "agg_heavy_hitters", "win_anomaly_mad",
-    "graph_label_propagation", "graph_degree_stats",
-    "join_interval_overlap", "dbt_semantic_metric", "mm_audio_chunk_plan",
-    "llm_eval_ndcg", "llm_hard_negatives", "llm_eval_calibration",
-    "udf_python_arrow",
-    "stream_full_outer_join", "agg_funnel_steps", "graph_kcore_peel",
-    "agg_target_encode_loo", "llm_token_offsets", "delta_optimize_plan",
-    "dbt_model_contract", "llm_fim_transform", "agg_seasonality_profile",
-    "llm_rrf_fusion", "llm_shard_balance", "scan_file_metadata",
-    # --- r6 session-4/5 operators (never checked; behind everything
-    # above — land in r8's window; the 20 ids below bring the post-r6
-    # backlog to EXACTLY 100, so r8's 50-slot window closes the sweep
-    # with zero slack: add NO ops in r7). ---
-    "agg_mann_whitney", "agg_ks_2sample", "agg_chisq_independence",
-    "agg_benford_law", "win_ohlc_resample",
-    "graph_clustering_coefficient", "llm_lsh_curve",
-    "llm_weighted_sample", "llm_matryoshka_recall",
-    "win_cusum_alarm", "agg_power_analysis",
-    "llm_bpe_learn", "mm_tile_plan",
-    "agg_weighted_median", "agg_mann_kendall",
-    "graph_resource_allocation", "llm_kneser_ney",
-    "llm_calibration_isotonic", "llm_cdc_chunks", "mm_scene_split",
-    # --- r7 _FORCE_RECHECK tail: both greens were fixed in r7 for the
-    # final-ROUND tie-divergence the sf0.1 differential surfaced
-    # (half-even vs half-away on an exact tie). Placed BEHIND the
-    # 100-id backlog so r8's 50-slot window still closes the sweep;
-    # their fresh rows land in r9's window head. Both re-simmed MATCH
-    # at sf0.01 AND sf0.1 post-fix. ---
-    "mm_decode_features", "delta_update",
-    # --- end of never-checked block; greens rotate below ---
-    "delta_time_travel", "delta_merge_upsert",
-    "stream_tumbling", "stream_session", "win_range_frame", "fn_date",  # events/tz consumers
-    "join_asof",                 # §2.3
-    "agg_groupby_basic",         # §2.4
-    "win_ranking",               # §2.5
-    "llm_quality_score",         # §2.10
-    "udf_pandas_scalar",         # §2.11
-    "dbt_materialize_incremental",  # §2.12
-    "pipeline_medallion",
-    "scan_parquet", "topk", "cte_chain",
-    "scan_projection_pushdown", "scan_filter_pushdown",
-    "scan_csv", "scan_json", "sink_parquet",
-    "sink_delta_append", "scd2_snapshot", "delta_schema_evolution",
-    "delta_compact", "delta_delete", "delta_restore",
-    "dbt_materialize_table", "dbt_materialize_view",
-    "dbt_materialize_ephemeral",
-    "dbt_test_unique", "dbt_test_not_null", "dbt_test_accepted_values",
-    "dbt_test_relationships", "dbt_source_freshness", "dbt_seed",
-    "mm_metadata_extract", "mm_resize_plan",
-    "mm_frame_sample",
-    "llm_split_assign", "llm_shuffle_deterministic", "llm_pii_redact",
-    "llm_decontaminate", "llm_sequence_pack",
-    "llm_repetition_filter", "llm_chunk_documents", "llm_sample_stratified",
-    "llm_tfidf",
-    "stream_sliding_streamed", "stream_tumbling_streamed",
-    "stream_dedup_within_watermark", "stream_sink_deltalike",
-    "agg_approx_count_distinct", "agg_percentile_approx",
-    "llm_ann_recall", "cte_recursive", "stream_stream_join",
-]
-
-
-# Ids whose existing driver record no longer verifies the CURRENT
-# implementation (e.g. a rows-mode record for an op since upgraded to
-# sql-mode): id → first round whose record counts. Records from earlier
-# rounds are ignored, so the rotation treats the id as never-checked
-# until a fresh row lands — then it self-clears (no manual cleanup
-# needed; stale entries whose fresh rows landed are harmless).
-_FORCE_RECHECK = {
-    # r4 rows-mode records; all upgraded to sql-mode in r5 — only an
-    # r6-or-later record verifies the sql-mode code (fresh rows landed
-    # r6; these entries are self-cleared and harmless)
-    "llm_cosine_topk_blocked": 6,
-    "llm_cosine_topk_lsh": 6,
-    "llm_cosine_topk_ivf": 6,
-    "stream_watermark_late": 6,
-    "stream_session_streamed": 6,
-    "stream_funnel_stateful": 6,
-    # r7 final-ROUND tie fixes (sf0.1 differential): output values
-    # changed, so the old green rows (r3/r6) no longer verify the
-    # current code — only an r8-or-later record counts
-    "mm_decode_features": 8,
-    "delta_update": 8,
-    # r8 oracle cents-mirror hardenings (raw-vs-stored cents class,
-    # DuckDB-side only; re-simmed MATCH at sf0.01 AND sf0.1 in r8 and
-    # judge-sim green) — records stay valid but a fresh row re-proving
-    # the edited oracles lands in r9's window
-    "delta_replace_where": 9,
-    "delta_change_data_feed": 9,
-    "delta_merge_schema_evolution": 9,
-    # r9 2^53-headroom fix: win_yoy_growth now aggregates cents (not
-    # micros) on both sides and surfaces prev_rev_c — the r6 green row
-    # hashed the micros output, so only an r9 record verifies it
-    "win_yoy_growth": 9,
-    # r9 staged near-dup pair/label cache (_staged_neardup): the three
-    # consumers now read staged parquet instead of re-running the
-    # shingle self-join + CC pipeline — values identical by
-    # construction (dry-run-proven staged==fresh at two SFs), but the
-    # read path changed, so fresh rows land in r9
-    "llm_dedup_clusters": 9,
-    "llm_dedup_keep_best": 9,
-    "llm_dedup_clusters_incremental": 9,
-    # r10 changes (VERDICT r9 tasks + ADVICE): bpe_apply consumes the
-    # staged learned merge table (values changed), bpe_learn factored,
-    # dedup_prefix moved to the range-partition global-order form
-    # (oracle changed), the CDF stream reader is partitioned, the
-    # microbatch commits via dynamic partition overwrite — only an r10
-    # record verifies the current code
-    # r14 bump (VERDICT r13 item 6): bpe_apply's staged merge-table
-    # input comes from _bpe_learn_rows, rewritten in r13's optimization
-    # phase (byte-identity proven at two scales but never
-    # driver-re-verified) — close the gap with a fresh r14 row
-    "llm_bpe_apply": 14,
-    "llm_bpe_learn": 10,
-    "llm_dedup_prefix": 10,
-    "stream_change_data_feed": 10,
-    "dbt_microbatch_incremental": 10,
-    "agg_cuped_adjustment": 10,
-}
-
-
-def _last_checked() -> dict[str, int]:
-    """id → newest round with a driver CORRECTNESS row (absent = never).
-    Read at import so the rotation below tracks reality automatically —
-    manual list edits are only needed to FRONT-LOAD changed ids."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    last: dict[str, int] = {}
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", f)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(f) as fh:
-                for qid in json.load(fh):
-                    last[qid] = max(last.get(qid, 0), rnd)
-        except (OSError, ValueError):
-            continue
-    return last
-
-
-def _reorder() -> None:
-    """Registry order = verification priority (the driver checks a
-    50-entry prefix per round):
-
-    1. `_WINDOW_FIRST` — manual: ids changed this round (plus, for r5,
-       the explicit window) — ALWAYS first;
-    2. `_WINDOW_SECOND`'s never-checked ids, in its (registry) order;
-    3. every other never-checked id (safety net for ids missing from
-       the manual lists — they can never drift to the tail);
-    4. driver-green ids by ascending last-checked round (stalest
-       re-verify first), stable on the manual order.
-    """
-    last_all = _last_checked()
-    last = {
-        q: r
-        for q, r in last_all.items()
-        if r >= _FORCE_RECHECK.get(q, 0)
-    }
-    front = [
-        q
-        for q in _WINDOW_FIRST
-        if q in QUERIES and last_all.get(q, 0) < _WINDOW_FIRST_ROUND
-    ]
-    seen = set(front)
-    manual_rest = [
-        q for q in _WINDOW_SECOND if q in QUERIES and q not in seen
-    ]
-    seen.update(manual_rest)
-    unlisted = [q for q in QUERIES if q not in seen]
-    never_manual = [q for q in manual_rest if q not in last]
-    never_unlisted = [q for q in unlisted if q not in last]
-    greens = [q for q in manual_rest + unlisted if q in last]
-    greens.sort(key=lambda q: last[q])  # stable: manual order on ties
-    order = front + never_manual + never_unlisted + greens
-    for d in (QUERIES, ORACLE):
-        snapshot = dict(d)
-        d.clear()
-        for q in order:
-            if q in snapshot:
-                d[q] = snapshot[q]
-
-
-_reorder()

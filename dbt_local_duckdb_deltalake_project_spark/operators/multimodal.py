@@ -2,11 +2,10 @@
 ``binary`` columns with typed metadata).
 
 No image/audio libraries exist in this container, so the DECODE step is a
-clearly-marked stub (deterministic fake documented per-op, or
-``NotImplementedError`` on the real-codec path) — but everything Spark
-cares about is real and tested: the binary column representation, the
-metadata struct schema, the mapInPandas/pandas-UDF signatures, Arrow
-batch shapes, and the partitioning story.
+clearly-marked stub (deterministic fake documented per-op) — but
+everything Spark cares about is real and tested: the binary column
+representation, the metadata struct schema, the mapInPandas/pandas-UDF
+signatures, Arrow batch shapes, and the partitioning story.
 
 Fixtures carry no binary columns, so each op first MATERIALIZES a
 deterministic payload from the documents table (utf-8 bytes of ``text``
@@ -31,18 +30,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import t
 from .registry import register
-
-# Real-codec path, stubbed: flip when PIL/ffmpeg are available.
-_CODECS_AVAILABLE = False
-
-
-def _decode_real(payload: bytes):  # pragma: no cover - container lacks codecs
-    raise NotImplementedError(
-        "real media decode requires PIL/libav, not present in this "
-        "container; the deterministic stub below exercises the identical "
-        "Spark plumbing (binary column → Arrow batch → typed columns)"
-    )
-
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bronze media table: (media_id, payload binary, media_type).
@@ -102,21 +89,15 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DECODE STUB, batch-shaped like the real thing: mapInPandas receives
     # Arrow batches of (media_id, payload); the "decoder" produces a
     # per-payload feature (mean byte value — stand-in for e.g. mean
-    # luminance after a real image decode). The real-codec branch raises
-    # NotImplementedError (container has no codecs); the Spark plumbing —
-    # binary in Arrow, typed features out — is identical either way.
+    # luminance after a real image decode). The decoder is a
+    # deterministic stub; the Spark plumbing — binary in Arrow, typed
+    # features out — is what a real codec would use.
     p = _payloads(spark, sf_dir).filter(F.col("media_id") % 5 == 0)
 
     # NB: the closure must not touch module globals — cloudpickle would
     # then ship it by module reference, and executor Python workers have
     # no sys.path entry for this repo under the driver's vanilla session.
-    codecs_available = _CODECS_AVAILABLE
-
     def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if codecs_available:  # pragma: no cover — container lacks codecs
-            raise NotImplementedError(
-                "real media decode path (PIL/libav) not available"
-            )
         for pdf in batches:
             n = pdf.payload.map(len)
             # int_sum / int_len is ONE IEEE division — bit-identical in

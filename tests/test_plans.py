@@ -519,27 +519,18 @@ def test_pareto_cumsum_has_no_unpartitioned_window(spark, sf_dir):
 
 
 def test_registry_window_covers_unverified_ids():
-    # driver-window bookkeeping guard, repointed at r9 open (the r8
-    # sweep closed: every id now has a driver record, so the old
-    # "never-checked ids within 150 positions" bound retired itself by
-    # design). Surviving invariant: every id whose current code lacks a
-    # SATISFYING driver record — never-checked ids from new ops, plus
-    # `_FORCE_RECHECK` ids whose last record predates the required
-    # round — must sit inside the next 50-slot driver window, and the
+    # driver-window guard: every id without a driver CORRECTNESS record
+    # (a new op) must sit inside the next 50-slot driver window, and the
     # green remainder must be ordered stalest-first so re-verification
     # coverage keeps rotating. A pending id drifting past position 50
-    # would silently wait an extra round for its fresh row.
+    # would silently wait an extra round for its fresh row. The order
+    # under test is the driver contract's, not the package registry's.
     import glob
     import json
     import os
     import re
 
-    from dbt_local_duckdb_deltalake_project_spark.operators import (
-        _FORCE_RECHECK,
-        _WINDOW_FIRST,
-        _WINDOW_FIRST_ROUND,
-        QUERIES as Q,
-    )
+    import __spark_entry__
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     last = {}
@@ -548,25 +539,13 @@ def test_registry_window_covers_unverified_ids():
         rnd = int(m.group(1))
         for qid in json.load(open(f)):
             last[qid] = max(last.get(qid, 0), rnd)
-    ids = list(Q)
-    pending = {
-        q
-        for q in ids
-        if last.get(q, 0) < _FORCE_RECHECK.get(q, 1)
-    }
-    # an active _WINDOW_FIRST hoist (not yet satisfied by a row from
-    # _WINDOW_FIRST_ROUND) is also pending — it was hoisted because its
-    # code changed this round
-    pending.update(
-        q
-        for q in _WINDOW_FIRST
-        if q in Q and last.get(q, 0) < _WINDOW_FIRST_ROUND
-    )
+    ids = list(__spark_entry__.queries())
+    pending = {q for q in ids if q not in last}
     if pending:
         worst = max(ids.index(q) for q in pending)
         assert worst < 50, (
-            f"pending id at registry position {worst}: {ids[worst]} — "
-            f"it misses the next driver window; fix the rotation lists"
+            f"pending id at position {worst}: {ids[worst]} — "
+            f"it misses the next driver window"
         )
     greens = [(ids.index(q), last[q]) for q in ids if q not in pending]
     greens.sort()
@@ -574,3 +553,34 @@ def test_registry_window_covers_unverified_ids():
     assert rounds == sorted(rounds), (
         "green ids not stalest-first — the recheck rotation is broken"
     )
+
+
+def test_registry_import_reads_no_driver_records():
+    # Importing the engine's registry must do no driver-artifact I/O:
+    # the package's order is plain registration order, and the
+    # stalest-first driver order lives in __spark_entry__.queries().
+    # An audit hook in a fresh interpreter sees every open and glob.
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, sys\n"
+        "seen = []\n"
+        "def hook(event, args):\n"
+        "    if event in ('open', 'glob.glob'):\n"
+        "        seen.append(str(args[0]))\n"
+        "sys.addaudithook(hook)\n"
+        "import dbt_local_duckdb_deltalake_project_spark.operators\n"
+        "print(json.dumps(seen))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True,
+        text=True, check=True,
+    ).stdout
+    seen = json.loads(out.strip().splitlines()[-1])
+    assert seen, "audit hook recorded no events"
+    hits = [p for p in seen if "CORRECTNESS_r" in p]
+    assert not hits, f"registry import touched driver records: {hits}"
