@@ -577,8 +577,12 @@ def delta_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays time-travelable — the gate that protects in-flight readers),
     then a retention-0 vacuum reclaims exactly v0's one file. Both
     outcomes plus the latest content are hash-checked; single-file
-    commits (coalesce) make the reclaim count deterministic. At 100 TB
-    vacuum is O(history removes) driver work + unlinks — no data read.
+    commits (coalesce) make the reclaim count deterministic. Vacuum
+    keeps what the version current at the cutoff (or any later commit)
+    references and deletes older files under the root outside that set:
+    O(files under the root) driver listing + unlinks, no data read. At
+    retention 0 a concurrent writer's uncommitted files are not
+    protected — the same hazard as Delta's.
     """
     tbl = DeltaLikeTable(workdir(sf_dir, "delta_vacuum"))
     o = t(spark, sf_dir, "orders").select(

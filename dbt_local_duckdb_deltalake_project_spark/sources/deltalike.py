@@ -18,7 +18,10 @@ Capabilities the stack exercises:
 - read as of any version (``read(as_of=...)`` — time travel, by
   replaying add/remove actions up to that commit)
 - DELETE / MERGE upsert (copy-on-write rewrites, like Delta)
-- OPTIMIZE-style compaction and VACUUM of unreachable files
+- OPTIMIZE-style compaction, and VACUUM by Delta's keep-set rule: list
+  the table root, delete what no version inside the retention window
+  references (crash orphans and ``.tmp-*`` staging included); at
+  retention 0 a concurrent writer's uncommitted files are not protected
 
 Every operation derives table state from one ``Snapshot`` — the log
 replayed through a version, as Delta's own readers do. A handle keeps its
@@ -651,19 +654,14 @@ class DeltaLikeTable:
         commit timestamp is <= ``ts_ms`` (Delta's rule — a reader at time
         T sees every commit that had completed by T). Errors if ``ts_ms``
         predates the first commit, like Delta's
-        ``timestampAsOf`` on a too-early timestamp."""
-        resolved: int | None = None
-        for v in range(self.latest_version + 1):
+        ``timestampAsOf`` on a too-early timestamp. Scans from the newest
+        commit back, so a recent timestamp opens few commit files."""
+        for v in range(self.latest_version, -1, -1):
             if self.commit_timestamp(v) <= ts_ms:
-                resolved = v
-            else:
-                break  # commit timestamps are monotonic
-        if resolved is None:
-            raise ValueError(
-                f"timestamp {ts_ms} is before the first commit "
-                f"({self.commit_timestamp(0)}) of {self.path}"
-            )
-        return resolved
+                return v  # commit timestamps are monotonic
+        raise ValueError(
+            f"timestamp {ts_ms} is before the first commit of {self.path}"
+        )
 
     # -- writes -----------------------------------------------------------
     def _stage_data_files(
@@ -1398,117 +1396,71 @@ class DeltaLikeTable:
 
     def vacuum(
         self, retention_ms: int = 0, now_ms: int | None = None
-    ) -> list[int]:
-        """``VACUUM ... RETAIN`` — physically delete data files that are
-        (a) no longer in the latest version's live set AND (b) were
-        removed at least ``retention_ms`` ago (the remove action's
-        ``deletionTimestamp``, Delta's retention gate: readers/writers
-        started inside the window can still resolve their snapshot).
-        ``now_ms`` is injectable for deterministic tests. Returns the
-        sorted commit versions whose files were reclaimed; the log keeps
-        every commit so version numbering stays stable (older versions
-        simply stop being time-travelable, as after a real VACUUM).
+    ) -> list[str]:
+        """``VACUUM ... RETAIN`` by Delta's rule: list the table root and
+        delete every file that no reader inside the retention window can
+        still open. The cutoff is ``now_ms - retention_ms`` (``now_ms`` is
+        injectable for deterministic tests); ``v_cut`` is the version
+        current at the cutoff, -1 if no commit is that old. The keep set
+        is ``v_cut``'s live adds, every add committed after it, and the
+        DV sidecars those adds name. A file or ``.tmp-*`` staging entry
+        under the root that is outside the keep set and older than the
+        cutoff is deleted, so the orphans of a writer that crashed before
+        its commit are reclaimed too. ``_delta_log`` and every other
+        hidden ``_*``/``.*`` entry are skipped, and files outside the
+        root (a shallow clone's absolute-path adds) are never listed.
+        Returns the sorted deleted paths, relative to the root; the log
+        keeps every commit, so version numbering stays stable (older
+        versions simply stop being time-travelable).
 
-        Safety checks, in order: the live set is never touched (even if
-        a remove for the same path exists somewhere in history — add
-        wins at replay, so membership in the CURRENT live set is the
-        guard); files outside the table root (a shallow clone's
-        absolute-path adds pointing into the source) are never touched;
-        files younger than the retention window are kept. Known hazard
-        shared with real Delta: vacuuming a SOURCE table can reclaim
-        files a shallow clone of it still references (the source has no
-        registry of its clones) — Delta documents the same restriction;
+        Hazards shared with real Delta: at retention 0 a concurrent
+        writer's staged, not yet committed files are not protected; and
+        vacuuming a SOURCE table can reclaim files a shallow clone of it
+        still references (the source has no registry of its clones) —
         deep-clone before vacuuming the source if clones must outlive
         it."""
+        latest = self.latest_version
+        if latest < 0:
+            raise ValueError(f"no table at {self.path}: nothing to vacuum")
         cutoff = (
             int(time.time() * 1000) if now_ms is None else now_ms
         ) - retention_ms
-        snap = self._snapshot()
-        active = snap.adds.values()
-        live = set(snap.adds)
-        # DV sidecars the CURRENT snapshot still resolves — never touched
-        live_dv = {
-            a["deletionVector"]["pathOrInlineDv"]
-            for a in active
-            if (a.get("deletionVector") or {}).get("storageType") == "p"
-        }
-        added_at: dict[str, int] = {}
-        removed_ts: dict[str, int] = {}
-        # sidecar → (orphaned-at timestamp, commit version): a sidecar is
-        # orphaned when the add that carried it is superseded by an add
-        # with a different/no DV (e.g. a later DV delete or a RESTORE
-        # re-add) or removed outright — either way it leaks forever
-        # without this tracking, since no remove action ever names it.
-        pending_dv: dict[str, str] = {}
-        dv_orphaned: dict[str, tuple[int, int]] = {}
-        for i in range(snap.version + 1):
-            # Per-commit timestamp: commitInfo (first action since r4)
-            # overrides below; pre-r4/foreign commits without one fall
-            # back to the file's mtime (same rule as commit_timestamp)
-            # instead of carrying a stale value across commits — a
-            # superseded sidecar must be gated on ITS commit's clock or
-            # it can be reclaimed before its retention window elapses.
-            commit_ts = int(os.path.getmtime(self._commit_path(i)) * 1000)
-            for act in self._read_commit(i):
-                if "commitInfo" in act:
-                    commit_ts = int(
-                        act["commitInfo"].get("timestamp") or 0
-                    )
-                elif "add" in act:
-                    a = act["add"]
-                    added_at.setdefault(a["path"], i)
-                    dv = a.get("deletionVector") or {}
-                    side = (
-                        dv.get("pathOrInlineDv")
-                        if dv.get("storageType") == "p"
-                        else None
-                    )
-                    old_side = pending_dv.get(a["path"])
-                    if old_side and old_side != side:
-                        # superseded without a remove (RESTORE path):
-                        # gate on the superseding commit's timestamp
-                        dv_orphaned[old_side] = (commit_ts, i)
-                    if side:
-                        pending_dv[a["path"]] = side
-                    else:
-                        pending_dv.pop(a["path"], None)
-                elif "remove" in act:
-                    r = act["remove"]
-                    ts = int(r.get("deletionTimestamp") or 0)
-                    removed_ts[r["path"]] = ts
-                    old_side = pending_dv.pop(r["path"], None)
-                    if old_side:
-                        dv_orphaned[old_side] = (ts, i)
-        reclaimed: set[int] = set()
+        try:
+            v_cut = self.version_at_timestamp(cutoff)
+        except ValueError:
+            v_cut = -1
+        adds = list(self._snapshot(v_cut).adds.values()) + [
+            act["add"]
+            for v in range(v_cut + 1, latest + 1)
+            for act in self._read_commit(v)
+            if "add" in act
+        ]
         root = os.path.abspath(self.path)
-
-        def _under_root(rel: str) -> str | None:
-            full = os.path.join(self.path, rel)
-            # never delete outside the table root: a shallow clone's
-            # absolute-path adds reference the SOURCE table's files
-            if not os.path.abspath(full).startswith(root + os.sep):
-                return None
-            return full
-
-        for path, version in added_at.items():
-            full = _under_root(path)
-            if full is None or path in live:
-                continue
-            if removed_ts.get(path, 0) > cutoff:
-                continue  # inside the retention window — keep
-            if os.path.exists(full):
-                os.remove(full)
-                reclaimed.add(version)
-        for side, (ts, version) in dv_orphaned.items():
-            full = _under_root(side)
-            if full is None or side in live_dv:
-                continue
-            if ts > cutoff:
-                continue
-            if os.path.exists(full):
-                os.remove(full)
-                reclaimed.add(version)
-        return sorted(reclaimed)
+        keep = {
+            os.path.normpath(os.path.join(root, p))
+            for p in [a["path"] for a in adds] + [
+                a["deletionVector"]["pathOrInlineDv"]
+                for a in adds
+                if (a.get("deletionVector") or {}).get("storageType") == "p"
+            ]
+        }
+        deleted: list[str] = []
+        for dirpath, dirs, files in os.walk(root):
+            staging = [d for d in dirs if d.startswith(".tmp-")]
+            dirs[:] = [d for d in dirs if d[0] not in "_."]  # partitions
+            for name in files + staging:
+                full = os.path.join(dirpath, name)
+                hidden = name[0] in "_." and not name.startswith(".tmp-")
+                if hidden or full in keep:
+                    continue
+                if os.lstat(full).st_mtime_ns // 10**6 >= cutoff:
+                    continue  # younger than the retention window — keep
+                if name in staging:
+                    shutil.rmtree(full)
+                else:
+                    os.remove(full)
+                deleted.append(os.path.relpath(full, root).replace(os.sep, "/"))
+        return sorted(deleted)
 
     # -- MERGE (upsert) ---------------------------------------------------
     def merge(

@@ -10,8 +10,9 @@ strings (duckdb fetchdf turns nullable-int columns into float64), and
 every value goes through str() BEFORE sorting rows so mixed-type tuples
 sort consistently and "first diff" pairs related rows.
 """
-import sys, math, time
-sys.path.insert(0, "/root/repo")
+import math, os, sys, time
+# this checkout's root, so a sim always runs the code next to the script
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -35,7 +36,7 @@ def canon(v):
 
 def main():
     qids = sys.argv[1:]
-    mem = __import__("os").environ.get("SIM_DRIVER_MEM")  # e.g. "8g"
+    mem = os.environ.get("SIM_DRIVER_MEM")  # e.g. "8g"
     b = (SparkSession.builder.master("local[8]")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.ui.enabled", "false"))
@@ -49,7 +50,7 @@ def main():
         # fixture tables are single files; staged/replicated ones (e.g.
         # .work/<sf>/scale10) are Spark directory outputs — glob those
         path = f"{SF}/{t}.parquet"
-        if __import__("os").path.isdir(path):
+        if os.path.isdir(path):
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     todo = qids or list(qs)

@@ -213,8 +213,11 @@ def test_compact_preserves_content_and_vacuum_reclaims(spark, tbl, tmp_path):
     tbl.write(_df(spark, [(3, "c")]), mode="append")
     v = tbl.compact(spark, target_files=1)
     assert sorted(r.k for r in tbl.read(spark).collect()) == [1, 2, 3]
+    superseded = sorted(
+        {a["path"] for ver in range(3) for a in tbl.live_files(as_of=ver)}
+    )
     removed = tbl.vacuum()
-    assert removed == [0, 1, 2]
+    assert removed == superseded
     # latest still reads fine after vacuum; version numbering stable
     assert tbl.latest_version == v
     assert sorted(r.k for r in tbl.read(spark).collect()) == [1, 2, 3]
@@ -269,6 +272,109 @@ def test_concurrent_commits_never_lost(tbl):
     with open(os.path.join(tbl._log_dir, f"{0:020d}.json")) as f:
         acts = [json.loads(ln) for ln in f]
     assert sum(1 for a in acts if "protocol" in a) == 1
+
+
+def _stage_file(tbl, rel, mtime=None):
+    """Write a stand-in data file under the table root; return its add."""
+    import os
+
+    full = os.path.join(tbl.path, rel)
+    os.makedirs(os.path.dirname(full), exist_ok=True)
+    with open(full, "wb") as f:
+        f.write(b"PAR1")
+    if mtime is not None:
+        os.utime(full, (mtime, mtime))
+    return {"add": {"path": rel, "partitionValues": {}, "size": 4,
+                    "modificationTime": 0, "dataChange": True}}
+
+
+def test_vacuum_reclaims_what_a_crashed_writer_leaves(tbl, monkeypatch):
+    # A writer that dies between staging its data and publishing the
+    # commit leaves files no add names, plus its .tmp-* staging dir.
+    # VACUUM must reclaim exactly those once they are older than the
+    # retention, and never touch the log, a hidden entry, a live file or
+    # a live DV sidecar. Driven through _commit directly: no Spark.
+    import os
+    import time
+
+    live = _stage_file(tbl, "part-live.parquet")
+    live["add"]["deletionVector"] = {
+        "storageType": "p", "pathOrInlineDv": "deletion_vector_live.bin",
+        "sizeInBytes": 8, "cardinality": 1,
+    }
+    _stage_file(tbl, "deletion_vector_live.bin")
+    tbl._commit([live, _stage_file(tbl, "p=1/part-p1.parquet")])
+    orphan = _stage_file(tbl, "part-orphan.parquet")
+
+    def crash(src, dst):
+        raise OSError("writer died before its commit was published")
+
+    monkeypatch.setattr(os, "link", crash)
+    with pytest.raises(OSError, match="writer died"):
+        tbl._commit([orphan])
+    monkeypatch.undo()
+    _stage_file(tbl, ".tmp-deadbeef/part-00000.parquet")
+    with open(os.path.join(tbl.path, ".fixture_fp"), "w") as f:
+        f.write("staged")
+    log_before = sorted(os.listdir(tbl._log_dir))
+
+    assert tbl.vacuum(retention_ms=10**9) == []  # orphans still young
+    assert os.path.exists(os.path.join(tbl.path, "part-orphan.parquet"))
+    future = int(time.time() * 1000) + 60_000
+    assert tbl.vacuum(retention_ms=0, now_ms=future) == [
+        ".tmp-deadbeef", "part-orphan.parquet",
+    ]
+    assert sorted(os.listdir(tbl._log_dir)) == log_before
+    for rel in (".fixture_fp", "part-live.parquet", "p=1/part-p1.parquet",
+                "deletion_vector_live.bin"):
+        assert os.path.exists(os.path.join(tbl.path, rel)), rel
+    assert tbl.latest_version == 0
+
+
+def test_vacuum_keeps_what_the_cutoff_version_reads_across_checkpoint(tbl):
+    # Retention is a version rule: every file live at the version current
+    # at the cutoff, or added after it, survives (here f11 is removed
+    # after the cutoff and f12/f13 are added after it), whatever the
+    # files' age. The cutoff version is resolved past a checkpoint, and
+    # the JSON commits the checkpoint covers are corrupted, so VACUUM
+    # must not replay the log from version 0.
+    import os
+    import time
+
+    from dbt_local_duckdb_deltalake_project_spark.sources.deltalike import (
+        CHECKPOINT_INTERVAL,
+    )
+
+    old = 1_000_000  # epoch seconds: every data file predates any cutoff
+    n = CHECKPOINT_INTERVAL + 4
+    for i in range(n):
+        actions = [_stage_file(tbl, f"f{i}.parquet", old)]
+        if i == 0:
+            actions.append(_stage_file(tbl, "base.parquet", old))
+        else:
+            prev = tbl.commit_timestamp(i - 1)
+            while int(time.time() * 1000) <= prev:
+                time.sleep(0.001)  # distinct commit timestamps
+            actions.append({"remove": {
+                "path": f"f{i - 1}.parquet",
+                "deletionTimestamp": int(time.time() * 1000),
+                "dataChange": True,
+            }})
+        assert tbl._commit(actions) == i
+    assert tbl._last_checkpoint()["version"] == CHECKPOINT_INTERVAL
+    v_cut = CHECKPOINT_INTERVAL + 1
+    cutoff = tbl.commit_timestamp(v_cut + 1) - 1  # between v_cut and next
+    for v in range(CHECKPOINT_INTERVAL + 1):
+        with open(os.path.join(tbl._log_dir, f"{v:020d}.json"), "w") as f:
+            f.write("NOT JSON — vacuum must not replay this commit\n")
+
+    survivors = {"base.parquet", f"f{v_cut}.parquet"} | {
+        f"f{i}.parquet" for i in range(v_cut + 1, n)
+    }
+    assert tbl.vacuum(retention_ms=0, now_ms=cutoff) == sorted(
+        f"f{i}.parquet" for i in range(v_cut)
+    )
+    assert {f for f in os.listdir(tbl.path) if f != "_delta_log"} == survivors
 
 
 def test_checkpoint_written_every_interval(spark, tbl):
@@ -532,7 +638,8 @@ def test_vacuum_retention_window_gates_deletion(spark, tbl):
     assert tbl.vacuum(retention_ms=10**9) == []
     assert [r.k for r in tbl.read(spark, as_of=0).collect()] == [1]
     # window expired: v0's file goes, latest unaffected
-    assert tbl.vacuum(retention_ms=0) == [0]
+    v0_files = [a["path"] for a in tbl.live_files(as_of=0)]
+    assert tbl.vacuum(retention_ms=0) == v0_files
     assert [r.k for r in tbl.read(spark).collect()] == [2]
 
 
@@ -870,7 +977,7 @@ def test_vacuum_reclaims_orphaned_dv_sidecar(spark, tbl):
         glob.glob(os.path.join(tbl.path, "deletion_vector_*.bin"))
     ) == sides
     # window expired: the superseded sidecar goes, the live one stays
-    assert tbl.vacuum(retention_ms=0) != []
+    assert tbl.vacuum(retention_ms=0) == [os.path.basename(side1[0])]
     assert set(
         glob.glob(os.path.join(tbl.path, "deletion_vector_*.bin"))
     ) == live
