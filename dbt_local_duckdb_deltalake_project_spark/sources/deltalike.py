@@ -1453,12 +1453,13 @@ class DeltaLikeTable:
                 hidden = name[0] in "_." and not name.startswith(".tmp-")
                 if hidden or full in keep:
                     continue
-                if os.lstat(full).st_mtime_ns // 10**6 >= cutoff:
+                try:
+                    mtime_ms = os.lstat(full).st_mtime_ns // 10**6
+                except FileNotFoundError:
+                    continue  # gone since the listing: a writer's own cleanup
+                if mtime_ms >= cutoff:
                     continue  # younger than the retention window — keep
-                if name in staging:
-                    shutil.rmtree(full)
-                else:
-                    os.remove(full)
+                (shutil.rmtree if name in staging else os.remove)(full)
                 deleted.append(os.path.relpath(full, root).replace(os.sep, "/"))
         return sorted(deleted)
 

@@ -331,6 +331,30 @@ def test_vacuum_reclaims_what_a_crashed_writer_leaves(tbl, monkeypatch):
     assert tbl.latest_version == 0
 
 
+def test_vacuum_tolerates_staging_removed_during_listing(tbl, monkeypatch):
+    # A concurrent writer removes its own .tmp-* staging dir when its
+    # stage finishes; if that happens after VACUUM listed the root, the
+    # vanished entry is skipped, not an error.
+    import os
+    import shutil
+    import time
+
+    tbl._commit([_stage_file(tbl, "part-live.parquet")])
+    _stage_file(tbl, ".tmp-writer/part-00000.parquet")
+    real_walk = os.walk
+
+    def walk_then_writer_cleans_up(top, *args, **kwargs):
+        for entry in real_walk(top, *args, **kwargs):
+            shutil.rmtree(os.path.join(tbl.path, ".tmp-writer"),
+                          ignore_errors=True)
+            yield entry
+
+    monkeypatch.setattr(os, "walk", walk_then_writer_cleans_up)
+    future = int(time.time() * 1000) + 60_000
+    assert tbl.vacuum(retention_ms=0, now_ms=future) == []
+    assert os.path.exists(os.path.join(tbl.path, "part-live.parquet"))
+
+
 def test_vacuum_keeps_what_the_cutoff_version_reads_across_checkpoint(tbl):
     # Retention is a version rule: every file live at the version current
     # at the cutoff, or added after it, survives (here f11 is removed
