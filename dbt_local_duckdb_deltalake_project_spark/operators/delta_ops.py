@@ -853,11 +853,11 @@ def delta_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = DeltaLikeTable(workdir(sf_dir, "delta_dv"))
     c = t(spark, sf_dir, "customer")
     tbl.write(c, mode="overwrite")
-    before = sorted(a["path"] for a in tbl._active_files())
+    before = sorted(a["path"] for a in tbl.live_files())
     tbl.delete_with_dv(
         spark, (F.col("c_acctbal") < 0) & (F.col("c_custkey") % 3 == 0)
     )
-    after_adds = tbl._active_files()
+    after_adds = tbl.live_files()
     files_unchanged = before == sorted(a["path"] for a in after_adds)
     dv_rows = sum(
         a["deletionVector"]["cardinality"]
@@ -916,10 +916,10 @@ def delta_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = t(spark, sf_dir, "supplier")
     even = F.col("s_suppkey") % 2 == 0
     tbl.write(s.filter(even), mode="overwrite")
-    files_before = sorted(a["path"] for a in tbl._active_files())
+    files_before = sorted(a["path"] for a in tbl.live_files())
     tbl.rename_column("s_name", "supplier_name")
     tbl.drop_column("s_acctbal")
-    files_after = sorted(a["path"] for a in tbl._active_files())
+    files_after = sorted(a["path"] for a in tbl.live_files())
     metadata_only = files_before == files_after
     # append the rest through the LOGICAL schema
     tbl.write(

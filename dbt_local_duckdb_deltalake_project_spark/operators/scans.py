@@ -174,7 +174,7 @@ def scan_deltalike_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # driver-side planning: log replay picks the live file set
     files = [
-        os.path.join(tbl.path, a["path"]) for a in tbl._active_files()
+        os.path.join(tbl.path, a["path"]) for a in tbl.live_files()
     ]
     schema_ddl = "o_orderkey bigint, o_orderstatus string, o_totalprice double"
 

@@ -23,10 +23,13 @@ queries execute the SAME logical transformations through
 
 from __future__ import annotations
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
+from ..sources import deltalog
 from ..streaming.twins import (
     read_staged_stream,
     replay_shuffle,
@@ -36,6 +39,66 @@ from ..streaming.twins import (
 from .registry import register
 
 DEC = "decimal(38,6)"
+
+# The log-tailing readers run in Python workers that may not be able to
+# import this package: cloudpickle ships ``deltalog`` with them by value.
+cloudpickle.register_pickle_by_value(deltalog)
+
+
+def _log_tail(
+    spark: SparkSession,
+    fmt: str,
+    schema: str,
+    table_path: str,
+    first: int,
+    rows_of,
+    columns: list[str],
+) -> DataFrame:
+    """A stream over the log of the table at ``table_path``, from version
+    ``first``: registers the Python data source ``fmt`` and returns its
+    streaming frame.
+
+    Offsets are log versions ({"version": v}), so a restart replays
+    exactly the versions its checkpoint has not committed.
+    ``latestOffset`` lists the log (file names, no rows), ``partitions``
+    emits one InputPartition per new commit, and ``read`` runs
+    ``rows_of(table_path, version, columns)`` — a ``deltalog`` function —
+    on the executors, so rows never materialize on the driver. The
+    classes are defined in this function, so cloudpickle ships them by
+    value. An availableNow trigger drains every new version in one
+    batch."""
+
+    class _Reader(DataSourceStreamReader):
+        def initialOffset(self):
+            return {"version": first}
+
+        def latestOffset(self):
+            return {"version": deltalog.DeltaLog(table_path).latest_version + 1}
+
+        def partitions(self, start, end):
+            return [
+                InputPartition(v) for v in range(start["version"], end["version"])
+            ]
+
+        def read(self, partition):
+            yield from rows_of(table_path, partition.value, columns)
+
+        def commit(self, end):
+            pass
+
+    class _Source(DataSource):
+        @classmethod
+        def name(cls):
+            return fmt
+
+        def schema(self):
+            return schema
+
+        def streamReader(self, schema):
+            return _Reader()
+
+    spark.dataSource.register(_Source)
+    return spark.readStream.format(fmt).load()
 
 
 def _tumbling(stream: DataFrame) -> DataFrame:
@@ -603,25 +666,14 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_deltalike_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The versioned table as a STREAMING SOURCE (Spark 4 Python Data
-    Source streaming API): offsets are log versions, each batch drains the commits since the last — the
-    "Delta table as a stream" pattern that lets downstream consumers
-    tail a warehouse table incrementally instead of re-scanning it.
-
-    Offsets are log versions ({"version": v}), so restart/recovery
-    replays exactly the uncommitted versions (readBetweenOffsets); the
-    reader parses the _delta_log directly with stdlib+pyarrow only,
-    because the class ships by value to the worker process (closure
-    definition, the CLAUDE.md gotcha). Draining all three appends in
-    complete mode must reproduce the batch aggregate (oracle parity).
+    Source streaming API): offsets are log versions, each batch drains
+    the commits since the last — the "Delta table as a stream" pattern
+    that lets downstream consumers tail a warehouse table incrementally
+    instead of re-scanning it. ``_log_tail`` reads each commit's appended
+    rows (``deltalog.appended_rows``, which refuses a commit that removes
+    files). Draining all three appends in complete mode must reproduce
+    the batch aggregate (oracle parity).
     """
-    import json as _json
-    import os
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
     from ..catalog import t
     from ..sources.deltalike import DeltaLikeTable
     from ..sources.workspace import workdir
@@ -634,82 +686,14 @@ def stream_deltalike_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.write(o.filter(F.col("o_orderkey") % 3 == 2), mode="append")
 
     tbl = _staged_table(sf_dir, "delta_stream_src", build)
-    table_path = tbl.path
-    n_versions = tbl.latest_version + 1
-
-    class _Reader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"version": 0}
-
-        def _commit_rows(self, v):
-            import pyarrow.parquet as pq
-
-            log = os.path.join(table_path, "_delta_log", f"{v:020d}.json")
-            if not os.path.exists(log):
-                return
-            with open(log) as fh:
-                acts = [_json.loads(ln) for ln in fh]
-            # APPEND-ONLY contract, made explicit: this tail replays
-            # add actions only, so an overwrite/merge/delete commit
-            # (which carries removes) would re-emit every rewritten
-            # file's rows and double-count vs the batch table. Refuse
-            # loudly instead of silently diverging. v0 is the initial
-            # snapshot commit and may legitimately clear a prior state.
-            if v > 0 and any("remove" in a for a in acts):
-                raise ValueError(
-                    f"deltalike_stream: commit {v} contains remove "
-                    "actions; this source tails append-only tables"
-                )
-            for act in acts:
-                if "add" in act:
-                    f = os.path.join(table_path, act["add"]["path"])
-                    for row in pq.read_table(f).to_pylist():
-                        yield (row["o_orderkey"], row["o_orderstatus"])
-
-        def read(self, start):
-            # Consume every commit that exists past the offset (the
-            # availableNow wrapper snapshots ONE read() as the available
-            # range, so returning a single commit would drain only it);
-            # a live tail still advances incrementally: commits landing
-            # after catch-up arrive in later batches. Materialized list:
-            # the prefetching wrapper pickles rows for recovery and
-            # generators can't pickle.
-            v = start["version"]
-            rows: list = []
-            while os.path.exists(
-                os.path.join(table_path, "_delta_log", f"{v:020d}.json")
-            ):
-                rows.extend(self._commit_rows(v))
-                v += 1
-            return rows, {"version": v}
-
-        def readBetweenOffsets(self, start, end):
-            return [
-                row
-                for v in range(start["version"], end["version"])
-                for row in self._commit_rows(v)
-            ]
-
-        def commit(self, end):
-            pass
-
-    class _DeltaStreamSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "deltalike_stream"
-
-        def schema(self):
-            return "o_orderkey bigint, o_orderstatus string"
-
-        def simpleStreamReader(self, schema):
-            return _Reader()
-
-    spark.dataSource.register(_DeltaStreamSource)
+    stream = _log_tail(
+        spark, "deltalike_stream", "o_orderkey bigint, o_orderstatus string",
+        tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
+    )
     import uuid as _uuid
 
     sink = f"sink_dlstream_{_uuid.uuid4().hex[:8]}"
     ckpt = workdir(sf_dir, "stream_ckpt_dlsrc")
-    stream = spark.readStream.format("deltalike_stream").load()
     agg = stream.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders")
     )
@@ -798,6 +782,9 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CDF_SCHEMA = "version int, change_type string, c_custkey bigint, acctbal double"
+
+
 @register(
     "stream_change_data_feed",
     """
@@ -844,28 +831,14 @@ def stream_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     readChangeFeed startingVersion=1. Per-commit state is bounded by
     that commit's rewritten files, not the table.
 
-    This is the PARTITIONED ``DataSourceStreamReader`` (r10 — upgraded
-    from the driver-side Simple API): the driver only walks log
-    FILENAMES for offsets (``latestOffset`` is an O(versions) metadata
-    scan, no rows), ``partitions()`` emits one InputPartition per
-    drained commit, and ``read(partition)`` opens that commit's
-    added/removed parquet ON THE EXECUTORS — change rows never
-    materialize on the driver, so at 100 TB the CDF tail scales with
-    change volume across the cluster (verified here: read() runs in
-    Python worker pids, not the driver pid). Everything read() touches
-    is imported inside the method — cloudpickle ships the closure to
-    the worker (the CLAUDE.md UDF-closure rule). Output aggregates
+    The tail is ``_log_tail``'s partitioned ``DataSourceStreamReader``
+    (the driver only lists log file names for offsets, and
+    ``read(partition)`` derives one commit's changes with
+    ``deltalog.change_diff`` ON THE EXECUTORS), so at 100 TB the CDF
+    tail scales with change volume across the cluster. Output aggregates
     per (version, change_type) with an exact key checksum — complete
     mode must reproduce the relational expectation.
     """
-    import os
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
     from ..catalog import t
     from ..sources.deltalike import DeltaLikeTable
     from ..sources.workspace import workdir
@@ -886,100 +859,14 @@ def stream_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.delete(spark, F.col("c_custkey") % 53 == 0)
 
     tbl = _staged_table(sf_dir, "delta_cdf_stream", build)
-    table_path = tbl.path
-
-    class _CdfPartition(InputPartition):
-        def __init__(self, version):
-            self.version = version
-
-    class _CdfReader(DataSourceStreamReader):
-        def initialOffset(self):
-            return {"version": 1}  # v0 = initial snapshot, not a change
-
-        def latestOffset(self):
-            # driver-side METADATA walk only — log filenames, no rows
-            v = 1
-            while os.path.exists(
-                os.path.join(table_path, "_delta_log", f"{v:020d}.json")
-            ):
-                v += 1
-            return {"version": v}
-
-        def partitions(self, start, end):
-            return [
-                _CdfPartition(v)
-                for v in range(start["version"], end["version"])
-            ]
-
-        def read(self, partition):
-            # EXECUTOR-side: one commit's change derivation per task.
-            # All imports local — this closure is cloudpickled to the
-            # Python worker.
-            import json as _json
-            import os as _os
-            from collections import Counter
-
-            import pyarrow.parquet as pq
-
-            v = partition.version
-            log = _os.path.join(
-                table_path, "_delta_log", f"{v:020d}.json"
-            )
-            if not _os.path.exists(log):
-                return
-            with open(log) as fh:
-                acts = [_json.loads(ln) for ln in fh]
-
-            def rows_of(paths):
-                cnt = Counter()
-                for p in paths:
-                    f = _os.path.join(table_path, p)
-                    for row in pq.read_table(f).to_pylist():
-                        cnt[(row["c_custkey"], row["acctbal"])] += 1
-                return cnt
-
-            added = rows_of(
-                a["add"]["path"] for a in acts if "add" in a
-            )
-            removed = rows_of(
-                a["remove"]["path"] for a in acts if "remove" in a
-            )
-            appeared = added - removed
-            vanished = removed - added
-            app_keys = {k for (k, _b) in appeared}
-            van_keys = {k for (k, _b) in vanished}
-            for (k, b), n in sorted(appeared.items()):
-                ct = "update_postimage" if k in van_keys else "insert"
-                for _ in range(n):
-                    yield (v, ct, k, b)
-            for (k, b), n in sorted(vanished.items()):
-                ct = "update_preimage" if k in app_keys else "delete"
-                for _ in range(n):
-                    yield (v, ct, k, b)
-
-        def commit(self, end):
-            pass
-
-    class _CdfStreamSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "deltalike_cdf_stream"
-
-        def schema(self):
-            return (
-                "version int, change_type string, "
-                "c_custkey bigint, acctbal double"
-            )
-
-        def streamReader(self, schema):
-            return _CdfReader()
-
-    spark.dataSource.register(_CdfStreamSource)
+    stream = _log_tail(
+        spark, "deltalike_cdf_stream", _CDF_SCHEMA, tbl.path, 1,
+        deltalog.change_diff, ["c_custkey", "acctbal"],
+    )
     import uuid as _uuid
 
     sink = f"sink_cdfstream_{_uuid.uuid4().hex[:8]}"
     ckpt = workdir(sf_dir, "stream_ckpt_cdf")
-    stream = spark.readStream.format("deltalike_cdf_stream").load()
     agg = stream.groupBy("version", "change_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("c_custkey").alias("key_checksum"),
@@ -1016,15 +903,12 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     final complete-mode counts must equal the batch aggregate over ALL
     commits — together those two facts prove exactly-once across a
     restart. The source is the versioned table tailed by log-version
-    offsets (fresh per call, since the op mutates it mid-stream).
+    offsets (``_log_tail`` over ``deltalog.appended_rows``; fresh per
+    call, since the op mutates it mid-stream).
     """
     import json as _json
     import os
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
+    import uuid as _uuid
 
     from ..catalog import t
     from ..sources.deltalike import DeltaLikeTable
@@ -1034,67 +918,14 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     tbl.write(o.filter(F.col("o_orderkey") % 4 == 0), mode="overwrite")
     tbl.write(o.filter(F.col("o_orderkey") % 4 == 1), mode="append")
-    table_path = tbl.path
-
-    class _Reader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"version": 0}
-
-        def _commit_rows(self, v):
-            import pyarrow.parquet as pq
-
-            log = os.path.join(table_path, "_delta_log", f"{v:020d}.json")
-            if not os.path.exists(log):
-                return
-            with open(log) as fh:
-                acts = [_json.loads(ln) for ln in fh]
-            for act in acts:
-                if "add" in act:
-                    f = os.path.join(table_path, act["add"]["path"])
-                    for row in pq.read_table(f).to_pylist():
-                        yield (row["o_orderkey"], row["o_orderstatus"])
-
-        def read(self, start):
-            v = start["version"]
-            rows: list = []
-            while os.path.exists(
-                os.path.join(table_path, "_delta_log", f"{v:020d}.json")
-            ):
-                rows.extend(self._commit_rows(v))
-                v += 1
-            return rows, {"version": v}
-
-        def readBetweenOffsets(self, start, end):
-            return [
-                row
-                for v in range(start["version"], end["version"])
-                for row in self._commit_rows(v)
-            ]
-
-        def commit(self, end):
-            pass
-
-    class _Src(DataSource):
-        @classmethod
-        def name(cls):
-            return "ckpt_recovery_stream"
-
-        def schema(self):
-            return "o_orderkey bigint, o_orderstatus string"
-
-        def simpleStreamReader(self, schema):
-            return _Reader()
-
-    spark.dataSource.register(_Src)
-    import uuid as _uuid
 
     ckpt = workdir(sf_dir, "stream_ckpt_recovery")
+    agg = _log_tail(
+        spark, "ckpt_recovery_stream", "o_orderkey bigint, o_orderstatus string",
+        tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
+    ).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_orders"))
 
     def run_once(sink):
-        stream = spark.readStream.format("ckpt_recovery_stream").load()
-        agg = stream.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n_orders")
-        )
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -1606,14 +1437,6 @@ def stream_cdf_downstream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     is correct iff it hash-matches the upstream's closed-form final
     state.
     """
-    import json as _json
-    import os
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
     from ..catalog import t
     from ..sources.deltalike import DeltaLikeTable
     from ..sources.workspace import workdir
@@ -1634,97 +1457,6 @@ def stream_cdf_downstream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.delete(spark, F.col("c_custkey") % 13 == 7)
 
     src = _staged_table(sf_dir, "delta_cdf_sync_stream", build)
-    table_path = src.path
-
-    # Deliberately self-contained rather than sharing
-    # stream_change_data_feed's reader: that op is driver-green with its
-    # own staged table (different delete predicate), and its closure
-    # captures its own table_path — extracting a shared reader would
-    # couple a verified op's code path to this one for ~60 saved lines.
-    # (stream_change_data_feed moved to the partitioned
-    # DataSourceStreamReader in r10; this one KEEPS the Simple API on
-    # purpose — foreachBatch must see every version in ONE batch to
-    # apply merges in order, which the drain-everything read() below
-    # guarantees. Correctness does NOT depend on the availableNow→
-    # single-batch fallback: even under true availableNow semantics,
-    # later read() calls return empty, so the first batch still carries
-    # all versions.)
-    class _CdfSyncReader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"version": 1}  # v0 = the replica's seed snapshot
-
-        def _commit_changes(self, v):
-            from collections import Counter
-
-            import pyarrow.parquet as pq
-
-            log = os.path.join(table_path, "_delta_log", f"{v:020d}.json")
-            if not os.path.exists(log):
-                return
-            with open(log) as fh:
-                acts = [_json.loads(ln) for ln in fh]
-
-            def rows_of(paths):
-                cnt = Counter()
-                for p in paths:
-                    f = os.path.join(table_path, p)
-                    for row in pq.read_table(f).to_pylist():
-                        cnt[(row["c_custkey"], row["acctbal"])] += 1
-                return cnt
-
-            added = rows_of(a["add"]["path"] for a in acts if "add" in a)
-            removed = rows_of(
-                a["remove"]["path"] for a in acts if "remove" in a
-            )
-            appeared = added - removed
-            vanished = removed - added
-            app_keys = {k for (k, _b) in appeared}
-            van_keys = {k for (k, _b) in vanished}
-            for (k, b), n in sorted(appeared.items()):
-                ct = "update_postimage" if k in van_keys else "insert"
-                for _ in range(n):
-                    yield (v, ct, k, b)
-            for (k, b), n in sorted(vanished.items()):
-                ct = "update_preimage" if k in app_keys else "delete"
-                for _ in range(n):
-                    yield (v, ct, k, b)
-
-        def read(self, start):
-            v = start["version"]
-            rows: list = []
-            while os.path.exists(
-                os.path.join(table_path, "_delta_log", f"{v:020d}.json")
-            ):
-                rows.extend(self._commit_changes(v))
-                v += 1
-            return rows, {"version": v}
-
-        def readBetweenOffsets(self, start, end):
-            return [
-                row
-                for v in range(start["version"], end["version"])
-                for row in self._commit_changes(v)
-            ]
-
-        def commit(self, end):
-            pass
-
-    class _CdfSyncStreamSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "deltalike_cdf_sync_stream"
-
-        def schema(self):
-            return (
-                "version int, change_type string, "
-                "c_custkey bigint, acctbal double"
-            )
-
-        def simpleStreamReader(self, schema):
-            return _CdfSyncReader()
-
-    spark.dataSource.register(_CdfSyncStreamSource)
-
     down = DeltaLikeTable(workdir(sf_dir, "stream_cdf_downstream"))
     down.write(src.read(spark, as_of=0), mode="overwrite")
 
@@ -1751,7 +1483,11 @@ def stream_cdf_downstream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     ckpt = workdir(sf_dir, "stream_ckpt_cdf_sync")
-    stream = spark.readStream.format("deltalike_cdf_sync_stream").load()
+    # v0 seeded the replica, so the tail starts at v1
+    stream = _log_tail(
+        spark, "deltalike_cdf_sync_stream", _CDF_SCHEMA, src.path, 1,
+        deltalog.change_diff, ["c_custkey", "acctbal"],
+    )
     with replay_shuffle(spark):
         q = (
             stream.writeStream.foreachBatch(apply_batch)

@@ -6,11 +6,7 @@ installed here, so this module implements the storage layer from the
 PUBLIC Delta Lake protocol spec (delta-io/delta PROTOCOL.md): an ordered
 ``_delta_log/`` of JSON commit files holding ``protocol`` / ``metaData``
 / ``add`` / ``remove`` actions over immutable parquet data files at the
-table root. Tables written here follow the spec's layout::
-
-    <path>/_delta_log/00000000000000000000.json   commit 0 (one action/line)
-    <path>/_delta_log/00000000000000000001.json   commit 1
-    <path>/part-*.parquet                         data files
+table root (``part-*.parquet``, or under ``col=value/`` when partitioned).
 
 Capabilities the stack exercises:
 
@@ -23,12 +19,12 @@ Capabilities the stack exercises:
   references (crash orphans and ``.tmp-*`` staging included); at
   retention 0 a concurrent writer's uncommitted files are not protected
 
-Every operation derives table state from one ``Snapshot`` — the log
-replayed through a version, as Delta's own readers do. A handle keeps its
-latest snapshot and, on each operation, lists ``_delta_log`` and replays
-only the commits newer than it, so commits made through other handles
-are always seen and no operation replays the log twice. Reads take the
-schema from the snapshot's metaData, never from the data files.
+The log itself — commits, ``Snapshot`` replay, checkpoints, history,
+timestamp resolution and VACUUM — is ``deltalog.DeltaLog``, a module with
+no Spark import; this module adds the Spark I/O over it (staging data
+files, reads, DML plans). Every operation derives table state from one
+``Snapshot``, and reads take the schema from the snapshot's metaData,
+never from the data files.
 
 Scale notes (100 TB): reads are plain multi-path parquet scans, so column
 pruning / predicate pushdown all still fire; the log is O(#commits)
@@ -50,14 +46,19 @@ import shutil
 import struct
 import time
 import uuid
-from dataclasses import dataclass, field
-from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
+from .deltalog import (
+    CHECKPOINT_INTERVAL,  # noqa: F401 — re-exported for callers of this module
+    COLUMN_MAPPING_KEY,
+    PHYSICAL_NAME_KEY,
+    DeltaLog,
+    Snapshot,
+    remove,
+)
 
 # Deletion vectors: descriptors with at most this many deleted rows are
 # stored inline in the add action (storageType "i", ascii85 payload —
@@ -68,86 +69,6 @@ PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 # packed-array stand-in keeps the same descriptor contract (documented
 # divergence, same class as the media-codec stub).
 _DV_INLINE_MAX = 64
-
-# Column-mapping (protocol §column-mapping, "name" mode): logical names
-# live in the schemaString; each field's metadata pins the physical
-# parquet column name, so RENAME/DROP COLUMN are metadata-only commits.
-_COLUMN_MAPPING_KEY = "delta.columnMapping.mode"
-_PHYSICAL_NAME_KEY = "delta.columnMapping.physicalName"
-
-# Write a parquet checkpoint every N commits (the protocol's default
-# checkpointInterval is 10): a reader then replays O(interval) JSON files
-# instead of O(#commits) — the difference between O(1) and minutes of log
-# replay on a 10k-commit streaming-append table.
-CHECKPOINT_INTERVAL = 10
-
-_LAST_CHECKPOINT = "_last_checkpoint"
-
-
-def _checkpoint_arrow_schema():
-    """Checkpoint rows follow the protocol's action-struct shape (one
-    struct column per action type, exactly one non-null per row)."""
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            (
-                "protocol",
-                pa.struct(
-                    [
-                        ("minReaderVersion", pa.int32()),
-                        ("minWriterVersion", pa.int32()),
-                    ]
-                ),
-            ),
-            (
-                "metaData",
-                pa.struct(
-                    [
-                        ("id", pa.string()),
-                        ("format", pa.struct([("provider", pa.string())])),
-                        ("schemaString", pa.string()),
-                        ("partitionColumns", pa.list_(pa.string())),
-                        ("configuration", pa.map_(pa.string(), pa.string())),
-                        ("createdTime", pa.int64()),
-                    ]
-                ),
-            ),
-            (
-                "txn",
-                pa.struct(
-                    [
-                        ("appId", pa.string()),
-                        ("version", pa.int64()),
-                    ]
-                ),
-            ),
-            (
-                "add",
-                pa.struct(
-                    [
-                        ("path", pa.string()),
-                        ("partitionValues", pa.map_(pa.string(), pa.string())),
-                        ("size", pa.int64()),
-                        ("modificationTime", pa.int64()),
-                        ("dataChange", pa.bool_()),
-                        ("stats", pa.string()),
-                        (
-                            "deletionVector",
-                            pa.struct(
-                                [
-                                    ("storageType", pa.string()),
-                                    ("pathOrInlineDv", pa.string()),
-                                    ("sizeInBytes", pa.int64()),
-                                    ("cardinality", pa.int64()),
-                                ]
-                            ),
-                        ),
-                    ]
-                ),
-            ),
-        ]
-    )
 
 
 def _file_stats(path: str) -> str:
@@ -196,108 +117,19 @@ def _file_stats(path: str) -> str:
     )
 
 
-def _remove(path: str, now: int) -> dict:
-    return {"remove": {"path": path, "deletionTimestamp": now, "dataChange": True}}
+def _schema(snap: Snapshot) -> StructType:
+    """The log schema (logical names, field metadata kept)."""
+    return StructType.fromJson({"type": "struct", "fields": snap.fields})
 
 
-@dataclass(frozen=True)
-class Snapshot:
-    """The table state at ``version``: the log replayed through it.
-
-    Immutable — ``advance`` returns a new snapshot. Everything an
-    operation needs to know about the table (schema, configuration,
-    constraints, column mapping, generated columns, txn high-water marks,
-    the live file set) is read off one snapshot, so an operation derives
-    table state once."""
-
-    version: int = -1
-    protocol: dict = field(default_factory=lambda: dict(PROTOCOL))
-    metadata: dict | None = None
-    adds: dict[str, dict] = field(default_factory=dict)  # live adds by path
-    txns: dict[str, int] = field(default_factory=dict)  # appId → version
-
-    def advance(self, version: int, actions: list[dict]) -> Snapshot:
-        """The state after applying ``actions`` (commits up to ``version``)."""
-        protocol, metadata = self.protocol, self.metadata
-        adds, txns = dict(self.adds), dict(self.txns)
-        for act in actions:
-            if "add" in act:
-                adds[act["add"]["path"]] = act["add"]
-            elif "remove" in act:
-                adds.pop(act["remove"]["path"], None)
-            elif "metaData" in act:
-                metadata = act["metaData"]
-            elif "txn" in act:
-                t_ = act["txn"]
-                txns[t_["appId"]] = max(
-                    txns.get(t_["appId"], -1), int(t_.get("version", -1))
-                )
-            elif "protocol" in act:
-                protocol = act["protocol"]
-        return Snapshot(version, protocol, metadata, adds, txns)
-
-    @cached_property
-    def fields(self) -> list[dict]:
-        if self.metadata is None:
-            return []
-        return json.loads(self.metadata["schemaString"])["fields"]
-
-    @cached_property
-    def schema(self) -> StructType | None:
-        if self.metadata is None:
-            return None
-        return StructType.fromJson({"type": "struct", "fields": self.fields})
-
-    @property
-    def configuration(self) -> dict:
-        return dict((self.metadata or {}).get("configuration") or {})
-
-    @property
-    def constraints(self) -> dict[str, str]:
-        prefix = "delta.constraints."
-        return {
-            k[len(prefix):]: v
-            for k, v in self.configuration.items()
-            if k.startswith(prefix)
-        }
-
-    @property
-    def generated_columns(self) -> dict[str, str]:
-        return {
-            f["name"]: f["metadata"]["delta.generationExpression"]
-            for f in self.fields
-            if (f.get("metadata") or {}).get("delta.generationExpression")
-        }
-
-    @property
-    def mapping(self) -> list[tuple[str, str]] | None:
-        """[(logical, physical)] when column mapping is active, else None.
-
-        Physical names are what the parquet files carry; logical names
-        are what readers see. The mapping lives in the schemaString's
-        per-field ``delta.columnMapping.physicalName`` metadata, exactly
-        the protocol's name-mapping mode."""
-        if self.configuration.get(_COLUMN_MAPPING_KEY) != "name":
-            return None
-        return [
-            (
-                f["name"],
-                (f.get("metadata") or {}).get(_PHYSICAL_NAME_KEY, f["name"]),
-            )
-            for f in self.fields
-        ]
-
-    @cached_property
-    def read_schema(self) -> StructType:
-        """The parquet read schema: the log schema under the files'
-        physical column names, without field metadata."""
-        phys = dict(self.mapping or [])
-        return StructType(
-            [
-                StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-                for f in self.schema.fields
-            ]
-        )
+def _read_schema(snap: Snapshot) -> StructType:
+    """The parquet read schema: the log schema under the files'
+    physical column names, without field metadata."""
+    phys = dict(snap.mapping or [])
+    return StructType([
+        StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
+        for f in _schema(snap).fields
+    ])
 
 
 def _prune(
@@ -395,273 +227,23 @@ def _base_path(paths: list[str]) -> str:
 class DeltaLikeTable:
     def __init__(self, path: str):
         self.path = path
-        self._log_dir = os.path.join(path, "_delta_log")
-        self._cache: Snapshot | None = None  # the latest snapshot seen
-
-    # -- commit log -------------------------------------------------------
-    def _commit_path(self, version: int) -> str:
-        return os.path.join(self._log_dir, f"{version:020d}.json")
-
-    def _listing(self) -> tuple[list[int], list[int]]:
-        """(commit versions, checkpoint versions) in ``_delta_log``."""
-        try:
-            names = os.listdir(self._log_dir)
-        except FileNotFoundError:
-            return [], []
-        commits, checkpoints = [], []
-        for name in names:
-            if not name[:20].isdigit():
-                continue
-            if name.endswith(".checkpoint.parquet"):
-                checkpoints.append(int(name[:20]))
-            elif name.endswith(".json"):
-                commits.append(int(name[:20]))
-        return sorted(commits), sorted(checkpoints)
+        self.log = DeltaLog(path)
 
     @property
     def latest_version(self) -> int:
-        commits, _ = self._listing()
-        return commits[-1] if commits else -1
-
-    def _last_checkpoint(self) -> dict | None:
-        try:
-            with open(os.path.join(self._log_dir, _LAST_CHECKPOINT)) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def _read_commit(self, version: int) -> list[dict]:
-        with open(self._commit_path(version)) as f:
-            return [json.loads(ln) for ln in f if ln.strip()]
-
-    def _read_checkpoint(self, version: int) -> Snapshot:
-        import pyarrow.parquet as pq
-
-        path = os.path.join(self._log_dir, f"{version:020d}.checkpoint.parquet")
-        acts: list[dict] = []
-        for row in pq.read_table(path).to_pylist():
-            for kind in ("protocol", "metaData", "txn", "add"):
-                val = row.get(kind)
-                if val is None:
-                    continue
-                if kind == "add":
-                    val = dict(val)
-                    val["partitionValues"] = dict(val.get("partitionValues") or [])
-                elif kind == "metaData":
-                    val = dict(val)
-                    val["configuration"] = dict(val.get("configuration") or [])
-                acts.append({kind: val})
-        return Snapshot().advance(version, acts)
-
-    def _write_checkpoint(self, snap: Snapshot) -> None:
-        """Write ``snap`` as ``<v>.checkpoint.parquet`` + ``_last_checkpoint``
-        (both the protocol's names): protocol, latest metaData, the newest
-        txn per appId and the live add set, so a reader starts there and
-        only replays newer JSON commits. JSON commit files are kept
-        (history/time-travel before the checkpoint still works); VACUUM
-        owns physical cleanup."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        meta = snap.metadata
-        if meta is not None:
-            meta = {
-                "id": meta.get("id"),
-                "format": {"provider": meta.get("format", {}).get("provider")},
-                "schemaString": meta.get("schemaString"),
-                "partitionColumns": meta.get("partitionColumns", []),
-                "configuration": list((meta.get("configuration") or {}).items()),
-                "createdTime": meta.get("createdTime"),
-            }
-        rows: list[dict] = [{"protocol": snap.protocol}, {"metaData": meta}]
-        rows += [
-            {"txn": {"appId": k, "version": v}} for k, v in sorted(snap.txns.items())
-        ]
-        rows += [
-            {"add": {**a, "partitionValues": list(
-                (a.get("partitionValues") or {}).items()
-            )}}
-            for a in snap.adds.values()
-        ]
-        schema = _checkpoint_arrow_schema()
-        cols = {name: [row.get(name) for row in rows] for name in schema.names}
-        table = pa.Table.from_pydict(cols, schema=schema)
-        cp_path = os.path.join(
-            self._log_dir, f"{snap.version:020d}.checkpoint.parquet"
-        )
-        tmp = cp_path + f".tmp-{uuid.uuid4().hex}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, cp_path)
-        lc_tmp = os.path.join(self._log_dir, f".lc-{uuid.uuid4().hex}")
-        with open(lc_tmp, "w") as f:
-            json.dump({"version": snap.version, "size": len(rows)}, f)
-        os.replace(lc_tmp, os.path.join(self._log_dir, _LAST_CHECKPOINT))
-
-    def _snapshot(self, as_of: int | None = None) -> Snapshot:
-        """The table state at ``as_of`` (default: latest).
-
-        Lists ``_delta_log`` first, so commits made through any handle are
-        seen. Starts from this handle's cached snapshot when it is not
-        newer than the target (commit files are immutable, so it stays
-        valid), else from the newest checkpoint at or before it, else
-        from an empty table, and replays only the JSON commits after that
-        start. PROTOCOL.md reader requirement: a client MUST refuse a
-        table whose protocol demands a reader version above what it
-        implements — silently proceeding returns wrong results once an
-        unsupported feature changes file interpretation."""
-        commits, checkpoints = self._listing()
-        latest = commits[-1] if commits else -1
-        version = latest if as_of is None else as_of
-        if not -1 <= version <= latest:
-            raise ValueError(
-                f"version {as_of} does not exist in {self.path} "
-                f"(latest is {latest})"
-            )
-        snap = self._cache
-        if snap is None or snap.version > version:
-            cp = max((c for c in checkpoints if c <= version), default=None)
-            snap = Snapshot() if cp is None else self._read_checkpoint(cp)
-        if snap.version < version:
-            snap = snap.advance(version, [
-                act
-                for v in range(snap.version + 1, version + 1)
-                for act in self._read_commit(v)
-            ])
-        supported = PROTOCOL["minReaderVersion"]
-        if int(snap.protocol.get("minReaderVersion") or 1) > supported:
-            raise ValueError(
-                f"table at {self.path} requires minReaderVersion "
-                f"{snap.protocol['minReaderVersion']}; this reader supports "
-                f"{supported} — upgrade the reader, do not guess"
-            )
-        if as_of is None and version >= 0:
-            self._cache = snap
-        return snap
-
-    def _active_files(self, as_of: int | None = None) -> list[dict]:
-        """The live ``add`` set at a version."""
-        return list(self._snapshot(as_of).adds.values())
-
-    def _commit(
-        self,
-        actions: list[dict],
-        operation: str | None = None,
-        snap: Snapshot | None = None,
-        blind_append: bool = False,
-    ) -> int:
-        """Optimistic-concurrency commit (the spec's put-if-absent
-        contract): stage the actions to a temp file, then publish with
-        ``os.link`` — which FAILS if the target commit number already
-        exists (``os.replace`` would silently clobber a concurrent
-        writer's commit). On collision, re-list the log and retry at the
-        next version, exactly Delta's optimistic retry loop. Object
-        stores swap the hard-link for their native if-none-match put.
-
-        ``snap`` is the state the operation read. The commitInfo action
-        carries the commit timestamp (ms) that timestampAsOf resolves
-        against, the operation name DESCRIBE HISTORY reports, the read
-        version, whether the commit is a blind append, and Delta's
-        operationMetrics. Replay ignores it."""
-        if snap is None:
-            snap = self._snapshot()
-        adds = [a["add"] for a in actions if "add" in a]
-        info: dict = {"isBlindAppend": blind_append, "operationMetrics": {
-            "numFiles": len(adds),
-            "numOutputRows": sum(
-                json.loads(a["stats"])["numRecords"] for a in adds if a.get("stats")
-            ),
-            "numOutputBytes": sum(a.get("size") or 0 for a in adds),
-            "numRemovedFiles": sum(1 for a in actions if "remove" in a),
-        }}
-        if operation is not None:
-            info["operation"] = operation
-        if snap.version >= 0:
-            info["readVersion"] = snap.version
-        os.makedirs(self._log_dir, exist_ok=True)
-        tmp = os.path.join(self._log_dir, f".tmp-{uuid.uuid4().hex}")
-        version = snap.version + 1
-        while True:
-            staged = [
-                {"commitInfo": {"timestamp": int(time.time() * 1000), **info}},
-                *actions,
-            ]
-            if version == 0:
-                staged = [{"protocol": PROTOCOL}, *staged]
-            with open(tmp, "w") as f:
-                for act in staged:
-                    f.write(json.dumps(act) + "\n")
-            try:
-                os.link(tmp, self._commit_path(version))  # atomic put-if-absent
-                break
-            except FileExistsError:
-                version = self.latest_version + 1  # lost the race — retry
-            finally:
-                os.remove(tmp)
-        if version == snap.version + 1:
-            committed = self._cache = snap.advance(version, staged)
-        else:
-            committed = self._snapshot(as_of=version)
-        if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-            self._write_checkpoint(committed)
-        return version
-
-    def _commit_info(self, version: int) -> dict:
-        """Commit ``version``'s commitInfo action, its ``timestamp``
-        (epoch-ms) falling back to the log file's mtime — the same
-        fallback Delta itself uses for tables whose writers predate
-        in-commit timestamps."""
-        path = self._commit_path(version)
-        info: dict = {}
-        with open(path) as f:
-            for ln in f:
-                act = json.loads(ln)
-                if "commitInfo" in act:
-                    info = act["commitInfo"]
-                    break
-        if info.get("timestamp") is None:
-            info = {**info, "timestamp": os.path.getmtime(path) * 1000}
-        return {**info, "timestamp": int(info["timestamp"])}
+        return self.log.latest_version
 
     def commit_timestamp(self, version: int) -> int:
-        """Commit timestamp in epoch-ms (see ``_commit_info``)."""
-        return self._commit_info(version)["timestamp"]
+        """Commit timestamp in epoch-ms (``DeltaLog.commit_info``)."""
+        return self.log.commit_info(version)["timestamp"]
 
     def history(self) -> list[dict]:
-        """``DESCRIBE HISTORY`` — one row per commit, newest first (the
-        order Delta presents), from the commitInfo actions alone: each
-        commit file is opened once, no data file is. Rows carry the
-        operation (the protocol's placeholder ``WRITE`` for commits
-        written before the field existed), timestamp, and — where the
-        commit recorded them — readVersion, isBlindAppend and
-        operationMetrics."""
-        rows = []
-        for v in range(self.latest_version + 1):
-            info = self._commit_info(v)
-            row = {
-                "version": v,
-                "timestamp": info["timestamp"],
-                "operation": info.get("operation") or "WRITE",
-            }
-            for key in ("readVersion", "isBlindAppend", "operationMetrics"):
-                if key in info:
-                    row[key] = info[key]
-            rows.append(row)
-        rows.reverse()
-        return rows
+        """``DESCRIBE HISTORY``, newest first (``DeltaLog.history``)."""
+        return self.log.history()
 
     def version_at_timestamp(self, ts_ms: int) -> int:
-        """``TIMESTAMP AS OF`` resolution: the LATEST version whose
-        commit timestamp is <= ``ts_ms`` (Delta's rule — a reader at time
-        T sees every commit that had completed by T). Errors if ``ts_ms``
-        predates the first commit, like Delta's
-        ``timestampAsOf`` on a too-early timestamp. Scans from the newest
-        commit back, so a recent timestamp opens few commit files."""
-        for v in range(self.latest_version, -1, -1):
-            if self.commit_timestamp(v) <= ts_ms:
-                return v  # commit timestamps are monotonic
-        raise ValueError(
-            f"timestamp {ts_ms} is before the first commit of {self.path}"
-        )
+        """``TIMESTAMP AS OF`` resolution (``DeltaLog.version_at_timestamp``)."""
+        return self.log.version_at_timestamp(ts_ms)
 
     # -- writes -----------------------------------------------------------
     def _stage_data_files(
@@ -672,34 +254,34 @@ class DeltaLikeTable:
         files never collide. With ``partition_by``, files land under
         hive-style ``col=value/`` directories and each ``add`` carries
         the spec's ``partitionValues`` map — the metadata a reader prunes
-        on without listing or opening any file."""
+        on without listing or opening any file. A file with no rows gets
+        no add (Delta adds none for an empty write); the commit still
+        lands."""
         tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         # Spark's default INT96 timestamps carry NO parquet min/max
         # statistics — data skipping on a temporal column (the 100 TB
-        # win) would silently never fire. Write TIMESTAMP_MICROS (what
-        # Delta itself writes) for the duration of the stage, restoring
-        # the caller's conf after.
-        sess = df.sparkSession
-        conf_key = "spark.sql.parquet.outputTimestampType"
-        prev = sess.conf.get(conf_key, None)
-        sess.conf.set(conf_key, "TIMESTAMP_MICROS")
-        try:
-            writer.parquet(tmp)
-        finally:
-            if prev is None:
-                sess.conf.unset(conf_key)
-            else:
-                sess.conf.set(conf_key, prev)
+        # win) would silently never fire. Pin TIMESTAMP_MICROS (what
+        # Delta itself writes) on the session, as catalog.read_table
+        # pins its confs: restoring the caller's value afterwards let a
+        # concurrent writer on the same session stage INT96 files.
+        df.sparkSession.conf.set(
+            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        )
+        writer.parquet(tmp)
         now = int(time.time() * 1000)
         adds = []
         for dirpath, _dirs, fnames in sorted(os.walk(tmp)):
             for fname in sorted(fnames):
                 if not fname.endswith(".parquet"):
                     continue
-                rel = os.path.relpath(os.path.join(dirpath, fname), tmp)
+                staged = os.path.join(dirpath, fname)
+                stats = _file_stats(staged)
+                if json.loads(stats)["numRecords"] == 0:
+                    continue  # left in tmp, removed with it below
+                rel = os.path.relpath(staged, tmp)
                 pvals = dict(
                     part.split("=", 1)
                     for part in rel.split(os.sep)[:-1]
@@ -707,7 +289,7 @@ class DeltaLikeTable:
                 )
                 dst = os.path.join(self.path, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(os.path.join(dirpath, fname), dst)
+                os.replace(staged, dst)
                 adds.append(
                     {
                         "add": {
@@ -716,7 +298,7 @@ class DeltaLikeTable:
                             "size": os.path.getsize(dst),
                             "modificationTime": now,
                             "dataChange": True,
-                            "stats": _file_stats(dst),
+                            "stats": stats,
                         }
                     }
                 )
@@ -761,14 +343,14 @@ class DeltaLikeTable:
         }
 
     def _current_metadata(self) -> tuple[Snapshot, dict]:
-        snap = self._snapshot()
+        snap = self.log.snapshot()
         if snap.metadata is None:
             raise ValueError(f"no schema committed yet at {self.path}")
         return snap, snap.metadata
 
     def _alter_configuration(self, snap: Snapshot, cfg: dict, operation: str) -> int:
         meta = {**snap.metadata, "configuration": {**snap.configuration, **cfg}}
-        return self._commit([{"metaData": meta}], operation, snap)
+        return self.log.commit([{"metaData": meta}], operation, snap)
 
     def add_check_constraint(self, name: str, expr_sql: str) -> int:
         """``ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)``: stored
@@ -791,10 +373,10 @@ class DeltaLikeTable:
         )
 
     def properties(self) -> dict[str, str]:
-        return self._snapshot().configuration
+        return self.log.snapshot().configuration
 
     def check_constraints(self) -> dict[str, str]:
-        return self._snapshot().constraints
+        return self.log.snapshot().constraints
 
     def _enforce_constraints(self, df: DataFrame, snap: Snapshot) -> None:
         """CHECK semantics (SQL standard, as Delta enforces them): a row
@@ -818,7 +400,7 @@ class DeltaLikeTable:
         sj["fields"] = fields
         cfg = {
             **(meta.get("configuration") or {}),
-            _COLUMN_MAPPING_KEY: "name",
+            COLUMN_MAPPING_KEY: "name",
         }
         return {
             "metaData": {
@@ -879,7 +461,7 @@ class DeltaLikeTable:
                 "metadata": {"delta.generationExpression": expr_sql},
             }
         )
-        return self._commit(
+        return self.log.commit(
             [{"metaData": {**meta, "schemaString": json.dumps(sj)}}],
             "ADD COLUMN",
             snap,
@@ -919,10 +501,10 @@ class DeltaLikeTable:
             raise ValueError(f"column {new!r} already exists")
         for f in fields:
             md = f.setdefault("metadata", {})
-            md.setdefault(_PHYSICAL_NAME_KEY, f["name"])
+            md.setdefault(PHYSICAL_NAME_KEY, f["name"])
             if f["name"] == old:
                 f["name"] = new
-        return self._commit(
+        return self.log.commit(
             [self._mapping_metadata_action(meta, fields)], "RENAME COLUMN", snap
         )
 
@@ -939,10 +521,10 @@ class DeltaLikeTable:
         kept = []
         for f in fields:
             md = f.setdefault("metadata", {})
-            md.setdefault(_PHYSICAL_NAME_KEY, f["name"])
+            md.setdefault(PHYSICAL_NAME_KEY, f["name"])
             if f["name"] != name:
                 kept.append(f)
-        return self._commit(
+        return self.log.commit(
             [self._mapping_metadata_action(meta, kept)], "DROP COLUMN", snap
         )
 
@@ -953,9 +535,9 @@ class DeltaLikeTable:
         type, and may only ADD columns when schema merging is opted in
         (``mergeSchema``). Missing nullable columns are allowed (they
         read as NULL). Overwrites replace the schema freely."""
-        if snap.schema is None:
+        if snap.metadata is None:
             return
-        cur = {f.name: f.dataType for f in snap.schema.fields}
+        cur = {f.name: f.dataType for f in _schema(snap).fields}
         inc = {f.name: f.dataType for f in df.schema.fields}
         mismatched = sorted(
             n for n in cur.keys() & inc.keys() if cur[n] != inc[n]
@@ -979,7 +561,7 @@ class DeltaLikeTable:
         each commit with (appId, version) and skips any batch at or
         below the stored high-water mark — exactly-once sink semantics
         for streaming/retry loops without an external ledger."""
-        return self._snapshot().txns.get(app_id, -1)
+        return self.log.snapshot().txns.get(app_id, -1)
 
     def write_idempotent(
         self,
@@ -1020,19 +602,19 @@ class DeltaLikeTable:
         """Commit ``df`` as a new version; returns the version number."""
         assert mode in ("append", "overwrite")
         append = mode == "append"
-        snap = self._snapshot()
+        snap = self.log.snapshot()
         df = self._apply_generated_columns(df, snap)
         if append:
             self._enforce_schema(df, merge_schema, snap)
         self._enforce_constraints(df, snap)
         os.makedirs(self.path, exist_ok=True)
         now = int(time.time() * 1000)
-        actions = [] if append else [_remove(p, now) for p in snap.adds]
+        actions = [] if append else [remove(p, now) for p in snap.adds]
         actions += self._stage_data_files(self._physicalize(df, snap), partition_by)
         actions.append(self._metadata_action(df, partition_by, snap, append))
         if txn is not None:
             actions.append({"txn": txn})
-        return self._commit(
+        return self.log.commit(
             actions,
             operation or ("WRITE" if append else "OVERWRITE"),
             snap,
@@ -1054,7 +636,7 @@ class DeltaLikeTable:
         beyond the O(live add actions) log walk — at 100 TB a one-day
         backfill commits O(that day's files), never O(table). The
         remove+add pair is one commit, so readers never see a gap."""
-        snap = self._snapshot()
+        snap = self.log.snapshot()
         df = self._apply_generated_columns(df, snap)
         self._enforce_schema(df, False, snap)
         self._enforce_constraints(df, snap)
@@ -1064,14 +646,14 @@ class DeltaLikeTable:
         }
         now = int(time.time() * 1000)
         actions: list[dict] = [
-            _remove(p, now)
+            remove(p, now)
             for p, a in snap.adds.items()
             if tuple(sorted((a.get("partitionValues") or {}).items()))
             in touched
         ]
         actions.extend(adds)
         actions.append(self._metadata_action(df, partition_by, snap, True))
-        return self._commit(actions, operation, snap)
+        return self.log.commit(actions, operation, snap)
 
     def _physicalize(self, df: DataFrame, snap: Snapshot) -> DataFrame:
         """Under column mapping, writers receive LOGICAL names but files
@@ -1096,7 +678,8 @@ class DeltaLikeTable:
         is the file-scan cost of a predicate under the current layout,
         which is how OPTIMIZE ZORDER's benefit is measured at 100 TB
         without touching data."""
-        return _prune(self._active_files(as_of), partition_filter, stats_filter)
+        adds = list(self.log.snapshot(as_of).adds.values())
+        return _prune(adds, partition_filter, stats_filter)
 
     def read(
         self,
@@ -1111,7 +694,9 @@ class DeltaLikeTable:
         parquet reader, so no footer is opened and no Spark job runs to
         infer a schema. Columns added by later writes read as NULL for
         earlier files (Delta schema evolution). The protocol requires a
-        metaData action, so a log without one is an error.
+        metaData action, so a log without one is an error; a version with
+        no live files (say, after 0-row writes) reads as an empty frame
+        with the log schema.
 
         ``partition_filter`` ({col: value}) prunes on the log's
         ``partitionValues`` metadata BEFORE any file is listed or opened
@@ -1126,19 +711,24 @@ class DeltaLikeTable:
         kept, and the caller still applies the row-level filter; the
         win is unopened files, which on a date-sorted 100 TB table is
         most of them."""
-        snap = self._snapshot(as_of)
+        snap = self.log.snapshot(as_of)
         if snap.version < 0:
             raise ValueError(f"empty table at {self.path}")
         if snap.metadata is None:
             raise ValueError(f"no metaData action in the log of {self.path}")
         unpruned = list(snap.adds.values())
         if not unpruned:
-            raise ValueError(f"no live files at version {as_of} in {self.path}")
+            # partition columns last, where a partitioned file scan puts them
+            schema, parts = _schema(snap), snap.metadata.get("partitionColumns") or []
+            return spark.createDataFrame([], StructType(
+                [f for f in schema.fields if f.name not in parts]
+                + [schema[p] for p in parts]
+            ))
         active = _prune(unpruned, partition_filter, stats_filter)
         # every file pruned away: read one for an EMPTY relation with the
         # table schema, not an error (a filter can match nothing)
         files = [os.path.join(self.path, a["path"]) for a in active or unpruned[:1]]
-        reader = spark.read.schema(snap.read_schema)
+        reader = spark.read.schema(_read_schema(snap))
         if any(a.get("partitionValues") for a in unpruned):
             reader = reader.option("basePath", _base_path(files))
         df = reader.parquet(*files)
@@ -1236,8 +826,10 @@ class DeltaLikeTable:
         Partitioned tables use ``delete`` (hive-materialized partition
         columns are not in the physical file, so the predicate could not
         be evaluated against raw per-file reads uniformly)."""
-        snap = self._snapshot()
+        snap = self.log.snapshot()
         active = list(snap.adds.values())
+        if not active:
+            return snap.version  # no live file, no row to delete
         if any(a.get("partitionValues") for a in active):
             raise ValueError(
                 "DV delete on partitioned tables is not supported; "
@@ -1246,7 +838,7 @@ class DeltaLikeTable:
         by_uri = {self._dv_file_uri(a): a for a in active}
         files = [os.path.join(self.path, a["path"]) for a in active]
         base = (
-            spark.read.schema(snap.read_schema).parquet(*files)
+            spark.read.schema(_read_schema(snap)).parquet(*files)
             .withColumn("_fp", F.col("_metadata.file_path"))
             .withColumn("_ri", F.col("_metadata.row_index"))
         )
@@ -1305,11 +897,11 @@ class DeltaLikeTable:
                     "sizeInBytes": len(payload),
                     "cardinality": len(idxs),
                 }
-            actions.append(_remove(add["path"], now))
+            actions.append(remove(add["path"], now))
             actions.append({"add": {**add, "deletionVector": desc}})
         if not actions:
             return snap.version
-        return self._commit(actions, "DELETE", snap)
+        return self.log.commit(actions, "DELETE", snap)
 
     def restore(self, version: int) -> int:
         """``RESTORE TABLE ... TO VERSION AS OF version``: commit a new
@@ -1321,11 +913,11 @@ class DeltaLikeTable:
         past a VACUUM fails on read just as in Delta (the old files are
         physically gone). The version's metaData is restored with its
         files, so the log schema describes them."""
-        snap, old = self._snapshot(), self._snapshot(as_of=version)
+        snap, old = self.log.snapshot(), self.log.snapshot(as_of=version)
         target, current = old.adds, snap.adds
         now = int(time.time() * 1000)
         actions: list[dict] = [
-            _remove(p, now) for p in current if p not in target
+            remove(p, now) for p in current if p not in target
         ]
         def _canon(a: dict) -> dict:
             # drop null-valued keys (a checkpoint round trip materializes
@@ -1342,7 +934,7 @@ class DeltaLikeTable:
         )
         if old.metadata is not None and old.metadata != snap.metadata:
             actions.append({"metaData": old.metadata})
-        return self._commit(actions, "RESTORE", snap)
+        return self.log.commit(actions, "RESTORE", snap)
 
     def clone_to(self, target_path: str, as_of: int | None = None) -> "DeltaLikeTable":
         """SHALLOW CLONE: a new table whose first commit re-ADDs the
@@ -1356,7 +948,7 @@ class DeltaLikeTable:
         root."""
         clone = DeltaLikeTable(target_path)
         os.makedirs(target_path, exist_ok=True)
-        snap = self._snapshot(as_of)
+        snap = self.log.snapshot(as_of)
         actions: list[dict] = []
         for a in snap.adds.values():
             src = os.path.join(self.path, a["path"])
@@ -1377,7 +969,7 @@ class DeltaLikeTable:
             actions.append({"add": add})
         if snap.metadata is not None:
             actions.append({"metaData": snap.metadata})
-        clone._commit(actions, "CLONE")
+        clone.log.commit(actions, "CLONE")
         return clone
 
     # -- maintenance ------------------------------------------------------
@@ -1397,71 +989,11 @@ class DeltaLikeTable:
     def vacuum(
         self, retention_ms: int = 0, now_ms: int | None = None
     ) -> list[str]:
-        """``VACUUM ... RETAIN`` by Delta's rule: list the table root and
-        delete every file that no reader inside the retention window can
-        still open. The cutoff is ``now_ms - retention_ms`` (``now_ms`` is
-        injectable for deterministic tests); ``v_cut`` is the version
-        current at the cutoff, -1 if no commit is that old. The keep set
-        is ``v_cut``'s live adds, every add committed after it, and the
-        DV sidecars those adds name. A file or ``.tmp-*`` staging entry
-        under the root that is outside the keep set and older than the
-        cutoff is deleted, so the orphans of a writer that crashed before
-        its commit are reclaimed too. ``_delta_log`` and every other
-        hidden ``_*``/``.*`` entry are skipped, and files outside the
-        root (a shallow clone's absolute-path adds) are never listed.
-        Returns the sorted deleted paths, relative to the root; the log
-        keeps every commit, so version numbering stays stable (older
-        versions simply stop being time-travelable).
-
-        Hazards shared with real Delta: at retention 0 a concurrent
-        writer's staged, not yet committed files are not protected; and
-        vacuuming a SOURCE table can reclaim files a shallow clone of it
-        still references (the source has no registry of its clones) —
-        deep-clone before vacuuming the source if clones must outlive
-        it."""
-        latest = self.latest_version
-        if latest < 0:
-            raise ValueError(f"no table at {self.path}: nothing to vacuum")
-        cutoff = (
-            int(time.time() * 1000) if now_ms is None else now_ms
-        ) - retention_ms
-        try:
-            v_cut = self.version_at_timestamp(cutoff)
-        except ValueError:
-            v_cut = -1
-        adds = list(self._snapshot(v_cut).adds.values()) + [
-            act["add"]
-            for v in range(v_cut + 1, latest + 1)
-            for act in self._read_commit(v)
-            if "add" in act
-        ]
-        root = os.path.abspath(self.path)
-        keep = {
-            os.path.normpath(os.path.join(root, p))
-            for p in [a["path"] for a in adds] + [
-                a["deletionVector"]["pathOrInlineDv"]
-                for a in adds
-                if (a.get("deletionVector") or {}).get("storageType") == "p"
-            ]
-        }
-        deleted: list[str] = []
-        for dirpath, dirs, files in os.walk(root):
-            staging = [d for d in dirs if d.startswith(".tmp-")]
-            dirs[:] = [d for d in dirs if d[0] not in "_."]  # partitions
-            for name in files + staging:
-                full = os.path.join(dirpath, name)
-                hidden = name[0] in "_." and not name.startswith(".tmp-")
-                if hidden or full in keep:
-                    continue
-                try:
-                    mtime_ms = os.lstat(full).st_mtime_ns // 10**6
-                except FileNotFoundError:
-                    continue  # gone since the listing: a writer's own cleanup
-                if mtime_ms >= cutoff:
-                    continue  # younger than the retention window — keep
-                (shutil.rmtree if name in staging else os.remove)(full)
-                deleted.append(os.path.relpath(full, root).replace(os.sep, "/"))
-        return sorted(deleted)
+        """``VACUUM ... RETAIN``: delete what no version inside the
+        retention window references; returns the deleted paths, relative
+        to the root (``DeltaLog.vacuum`` has the rule and its hazards).
+        ``now_ms`` is injectable for deterministic tests."""
+        return self.log.vacuum(retention_ms, now_ms)
 
     # -- MERGE (upsert) ---------------------------------------------------
     def merge(

@@ -1,0 +1,272 @@
+"""The Delta log core (``sources/deltalog.py``) with no JVM.
+
+A Hypothesis state machine drives ``DeltaLog`` directly against an
+in-memory model of one table: appends, overwrites, MERGE- and
+OPTIMIZE-shaped action sets, checkpoints, a writer that crashes before
+its commit is published, and VACUUM under an injected clock. Concurrent
+conflicting writers are not modelled here.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+
+import pytest
+from hypothesis import HealthCheck, Phase, settings
+from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    invariant,
+    precondition,
+    rule,
+)
+
+from dbt_local_duckdb_deltalake_project_spark.sources import deltalog
+from dbt_local_duckdb_deltalake_project_spark.sources.deltalog import (
+    CHECKPOINT_INTERVAL,
+    DeltaLog,
+    Snapshot,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TICK_MS = 1_000
+# the model makes thousands of tiny tables: keep them in memory if it can
+_TMPFS = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+
+
+def _dead_writer(src, dst):
+    raise OSError("writer died before its commit was published")
+
+
+def _metadata(now: int) -> dict:
+    return {"metaData": {
+        "id": "model", "format": {"provider": "parquet"},
+        "schemaString": json.dumps({"type": "struct", "fields": []}),
+        "partitionColumns": [], "configuration": {}, "createdTime": now,
+    }}
+
+
+class LogModel(RuleBasedStateMachine):
+    """One writer over one table. The model keeps, per committed
+    version, the live file set, the commit timestamp and the files the
+    commit added; plus the data files on disk and the crash orphans."""
+
+    def __init__(self):
+        super().__init__()
+        self.root = tempfile.mkdtemp(prefix="deltalog-model-", dir=_TMPFS)
+        self.now = 1_700_000_000_000
+        self.log = DeltaLog(self.root, clock=lambda: self.now)
+        self.live: list[frozenset] = []
+        self.stamps: list[int] = []
+        self.added: list[set] = []
+        self.on_disk: set[str] = set()
+        self.orphans: dict[str, int] = {}  # path → mtime (ms)
+        self.checkpoints: set[int] = set()
+        self.files = 0
+
+    def teardown(self):
+        shutil.rmtree(self.root, ignore_errors=True)
+
+    # -- helpers ------------------------------------------------------------
+    def _stage(self, k: int) -> list[dict]:
+        """``k`` new data files under the root, mtime now; their adds."""
+        adds = []
+        for _ in range(k):
+            self.files += 1
+            path = f"part-{self.files:05d}.parquet"
+            full = os.path.join(self.root, path)
+            with open(full, "wb") as f:
+                f.write(b"PAR1")
+            os.utime(full, ns=(self.now * 10**6,) * 2)
+            self.on_disk.add(path)
+            adds.append({"add": {
+                "path": path, "partitionValues": {}, "size": 4,
+                "modificationTime": self.now, "dataChange": True,
+            }})
+        return adds
+
+    def _commit(self, removes: set, k: int, operation: str, **extra) -> None:
+        # the data files are staged two ticks before the commit publishes,
+        # so only the keep set, not their age, can protect them
+        self.now += TICK_MS
+        adds = self._stage(k)
+        self.now += 2 * TICK_MS
+        actions = [deltalog.remove(p, self.now) for p in sorted(removes)] + adds
+        if not self.live or operation == "OVERWRITE":
+            actions.append(_metadata(self.now))
+        if extra.get("txn") is not None:
+            actions.append({"txn": {"appId": "model", "version": extra["txn"]}})
+        version = self.log.commit(
+            actions, operation, blind_append=operation == "WRITE"
+        )
+        assert version == len(self.live)
+        new = {a["add"]["path"] for a in adds}
+        prev = self.live[-1] if self.live else frozenset()
+        self.live.append(frozenset((prev - removes) | new))
+        self.stamps.append(self.now)
+        self.added.append(new)
+        if version > 0 and version % CHECKPOINT_INTERVAL == 0:
+            self.checkpoints.add(version)
+
+    def _replay(self, version: int) -> Snapshot:
+        """Replay from version 0, ignoring every checkpoint."""
+        return Snapshot().advance(version, [
+            act for v in range(version + 1) for act in self.log.read_commit(v)
+        ])
+
+    # -- rules --------------------------------------------------------------
+    @rule(k=st.integers(1, 3))
+    def append(self, k):
+        self._commit(set(), k, "WRITE", txn=len(self.live))
+
+    @rule(k=st.integers(0, 2))
+    def overwrite(self, k):
+        self._commit(set(self.live[-1]) if self.live else set(), k, "OVERWRITE")
+
+    @precondition(lambda self: self.live and self.live[-1])
+    @rule(pick=st.integers(0, 2**16), k=st.integers(0, 2))
+    def merge(self, pick, k):
+        # the files the MERGE rewrites: a non-empty subset of the live set
+        current = sorted(self.live[-1])
+        touched = {p for i, p in enumerate(current) if pick >> i & 1}
+        self._commit(touched or {current[pick % len(current)]}, k, "MERGE")
+
+    @precondition(lambda self: self.live and len(self.live[-1]) >= 2)
+    @rule()
+    def optimize(self):
+        self._commit(set(self.live[-1]), 1, "OPTIMIZE")
+
+    @precondition(
+        lambda self: len(self.live) >= 2 and len(self.live) - 1 not in self.checkpoints
+    )
+    @rule()
+    def checkpoint(self):
+        snap = self.log.snapshot()
+        self.log.write_checkpoint(snap)
+        self.checkpoints.add(snap.version)
+
+    @rule(k=st.integers(1, 2))
+    def crash_before_publish(self, k):
+        self.now += TICK_MS
+        adds = self._stage(k)
+        self.orphans.update((a["add"]["path"], self.now) for a in adds)
+        link, os.link = os.link, _dead_writer
+        try:
+            with pytest.raises(OSError, match="writer died"):
+                self.log.commit(adds, "WRITE", blind_append=True)
+        finally:
+            os.link = link
+
+    @precondition(lambda self: self.live)
+    @rule(waited=st.integers(0, 5), retention=st.integers(0, 6))
+    def vacuum(self, waited, retention):
+        self.now += waited * TICK_MS
+        cutoff = self.now - retention * TICK_MS
+        v_cut = max((v for v, ts in enumerate(self.stamps) if ts <= cutoff),
+                    default=-1)
+        readable = set().union(*self.live[max(v_cut, 0):])
+        keep = set().union(
+            self.live[v_cut] if v_cut >= 0 else set(), *self.added[v_cut + 1:]
+        )
+        young = {p for p, ts in self.orphans.items() if ts >= cutoff}
+        deleted = set(self.log.vacuum(retention * TICK_MS, now_ms=self.now))
+        assert deleted == self.on_disk - keep - young
+        # never a file live at the cutoff version or any later version
+        assert not deleted & readable
+        # a crash leaves only files the next VACUUM past retention reclaims
+        assert not {p for p, ts in self.orphans.items() if ts < cutoff} - deleted
+        self.on_disk -= deleted
+        self.orphans = {p: ts for p, ts in self.orphans.items() if p not in deleted}
+
+    @precondition(lambda self: self.live)
+    @rule(pick=st.integers(0, 2**16))
+    def replay_from_checkpoint_equals_replay_from_zero(self, pick):
+        version = pick % len(self.live)
+        fresh = DeltaLog(self.root).snapshot(version)  # starts at a checkpoint
+        full = self._replay(version)
+        assert set(fresh.adds) == set(full.adds) == self.live[version]
+        assert (fresh.metadata or {}).get("schemaString") == (
+            full.metadata or {}
+        ).get("schemaString")
+        assert fresh.txns == full.txns
+        # no file is both live and removed: each live path's newest
+        # action through ``version`` is its add
+        newest = {}
+        for v in range(version + 1):
+            for act in self.log.read_commit(v):
+                for kind in ("add", "remove"):
+                    if kind in act:
+                        newest[act[kind]["path"]] = kind
+        assert {p for p, kind in newest.items() if kind == "add"} == set(full.adds)
+
+    # -- invariants ---------------------------------------------------------
+    @invariant()
+    def latest_snapshot_matches_model(self):
+        live = set(self.log.snapshot().adds)
+        assert live == (set(self.live[-1]) if self.live else set())
+        # a failed publish leaves no staged commit in the log
+        if os.path.isdir(self.log.log_dir):
+            assert not [
+                f for f in os.listdir(self.log.log_dir) if f.startswith(".tmp-")
+            ]
+
+
+LogModel.TestCase.settings = settings(
+    max_examples=2000,
+    stateful_step_count=8,
+    deadline=None,
+    database=None,
+    phases=[Phase.generate],
+    suppress_health_check=[HealthCheck.too_slow],
+)
+TestLogModel = LogModel.TestCase
+
+
+def test_vacuum_removes_the_partition_dirs_it_empties(tmp_path):
+    # Delta's VACUUM removes the col=value/ directories it empties; an
+    # empty directory newer than the cutoff (a writer about to move a
+    # file in) stays
+    import time
+
+    log = DeltaLog(str(tmp_path / "t"))
+
+    def stage(rel):
+        full = os.path.join(log.root, rel)
+        os.makedirs(os.path.dirname(full), exist_ok=True)
+        with open(full, "wb") as f:
+            f.write(b"PAR1")
+        return {"add": {"path": rel, "partitionValues": {}, "size": 4,
+                        "modificationTime": 0, "dataChange": True}}
+
+    log.commit([stage("p=1/part-a.parquet"), stage("p=2/part-b.parquet"),
+                stage("q=1/r=2/part-c.parquet")])
+    log.commit([deltalog.remove("p=1/part-a.parquet", 0),
+                deltalog.remove("q=1/r=2/part-c.parquet", 0)])
+    future = int(time.time() * 1000) + 60_000
+    assert log.vacuum(retention_ms=0, now_ms=future) == [
+        "p=1/part-a.parquet", "q=1/r=2/part-c.parquet",
+    ]
+    assert sorted(os.listdir(log.root)) == ["_delta_log", "p=2"]
+    os.makedirs(os.path.join(log.root, "p=3"))
+    log.vacuum(retention_ms=60_000)
+    assert sorted(os.listdir(log.root)) == ["_delta_log", "p=2", "p=3"]
+
+
+def test_deltalog_imports_no_pyspark():
+    # the log core must stay importable where PySpark is not (a Python
+    # worker, the model test): a fresh interpreter imports no pyspark
+    code = (
+        "import sys\n"
+        "import dbt_local_duckdb_deltalake_project_spark.sources.deltalog\n"
+        "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark'))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, check=True,
+    ).stdout
+    assert out.strip().splitlines()[-1] == "[]"

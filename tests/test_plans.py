@@ -192,14 +192,17 @@ def test_cdf_stream_reader_is_partitioned():
     # DataSourceStreamReader (latestOffset = driver metadata walk,
     # partitions() = one InputPartition per commit, read() executor-side)
     # — a regression to the driver-side Simple API would silently make
-    # the 100 TB CDF tail a driver bottleneck.
+    # the 100 TB CDF tail a driver bottleneck. The reader is the shared
+    # log tail every Delta stream op builds through ``_log_tail``.
     import inspect
 
     from dbt_local_duckdb_deltalake_project_spark.operators import (
         streaming_ops,
     )
 
-    src = inspect.getsource(streaming_ops.stream_change_data_feed)
+    op = inspect.getsource(streaming_ops.stream_change_data_feed)
+    assert "_log_tail(" in op
+    src = inspect.getsource(streaming_ops._log_tail)
     assert "DataSourceStreamReader" in src
     assert "def partitions(" in src and "def latestOffset(" in src
     assert "SimpleDataSourceStreamReader" not in src

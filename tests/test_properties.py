@@ -260,8 +260,8 @@ def test_dv_delete_equals_rewrite_delete(spark, tmp_path_factory, rows,
 
     assert got_dv == got_cow
     # and the DV table's physical file set never changed
-    adds0 = {a["path"] for a in t_dv._active_files(as_of=0)}
-    adds1 = {a["path"] for a in t_dv._active_files()}
+    adds0 = {a["path"] for a in t_dv.live_files(as_of=0)}
+    adds1 = {a["path"] for a in t_dv.live_files()}
     assert adds0 == adds1
 
 

@@ -254,7 +254,7 @@ def test_concurrent_commits_never_lost(tbl):
     from concurrent.futures import ThreadPoolExecutor
 
     def commit_one(i):
-        return tbl._commit([{"add": {"path": f"f{i}.parquet",
+        return tbl.log.commit([{"add": {"path": f"f{i}.parquet",
                                      "partitionValues": {}, "size": 1,
                                      "modificationTime": 0,
                                      "dataChange": True}}])
@@ -264,12 +264,12 @@ def test_concurrent_commits_never_lost(tbl):
 
     assert sorted(versions) == list(range(8))  # all distinct, no loss
     # every advertised file is present in the replayed live set
-    live = {a["path"] for a in tbl._active_files()}
+    live = {a["path"] for a in tbl.live_files()}
     assert live == {f"f{i}.parquet" for i in range(8)}
     # no stray temp files left behind
-    assert not [f for f in os.listdir(tbl._log_dir) if f.startswith(".tmp")]
+    assert not [f for f in os.listdir(tbl.log.log_dir) if f.startswith(".tmp")]
     # commit 0 carries the protocol action exactly once
-    with open(os.path.join(tbl._log_dir, f"{0:020d}.json")) as f:
+    with open(os.path.join(tbl.log.log_dir, f"{0:020d}.json")) as f:
         acts = [json.loads(ln) for ln in f]
     assert sum(1 for a in acts if "protocol" in a) == 1
 
@@ -303,7 +303,7 @@ def test_vacuum_reclaims_what_a_crashed_writer_leaves(tbl, monkeypatch):
         "sizeInBytes": 8, "cardinality": 1,
     }
     _stage_file(tbl, "deletion_vector_live.bin")
-    tbl._commit([live, _stage_file(tbl, "p=1/part-p1.parquet")])
+    tbl.log.commit([live, _stage_file(tbl, "p=1/part-p1.parquet")])
     orphan = _stage_file(tbl, "part-orphan.parquet")
 
     def crash(src, dst):
@@ -311,12 +311,12 @@ def test_vacuum_reclaims_what_a_crashed_writer_leaves(tbl, monkeypatch):
 
     monkeypatch.setattr(os, "link", crash)
     with pytest.raises(OSError, match="writer died"):
-        tbl._commit([orphan])
+        tbl.log.commit([orphan])
     monkeypatch.undo()
     _stage_file(tbl, ".tmp-deadbeef/part-00000.parquet")
     with open(os.path.join(tbl.path, ".fixture_fp"), "w") as f:
         f.write("staged")
-    log_before = sorted(os.listdir(tbl._log_dir))
+    log_before = sorted(os.listdir(tbl.log.log_dir))
 
     assert tbl.vacuum(retention_ms=10**9) == []  # orphans still young
     assert os.path.exists(os.path.join(tbl.path, "part-orphan.parquet"))
@@ -324,7 +324,7 @@ def test_vacuum_reclaims_what_a_crashed_writer_leaves(tbl, monkeypatch):
     assert tbl.vacuum(retention_ms=0, now_ms=future) == [
         ".tmp-deadbeef", "part-orphan.parquet",
     ]
-    assert sorted(os.listdir(tbl._log_dir)) == log_before
+    assert sorted(os.listdir(tbl.log.log_dir)) == log_before
     for rel in (".fixture_fp", "part-live.parquet", "p=1/part-p1.parquet",
                 "deletion_vector_live.bin"):
         assert os.path.exists(os.path.join(tbl.path, rel)), rel
@@ -339,7 +339,7 @@ def test_vacuum_tolerates_staging_removed_during_listing(tbl, monkeypatch):
     import shutil
     import time
 
-    tbl._commit([_stage_file(tbl, "part-live.parquet")])
+    tbl.log.commit([_stage_file(tbl, "part-live.parquet")])
     _stage_file(tbl, ".tmp-writer/part-00000.parquet")
     real_walk = os.walk
 
@@ -384,12 +384,12 @@ def test_vacuum_keeps_what_the_cutoff_version_reads_across_checkpoint(tbl):
                 "deletionTimestamp": int(time.time() * 1000),
                 "dataChange": True,
             }})
-        assert tbl._commit(actions) == i
-    assert tbl._last_checkpoint()["version"] == CHECKPOINT_INTERVAL
+        assert tbl.log.commit(actions) == i
+    assert tbl.log.last_checkpoint()["version"] == CHECKPOINT_INTERVAL
     v_cut = CHECKPOINT_INTERVAL + 1
     cutoff = tbl.commit_timestamp(v_cut + 1) - 1  # between v_cut and next
     for v in range(CHECKPOINT_INTERVAL + 1):
-        with open(os.path.join(tbl._log_dir, f"{v:020d}.json"), "w") as f:
+        with open(os.path.join(tbl.log.log_dir, f"{v:020d}.json"), "w") as f:
             f.write("NOT JSON — vacuum must not replay this commit\n")
 
     survivors = {"base.parquet", f"f{v_cut}.parquet"} | {
@@ -412,13 +412,13 @@ def test_checkpoint_written_every_interval(spark, tbl):
     for i in range(1, CHECKPOINT_INTERVAL + 1):
         tbl.write(_df(spark, [(i, "x")]), mode="append")
     cp = os.path.join(
-        tbl._log_dir, f"{CHECKPOINT_INTERVAL:020d}.checkpoint.parquet"
+        tbl.log.log_dir, f"{CHECKPOINT_INTERVAL:020d}.checkpoint.parquet"
     )
     assert os.path.exists(cp)
-    lc = tbl._last_checkpoint()
+    lc = tbl.log.last_checkpoint()
     assert lc["version"] == CHECKPOINT_INTERVAL
     # protocol + metaData + the live add set (≥1 part-file per append)
-    assert lc["size"] == 2 + len(tbl._active_files(as_of=CHECKPOINT_INTERVAL))
+    assert lc["size"] == 2 + len(tbl.live_files(as_of=CHECKPOINT_INTERVAL))
 
 
 def test_reader_ignores_precheckpoint_json(spark, tbl):
@@ -435,7 +435,7 @@ def test_reader_ignores_precheckpoint_json(spark, tbl):
     for i in range(1, CHECKPOINT_INTERVAL + 2):
         tbl.write(_df(spark, [(i, "x")]), mode="append")
     for v in range(CHECKPOINT_INTERVAL + 1):
-        with open(os.path.join(tbl._log_dir, f"{v:020d}.json"), "w") as f:
+        with open(os.path.join(tbl.log.log_dir, f"{v:020d}.json"), "w") as f:
             f.write("NOT JSON — a reader opening this must explode\n")
     expect = sorted(range(CHECKPOINT_INTERVAL + 2))
     assert sorted(r.k for r in tbl.read(spark).collect()) == expect
@@ -469,7 +469,7 @@ def test_partitioned_write_prunes_on_log_metadata(spark, tbl):
     tbl.write(df, mode="overwrite", partition_by=["pt"])
     # add actions carry partitionValues; the filtered read must select
     # ONLY partition pt=a files (pruning happens on log metadata).
-    active = tbl._active_files()
+    active = tbl.live_files()
     assert all(a["partitionValues"].get("pt") for a in active)
     pruned = [
         a for a in active if a["partitionValues"]["pt"] == "a"
@@ -493,7 +493,7 @@ def test_stats_data_skipping_prunes_files(spark, tbl):
             _df(spark, rows).coalesce(1),
             mode="overwrite" if i == 0 else "append",
         )
-    active = tbl._active_files()
+    active = tbl.live_files()
     stats = [json.loads(a["stats"]) for a in active if a.get("stats")]
     assert len(stats) == len(active)
     assert sum(s["numRecords"] for s in stats) == 4
@@ -776,9 +776,9 @@ def test_check_constraints_protocol(spark, tbl):
 def test_dv_delete_keeps_files_and_masks_rows(spark, tbl):
     df = spark.range(100).withColumn("grp", (F.col("id") % 10).cast("int"))
     tbl.write(df, mode="overwrite")
-    before = sorted(a["path"] for a in tbl._active_files())
+    before = sorted(a["path"] for a in tbl.live_files())
     tbl.delete_with_dv(spark, F.col("id") % 7 == 3)
-    after = tbl._active_files()
+    after = tbl.live_files()
     assert sorted(a["path"] for a in after) == before  # no rewrite
     assert any(a.get("deletionVector") for a in after)
     got = sorted(r.id for r in tbl.read(spark).collect())
@@ -815,7 +815,7 @@ def test_dv_sidecar_and_clone(spark, tbl, tmp_path):
     tbl.delete_with_dv(spark, F.col("id") < 500)  # > inline max → sidecar
     descs = [
         a["deletionVector"]
-        for a in tbl._active_files()
+        for a in tbl.live_files()
         if a.get("deletionVector")
     ]
     assert descs and all(d["storageType"] == "p" for d in descs)
@@ -858,9 +858,9 @@ def test_dv_partitioned_refuses(spark, tbl):
 
 def test_column_mapping_rename_is_metadata_only(spark, tbl):
     tbl.write(_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
-    before = sorted(a["path"] for a in tbl._active_files())
+    before = sorted(a["path"] for a in tbl.live_files())
     tbl.rename_column("v", "value")
-    assert sorted(a["path"] for a in tbl._active_files()) == before
+    assert sorted(a["path"] for a in tbl.live_files()) == before
     got = {(r.k, r.value) for r in tbl.read(spark).collect()}
     assert got == {(1, "a"), (2, "b")}
     # old logical name is gone
@@ -880,7 +880,7 @@ def test_column_mapping_append_after_rename(spark, tbl):
     import pyarrow.parquet as pq
     import os
 
-    for a in tbl._active_files():
+    for a in tbl.live_files():
         names = pq.ParquetFile(
             os.path.join(tbl.path, a["path"])
         ).schema_arrow.names
@@ -889,9 +889,9 @@ def test_column_mapping_append_after_rename(spark, tbl):
 
 def test_column_mapping_drop_is_metadata_only(spark, tbl):
     tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
-    before = sorted(a["path"] for a in tbl._active_files())
+    before = sorted(a["path"] for a in tbl.live_files())
     tbl.drop_column("v")
-    assert sorted(a["path"] for a in tbl._active_files()) == before
+    assert sorted(a["path"] for a in tbl.live_files()) == before
     assert tbl.read(spark).columns == ["k"]
     # time travel before the drop still sees it
     assert tbl.read(spark, as_of=0).columns == ["k", "v"]
@@ -979,7 +979,7 @@ def test_generated_column_computed_and_validated(spark, tbl):
     assert tbl.latest_version == v
     assert sorted(r.k for r in tbl.read(spark).collect()) == [1, 2, 3]
     # the generation expression survives unrelated writes
-    assert tbl._snapshot().generated_columns == {"v2": "v * 2"}
+    assert tbl.log.snapshot().generated_columns == {"v2": "v * 2"}
 
 
 def test_vacuum_reclaims_orphaned_dv_sidecar(spark, tbl):
@@ -1063,7 +1063,7 @@ def test_dynamic_partition_overwrite_touches_only_its_slice(spark, tbl):
         "k int, p string, v int",
     )
     tbl.write(df, mode="overwrite", partition_by=["p"])
-    before = {a["path"] for a in tbl._active_files()}
+    before = {a["path"] for a in tbl.live_files()}
     fresh = spark.createDataFrame([(9, "b", 99)], "k int, p string, v int")
     v = tbl.write_dynamic_partition_overwrite(fresh, ["p"])
     # the commit's remove set is EXACTLY the replaced partition's files
@@ -1075,7 +1075,7 @@ def test_dynamic_partition_overwrite_touches_only_its_slice(spark, tbl):
     assert removed and all(r.startswith("p=b/") for r in removed)
     assert added and all(a["partitionValues"] == {"p": "b"} for a in added)
     # untouched partitions' files survive by identity (no rewrite)
-    after = {a["path"] for a in tbl._active_files()}
+    after = {a["path"] for a in tbl.live_files()}
     untouched = {p for p in before if not p.startswith("p=b/")}
     assert untouched <= after
     got = sorted(
@@ -1089,10 +1089,10 @@ def test_dynamic_partition_overwrite_new_partition_is_pure_append(
 ):
     df = spark.createDataFrame([(1, "a", 10)], "k int, p string, v int")
     tbl.write(df, mode="overwrite", partition_by=["p"])
-    before = {a["path"] for a in tbl._active_files()}
+    before = {a["path"] for a in tbl.live_files()}
     fresh = spark.createDataFrame([(5, "z", 50)], "k int, p string, v int")
     tbl.write_dynamic_partition_overwrite(fresh, ["p"])
-    after = {a["path"] for a in tbl._active_files()}
+    after = {a["path"] for a in tbl.live_files()}
     assert before <= after  # nothing removed
     assert tbl.read(spark).count() == 2
 
@@ -1106,7 +1106,7 @@ def test_history_reports_commit_metrics(spark, tbl, monkeypatch):
     # opens each commit file once
     import os
 
-    from dbt_local_duckdb_deltalake_project_spark.sources import deltalike
+    from dbt_local_duckdb_deltalake_project_spark.sources import deltalog
 
     tbl.write(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), mode="overwrite")
     tbl.write(_df(spark, [(3, "c")]).coalesce(1), mode="append")
@@ -1116,12 +1116,12 @@ def test_history_reports_commit_metrics(spark, tbl, monkeypatch):
     tbl.add_check_constraint("pos", "k > 0")
     opened = []
     monkeypatch.setattr(
-        deltalike, "open",
+        deltalog, "open",
         lambda p, *a, **k: opened.append(p) or open(p, *a, **k),
         raising=False,
     )
     hist = {h["version"]: h for h in tbl.history()}
-    assert sorted(opened) == [tbl._commit_path(v) for v in range(4)]
+    assert sorted(opened) == [deltalog.commit_path(tbl.path, v) for v in range(4)]
     assert "readVersion" not in hist[0]
     assert [hist[v]["readVersion"] for v in (1, 2, 3)] == [0, 1, 2]
     assert [hist[v]["isBlindAppend"] for v in range(4)] == [
@@ -1156,15 +1156,15 @@ def test_checkpoint_written_from_snapshot_not_full_replay(spark, tbl):
     tbl.write(_df(spark, [(0, "x")]), mode="overwrite")
     for i in range(1, CHECKPOINT_INTERVAL + 2):
         tbl.write(_df(spark, [(i, "x")]), mode="append")
-    with open(os.path.join(tbl._log_dir, f"{3:020d}.json"), "w") as f:
+    with open(os.path.join(tbl.log.log_dir, f"{3:020d}.json"), "w") as f:
         f.write("NOT JSON\n")
     for i in range(CHECKPOINT_INTERVAL + 2, 2 * CHECKPOINT_INTERVAL + 1):
         tbl.write(_df(spark, [(i, "x")]), mode="append")
     assert tbl.latest_version == 2 * CHECKPOINT_INTERVAL
     assert os.path.exists(os.path.join(
-        tbl._log_dir, f"{2 * CHECKPOINT_INTERVAL:020d}.checkpoint.parquet"
+        tbl.log.log_dir, f"{2 * CHECKPOINT_INTERVAL:020d}.checkpoint.parquet"
     ))
-    assert tbl._last_checkpoint()["version"] == 2 * CHECKPOINT_INTERVAL
+    assert tbl.log.last_checkpoint()["version"] == 2 * CHECKPOINT_INTERVAL
     expect = list(range(2 * CHECKPOINT_INTERVAL + 1))
     assert sorted(r.k for r in tbl.read(spark).collect()) == expect
     fresh = DeltaLikeTable(tbl.path)
@@ -1283,14 +1283,16 @@ def test_write_replays_log_once(spark, tbl, monkeypatch):
     tbl.add_check_constraint("pos", "k > 0")
     tbl.add_generated_column("k2", "k * 2", dtype="integer")
     loads, opened = [], []
-    real_snapshot = DeltaLikeTable._snapshot
-    real_read_commit = DeltaLikeTable._read_commit
+    from dbt_local_duckdb_deltalake_project_spark.sources.deltalog import DeltaLog
+
+    real_snapshot = DeltaLog.snapshot
+    real_read_commit = DeltaLog.read_commit
     monkeypatch.setattr(
-        DeltaLikeTable, "_snapshot",
+        DeltaLog, "snapshot",
         lambda self, *a, **k: loads.append(1) or real_snapshot(self, *a, **k),
     )
     monkeypatch.setattr(
-        DeltaLikeTable, "_read_commit",
+        DeltaLog, "read_commit",
         lambda self, v: opened.append(v) or real_read_commit(self, v),
     )
     fresh = DeltaLikeTable(tbl.path)
@@ -1301,3 +1303,75 @@ def test_write_replays_log_once(spark, tbl, monkeypatch):
     fresh.write(_df(spark, [(3, "c")]), mode="overwrite")
     assert (len(loads), opened) == (1, [])
     assert sorted((r.k, r.k2) for r in fresh.read(spark).collect()) == [(3, 6)]
+
+
+def test_zero_row_append_adds_no_file(spark, tbl):
+    # Delta adds no file for an empty write, but the commit still lands
+    tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
+    before = tbl.live_files()
+    assert tbl.write(_df(spark, []), mode="append") == 1
+    assert tbl.live_files() == before
+    assert [r.k for r in tbl.read(spark).collect()] == [1]
+
+
+@pytest.mark.parametrize("partition_by", [None, ["k"]])
+def test_read_with_no_live_files_is_empty_with_log_schema(spark, tbl, partition_by):
+    # the empty frame has the columns, in order, that a read with files has
+    tbl.write(_df(spark, [(1, "a")]), mode="overwrite", partition_by=partition_by)
+    with_files = tbl.read(spark).schema.simpleString()
+    tbl.write(_df(spark, []), mode="overwrite", partition_by=partition_by)
+    assert tbl.live_files() == []
+    df = tbl.read(spark)
+    assert df.schema.simpleString() == with_files
+    assert df.count() == 0
+
+
+def test_concurrent_writes_all_stage_timestamp_micros(spark, tbl, monkeypatch):
+    # two writers on one session: B stages while A, which started first,
+    # finishes. Neither may leave the session writing INT96 for the other
+    # — every staged file's timestamp column is INT64 with min/max
+    # statistics, so data skipping sees every file
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrameWriter
+
+    spark.conf.unset("spark.sql.parquet.outputTimestampType")  # INT96
+    df = spark.sql("SELECT 1 AS k, TIMESTAMP '2000-01-01 00:00:00' AS ts")
+    b_staging, a_done = threading.Event(), threading.Event()
+    real_parquet = DataFrameWriter.parquet
+
+    def gated(self, *args, **kwargs):
+        if threading.current_thread().name == "B":
+            b_staging.set()
+            a_done.wait(60)
+        else:
+            b_staging.wait(60)
+        return real_parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", gated)
+    errs = []
+
+    def writer(mode, done=None):
+        try:
+            tbl.write(df.coalesce(1), mode=mode)
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+        if done is not None:
+            done.set()
+
+    a = threading.Thread(target=writer, args=("overwrite", a_done), name="A")
+    b = threading.Thread(target=writer, args=("append",), name="B")
+    a.start()
+    b.start()
+    a.join()
+    b.join()
+    assert not errs
+    files = tbl.live_files()
+    assert len(files) == 2
+    for add in files:
+        md = pq.ParquetFile(os.path.join(tbl.path, add["path"])).metadata
+        ts = md.row_group(0).column(1)
+        assert ts.physical_type == "INT64", add["path"]
+        assert ts.statistics is not None and ts.statistics.has_min_max
