@@ -11,6 +11,8 @@ sees view names, so the swap is transparent.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,21 +32,19 @@ TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-# last sf_dir whose views were registered, per live SparkSession —
-# re-register only when the target directory changes. Keyed on the Spark
-# applicationId (stable for a session's lifetime, never reused the way a
-# garbage-collected id() can be), so a stopped-then-recreated session
-# never receives DataFrame handles bound to the dead session.
-_registered: dict[str, str] = {}
+# Per live SparkSession: the sf_dir whose views are registered, and the
+# DataFrame handle of each (sf_dir, table). A newSession() clone is its
+# own key — temp views and SQL conf are session-local, so it registers
+# views of its own and its reads see its conf. Weak keys: a stopped and
+# collected session's entries go with it, and no successor is handed
+# its DataFrames.
+_registered: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_df_cache: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
-# DataFrame handles are immutable and lazily evaluated — cache them per
-# (session, sf_dir, table) so repeated t() calls skip re-reading parquet
-# footers for schema (a measurable slice of the per-query floor).
-_df_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    return spark.sparkContext.applicationId
+# The footer schema of each (sf_dir, table): only a table's first read
+# in the process infers it, which starts a Spark job; every later
+# session reads with it.
+_schemas: dict[tuple[str, str], T.StructType] = {}
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -54,27 +54,29 @@ def table_path(sf_dir: str, name: str) -> str:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one fixture table.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; we read nanos as long
-    (spark.sql.legacy.parquet.nanosAsLong) and truncate to microsecond
+    Every current fixture writes ``events.ts`` as parquet
+    TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4 infers as
+    TIMESTAMP_NTZ; it is cast to TIMESTAMP. The nanos branch is there for
+    regenerated fixtures that write TIMESTAMP(NANOS), which Spark's
+    vectorized reader rejects: those are read as long
+    (spark.sql.legacy.parquet.nanosAsLong) and truncated to microsecond
     timestamps — the same ns→µs truncation DuckDB applies, so the oracle
     sees identical values (SURVEY.md §1.1).
     """
-    # Pin session confs BEFORE the cache lookup: the cache key is the
-    # applicationId, which every spark.newSession() clone shares, so a
-    # clone can cache-hit and otherwise never get the pins (bench's
-    # own-session streamed ops would then bucket windows on the host tz).
-    # conf.set is a cheap local map write — no Spark job.
+    # Pin the session confs on every call, cached or not: conf.set is a
+    # cheap local map write — no Spark job. Entry paths may hand us a
+    # vanilla session; pin the tz so NTZ→TIMESTAMP casts and window
+    # bucketing match the naive DuckDB oracle regardless of host tz.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Entry paths may hand us a vanilla session (the driver does); pin the
-    # tz here so NTZ→TIMESTAMP casts and window bucketing match the naive
-    # DuckDB oracle regardless of host tz.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (_session_key(spark), sf_dir, name)
-    cached = _df_cache.get(key)
+    cache = _df_cache.setdefault(spark, {})
+    cached = cache.get((sf_dir, name))
     if cached is not None:
         return cached
-    df = spark.read.parquet(table_path(sf_dir, name))
+    schema = _schemas.get((sf_dir, name))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(table_path(sf_dir, name))
+    _schemas[(sf_dir, name)] = df.schema
     for field in df.schema.fields:
         if name == "events" and field.name == "ts":
             if isinstance(field.dataType, T.LongType):
@@ -82,13 +84,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     "ts", F.timestamp_micros(F.expr("ts div 1000"))
                 )
             elif isinstance(field.dataType, T.TimestampNTZType):
-                # A vanilla session (no nanosAsLong at first footer read)
-                # infers TIMESTAMP_NTZ (Spark 4 inferTimestampNTZ), which
-                # unix_micros() and withWatermark() both reject. The
-                # session tz is UTC in every entry path, so the cast is
-                # value-preserving.
+                # TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
+                # TIMESTAMP_NTZ, which unix_micros() and withWatermark()
+                # both reject. The session tz is UTC in every entry path,
+                # so the cast is value-preserving.
                 df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _df_cache[key] = df
+    cache[(sf_dir, name)] = df
     return df
 
 
@@ -98,12 +99,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     Idempotent per (session, sf_dir); re-points the views when sf_dir
     changes (e.g. correctness at sf0.01 then bench at sf0.1).
     """
-    key = _session_key(spark)
-    if _registered.get(key) == sf_dir:
+    if _registered.get(spark) == sf_dir:
         return
     for t in TABLES:
         read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    _registered[key] = sf_dir
+    _registered[spark] = sf_dir
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

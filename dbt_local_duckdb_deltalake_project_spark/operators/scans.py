@@ -135,30 +135,17 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_deltalike_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The versioned storage exposed as a first-class Spark source via
-    the Python Data Source API (Spark 4): ``spark.read.format(...)`` over
-    a Delta-like table, with the log replay (live-file selection) as the
-    source's partition planning — one InputPartition per live data file,
-    executors stream Arrow batches straight from parquet.
+    """The versioned storage as a batch source: the log replay plans the
+    live file set, and ``DeltaLikeTable.read`` hands it to Spark's native
+    parquet scan under the log schema, with deletion vectors, column
+    mapping and partition values applied — the one batch read path of
+    every Delta-like table. (The Python Data Source API serves the
+    streaming log tails in ``streaming_ops._log_tail``.)
 
-    The reader classes are defined INSIDE this function on purpose:
-    cloudpickle then ships them by value, so executors never need the
-    repo package importable (the CLAUDE.md closure gotcha). Driver-side
-    planning (log replay) uses the real DeltaLikeTable; executor-side
-    read() is pure pyarrow over an absolute file path.
-
-    Scale: partition planning is O(live add actions) metadata work;
-    reads parallelize per file exactly like the native parquet source,
-    and Arrow batch yield keeps the Python worker vectorized.
+    Scale: planning is O(live add actions) metadata work, and the scan
+    parallelizes per file split, with column pruning reaching the
+    parquet reader.
     """
-    import os
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
-
     from ..sources.deltalike import DeltaLikeTable
     from .delta_ops import _staged_table
 
@@ -170,39 +157,7 @@ def scan_deltalike_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="overwrite",
         )
 
-    tbl = _staged_table(sf_dir, "delta_pyds", build)
-
-    # driver-side planning: log replay picks the live file set
-    files = [
-        os.path.join(tbl.path, a["path"]) for a in tbl.live_files()
-    ]
-    schema_ddl = "o_orderkey bigint, o_orderstatus string, o_totalprice double"
-
-    class _Reader(DataSourceReader):
-        def __init__(self, paths):
-            self._paths = paths
-
-        def partitions(self):
-            return [InputPartition(p) for p in self._paths]
-
-        def read(self, partition):
-            import pyarrow.parquet as pq  # executor-side, stdlib+arrow only
-
-            yield from pq.read_table(partition.value).to_batches()
-
-    class _DeltaLikeSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "deltalike_pyds"
-
-        def schema(self):
-            return schema_ddl
-
-        def reader(self, schema):
-            return _Reader(files)
-
-    spark.dataSource.register(_DeltaLikeSource)
-    df = spark.read.format("deltalike_pyds").load()
+    df = _staged_table(sf_dir, "delta_pyds", build).read(spark)
     return (
         df.groupBy("o_orderstatus")
         .agg(

@@ -13,8 +13,10 @@ Capabilities the stack exercises:
 - append / overwrite writes (``write``)
 - read as of any version (``read(as_of=...)`` — time travel, by
   replaying add/remove actions up to that commit)
-- DELETE / MERGE upsert (copy-on-write rewrites, like Delta)
-- OPTIMIZE-style compaction, and VACUUM by Delta's keep-set rule: list
+- DELETE, MERGE upsert and OPTIMIZE-style compaction: one copy-on-write
+  rewrite (``_rewrite``) that commits removes for exactly the files it
+  read, against the snapshot it read them from
+- VACUUM by Delta's keep-set rule: list
   the table root, delete what no version inside the retention window
   references (crash orphans and ``.tmp-*`` staging included); at
   retention 0 a concurrent writer's uncommitted files are not protected
@@ -46,6 +48,7 @@ import shutil
 import struct
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -203,6 +206,17 @@ def _prune(
     return [a for a in active if overlaps(a)]
 
 
+def _removes(adds, data_change: bool = True) -> list[dict]:
+    """The remove actions of ``adds``, stamped now."""
+    now = int(time.time() * 1000)
+    return [remove(a["path"], now, data_change) for a in adds]
+
+
+def _partition(add: dict) -> tuple:
+    """An add's partition, as a hashable key."""
+    return tuple(sorted((add.get("partitionValues") or {}).items()))
+
+
 def _base_path(paths: list[str]) -> str:
     """basePath for hive partition-column re-materialization.
 
@@ -246,21 +260,39 @@ class DeltaLikeTable:
         return self.log.version_at_timestamp(ts_ms)
 
     # -- writes -----------------------------------------------------------
-    def _stage_data_files(
-        self, df: DataFrame, partition_by: list[str] | None = None
+    def _stage(
+        self,
+        df: DataFrame,
+        snap: Snapshot,
+        partition_by: list[str] | None = None,
+        append: bool = False,
+        merge_schema: bool = False,
+        data_change: bool = True,
     ) -> list[dict]:
-        """Write ``df``'s parquet files into the table root; return their
-        ``add`` actions. Spark part-file names embed a job UUID, so moved
-        files never collide. With ``partition_by``, files land under
-        hive-style ``col=value/`` directories and each ``add`` carries
-        the spec's ``partitionValues`` map — the metadata a reader prunes
-        on without listing or opening any file. A file with no rows gets
-        no add (Delta adds none for an empty write); the commit still
-        lands."""
+        """Stage ``df`` as data files of the table at ``snap``: the ``add``
+        actions and metaData action every data write commits. ``df`` gets
+        the generated columns and is checked against the CHECK constraints
+        (and, for an append, the schema). Files land under ``partition_by``,
+        by default the table's own partition columns, in hive-style
+        ``col=value/`` directories; each add carries the spec's
+        ``partitionValues``, which readers prune on without listing a file.
+        Spark part-file names embed a job UUID, so moved files never
+        collide. A file with no rows gets no add (Delta adds none for an
+        empty write); the commit still lands."""
+        df = self._apply_generated_columns(df, snap)
+        if append:
+            self._enforce_schema(df, merge_schema, snap)
+        self._enforce_constraints(df, snap)
+        parts = partition_by or (snap.metadata or {}).get("partitionColumns") or []
+        # under column mapping the files carry the PHYSICAL names
+        phys = dict(snap.mapping or [])
+        out = df if not phys else df.select(
+            [F.col(c).alias(phys.get(c, c)) for c in df.columns]
+        )
         tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        writer = out.write.mode("overwrite")
+        if parts:
+            writer = writer.partitionBy(*parts)
         # Spark's default INT96 timestamps carry NO parquet min/max
         # statistics — data skipping on a temporal column (the 100 TB
         # win) would silently never fire. Pin TIMESTAMP_MICROS (what
@@ -290,27 +322,19 @@ class DeltaLikeTable:
                 dst = os.path.join(self.path, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(staged, dst)
-                adds.append(
-                    {
-                        "add": {
-                            "path": rel.replace(os.sep, "/"),
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(dst),
-                            "modificationTime": now,
-                            "dataChange": True,
-                            "stats": stats,
-                        }
-                    }
-                )
+                adds.append({"add": {
+                    "path": rel.replace(os.sep, "/"),
+                    "partitionValues": pvals,
+                    "size": os.path.getsize(dst),
+                    "modificationTime": now,
+                    "dataChange": data_change,
+                    "stats": stats,
+                }})
         shutil.rmtree(tmp)
-        return adds
+        return adds + [self._metadata_action(df, parts, snap, append)]
 
     def _metadata_action(
-        self,
-        df: DataFrame,
-        partition_by: list[str] | None,
-        snap: Snapshot,
-        append: bool,
+        self, df: DataFrame, partition_by: list[str], snap: Snapshot, append: bool
     ) -> dict:
         """The write's metaData action. Its schema is ``df``'s, keeping
         each existing field's metadata (generation expressions, physical
@@ -336,7 +360,7 @@ class DeltaLikeTable:
                 "id": str(uuid.uuid4()),
                 "format": {"provider": "parquet", "options": {}},
                 "schemaString": json.dumps({"type": "struct", "fields": fields}),
-                "partitionColumns": partition_by or [],
+                "partitionColumns": partition_by,
                 "configuration": snap.configuration,
                 "createdTime": int(time.time() * 1000),
             }
@@ -599,27 +623,18 @@ class DeltaLikeTable:
         operation: str | None = None,
         txn: dict | None = None,
     ) -> int:
-        """Commit ``df`` as a new version; returns the version number."""
+        """Commit ``df`` as a new version; returns the version number.
+        With no ``partition_by`` the table keeps its partitioning, as in
+        Delta."""
         assert mode in ("append", "overwrite")
         append = mode == "append"
         snap = self.log.snapshot()
-        df = self._apply_generated_columns(df, snap)
-        if append:
-            self._enforce_schema(df, merge_schema, snap)
-        self._enforce_constraints(df, snap)
-        os.makedirs(self.path, exist_ok=True)
-        now = int(time.time() * 1000)
-        actions = [] if append else [remove(p, now) for p in snap.adds]
-        actions += self._stage_data_files(self._physicalize(df, snap), partition_by)
-        actions.append(self._metadata_action(df, partition_by, snap, append))
+        actions = [] if append else _removes(snap.adds.values())
+        actions += self._stage(df, snap, partition_by, append, merge_schema)
         if txn is not None:
             actions.append({"txn": txn})
-        return self.log.commit(
-            actions,
-            operation or ("WRITE" if append else "OVERWRITE"),
-            snap,
-            blind_append=append,
-        )
+        operation = operation or ("WRITE" if append else "OVERWRITE")
+        return self.log.commit(actions, operation, snap, blind_append=append)
 
     def write_dynamic_partition_overwrite(
         self,
@@ -637,31 +652,10 @@ class DeltaLikeTable:
         backfill commits O(that day's files), never O(table). The
         remove+add pair is one commit, so readers never see a gap."""
         snap = self.log.snapshot()
-        df = self._apply_generated_columns(df, snap)
-        self._enforce_schema(df, False, snap)
-        self._enforce_constraints(df, snap)
-        adds = self._stage_data_files(self._physicalize(df, snap), partition_by)
-        touched = {
-            tuple(sorted(a["add"]["partitionValues"].items())) for a in adds
-        }
-        now = int(time.time() * 1000)
-        actions: list[dict] = [
-            remove(p, now)
-            for p, a in snap.adds.items()
-            if tuple(sorted((a.get("partitionValues") or {}).items()))
-            in touched
-        ]
-        actions.extend(adds)
-        actions.append(self._metadata_action(df, partition_by, snap, True))
-        return self.log.commit(actions, operation, snap)
-
-    def _physicalize(self, df: DataFrame, snap: Snapshot) -> DataFrame:
-        """Under column mapping, writers receive LOGICAL names but files
-        must carry PHYSICAL names (so old files and new files agree)."""
-        phys = dict(snap.mapping or [])
-        if not phys:
-            return df
-        return df.select([F.col(c).alias(phys.get(c, c)) for c in df.columns])
+        staged = self._stage(df, snap, partition_by, append=True)
+        touched = {_partition(a["add"]) for a in staged if "add" in a}
+        removed = [a for a in snap.adds.values() if _partition(a) in touched]
+        return self.log.commit(_removes(removed) + staged, operation, snap)
 
     # -- reads ------------------------------------------------------------
     def live_files(
@@ -695,8 +689,8 @@ class DeltaLikeTable:
         infer a schema. Columns added by later writes read as NULL for
         earlier files (Delta schema evolution). The protocol requires a
         metaData action, so a log without one is an error; a version with
-        no live files (say, after 0-row writes) reads as an empty frame
-        with the log schema.
+        no live files (say, after 0-row writes), or a filter no file can
+        match, reads as an empty frame with the log schema.
 
         ``partition_filter`` ({col: value}) prunes on the log's
         ``partitionValues`` metadata BEFORE any file is listed or opened
@@ -712,29 +706,32 @@ class DeltaLikeTable:
         win is unopened files, which on a date-sorted 100 TB table is
         most of them."""
         snap = self.log.snapshot(as_of)
+        return self._scan(
+            spark, snap, _prune(list(snap.adds.values()), partition_filter, stats_filter)
+        )
+
+    def _scan(self, spark: SparkSession, snap: Snapshot, adds: list[dict]) -> DataFrame:
+        """The rows of ``adds``, live adds of ``snap``, under its log
+        schema: deletion vectors masked, column mapping applied and
+        partition columns re-materialized (last, where a partitioned file
+        scan puts them). No adds reads as an empty frame with that
+        schema."""
         if snap.version < 0:
             raise ValueError(f"empty table at {self.path}")
         if snap.metadata is None:
             raise ValueError(f"no metaData action in the log of {self.path}")
-        unpruned = list(snap.adds.values())
-        if not unpruned:
-            # partition columns last, where a partitioned file scan puts them
+        if not adds:
             schema, parts = _schema(snap), snap.metadata.get("partitionColumns") or []
             return spark.createDataFrame([], StructType(
                 [f for f in schema.fields if f.name not in parts]
                 + [schema[p] for p in parts]
             ))
-        active = _prune(unpruned, partition_filter, stats_filter)
-        # every file pruned away: read one for an EMPTY relation with the
-        # table schema, not an error (a filter can match nothing)
-        files = [os.path.join(self.path, a["path"]) for a in active or unpruned[:1]]
+        files = [os.path.join(self.path, a["path"]) for a in adds]
         reader = spark.read.schema(_read_schema(snap))
-        if any(a.get("partitionValues") for a in unpruned):
+        if any(a.get("partitionValues") for a in adds):
             reader = reader.option("basePath", _base_path(files))
         df = reader.parquet(*files)
-        if not active:
-            df = df.limit(0)
-        dv_adds = [a for a in active if a.get("deletionVector")]
+        dv_adds = [a for a in adds if a.get("deletionVector")]
         if dv_adds:
             df = self._apply_deletion_vectors(spark, df, dv_adds)
         if snap.mapping:
@@ -791,16 +788,39 @@ class DeltaLikeTable:
         return masked
 
     # -- DML --------------------------------------------------------------
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        files: list[dict],
+        transform: Callable[[DataFrame], DataFrame],
+        operation: str,
+        data_change: bool = True,
+    ) -> int:
+        """Copy-on-write, the one primitive under DELETE, MERGE and
+        OPTIMIZE: read exactly ``files`` (adds of ``snap``) as ``read``
+        does, stage ``transform`` of their rows under the table's
+        partitioning, and commit, against ``snap``, removes for exactly
+        those files plus the new adds. A commit that lands after ``snap``
+        keeps its files. Returns the committed version."""
+        staged = self._stage(
+            transform(self._scan(spark, snap, files)), snap, data_change=data_change
+        )
+        return self.log.commit(_removes(files, data_change) + staged, operation, snap)
+
     def delete(self, spark: SparkSession, condition) -> DataFrame:
-        """Delta ``DELETE WHERE condition``: commit the surviving rows as
-        a new overwrite version (copy-on-write, like Delta's file
+        """Delta ``DELETE WHERE condition``: rewrite the live files
+        without the matching rows (copy-on-write, like Delta's file
         rewrite); history stays time-travelable. Returns the new state.
         """
         # Delta DELETE removes rows where the predicate is TRUE; rows where
         # it evaluates NULL are KEPT (plain ~condition would drop them).
-        kept = self.read(spark).filter(~condition.eqNullSafe(True))
-        self.write(kept, mode="overwrite", operation="DELETE")
-        return self.read(spark)
+        snap = self.log.snapshot()
+        v = self._rewrite(
+            spark, snap, list(snap.adds.values()),
+            lambda df: df.filter(~condition.eqNullSafe(True)), "DELETE",
+        )
+        return self.read(spark, as_of=v)
 
     def delete_with_dv(
         self,
@@ -836,19 +856,14 @@ class DeltaLikeTable:
                 "use delete() (copy-on-write)"
             )
         by_uri = {self._dv_file_uri(a): a for a in active}
-        files = [os.path.join(self.path, a["path"]) for a in active]
-        base = (
-            spark.read.schema(_read_schema(snap)).parquet(*files)
-            .withColumn("_fp", F.col("_metadata.file_path"))
-            .withColumn("_ri", F.col("_metadata.row_index"))
-        )
-        if snap.mapping:
-            # the raw scan carries PHYSICAL names; the caller's predicate
-            # speaks LOGICAL — re-alias before evaluating it
-            base = base.select(
-                [F.col(p).alias(l) for l, p in snap.mapping]
-                + [F.col("_fp"), F.col("_ri")]
-            )
+        # the scan without the DVs, under logical names (the caller's
+        # predicate speaks them); the projection keeps _metadata reachable
+        base = self._scan(
+            spark, snap, [{**a, "deletionVector": None} for a in active]
+        ).withColumns({
+            "_fp": F.col("_metadata.file_path"),
+            "_ri": F.col("_metadata.row_index"),
+        })
         # Rows already masked by an existing DV may re-match the
         # predicate here; the per-file union with the OLD index set below
         # makes that a no-op rather than a double delete.
@@ -858,8 +873,7 @@ class DeltaLikeTable:
             .agg(F.sort_array(F.collect_list("_ri")).alias("idxs"))
             .collect()
         )  # bounded: ≤ max_cardinality rows per file, checked below
-        now = int(time.time() * 1000)
-        actions: list[dict] = []
+        rewritten: list[dict] = []
         for row in hits:
             add = by_uri.get(row["_fp"])
             if add is None:
@@ -879,28 +893,20 @@ class DeltaLikeTable:
                 )
             payload = struct.pack(f"<{len(idxs)}Q", *idxs)
             if len(idxs) <= _DV_INLINE_MAX:
-                desc = {
-                    "storageType": "i",
-                    "pathOrInlineDv": base64.a85encode(payload).decode(),
-                    "sizeInBytes": len(payload),
-                    "cardinality": len(idxs),
-                }
+                kind, where = "i", base64.a85encode(payload).decode()
             else:
-                name = f"deletion_vector_{uuid.uuid4().hex}.bin"
+                kind, where = "p", f"deletion_vector_{uuid.uuid4().hex}.bin"
                 tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
                 with open(tmp, "wb") as f:
                     f.write(payload)
-                os.replace(tmp, os.path.join(self.path, name))
-                desc = {
-                    "storageType": "p",
-                    "pathOrInlineDv": name,
-                    "sizeInBytes": len(payload),
-                    "cardinality": len(idxs),
-                }
-            actions.append(remove(add["path"], now))
-            actions.append({"add": {**add, "deletionVector": desc}})
-        if not actions:
+                os.replace(tmp, os.path.join(self.path, where))
+            rewritten.append({**add, "deletionVector": {
+                "storageType": kind, "pathOrInlineDv": where,
+                "sizeInBytes": len(payload), "cardinality": len(idxs),
+            }})
+        if not rewritten:
             return snap.version
+        actions = _removes(rewritten) + [{"add": a} for a in rewritten]
         return self.log.commit(actions, "DELETE", snap)
 
     def restore(self, version: int) -> int:
@@ -915,10 +921,8 @@ class DeltaLikeTable:
         files, so the log schema describes them."""
         snap, old = self.log.snapshot(), self.log.snapshot(as_of=version)
         target, current = old.adds, snap.adds
-        now = int(time.time() * 1000)
-        actions: list[dict] = [
-            remove(p, now) for p in current if p not in target
-        ]
+        actions = _removes(a for p, a in current.items() if p not in target)
+
         def _canon(a: dict) -> dict:
             # drop null-valued keys (a checkpoint round trip materializes
             # "deletionVector": None) so content comparison is stable
@@ -975,15 +979,15 @@ class DeltaLikeTable:
     # -- maintenance ------------------------------------------------------
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
         """OPTIMIZE-style compaction: rewrite the live file set into
-        ``target_files`` bin-packed files as a new overwrite commit
-        (``dataChange: false`` in spirit — content is unchanged, only
-        layout). At 100 TB this is the small-files cure for
-        streaming-append tables, run as a maintenance job; old versions
-        stay readable until vacuumed."""
-        current = self.read(spark)
-        return self.write(
-            current.coalesce(target_files), mode="overwrite",
-            operation="OPTIMIZE",
+        ``target_files`` bin-packed files (per partition) in a
+        ``dataChange: false`` commit — content is unchanged, only layout,
+        so change readers skip it. At 100 TB this is the small-files cure
+        for streaming-append tables, run as a maintenance job; old
+        versions stay readable until vacuumed."""
+        snap = self.log.snapshot()
+        return self._rewrite(
+            spark, snap, list(snap.adds.values()),
+            lambda df: df.coalesce(target_files), "OPTIMIZE", data_change=False,
         )
 
     def vacuum(
@@ -1008,7 +1012,7 @@ class DeltaLikeTable:
     ) -> DataFrame:
         """``MERGE INTO target USING source ON target.k = source.k
         WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT`` —
-        committed as a new overwrite version; returns the merged state.
+        a rewrite of the live files; returns the merged state.
 
         Full-outer-join rewrite: matched rows take source values for
         ``update_cols`` (default: all non-key columns), unmatched target
@@ -1029,66 +1033,54 @@ class DeltaLikeTable:
         columns the target lacks are appended to the table schema —
         matched and inserted rows take the source value, untouched
         target rows get NULL (Delta's automatic-schema-evolution
-        semantics for MERGE); the overwrite commit's metaData action
-        carries the widened schemaString."""
-        target = self.read(spark)
-        cols = target.columns
-        evolved = (
-            [c for c in source.columns if c not in cols and c != on]
-            if evolve_schema
-            else []
-        )
-        update_cols = update_cols or [c for c in cols if c != on]
-        s = source.alias("s")
-        tgt = target.alias("t")
-        joined = tgt.join(s, F.col(f"t.{on}") == F.col(f"s.{on}"), "full_outer")
-        # Matched/insert are decided by join-key presence, NOT coalesce on
-        # values: WHEN MATCHED THEN UPDATE sets the column to the source
-        # value even when that value is NULL, and inserted rows take source
-        # values for every column the source carries.
-        matched = F.col(f"s.{on}").isNotNull() & F.col(f"t.{on}").isNotNull()
-        inserted = F.col(f"t.{on}").isNull()
-        if matched_delete_where is not None:
-            # WHEN MATCHED AND cond THEN DELETE: drop the joined row
-            # entirely — neither the update nor the pass-through branch
-            # may see it. A NULL condition is NOT satisfied (Delta
-            # clause semantics): coalesce to FALSE so the row falls
-            # through to the unconditional UPDATE instead of being
-            # silently deleted by ~(matched & NULL) = NULL.
-            cond = F.coalesce(F.expr(matched_delete_where), F.lit(False))
-            joined = joined.filter(~(matched & cond))
+        semantics for MERGE); the commit's metaData action carries the
+        widened schemaString."""
+        def upsert(target: DataFrame) -> DataFrame:
+            cols = target.columns
+            evolved = [
+                c for c in source.columns if c not in cols and c != on
+            ] if evolve_schema else []
+            upd_cols = update_cols or [c for c in cols if c != on]
+            joined = target.alias("t").join(
+                source.alias("s"), F.col(f"t.{on}") == F.col(f"s.{on}"), "full_outer"
+            )
+            # Matched/insert are decided by join-key presence, NOT coalesce on
+            # values: WHEN MATCHED THEN UPDATE sets the column to the source
+            # value even when that value is NULL, and inserted rows take source
+            # values for every column the source carries.
+            matched = F.col(f"s.{on}").isNotNull() & F.col(f"t.{on}").isNotNull()
+            inserted = F.col(f"t.{on}").isNull()
+            if matched_delete_where is not None:
+                # WHEN MATCHED AND cond THEN DELETE: drop the joined row
+                # entirely — neither the update nor the pass-through branch
+                # may see it. A NULL condition is NOT satisfied (Delta
+                # clause semantics): coalesce to FALSE so the row falls
+                # through to the unconditional UPDATE instead of being
+                # silently deleted by ~(matched & NULL) = NULL.
+                cond = F.coalesce(F.expr(matched_delete_where), F.lit(False))
+                joined = joined.filter(~(matched & cond))
 
-        def _merged_col(c: str):
-            s_c = (
-                F.col(f"s.{c}")
-                if c in source.columns
-                else F.lit(None).cast(target.schema[c].dataType)
-            )
-            t_c = F.col(f"t.{c}")
-            upd = s_c if (c in update_cols and c in source.columns) else t_c
-            return (
-                F.when(matched, upd).when(inserted, s_c).otherwise(t_c).alias(c)
+            def _merged_col(c: str):
+                s_c = (
+                    F.col(f"s.{c}") if c in source.columns
+                    else F.lit(None).cast(target.schema[c].dataType)
+                )
+                t_c = F.col(f"t.{c}")
+                upd = s_c if (c in upd_cols and c in source.columns) else t_c
+                return F.when(matched, upd).when(inserted, s_c).otherwise(t_c).alias(c)
+
+            # a new column: only rows the source touched carry a value
+            out_cols = [_merged_col(c) for c in cols if c != on] + [
+                F.when(matched | inserted, F.col(f"s.{c}")).alias(c) for c in evolved
+            ]
+            if delete_not_matched_by_source:
+                return joined.filter(F.col(f"s.{on}").isNotNull()).select(
+                    F.col(f"s.{on}").alias(on), *out_cols
+                )
+            return joined.select(
+                F.coalesce(F.col(f"s.{on}"), F.col(f"t.{on}")).alias(on), *out_cols
             )
 
-        def _evolved_col(c: str):
-            # New column: only rows the source touched carry a value.
-            return (
-                F.when(matched | inserted, F.col(f"s.{c}"))
-                .otherwise(F.lit(None))
-                .alias(c)
-            )
-
-        out_cols = [_merged_col(c) for c in cols if c != on] + [
-            _evolved_col(c) for c in evolved
-        ]
-        merged = joined.select(
-            F.coalesce(F.col(f"s.{on}"), F.col(f"t.{on}")).alias(on),
-            *out_cols,
-        )
-        if delete_not_matched_by_source:
-            merged = joined.filter(F.col(f"s.{on}").isNotNull()).select(
-                F.col(f"s.{on}").alias(on),
-                *out_cols,
-            )
-        self.write(merged, mode="overwrite", operation="MERGE")
-        return self.read(spark)
+        snap = self.log.snapshot()
+        v = self._rewrite(spark, snap, list(snap.adds.values()), upsert, "MERGE")
+        return self.read(spark, as_of=v)

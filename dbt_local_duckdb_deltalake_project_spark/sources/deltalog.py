@@ -49,8 +49,10 @@ def commit_path(root: str, version: int) -> str:
     return os.path.join(root, "_delta_log", f"{version:020d}.json")
 
 
-def remove(path: str, now: int) -> dict:
-    return {"remove": {"path": path, "deletionTimestamp": now, "dataChange": True}}
+def remove(path: str, now: int, data_change: bool = True) -> dict:
+    return {"remove": {
+        "path": path, "deletionTimestamp": now, "dataChange": data_change,
+    }}
 
 
 def _now_ms() -> int:
@@ -222,12 +224,18 @@ class DeltaLog:
             return [json.loads(ln) for ln in f if ln.strip()]
 
     def commit_files(self, version: int) -> tuple[list[str], list[str]]:
-        """(added, removed) data-file paths of commit ``version``."""
+        """(added, removed) data-file paths of commit ``version``, without
+        the ``dataChange: false`` ones: an OPTIMIZE only rearranges rows
+        (PROTOCOL.md), so a reader of changes skips its files."""
         acts = self.read_commit(version)
-        return (
-            [a["add"]["path"] for a in acts if "add" in a],
-            [a["remove"]["path"] for a in acts if "remove" in a],
-        )
+
+        def paths(kind: str) -> list[str]:
+            return [
+                a[kind]["path"] for a in acts
+                if kind in a and a[kind].get("dataChange", True)
+            ]
+
+        return paths("add"), paths("remove")
 
     # -- checkpoints ------------------------------------------------------
     def _checkpoint_path(self, version: int) -> str:
@@ -543,7 +551,7 @@ def appended_rows(root: str, version: int, columns: list[str]) -> list[tuple]:
     """The rows commit ``version`` appended: the tail of an append-only
     table. A commit after v0 that removes files (an overwrite, MERGE or
     DELETE) is refused, because replaying its adds would count the
-    rewritten rows twice."""
+    rewritten rows twice; an OPTIMIZE appends no row."""
     added, removed = DeltaLog(root).commit_files(version)
     if version > 0 and removed:
         raise ValueError(

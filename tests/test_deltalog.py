@@ -270,3 +270,39 @@ def test_deltalog_imports_no_pyspark():
         text=True, check=True,
     ).stdout
     assert out.strip().splitlines()[-1] == "[]"
+
+
+def test_change_readers_skip_a_commit_that_only_rearranges_data(tmp_path, monkeypatch):
+    # PROTOCOL.md: a dataChange false commit (OPTIMIZE) only rearranges
+    # rows, so the append tail and the change feed return none of its
+    # rows and open none of its files
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "t")
+    log = DeltaLog(root)
+
+    def stage(name, keys, data_change=True):
+        pq.write_table(pa.table({"k": keys}), os.path.join(root, name))
+        return {"add": {"path": name, "partitionValues": {}, "size": 4,
+                        "modificationTime": 0, "dataChange": data_change}}
+
+    os.makedirs(root)
+    log.commit([stage("a.parquet", [1]), _metadata(0)], "WRITE")
+    log.commit([stage("b.parquet", [2])], "WRITE", blind_append=True)
+    log.commit([
+        {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": False}}
+        for p in ("a.parquet", "b.parquet")
+    ] + [stage("c.parquet", [1, 2], data_change=False)], "OPTIMIZE")
+    opened = []
+    real_rows = deltalog.rows
+    monkeypatch.setattr(
+        deltalog, "rows",
+        lambda r, paths, cols: opened.extend(paths) or real_rows(r, paths, cols),
+    )
+    assert deltalog.appended_rows(root, 1, ["k"]) == [(2,)]
+    assert opened == ["b.parquet"]
+    opened.clear()
+    assert deltalog.appended_rows(root, 2, ["k"]) == []
+    assert deltalog.change_diff(root, 2, ["k"]) == []
+    assert opened == []

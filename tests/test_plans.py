@@ -587,3 +587,12 @@ def test_registry_import_reads_no_driver_records():
     assert seen, "audit hook recorded no events"
     hits = [p for p in seen if "CORRECTNESS_r" in p]
     assert not hits, f"registry import touched driver records: {hits}"
+
+
+def test_deltalike_scan_is_the_native_parquet_scan(spark, sf_dir):
+    # a Delta-like table reads through DeltaLikeTable.read: the log plans
+    # the files and Spark's parquet scan reads them — no Python data
+    # source scan, whose workers would skip deletion vectors and mapping
+    p = plan(QUERIES["scan_deltalike_datasource"](spark, sf_dir))
+    assert "FileScan parquet" in p
+    assert "python" not in p.lower()

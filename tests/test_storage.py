@@ -561,17 +561,11 @@ def test_events_ts_normalizes_under_foreign_timezone(sf_dir):
     # session configured like a hostile driver.
     from pyspark.sql import SparkSession
 
-    from dbt_local_duckdb_deltalake_project_spark import catalog
     from dbt_local_duckdb_deltalake_project_spark.catalog import read_table
 
     base = SparkSession.builder.getOrCreate()
     s2 = base.newSession()
     s2.conf.set("spark.sql.session.timeZone", "America/New_York")
-    # newSession shares the applicationId cache key — clear so this read
-    # exercises the fresh footer-read path (where the tz pin happens),
-    # not a DF cached by the UTC-pinned main session.
-    catalog._df_cache.clear()
-    catalog._registered.clear()
     df = read_table(s2, sf_dir, "events")
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert s2.conf.get("spark.sql.session.timeZone") == "UTC"
@@ -1375,3 +1369,126 @@ def test_concurrent_writes_all_stage_timestamp_micros(spark, tbl, monkeypatch):
         ts = md.row_group(0).column(1)
         assert ts.physical_type == "INT64", add["path"]
         assert ts.statistics is not None and ts.statistics.has_min_max
+
+
+# -- one rewrite primitive under DELETE, MERGE and OPTIMIZE ------------------
+
+_REWRITES = {
+    "compact": lambda spark, tbl: tbl.compact(spark),
+    "delete": lambda spark, tbl: tbl.delete(spark, F.col("k") == 2),
+    "merge": lambda spark, tbl: tbl.merge(
+        spark, spark.createDataFrame([(1, "z")], "k int, v string"), on="k"
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REWRITES))
+def test_rewrite_keeps_a_commit_that_lands_after_its_read(
+    spark, tbl, monkeypatch, op
+):
+    # another writer appends k=4 right after the operation takes its
+    # snapshot: the operation removes only the files it read, so the
+    # append survives its commit
+    from dbt_local_duckdb_deltalake_project_spark.sources.deltalog import DeltaLog
+
+    tbl.write(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), mode="overwrite")
+    real_snapshot = DeltaLog.snapshot
+    fired = []
+
+    def snapshot(self, *a, **k):
+        snap = real_snapshot(self, *a, **k)
+        if self is tbl.log and not fired:
+            fired.append(snap.version)
+            DeltaLikeTable(tbl.path).write(_df(spark, [(4, "d")]), mode="append")
+        return snap
+
+    monkeypatch.setattr(DeltaLog, "snapshot", snapshot)
+    _REWRITES[op](spark, tbl)
+    assert fired == [0] and tbl.latest_version == 2
+    got = {r.k: r.v for r in tbl.read(spark).collect()}
+    expect = {1: "a", 2: "b", 3: "c", 4: "d"}
+    if op == "delete":
+        del expect[2]
+    if op == "merge":
+        expect[1] = "z"
+    assert got == expect
+    assert tbl.history()[0]["readVersion"] == 0
+
+
+@pytest.mark.parametrize("op", sorted(_REWRITES))
+def test_rewrite_keeps_the_table_partitioning(spark, tbl, op):
+    df = spark.createDataFrame(
+        [(1, "p1"), (2, "p1"), (3, "p1"), (4, "p2")], "k int, v string"
+    )
+    tbl.write(df, mode="overwrite", partition_by=["v"])
+    _REWRITES[op](spark, tbl)
+    assert tbl.log.snapshot().metadata["partitionColumns"] == ["v"]
+    assert all(a["partitionValues"] for a in tbl.live_files())
+    got = sorted(
+        (r.k, r.v) for r in tbl.read(spark, partition_filter={"v": "p1"}).collect()
+    )
+    expect = {
+        "compact": [(1, "p1"), (2, "p1"), (3, "p1")],
+        "delete": [(1, "p1"), (3, "p1")],
+        "merge": [(2, "p1"), (3, "p1")],  # k=1 moved to partition "z"
+    }[op]
+    assert got == expect
+
+
+def test_compact_keeps_a_renamed_partition_column(spark, tbl):
+    # under column mapping the rewrite stages physical names and keeps
+    # the partition layout the log records
+    df = spark.createDataFrame([(1, "p1"), (2, "p2")], "k int, v string")
+    tbl.write(df, mode="overwrite", partition_by=["v"])
+    tbl.rename_column("v", "w")
+    tbl.compact(spark)
+    assert {a["partitionValues"]["v"] for a in tbl.live_files()} == {"p1", "p2"}
+    assert sorted((r.k, r.w) for r in tbl.read(spark).collect()) == [
+        (1, "p1"), (2, "p2"),
+    ]
+
+
+def test_append_without_partition_by_keeps_partitioning(spark, tbl):
+    df = spark.createDataFrame([(1, "p1"), (2, "p2")], "k int, v string")
+    tbl.write(df, mode="overwrite", partition_by=["v"])
+    tbl.write(_df(spark, [(3, "p1")]), mode="append")
+    assert tbl.log.snapshot().metadata["partitionColumns"] == ["v"]
+    assert {a["partitionValues"]["v"] for a in tbl.live_files()} == {"p1", "p2"}
+    got = tbl.read(spark, partition_filter={"v": "p1"}).collect()
+    assert sorted(r.k for r in got) == [1, 3]
+
+
+def test_compact_is_not_a_data_change(spark, tbl):
+    # OPTIMIZE only rearranges rows: its adds and removes say
+    # dataChange false, so an append tail reads no row of it
+    import json
+    import os
+
+    from dbt_local_duckdb_deltalake_project_spark.sources import deltalog
+
+    tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
+    tbl.write(_df(spark, [(2, "b")]), mode="append")
+    v = tbl.compact(spark)
+    with open(os.path.join(tbl.log.log_dir, f"{v:020d}.json")) as f:
+        acts = [json.loads(ln) for ln in f]
+    files = [a[k] for a in acts for k in ("add", "remove") if k in a]
+    assert len(files) == 3 and not any(f["dataChange"] for f in files)
+    assert tbl.history()[0]["operation"] == "OPTIMIZE"
+    assert deltalog.appended_rows(tbl.path, v, ["k"]) == []
+    assert sorted(r.k for r in tbl.read(spark).collect()) == [1, 2]
+
+
+def test_cloned_session_sees_the_catalog(spark, sf_dir):
+    # views and DataFrames are per session: a newSession() clone
+    # registers its own views (from the cached footer schemas, so no
+    # inference job) and its DataFrames belong to it
+    from dbt_local_duckdb_deltalake_project_spark import catalog
+
+    catalog.register_views(spark, sf_dir)
+    clone = spark.newSession()
+    n, jobs = _jobs_during(spark, lambda: catalog.register_views(clone, sf_dir))
+    assert jobs == []
+    got = catalog.sql(clone, sf_dir, "SELECT count(*) AS n FROM region").head().n
+    assert got == catalog.t(spark, sf_dir, "region").count()
+    assert catalog.t(clone, sf_dir, "region").sparkSession is clone
+    assert catalog.t(spark, sf_dir, "region").sparkSession is spark
