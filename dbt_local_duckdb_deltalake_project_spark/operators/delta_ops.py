@@ -16,13 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import t
 from ..sources.deltalike import DeltaLikeTable
-from ..sources.workspace import (
-    fixture_fingerprint,
-    mark_staged,
-    staging_current,
-    staging_lock,
-    workdir,
-)
+from ..sources.workspace import staged, workdir
 from .registry import register
 
 # deterministic split of orders used by append/time-travel:
@@ -30,23 +24,12 @@ _CUT = "1999-01-01"
 
 
 def _staged_table(sf_dir: str, name: str, build) -> DeltaLikeTable:
-    """One-time table-layout ETL (like bucketed.py): ops whose SEMANTIC
-    is the read path (pruning, skipping, CDF, data-source scan) build
-    their layout once per fixture fingerprint and every later call —
-    across queries, bench runs, processes — only reads. ``build(tbl)``
-    writes the versions."""
-    path = workdir(sf_dir, name, fresh=False)
-    tbl = DeltaLikeTable(path)
-    with staging_lock:
-        if not staging_current(path, sf_dir):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading sources
-            import shutil
-
-            shutil.rmtree(path)
-            tbl = DeltaLikeTable(workdir(sf_dir, name, fresh=False))
-            build(tbl)
-            mark_staged(path, sf_dir, fp)
-    return tbl
+    """One-time table-layout ETL (``workspace.staged``): ops whose
+    SEMANTIC is the read path (pruning, skipping, CDF, data-source scan)
+    build their layout once per fixture fingerprint and every later
+    call — across queries, bench runs, processes — only reads.
+    ``build(tbl)`` writes the versions."""
+    return DeltaLikeTable(staged(sf_dir, name, lambda p: build(DeltaLikeTable(p))))
 
 
 @register(

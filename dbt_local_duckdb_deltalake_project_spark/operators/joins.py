@@ -868,27 +868,18 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     """
     import os
 
-    from ..sources.workspace import (
-        fixture_fingerprint,
-        staging_lock,
-        workdir,
-    )
+    from ..sources.workspace import staged
 
-    import hashlib
+    def build(base: str) -> None:
+        t(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
+            "o_orderstatus"
+        ).parquet(base)
+        spark.createDataFrame(
+            [("F", 1), ("O", 0), ("P", 0)], ["s", "is_final"]
+        ).write.parquet(os.path.join(base, "_dim"))
 
-    base = workdir(sf_dir, "dpp_fact", fresh=False)
-    fp = hashlib.md5(fixture_fingerprint(sf_dir).encode()).hexdigest()
-    stamp = os.path.join(base, "_STAMP-" + fp)
+    base = staged(sf_dir, "dpp_fact", build)
     dim_path = os.path.join(base, "_dim")
-    with staging_lock:
-        if not os.path.exists(stamp):
-            t(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-                "o_orderstatus"
-            ).parquet(base)
-            spark.createDataFrame(
-                [("F", 1), ("O", 0), ("P", 0)], ["s", "is_final"]
-            ).write.mode("overwrite").parquet(dim_path)
-            open(stamp, "w").close()
     fact = spark.read.option("basePath", base).parquet(
         os.path.join(base, "o_orderstatus=*")
     )

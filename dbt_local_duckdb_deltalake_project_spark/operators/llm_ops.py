@@ -5146,90 +5146,64 @@ def _staged_neardup(
     CC over the symmetrized pairs. In production the near-dup pair
     table and the label table are warehouse state refreshed by one
     nightly job, not recomputed per downstream query — so they stage
-    exactly like ``_staged_old_labels`` below (same staging_lock /
-    fingerprint-BEFORE-read / mark_staged discipline), and every
-    consumer (cluster sizing, keep-best election, incremental
+    through ``workspace.staged`` like ``_staged_old_labels`` below, and
+    every consumer (cluster sizing, keep-best election, incremental
     maintenance) reads the staged parquet. ``llm_dedup_near`` stays
     FRESH by design — it is the pair-generation demo, so the timed
     path still proves that plan every round."""
     import os
-    import shutil
 
-    from ..sources.workspace import (
-        fixture_fingerprint,
-        mark_staged,
-        staging_current,
-        staging_lock,
-        workdir,
+    from ..sources.workspace import staged
+
+    def build(path: str) -> None:
+        pairs_path = os.path.join(path, "pairs")
+        pairs = _neardup_pairs(t(spark, sf_dir, "documents"))
+        pairs.select("doc_a", "doc_b").write.parquet(pairs_path)
+        staged_pairs = spark.read.parquet(pairs_path)
+        sym = staged_pairs.union(
+            staged_pairs.select(
+                F.col("doc_b").alias("doc_a"),
+                F.col("doc_a").alias("doc_b"),
+            )
+        ).localCheckpoint(eager=True)
+        labels, _rounds = _cc_large_small_star(sym)
+        labels.write.parquet(os.path.join(path, "labels"))
+
+    path = staged(sf_dir, "neardup_cc", build)
+    return (
+        spark.read.parquet(os.path.join(path, "pairs")),
+        spark.read.parquet(os.path.join(path, "labels")),
     )
-
-    path = workdir(sf_dir, "neardup_cc", fresh=False)
-    pairs_path = os.path.join(path, "pairs")
-    labels_path = os.path.join(path, "labels")
-    with staging_lock:
-        if not staging_current(path, sf_dir):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading sources
-            shutil.rmtree(path)
-            path = workdir(sf_dir, "neardup_cc", fresh=False)
-            d = t(spark, sf_dir, "documents")
-            pairs = _neardup_pairs(d).select("doc_a", "doc_b")
-            pairs.write.mode("overwrite").parquet(pairs_path)
-            staged_pairs = spark.read.parquet(pairs_path)
-            sym = staged_pairs.union(
-                staged_pairs.select(
-                    F.col("doc_b").alias("doc_a"),
-                    F.col("doc_a").alias("doc_b"),
-                )
-            ).localCheckpoint(eager=True)
-            labels, _rounds = _cc_large_small_star(sym)
-            labels.write.mode("overwrite").parquet(labels_path)
-            mark_staged(path, sf_dir, fp)
-    return spark.read.parquet(pairs_path), spark.read.parquet(labels_path)
 
 
 def _staged_old_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pre-existing (doc_id, label) clustering the incremental op
     updates — warehouse state in production, so staged once per fixture
-    fingerprint like the delta read-path layouts (delta_ops._staged_table
-    pattern): CC over the candidate pairs among OLD documents only
+    fingerprint through ``workspace.staged``, like the delta read-path
+    layouts: CC over the candidate pairs among OLD documents only
     (doc_id % 5 != 0 on both ends), written as parquet and only read on
     every later call across queries, bench runs, and processes."""
     import os
-    import shutil
 
-    from ..sources.workspace import (
-        fixture_fingerprint,
-        mark_staged,
-        staging_current,
-        staging_lock,
-        workdir,
-    )
+    from ..sources.workspace import staged
 
-    path = workdir(sf_dir, "cc_labels_old", fresh=False)
-    data = os.path.join(path, "labels")
-    with staging_lock:
-        if not staging_current(path, sf_dir):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading sources
-            shutil.rmtree(path)
-            path = workdir(sf_dir, "cc_labels_old", fresh=False)
-            d = t(spark, sf_dir, "documents")
-            old_pairs = (
-                _neardup_pairs(d)
-                .select("doc_a", "doc_b")
-                .filter(
-                    (F.col("doc_a") % 5 != 0) & (F.col("doc_b") % 5 != 0)
-                )
+    def build(path: str) -> None:
+        old_pairs = (
+            _neardup_pairs(t(spark, sf_dir, "documents"))
+            .select("doc_a", "doc_b")
+            .filter((F.col("doc_a") % 5 != 0) & (F.col("doc_b") % 5 != 0))
+        )
+        sym_old = old_pairs.union(
+            old_pairs.select(
+                F.col("doc_b").alias("doc_a"),
+                F.col("doc_a").alias("doc_b"),
             )
-            sym_old = old_pairs.union(
-                old_pairs.select(
-                    F.col("doc_b").alias("doc_a"),
-                    F.col("doc_a").alias("doc_b"),
-                )
-            ).localCheckpoint(eager=True)
-            labels_old, _ = _cc_large_small_star(sym_old)
-            labels_old.write.mode("overwrite").parquet(data)
-            mark_staged(path, sf_dir, fp)
-    return spark.read.parquet(data)
+        ).localCheckpoint(eager=True)
+        labels_old, _ = _cc_large_small_star(sym_old)
+        labels_old.write.parquet(os.path.join(path, "labels"))
+
+    path = staged(sf_dir, "cc_labels_old", build)
+    return spark.read.parquet(os.path.join(path, "labels"))
 
 
 @register("llm_dedup_clusters_incremental", _CLUSTER_ORACLE)
@@ -7514,7 +7488,7 @@ def _bpe_learn_rows(
 ) -> list[tuple[int, str, str, int, int, int]]:
     """The N-round BPE learn loop (N = _BPE_N = 8 since r11), shared by
     ``llm_bpe_learn`` (which presents it fresh every call — it is the
-    learning demo) and ``_staged_bpe_merges`` (which stages the emitted
+    learning demo) and ``_staged_merges`` (which stages the emitted
     merge table once per fixture fingerprint for the apply side).
     Returns one tuple per round: (round, left_tok, right_tok,
     pair_count, n_merges, tokens_after). Driver round-trips are ONE
@@ -7631,43 +7605,32 @@ def llm_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("round")
 
 
-def _staged_bpe_merges(
-    spark: SparkSession, sf_dir: str
+def _staged_merges(
+    spark: SparkSession, sf_dir: str, name: str, learn_rows
 ) -> list[tuple[int, str, str]]:
-    """Stage ``llm_bpe_learn``'s emitted merge table (round, left_tok,
-    right_tok) once per fixture fingerprint — the learn→apply artifact
-    handoff a real tokenizer ships (merges are learned ONCE on a
-    sample, then applied everywhere; re-learning per apply call would
-    be the production bug). Same staging discipline as
-    ``_staged_neardup``: staging_lock, fingerprint BEFORE reading
-    sources, mark_staged. Returns the merge rows in rank order — the
-    merge table is vocabulary-growth sized (_BPE_N = 8 rows here,
-    10⁴–10⁵ in a real tokenizer), never corpus-sized, so collecting it
-    is the same bounded-broadcast class as the IVF centroid tables."""
+    """Stage a learner's emitted merge table (round, left_tok,
+    right_tok) under ``name`` once per fixture fingerprint — the
+    learn→apply artifact handoff a real tokenizer ships (merges are
+    learned ONCE on a sample, then applied everywhere; re-learning per
+    apply call would be the production bug), staged through
+    ``workspace.staged`` like ``_staged_neardup``. ``learn_rows`` is
+    ``_bpe_learn_rows`` or ``_wp_learn_rows``. Returns the merge rows in
+    rank order — the merge table is vocabulary-growth sized (_BPE_N = 8
+    and _WP_N = 6 rows here, 10⁴–10⁵ in a real tokenizer), never
+    corpus-sized, so collecting it is the same bounded-broadcast class
+    as the IVF centroid tables."""
     import os
-    import shutil
 
-    from ..sources.workspace import (
-        fixture_fingerprint,
-        mark_staged,
-        staging_current,
-        staging_lock,
-        workdir,
-    )
+    from ..sources.workspace import staged
 
-    path = workdir(sf_dir, "bpe_merges", fresh=False)
-    data = os.path.join(path, "merges")
-    with staging_lock:
-        if not staging_current(path, sf_dir):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading sources
-            shutil.rmtree(path)
-            path = workdir(sf_dir, "bpe_merges", fresh=False)
-            rows = _bpe_learn_rows(spark, sf_dir)
-            spark.createDataFrame(
-                [(r[0], r[1], r[2]) for r in rows],
-                "round long, left_tok string, right_tok string",
-            ).coalesce(1).write.mode("overwrite").parquet(data)
-            mark_staged(path, sf_dir, fp)
+    def build(path: str) -> None:
+        rows = learn_rows(spark, sf_dir)
+        spark.createDataFrame(
+            [(r[0], r[1], r[2]) for r in rows],
+            "round long, left_tok string, right_tok string",
+        ).coalesce(1).write.parquet(os.path.join(path, "merges"))
+
+    data = os.path.join(staged(sf_dir, name, build), "merges")
     merges = (
         spark.read.parquet(data)
         .orderBy("round")
@@ -8336,7 +8299,7 @@ def llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPLY the LEARNED BPE merge table to the full corpus — the
     scale-out half whose learning side is llm_bpe_learn: merges are
     learned once on a bounded sample and staged as the tokenizer's
-    shipped artifact (``_staged_bpe_merges``); applying them to every
+    shipped artifact (``_staged_merges``); applying them to every
     document is the pass that actually runs at 100 TB. The handoff
     flows real data: the replace chain below is DERIVED from the staged
     (round, left_tok, right_tok) rows, not hardcoded.
@@ -8360,7 +8323,7 @@ def llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank's output, so the chain cannot be reordered — same contract as
     a real BPE merge table.
     """
-    merges = _staged_bpe_merges(spark, sf_dir)
+    merges = _staged_merges(spark, sf_dir, "bpe_merges", _bpe_learn_rows)
     tok2marker: dict[str, str] = {}
     pats: list[str] = []
     for rank, (_rnd, lt, rt) in enumerate(merges, start=1):
@@ -11126,7 +11089,7 @@ def _wp_learn_rows(
     round's pair total, and token counts fall out of the identity
     tokens_before = pairs_total + n_docs (see _bpe_learn_rows).
     Shared by ``llm_wordpiece_learn`` (the learning demo, fresh every
-    call) and ``_staged_wp_merges`` (the staged learn→apply artifact).
+    call) and ``_staged_merges`` (the staged learn→apply artifact).
     """
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 1)
     toks = (
@@ -11230,46 +11193,6 @@ def llm_wordpiece_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         _wp_learn_rows(spark, sf_dir), _WP_SCHEMA
     ).orderBy("round")
-
-
-def _staged_wp_merges(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple[int, str, str]]:
-    """Stage ``llm_wordpiece_learn``'s emitted merge table once per
-    fixture fingerprint — the same learn→apply artifact handoff as
-    ``_staged_bpe_merges`` (see there for the staging discipline); the
-    table is vocabulary-growth sized (_WP_N = 6 rows), never
-    corpus-sized."""
-    import os
-    import shutil
-
-    from ..sources.workspace import (
-        fixture_fingerprint,
-        mark_staged,
-        staging_current,
-        staging_lock,
-        workdir,
-    )
-
-    path = workdir(sf_dir, "wp_merges", fresh=False)
-    data = os.path.join(path, "merges")
-    with staging_lock:
-        if not staging_current(path, sf_dir):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading sources
-            shutil.rmtree(path)
-            path = workdir(sf_dir, "wp_merges", fresh=False)
-            rows = _wp_learn_rows(spark, sf_dir)
-            spark.createDataFrame(
-                [(r[0], r[1], r[2]) for r in rows],
-                "round long, left_tok string, right_tok string",
-            ).coalesce(1).write.mode("overwrite").parquet(data)
-            mark_staged(path, sf_dir, fp)
-    merges = (
-        spark.read.parquet(data)
-        .orderBy("round")
-        .collect()  # bounded: merge-table rows (vocab growth), never corpus
-    )
-    return [(int(r["round"]), r["left_tok"], r["right_tok"]) for r in merges]
 
 
 # ---------------------------------------------------------------------------
@@ -11558,9 +11481,9 @@ WITH t0 AS MATERIALIZED (
 @register("llm_wordpiece_apply", _WP_APPLY_ORACLE)
 def llm_wordpiece_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See llm_bpe_apply for the replace-chain contract; this is the
-    same tokenizer-apply pass over ``_staged_wp_merges``'s artifact
+    same tokenizer-apply pass over the staged WordPiece artifact
     (markers cannot collide — the corpus alphabet is [a-z ])."""
-    merges = _staged_wp_merges(spark, sf_dir)
+    merges = _staged_merges(spark, sf_dir, "wp_merges", _wp_learn_rows)
     tok2marker: dict[str, str] = {}
     pats: list[str] = []
     for rank, (_rnd, lt, rt) in enumerate(merges, start=1):

@@ -22,13 +22,7 @@ from pyspark.sql import functions as F
 from ..catalog import t
 from ..functions.deterministic import dsum, sql_dsum
 from ..plans.graph import ModelGraph
-from ..sources.workspace import (
-    fixture_fingerprint,
-    mark_staged,
-    staging_current,
-    staging_lock,
-    workdir,
-)
+from ..sources.workspace import staged, workdir
 from .registry import register
 
 def stage_bronze_csv(spark: SparkSession, sf_dir: str) -> str:
@@ -36,20 +30,12 @@ def stage_bronze_csv(spark: SparkSession, sf_dir: str) -> str:
     written once per fixture dir and reused; gated on the fixture
     fingerprint so regenerated fixtures rebuild it. Called untimed from
     prestage; the pipeline's own bronze/silver/gold work runs fresh."""
-    import os
+    def build(bronze_dir: str) -> None:
+        t(spark, sf_dir, "orders").write.mode("overwrite").option(
+            "header", True
+        ).csv(bronze_dir)
 
-    bronze_dir = workdir(sf_dir, "medallion_bronze", fresh=False)
-    with staging_lock:
-        if not (
-            staging_current(bronze_dir, sf_dir)
-            and os.path.exists(os.path.join(bronze_dir, "_SUCCESS"))
-        ):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading the source
-            t(spark, sf_dir, "orders").write.mode("overwrite").option(
-                "header", True
-            ).csv(bronze_dir)
-            mark_staged(bronze_dir, sf_dir, fp)
-    return bronze_dir
+    return staged(sf_dir, "medallion_bronze", build)
 
 
 _PIPELINE_ORACLE = f"""

@@ -1079,39 +1079,19 @@ def stream_corpus_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic end state: exactly one doc per distinct text, kept at
     its earliest arrival — the oracle's min-per-content-hash rule.
     """
-    import os
-
     from ..catalog import t
     from ..sources.deltalike import DeltaLikeTable
-    from ..sources.workspace import (
-        fixture_fingerprint,
-        mark_staged,
-        staging_current,
-        staging_lock,
-        workdir,
-    )
+    from ..sources.workspace import staged, workdir
 
-    src = workdir(sf_dir, "stream_doc_src", fresh=False)
+    def build(src: str) -> None:
+        d = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+        n = d.count()  # bounded scalar, staging-time only
+        cut60, cut40 = (n * 3) // 5, (n * 2) // 5
+        d.filter(F.col("doc_id") < cut60).coalesce(1).write.parquet(f"{src}/f0")
+        d.filter(F.col("doc_id") >= cut40).coalesce(1).write.parquet(f"{src}/f1")
+
+    src = staged(sf_dir, "stream_doc_src", build)
     ckpt = workdir(sf_dir, "stream_ckpt_corpus")
-    with staging_lock:
-        if not (
-            staging_current(src, sf_dir)
-            and os.path.exists(f"{src}/f0/_SUCCESS")
-            and os.path.exists(f"{src}/f1/_SUCCESS")
-        ):
-            fp = fixture_fingerprint(sf_dir)
-            d = t(spark, sf_dir, "documents").select(
-                "doc_id", "source", "text"
-            )
-            n = d.count()  # bounded scalar, staging-time only
-            cut60, cut40 = (n * 3) // 5, (n * 2) // 5
-            d.filter(F.col("doc_id") < cut60).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{src}/f0")
-            d.filter(F.col("doc_id") >= cut40).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{src}/f1")
-            mark_staged(src, sf_dir, fp)
 
     tbl = DeltaLikeTable(workdir(sf_dir, "stream_corpus"))
 

@@ -26,8 +26,9 @@ def prestage(spark: SparkSession, sf_dir: str) -> None:
     stage_event_files(spark, sf_dir, "prestage_fwd", late_fraction=False)
     stage_event_files_3way(spark, sf_dir, "prestage_rev3")
     stage_bronze_csv(spark, sf_dir)
-    # Read-path Delta layouts (pruning / skipping / CDF / pyds scan):
-    # running each op once stages its table via _staged_table's gate.
+    # Read-path Delta layouts (pruning / skipping / CDF / data-source
+    # scan): running each op once stages its table through
+    # workspace.staged.
     from .operators import QUERIES
 
     for qid in (
@@ -41,10 +42,10 @@ def prestage(spark: SparkSession, sf_dir: str) -> None:
         # read by clusters / keep_best / incremental) and the old-label
         # table (llm_ops._staged_old_labels) — one consumer stages both
         "llm_dedup_clusters_incremental",
-        # the learned BPE merge table (llm_ops._staged_bpe_merges) —
+        # the learned BPE merge table (llm_ops._staged_merges) —
         # the learn→apply artifact the apply side consumes
         "llm_bpe_apply",
-        # the learned WordPiece merge table (llm_ops._staged_wp_merges)
+        # the learned WordPiece merge table (llm_ops._staged_merges)
         "llm_wordpiece_apply",
     ):
         QUERIES[qid](spark, sf_dir)  # lazy build; staging happens eagerly

@@ -17,13 +17,7 @@ import re
 from pyspark.sql import SparkSession
 
 from ..catalog import t
-from .workspace import (
-    fixture_fingerprint,
-    mark_staged,
-    staging_current,
-    staging_lock,
-    workdir,
-)
+from .workspace import staged
 
 BUCKETS = 8
 
@@ -42,36 +36,34 @@ def _sf_tag(sf_dir: str) -> str:
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Return (orders_table, lineitem_table), staging them if needed.
 
-    Three tiers, cheapest first: catalog hit (no-op) → files already on
-    disk (metadata-only external-table DDL) → full bucketed write.
+    The bucketed write is the ``staged`` build: ``saveAsTable`` into the
+    build directory, whose catalog entry is then dropped (the table is
+    external, so its files stay). Every session attaches the published
+    files with metadata-only ``CREATE TABLE ... CLUSTERED BY`` DDL, and
+    re-attaches after a republish.
     """
     tag = _sf_tag(sf_dir)
     names = []
-    with staging_lock:  # parallel bench threads: no drop-under-reader race
-        for suffix, source, key, cols in _SPECS:
-            name = f"bkt_{suffix}_{tag}"
-            names.append(name)
-            path = workdir(sf_dir, f"bucketed_{suffix}", fresh=False)
-            current = staging_current(path, sf_dir)
-            if spark.catalog.tableExists(name):
-                if current:
-                    continue
-                spark.sql(f"DROP TABLE {name}")  # fixtures regenerated underneath
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading the source
-            src = t(spark, sf_dir, source).select(*cols)
-            if current and os.path.exists(os.path.join(path, "_SUCCESS")):
-                col_defs = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in src.schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {name} ({col_defs}) USING PARQUET "
-                    f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                    f"INTO {BUCKETS} BUCKETS LOCATION '{path}'"
-                )
-            else:
-                src.write.bucketBy(BUCKETS, key).sortBy(key).option(
-                    "path", path
-                ).mode("overwrite").saveAsTable(name)
-                mark_staged(path, sf_dir, fp)
+    for suffix, source, key, cols in _SPECS:
+        name = f"bkt_{suffix}_{tag}"
+        names.append(name)
+        src = t(spark, sf_dir, source).select(*cols)
+
+        def build(path: str) -> None:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")  # attached to old files
+            src.write.bucketBy(BUCKETS, key).sortBy(key).option(
+                "path", path
+            ).mode("overwrite").saveAsTable(name)
+            spark.sql(f"DROP TABLE {name}")
+
+        path = staged(sf_dir, f"bucketed_{suffix}", build)
+        if not spark.catalog.tableExists(name):
+            col_defs = ", ".join(
+                f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
+            )
+            spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {name} ({col_defs}) USING PARQUET "
+                f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+                f"INTO {BUCKETS} BUCKETS LOCATION '{path}'"
+            )
     return names[0], names[1]

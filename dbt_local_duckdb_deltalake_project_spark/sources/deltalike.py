@@ -270,7 +270,8 @@ class DeltaLikeTable:
         data_change: bool = True,
     ) -> list[dict]:
         """Stage ``df`` as data files of the table at ``snap``: the ``add``
-        actions and metaData action every data write commits. ``df`` gets
+        actions, plus a metaData action if the write changes the table's
+        metadata (schema or partitioning), as Delta does. ``df`` gets
         the generated columns and is checked against the CHECK constraints
         (and, for an append, the schema). Files land under ``partition_by``,
         by default the table's own partition columns, in hive-style
@@ -331,7 +332,8 @@ class DeltaLikeTable:
                     "stats": stats,
                 }})
         shutil.rmtree(tmp)
-        return adds + [self._metadata_action(df, parts, snap, append)]
+        meta = self._metadata_action(df, parts, snap, append)
+        return adds if meta["metaData"] == snap.metadata else adds + [meta]
 
     def _metadata_action(
         self, df: DataFrame, partition_by: list[str], snap: Snapshot, append: bool
@@ -341,8 +343,9 @@ class DeltaLikeTable:
         names) — df.schema alone would drop it. An append also keeps
         every current column, so the log schema is always the evolved
         union of the live files and readers take it as is. Table
-        configuration (constraints, properties) survives writes — only
-        explicit ALTERs change it, as in Delta."""
+        configuration (constraints, properties), id, format and
+        createdTime survive writes — only explicit ALTERs change the
+        configuration, as in Delta."""
         by_name = {f["name"]: f for f in snap.fields}
         fields = json.loads(df.schema.json())["fields"]
         if append:
@@ -355,14 +358,15 @@ class DeltaLikeTable:
                 }} if f["name"] in by_name else f
                 for f in fields
             ]
+        old = snap.metadata or {}
         return {
             "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
+                "id": old.get("id") or str(uuid.uuid4()),
+                "format": old.get("format") or {"provider": "parquet", "options": {}},
                 "schemaString": json.dumps({"type": "struct", "fields": fields}),
                 "partitionColumns": partition_by,
                 "configuration": snap.configuration,
-                "createdTime": int(time.time() * 1000),
+                "createdTime": old.get("createdTime") or int(time.time() * 1000),
             }
         }
 
@@ -971,8 +975,8 @@ class DeltaLikeTable:
                     ),
                 }
             actions.append({"add": add})
-        if snap.metadata is not None:
-            actions.append({"metaData": snap.metadata})
+        if snap.metadata is not None:  # a clone is a new table: its own id
+            actions.append({"metaData": {**snap.metadata, "id": str(uuid.uuid4())}})
         clone.log.commit(actions, "CLONE")
         return clone
 

@@ -2,16 +2,21 @@
 tables, CSV/JSON staging, streaming sources/checkpoints).
 
 Everything lands under ``<repo>/.work/<sf_name>/<name>`` so the repo stays
-self-contained (fixture dirs are read-only). Each operator overwrites its
-own subdirectory on every run — queries stay order-independent and
-re-runnable.
+self-contained (fixture dirs are read-only). A ``workdir`` is the
+operator's own scratch, wiped per run so queries stay order-independent
+and re-runnable. A ``staged`` directory is one-time fixture ETL: built
+once per fixture fingerprint and published whole by a rename, so any
+number of threads and processes can share it.
 """
 
 from __future__ import annotations
 
+import errno
 import os
 import shutil
 import threading
+import uuid
+from collections.abc import Callable
 
 # Bump when the staged-file FORMAT changes (not just fixture contents):
 # old staged dirs then fingerprint-mismatch and restage. v2: events.ts
@@ -20,19 +25,23 @@ import threading
 STAGING_VERSION = "4"  # r11: staged BPE merge table grew 3 -> 8 rows
 
 # Staging is one-time work shared across the bench's parallel query
-# threads; serialize the check-then-write so concurrent callers can't
-# drop a table under a reader or double-CTAS (process-local is enough —
-# cross-process reuse goes through the fingerprint file).
-staging_lock = threading.Lock()
+# threads: one build per name per process, and callers wait for it
+# instead of building a duplicate. Other processes are kept apart by
+# the rename publication in ``staged``, not by this lock.
+_staging_lock = threading.Lock()
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 WORK_ROOT = os.path.join(_REPO, ".work")
 
 
+def _path(sf_dir: str, name: str) -> str:
+    sf_name = os.path.basename(sf_dir.rstrip("/")) or "default"
+    return os.path.join(WORK_ROOT, sf_name, name)
+
+
 def workdir(sf_dir: str, name: str, fresh: bool = True) -> str:
     """Absolute scratch path for (fixture dir, operator); wiped if fresh."""
-    sf_name = os.path.basename(sf_dir.rstrip("/")) or "default"
-    path = os.path.join(WORK_ROOT, sf_name, name)
+    path = _path(sf_dir, name)
     if fresh and os.path.exists(path):
         shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
@@ -56,22 +65,55 @@ def fixture_fingerprint(sf_dir: str) -> str:
 _FP_FILE = ".fixture_fp"
 
 
-def staging_current(path: str, sf_dir: str) -> bool:
-    """True iff ``path`` was staged from the fixture dir's CURRENT files."""
+def _stamp(path: str) -> str | None:
     try:
         with open(os.path.join(path, _FP_FILE)) as fh:
-            return fh.read() == fixture_fingerprint(sf_dir)
+            return fh.read()
     except OSError:
-        return False
+        return None
 
 
-def mark_staged(path: str, sf_dir: str, fp: str | None = None) -> None:
-    """Stamp ``path`` as staged from ``sf_dir``.
+def staged(sf_dir: str, name: str, build: Callable[[str], None]) -> str:
+    """Path of ``<name>`` staged from the fixture dir's current files.
 
-    Pass ``fp`` captured via ``fixture_fingerprint`` BEFORE reading the
-    source tables: if fixtures are regenerated mid-staging, the stale
-    staged data then carries the OLD stamp, mismatches, and is rebuilt —
-    stamping after the write would bless it forever.
+    A directory stamped with the current ``fixture_fingerprint`` is
+    returned as is. Otherwise ``build(path)`` fills a fresh
+    ``.tmp-<name>-<hex>`` sibling, the sibling is stamped with the
+    fingerprint taken BEFORE the build (fixtures regenerated mid-build
+    leave an old stamp, so the next call rebuilds), and the sibling is
+    renamed into place: a stamped directory is always complete. A stale
+    directory is moved aside first and removed after. A killed build
+    leaves only a ``.tmp-<name>-*`` sibling. A rename onto a
+    directory another process has just published fails; if that build
+    is current, this one is discarded. A ``build`` that raises removes
+    its sibling and publishes nothing.
     """
-    with open(os.path.join(path, _FP_FILE), "w") as fh:
-        fh.write(fp if fp is not None else fixture_fingerprint(sf_dir))
+    path = _path(sf_dir, name)
+    with _staging_lock:
+        fp = fixture_fingerprint(sf_dir)
+        if _stamp(path) == fp:
+            return path
+        tmp = os.path.join(os.path.dirname(path), f".tmp-{name}-{uuid.uuid4().hex}")
+        stale = tmp + "-stale"
+        os.makedirs(tmp)
+        try:
+            build(tmp)
+            with open(os.path.join(tmp, _FP_FILE), "w") as fh:
+                fh.write(fp)
+            while True:
+                try:
+                    os.rename(tmp, path)  # replaces only an empty dir
+                    break
+                except OSError as e:
+                    if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                        raise
+                if _stamp(path) == fp:  # another process published first
+                    break
+                try:
+                    os.rename(path, stale)
+                except FileNotFoundError:
+                    pass  # another process moved it aside
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(stale, ignore_errors=True)
+    return path

@@ -26,13 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..sources.workspace import (
-    fixture_fingerprint,
-    mark_staged,
-    staging_current,
-    staging_lock,
-    workdir,
-)
+from ..sources.workspace import staged, workdir
 
 
 def stage_event_files(
@@ -48,29 +42,21 @@ def stage_event_files(
     filter lags one trigger (see stage_event_files_3way for the replay
     that makes the drop real).
     """
-    import os
+    def build(src: str) -> None:
+        ev = t(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        )
+        cut = "2024-01-15 00:00:00"
+        early = ev.filter(F.col("ts") < cut)
+        late = ev.filter(F.col("ts") >= cut)
+        first, second = (late, early) if late_fraction else (early, late)
+        # one file each: coalesce(1) so file order == micro-batch order
+        first.coalesce(1).write.parquet(f"{src}/f0")
+        second.coalesce(1).write.parquet(f"{src}/f1")
 
     order = "rev" if late_fraction else "fwd"
-    src = workdir(sf_dir, f"stream_src_{order}", fresh=False)
+    src = staged(sf_dir, f"stream_src_{order}", build)
     ckpt = workdir(sf_dir, f"stream_ckpt_{tag}")  # checkpoints never shared
-    with staging_lock:
-        if not (
-            staging_current(src, sf_dir)
-            and os.path.exists(f"{src}/f0/_SUCCESS")
-            and os.path.exists(f"{src}/f1/_SUCCESS")
-        ):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading the source
-            ev = t(spark, sf_dir, "events").select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-            cut = "2024-01-15 00:00:00"
-            early = ev.filter(F.col("ts") < cut)
-            late = ev.filter(F.col("ts") >= cut)
-            first, second = (late, early) if late_fraction else (early, late)
-            # one file each: coalesce(1) so file order == micro-batch order
-            first.coalesce(1).write.mode("overwrite").parquet(f"{src}/f0")
-            second.coalesce(1).write.mode("overwrite").parquet(f"{src}/f1")
-            mark_staged(src, sf_dir, fp)
     return src, ckpt
 
 
@@ -88,34 +74,23 @@ def stage_event_files_3way(
     f1 slips in under the lag, f2 arrives after the watermark from f0
     has propagated into the filter and is dropped in full.
     """
-    import os
+    def build(src: str) -> None:
+        ev = t(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        )
+        cut = "2024-01-15 00:00:00"
+        late = ev.filter(F.col("ts") >= cut)
+        early = ev.filter(F.col("ts") < cut)
+        parts = [
+            late,
+            early.filter(F.col("event_id") % 2 == 0),
+            early.filter(F.col("event_id") % 2 == 1),
+        ]
+        for i, part in enumerate(parts):
+            part.coalesce(1).write.parquet(f"{src}/f{i}")
 
-    src = workdir(sf_dir, "stream_src_rev3", fresh=False)
+    src = staged(sf_dir, "stream_src_rev3", build)
     ckpt = workdir(sf_dir, f"stream_ckpt_{tag}")  # checkpoints never shared
-    with staging_lock:
-        if not (
-            staging_current(src, sf_dir)
-            and all(
-                os.path.exists(f"{src}/f{i}/_SUCCESS") for i in range(3)
-            )
-        ):
-            fp = fixture_fingerprint(sf_dir)  # BEFORE reading the source
-            ev = t(spark, sf_dir, "events").select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-            cut = "2024-01-15 00:00:00"
-            late = ev.filter(F.col("ts") >= cut)
-            early = ev.filter(F.col("ts") < cut)
-            parts = [
-                late,
-                early.filter(F.col("event_id") % 2 == 0),
-                early.filter(F.col("event_id") % 2 == 1),
-            ]
-            for i, part in enumerate(parts):
-                part.coalesce(1).write.mode("overwrite").parquet(
-                    f"{src}/f{i}"
-                )
-            mark_staged(src, sf_dir, fp)
     return src, ckpt
 
 

@@ -74,8 +74,9 @@ def test_delete_keeps_null_predicate_rows(spark, tbl):
 
 
 def test_delta_log_layout_matches_spec(spark, tbl, tmp_path):
-    # _delta_log/%020d.json with one JSON action per line: protocol on
-    # commit 0, metaData + add on every commit, remove on overwrite.
+    # _delta_log/%020d.json with one JSON action per line: protocol and
+    # metaData on commit 0, add on every commit, remove on overwrite;
+    # every metaData carries the table's one id.
     import json
     import os
 
@@ -90,14 +91,58 @@ def test_delta_log_layout_matches_spec(spark, tbl, tmp_path):
         with open(os.path.join(log_dir, fname)) as f:
             commits.append([json.loads(ln) for ln in f if ln.strip()])
     assert any("protocol" in a for a in commits[0])
+    assert any("metaData" in a for a in commits[0])
     for acts in commits:
         assert any("add" in a for a in acts)
-        assert any("metaData" in a for a in acts)
+    ids = {a["metaData"]["id"] for acts in commits for a in acts if "metaData" in a}
+    assert len(ids) == 1
     assert any("remove" in a for a in commits[2])
     # data files live at the table root, named as parquet part files
     adds = [a["add"]["path"] for acts in commits for a in acts if "add" in a]
     for p in adds:
         assert "/" not in p and p.endswith(".parquet")
+
+
+def test_table_id_is_stable_and_metadata_written_only_on_change(
+    spark, tbl, tmp_path
+):
+    # Delta keeps a table's id for its lifetime and commits metaData
+    # only when the metadata changes: a same-schema append, MERGE,
+    # DELETE or OPTIMIZE carries none, a schema-evolving append does.
+    # A clone is a new table with its own id.
+    import json
+    import os
+
+    def commit_actions(v):
+        with open(os.path.join(tbl.path, "_delta_log", f"{v:020d}.json")) as f:
+            return [json.loads(ln) for ln in f if ln.strip()]
+
+    def has_meta(v):
+        return any("metaData" in a for a in commit_actions(v))
+
+    tbl.write(_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
+    table_id = tbl.log.snapshot().metadata["id"]
+    tbl.write(_df(spark, [(3, "c")]), mode="append")
+    assert not has_meta(1)
+    tbl.merge(spark, _df(spark, [(1, "z"), (4, "d")]), on="k")
+    tbl.delete(spark, F.col("k") == 2)
+    tbl.compact(spark)
+    assert not has_meta(tbl.latest_version)
+    assert tbl.log.snapshot().metadata["id"] == table_id
+    wide = spark.createDataFrame([(5, "e", 1.0)], "k int, v string, w double")
+    tbl.write(wide, mode="append", merge_schema=True)
+    assert has_meta(tbl.latest_version)
+    tbl.write(_df(spark, [(9, "y")]), mode="overwrite")
+    ids = {
+        a["metaData"]["id"]
+        for v in range(tbl.latest_version + 1)
+        for a in commit_actions(v)
+        if "metaData" in a
+    }
+    assert ids == {table_id}
+    assert sorted(r.k for r in tbl.read(spark).collect()) == [9]
+    clone = tbl.clone_to(str(tmp_path / "clone"))
+    assert clone.log.snapshot().metadata["id"] != table_id
 
 
 def test_bucketed_tables_reattach_without_rewrite(spark, sf_dir):
