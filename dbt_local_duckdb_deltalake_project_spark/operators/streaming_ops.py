@@ -32,7 +32,7 @@ from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPart
 from ..sources import deltalog
 from ..streaming.twins import (
     read_staged_stream,
-    replay_shuffle,
+    replay,
     run_stream_to_batch,
     stage_event_files,
 )
@@ -318,6 +318,11 @@ def stream_sink_deltalike(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``update`` output mode each batch emits refreshed windows, so the
     read deduplicates to the latest version per window (the
     compaction-on-read MERGE pattern).
+
+    The replay skips the trailing no-data micro-batch: an update-mode
+    count emits every window a batch changes in that batch, so the
+    no-data batch only evicts state and would land an empty append (a
+    Spark job and a commit). The table gets one commit per source file.
     """
     from ..sources.deltalike import DeltaLikeTable
     from ..sources.workspace import workdir
@@ -339,17 +344,10 @@ def stream_sink_deltalike(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src, ckpt = stage_event_files(spark, sf_dir, "sinkdl", late_fraction=False)
-    stream = read_staged_stream(spark, src)
-    with replay_shuffle(spark):
-        q = (
-            transform(stream)
-            .writeStream.foreachBatch(commit_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay(
+        spark, lambda s: transform(read_staged_stream(s, src)), ckpt,
+        foreach_batch=commit_batch, output_mode="update", no_data_batch=False,
+    )
 
     # latest state per window across appended versions (update mode may
     # re-emit a window in a later batch; keep the newest batch's row).
@@ -419,15 +417,10 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             tbl.merge(batch_df.sparkSession, latest, on="user_id")
 
     src, ckpt = stage_event_files(spark, sf_dir, "upsertfb", late_fraction=False)
-    stream = read_staged_stream(spark, src)
-    with replay_shuffle(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay(
+        spark, lambda s: read_staged_stream(s, src), ckpt,
+        foreach_batch=upsert_batch, partitions=8,
+    )
     return tbl.read(spark)
 
 
@@ -652,7 +645,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no-data micro-batch does pure state cleanup; skipping it cuts
         # one of three batches (~0.7 s of 2.6 s, measured). The OUTER
         # twins keep it: their null-side emission REQUIRES the final
-        # watermark-advancing batch (see run_stream_to_batch).
+        # watermark-advancing batch (see twins.replay).
         no_data_batch=False,
     )
 
@@ -686,28 +679,15 @@ def stream_deltalike_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.write(o.filter(F.col("o_orderkey") % 3 == 2), mode="append")
 
     tbl = _staged_table(sf_dir, "delta_stream_src", build)
-    stream = _log_tail(
-        spark, "deltalike_stream", "o_orderkey bigint, o_orderstatus string",
-        tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
-    )
-    import uuid as _uuid
 
-    sink = f"sink_dlstream_{_uuid.uuid4().hex[:8]}"
+    def agg(s: SparkSession) -> DataFrame:
+        return _log_tail(
+            s, "deltalike_stream", "o_orderkey bigint, o_orderstatus string",
+            tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
+        ).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_orders"))
+
     ckpt = workdir(sf_dir, "stream_ckpt_dlsrc")
-    agg = stream.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders")
-    )
-    with replay_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("o_orderstatus")
+    return replay(spark, agg, ckpt, output_mode="complete").orderBy("o_orderstatus")
 
 
 @register(
@@ -751,15 +731,10 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run_pass(tag: str) -> None:
         src, ckpt = stage_event_files(spark, sf_dir, tag, late_fraction=False)
-        stream = read_staged_stream(spark, src)
-        with replay_shuffle(spark, 8):
-            q = (
-                stream.writeStream.foreachBatch(ingest)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        replay(
+            spark, lambda s: read_staged_stream(s, src), ckpt,
+            foreach_batch=ingest, partitions=8,
+        )
 
     run_pass("txn_once_a")
     v_after_first = tbl.latest_version
@@ -859,29 +834,20 @@ def stream_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.delete(spark, F.col("c_custkey") % 53 == 0)
 
     tbl = _staged_table(sf_dir, "delta_cdf_stream", build)
-    stream = _log_tail(
-        spark, "deltalike_cdf_stream", _CDF_SCHEMA, tbl.path, 1,
-        deltalog.change_diff, ["c_custkey", "acctbal"],
-    )
-    import uuid as _uuid
 
-    sink = f"sink_cdfstream_{_uuid.uuid4().hex[:8]}"
-    ckpt = workdir(sf_dir, "stream_ckpt_cdf")
-    agg = stream.groupBy("version", "change_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("c_custkey").alias("key_checksum"),
-    )
-    with replay_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def agg(s: SparkSession) -> DataFrame:
+        return _log_tail(
+            s, "deltalike_cdf_stream", _CDF_SCHEMA, tbl.path, 1,
+            deltalog.change_diff, ["c_custkey", "acctbal"],
+        ).groupBy("version", "change_type").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("c_custkey").alias("key_checksum"),
         )
-        q.awaitTermination()
-    return spark.table(sink).orderBy("version", "change_type")
+
+    ckpt = workdir(sf_dir, "stream_ckpt_cdf")
+    return replay(spark, agg, ckpt, output_mode="complete").orderBy(
+        "version", "change_type"
+    )
 
 
 @register(
@@ -908,7 +874,6 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import json as _json
     import os
-    import uuid as _uuid
 
     from ..catalog import t
     from ..sources.deltalike import DeltaLikeTable
@@ -920,29 +885,18 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl.write(o.filter(F.col("o_orderkey") % 4 == 1), mode="append")
 
     ckpt = workdir(sf_dir, "stream_ckpt_recovery")
-    agg = _log_tail(
-        spark, "ckpt_recovery_stream", "o_orderkey bigint, o_orderstatus string",
-        tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
-    ).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_orders"))
 
-    def run_once(sink):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def agg(s: SparkSession) -> DataFrame:
+        return _log_tail(
+            s, "ckpt_recovery_stream", "o_orderkey bigint, o_orderstatus string",
+            tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
+        ).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_orders"))
 
-    with replay_shuffle(spark):
-        run_once(f"sink_ckpt1_{_uuid.uuid4().hex[:8]}")
-        # stream is stopped; two more commits land
-        tbl.write(o.filter(F.col("o_orderkey") % 4 == 2), mode="append")
-        tbl.write(o.filter(F.col("o_orderkey") % 4 == 3), mode="append")
-        sink2 = f"sink_ckpt2_{_uuid.uuid4().hex[:8]}"
-        run_once(sink2)
+    replay(spark, agg, ckpt, output_mode="complete")
+    # stream is stopped; two more commits land
+    tbl.write(o.filter(F.col("o_orderkey") % 4 == 2), mode="append")
+    tbl.write(o.filter(F.col("o_orderkey") % 4 == 3), mode="append")
+    resumed_counts = replay(spark, agg, ckpt, output_mode="complete")
 
     # Proof of resume: the LAST committed offset of run 1 (the highest
     # batch in the checkpoint before run 2 appended its batches) must
@@ -953,8 +907,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         first_batch_end = _json.loads(fh.readlines()[-1])["version"]
     resumed = len(batches) >= 2 and first_batch_end >= 2
     return (
-        spark.table(sink2)
-        .select(
+        resumed_counts.select(
             "o_orderstatus", "n_orders",
             F.lit(bool(resumed)).alias("second_run_resumed"),
         )
@@ -1020,15 +973,9 @@ def stream_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFram
             agg_sink.write(merged, mode="overwrite", operation="MERGE")
 
     src, ckpt = stage_event_files(spark, sf_dir, "msink")
-    stream = read_staged_stream(spark, src)
-    with replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay(
+        spark, lambda s: read_staged_stream(s, src), ckpt, foreach_batch=commit_batch
+    )
 
     raw_agg = (
         raw_sink.read(spark)
@@ -1113,21 +1060,10 @@ def stream_corpus_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         seen = tbl.read(s).select("content_md5")
         tbl.write(batch.join(seen, "content_md5", "left_anti"), mode="append")
 
-    schema = spark.read.parquet(f"{src}/f0").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    replay(
+        spark, lambda s: read_staged_stream(s, src), ckpt,
+        foreach_batch=ingest, partitions=8,
     )
-    with replay_shuffle(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
         tbl.read(spark)
         .select("doc_id", "source", "arrival_batch")
@@ -1464,18 +1400,15 @@ def stream_cdf_downstream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = workdir(sf_dir, "stream_ckpt_cdf_sync")
     # v0 seeded the replica, so the tail starts at v1
-    stream = _log_tail(
-        spark, "deltalike_cdf_sync_stream", _CDF_SCHEMA, src.path, 1,
-        deltalog.change_diff, ["c_custkey", "acctbal"],
+    replay(
+        spark,
+        lambda s: _log_tail(
+            s, "deltalike_cdf_sync_stream", _CDF_SCHEMA, src.path, 1,
+            deltalog.change_diff, ["c_custkey", "acctbal"],
+        ),
+        ckpt,
+        foreach_batch=apply_batch,
     )
-    with replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
         down.read(spark)
         .select("c_custkey", "acctbal")

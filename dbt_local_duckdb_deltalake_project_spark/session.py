@@ -18,6 +18,12 @@ Design notes (100 TB posture):
   medallion cycle. It caches code, not results, and the working set is
   set by the plans, not the data, so a constant 1024 (≈5× the largest
   set) holds at any scale.
+- Driver heap: ``$SPARK_DRIVER_MEM`` when the deployment sets it, else
+  half of physical memory. A heap sized past physical memory lets a
+  runaway driver meet the kernel's OOM killer, which kills the process
+  without a trace, instead of a Java ``OutOfMemoryError`` that names the
+  failing query; half leaves room for the JVM's off-heap memory and the
+  Python workers.
 """
 
 from __future__ import annotations
@@ -38,6 +44,7 @@ def get_spark(
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    half_ram = f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') >> 21}m"
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -57,7 +64,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", half_ram))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # FAIR scheduling (optimization guide §2.6): under FIFO a query

@@ -1,11 +1,15 @@
 """Batch↔stream twin harness.
 
-``run_stream_to_batch`` stages the events fixture as a sequence of
-parquet files (ordered by event time), replays them through
-``spark.readStream`` one file per micro-batch, applies a caller-supplied
-transformation, and drains to a memory sink with
-``trigger(availableNow=True)`` until termination. The result is a plain
-DataFrame — comparable against the batch twin or an oracle.
+``replay`` is the one place a stream is started: it builds the query on
+a ``spark.newSession()`` that carries the replay's shuffle-partition and
+no-data-batch conf, drains it with ``trigger(availableNow=True)`` into a
+memory sink or a ``foreachBatch`` callback, and returns the sink as a
+table of that session. Replays are session-local by construction: the
+caller's session conf is never written, so they may overlap on one
+session. ``run_stream_to_batch`` stages the events fixture as a sequence
+of parquet files (ordered by event time), replays them one file per
+micro-batch through a caller-supplied transformation, and returns a
+plain DataFrame — comparable against the batch twin or an oracle.
 
 Multi-file replay is what makes watermarks real: the watermark advances
 between micro-batches, so late rows in later files are gated — and,
@@ -19,11 +23,13 @@ step is test-local.
 
 from __future__ import annotations
 
-import uuid
+import glob
+import json
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import t
 from ..sources.workspace import staged, workdir
@@ -94,44 +100,103 @@ def stage_event_files_3way(
     return src, ckpt
 
 
+def _staged_schema(src: str) -> T.StructType:
+    """The schema Spark infers for ``src``'s staged files, without a
+    Spark job: Spark writes its row schema into the footer of every
+    parquet file it writes, and inference returns that schema with every
+    field nullable. So the staged ``ts`` keeps whatever type the staging
+    session wrote (INT96 and TIMESTAMP_MICROS both read as TIMESTAMP,
+    TIMESTAMP_NTZ as itself)."""
+    import pyarrow.parquet as pq
+
+    part = sorted(glob.glob(f"{src}/f0/*.parquet"))[0]
+    meta = pq.ParquetFile(part).metadata.metadata
+    schema = T.StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema]
+    )
+
+
 def read_staged_stream(spark: SparkSession, src: str) -> DataFrame:
     """``readStream`` over a staged source dir, one file per micro-batch.
 
     Normalizes a TIMESTAMP_NTZ ``ts`` (staged by a pre-v2 vanilla
     session) back to TIMESTAMP — ``withWatermark`` rejects NTZ.
     """
-    from pyspark.sql import types as T
-
-    schema = spark.read.parquet(f"{src}/f0").schema
+    schema = _staged_schema(src)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    if isinstance(schema["ts"].dataType, T.TimestampNTZType):
+    ts = schema["ts"].dataType if "ts" in schema.names else None
+    if isinstance(ts, T.TimestampNTZType):
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return stream
 
 
-class replay_shuffle:
-    """Temporarily shrink ``spark.sql.shuffle.partitions`` for a local
-    micro-batch replay. Streaming aggregations checkpoint one state-store
-    file PER shuffle partition PER micro-batch and AQE cannot coalesce
-    streaming plans, so a 200-partition default turns a tiny replay into
-    hundreds of checkpoint files (measured 12s for one query on a vanilla
-    session). A cluster deployment sizes this to key cardinality instead.
+def replay(
+    spark: SparkSession,
+    build: Callable[[SparkSession], DataFrame],
+    ckpt: str,
+    *,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    output_mode: str = "append",
+    partitions: int = 1,
+    no_data_batch: bool = True,
+) -> DataFrame | None:
+    """Drain the streaming frame ``build(s)`` to completion and return
+    the memory sink as a table of ``s``, or hand each micro-batch to
+    ``foreach_batch`` and return None.
+
+    ``s`` is a ``spark.newSession()`` that carries the replay's conf, so
+    nothing is written to the caller's session and replays on one
+    session may overlap in any order. Build the stream on ``s``: its
+    Python data sources and its sink view are registered there. A fresh
+    session starts from the SparkConf, so the caller's session time zone
+    (which ``catalog.read_table`` may have pinned at runtime) is copied.
+
+    ``partitions``: ``spark.sql.shuffle.partitions`` for the replay.
+    Streaming aggregations checkpoint one state-store file PER shuffle
+    partition PER micro-batch and AQE cannot coalesce streaming plans,
+    so a 200-partition default turns a tiny replay into hundreds of
+    checkpoint files (measured 12 s for one query on a vanilla session).
+    Windowed aggregations carry tiny state, so 1 partition halves
+    checkpoint I/O (measured 3.3 s → 1.3 s at sf0.1); Python stateful
+    operators (applyInPandasWithState) want parallelism across their
+    Python workers instead. A cluster deployment sizes this to key
+    cardinality.
+
+    ``no_data_batch``: pass False ONLY for queries whose emitted rows
+    cannot depend on the final no-data micro-batch — an INNER
+    stream-stream join emits on match, and an update-mode aggregation
+    emits every changed row in the batch that changed it, so the
+    trailing batch does pure state cleanup. Watermarked aggregations in
+    append mode and OUTER joins NEED it: their final windows / null-side
+    rows only emit when the advanced watermark is processed, which
+    availableNow only guarantees via that batch.
     """
-
-    def __init__(self, spark: SparkSession, n: int = 1):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+    s = spark.newSession()
+    tz = "spark.sql.session.timeZone"
+    s.conf.set(tz, spark.conf.get(tz))
+    s.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    s.conf.set(
+        "spark.sql.streaming.noDataMicroBatches.enabled", str(no_data_batch).lower()
+    )
+    writer = (
+        build(s)
+        .writeStream.outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    if foreach_batch is not None:
+        writer.foreachBatch(foreach_batch).start().awaitTermination()
+        return None
+    writer.format("memory").queryName("replay").start().awaitTermination()
+    return s.table("replay")
 
 
 def run_stream_to_batch(
@@ -146,44 +211,16 @@ def run_stream_to_batch(
     no_data_batch: bool = True,
 ) -> DataFrame:
     """Replay staged event files through readStream → transform → memory
-    sink; returns the drained sink as a DataFrame.
-
-    ``partitions``: state-store fan-out for the replay. Windowed
-    aggregations carry tiny state → 1 partition halves checkpoint I/O
-    (measured 3.3s → 1.3s at sf0.1); Python stateful operators
-    (applyInPandasWithState) want parallelism across their Python
-    workers instead — pass more.
-
-    ``no_data_batch``: pass False ONLY for transforms whose emitted
-    rows cannot depend on the final no-data micro-batch — an INNER
-    stream-stream join emits on match, so the trailing batch does pure
-    state cleanup (~0.7 s of a 2.6 s replay, measured r14). Watermarked
-    aggregations in append mode and OUTER joins NEED it: their final
-    windows / null-side rows only emit when the advanced watermark is
-    processed, which availableNow only guarantees via that batch.
-    """
+    sink (``replay``); returns the drained sink as a DataFrame."""
     if three_way:
         src, ckpt = stage_event_files_3way(spark, sf_dir, tag)
     else:
         src, ckpt = stage_event_files(spark, sf_dir, tag, late_fraction)
-    stream = read_staged_stream(spark, src)
-    sink = f"sink_{tag}_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_ndb = spark.conf.get(conf_key)
-    with replay_shuffle(spark, partitions):
-        if not no_data_batch:
-            spark.conf.set(conf_key, "false")
-        try:
-            q = (
-                transform(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set(conf_key, prev_ndb)
-    return spark.table(sink)
+    return replay(
+        spark,
+        lambda s: transform(read_staged_stream(s, src)),
+        ckpt,
+        output_mode=output_mode,
+        partitions=partitions,
+        no_data_batch=no_data_batch,
+    )
