@@ -11,7 +11,7 @@ only), so the contract here is the declared capability surface of that stack
 - ``operators``   — the §2 operator inventory as (PySpark query, DuckDB
                     oracle SQL) pairs
 - ``sources``     — readers/writers (parquet/csv/json, partitioned sinks,
-                    Delta behind an import-try)
+                    a Delta-protocol table layer with no delta-spark)
 - ``functions``   — deterministic-aggregation helpers, vector math
 - ``plans``       — medallion model-graph runner + dbt-style materializations
 - ``streaming``   — Structured Streaming twins of the batch event-time ops

@@ -32,6 +32,62 @@ def _staged_table(sf_dir: str, name: str, build) -> DeltaLikeTable:
     return DeltaLikeTable(staged(sf_dir, name, lambda p: build(DeltaLikeTable(p))))
 
 
+def _cdf_table(
+    spark: SparkSession, sf_dir: str, name: str, delete: str | None = None
+) -> DeltaLikeTable:
+    """The staged change-feed table of the CDF ops: v0 = customers
+    (``c_custkey``, ``acctbal`` rounded to 2 dp); v1 = MERGE of updates
+    (+1000 balance for key % 10 = 0) and inserts (key % 97 = 0, re-keyed
+    +1000000); v2 = ``DELETE WHERE delete``, when given."""
+    def build(tbl: DeltaLikeTable) -> None:
+        c = t(spark, sf_dir, "customer").select(
+            "c_custkey", F.round("c_acctbal", 2).alias("acctbal")
+        )
+        tbl.write(c, mode="overwrite")
+        updates = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
+            "acctbal", F.round(F.col("acctbal") + 1000, 2)
+        )
+        inserts = c.filter(F.col("c_custkey") % 97 == 0).withColumn(
+            "c_custkey", F.col("c_custkey") + 1000000
+        )
+        tbl.merge(spark, updates.unionByName(inserts), on="c_custkey")
+        if delete is not None:
+            tbl.delete(spark, F.expr(delete))
+
+    return _staged_table(sf_dir, name, build)
+
+
+def _cdf_sync_tables(
+    spark: SparkSession, sf_dir: str, replica: str
+) -> tuple[DeltaLikeTable, DeltaLikeTable]:
+    """The upstream of the CDF sync ops (``_cdf_table`` with a DELETE of
+    key % 13 = 7) and a fresh downstream ``replica`` seeded at its v0."""
+    src = _cdf_table(spark, sf_dir, "delta_cdf_sync", "c_custkey % 13 = 7")
+    down = DeltaLikeTable(workdir(sf_dir, replica))
+    down.write(src.read(spark, as_of=0), mode="overwrite")
+    return src, down
+
+
+def _apply_changes(
+    spark: SparkSession, down: DeltaLikeTable, changes: DataFrame
+) -> None:
+    """Apply ONE upstream version's change rows to ``down`` as a tombstone
+    MERGE: update and insert post-images upsert, and delete rows ride the
+    same source flagged ``_tomb`` and fire WHEN MATCHED AND s._tomb THEN
+    DELETE. Versions must be applied one at a time, in order: a net MERGE
+    of several would INSERT the tombstone of a key inserted in one version
+    and deleted in a later one, since MERGE inserts unmatched source
+    rows."""
+    down.merge(
+        spark,
+        changes.filter(F.col("change_type") != "update_preimage").select(
+            "c_custkey", "acctbal", (F.col("change_type") == "delete").alias("_tomb")
+        ),
+        on="c_custkey",
+        matched_delete_where="s._tomb",
+    )
+
+
 @register(
     "sink_delta_append",
     """
@@ -400,51 +456,22 @@ def delta_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def delta_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change Data Feed: row-level changes between two table versions,
-    derived from the log by diffing the version states — what an
-    incremental downstream (dbt incremental model, CDC consumer) reads
-    instead of the full table.
+    """Change Data Feed: row-level changes of table version 1, read from
+    the log (``DeltaLikeTable.changes``, Delta's
+    ``readChangeFeed`` with startingVersion = endingVersion = 1) — what
+    an incremental downstream (dbt incremental model, CDC consumer)
+    reads instead of the full table.
 
     v0 = customers; v1 = MERGE of updates (+1000 balance for key%10=0)
-    and inserts (key%97=0 re-keyed). The feed classifies EXCEPT ALL
-    diffs: post-not-pre rows are inserts or update post-images (by key
-    presence in v0), pre-not-post rows are update pre-images (or
-    deletes, none here). Diff cost is one shuffle per side on the full
-    row — at 100 TB a native CDF writes change files at commit time
-    instead (the protocol's cdc actions); the read semantics shown here
-    are identical.
+    and inserts (key%97=0 re-keyed) (``_cdf_table``). Each commit's feed
+    is the multiset diff of the rows of the files it added and removed
+    (``deltalog.change_diff``): appeared rows are inserts or update
+    post-images and vanished rows update pre-images or deletes, by key
+    presence on the other side. At 100 TB a native CDF writes change
+    files at commit time instead (the protocol's cdc actions); the read
+    semantics shown here are identical.
     """
-    def build(tbl: DeltaLikeTable) -> None:
-        c = t(spark, sf_dir, "customer").select(
-            "c_custkey", F.round("c_acctbal", 2).alias("acctbal")
-        )
-        tbl.write(c, mode="overwrite")
-        updates = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "acctbal", F.round(F.col("acctbal") + 1000, 2)
-        )
-        inserts = c.filter(F.col("c_custkey") % 97 == 0).withColumn(
-            "c_custkey", F.col("c_custkey") + 1000000
-        )
-        tbl.merge(spark, updates.unionByName(inserts), on="c_custkey")
-
-    tbl = _staged_table(sf_dir, "delta_cdf", build)
-    pre = tbl.read(spark, as_of=0)
-    post = tbl.read(spark)
-    pre_keys = pre.select("c_custkey").distinct()
-    appeared = post.exceptAll(pre)
-    vanished = pre.exceptAll(post)
-    feed = (
-        appeared.join(pre_keys, "c_custkey", "left_semi")
-        .withColumn("change_type", F.lit("update_postimage"))
-        .unionByName(
-            appeared.join(pre_keys, "c_custkey", "left_anti").withColumn(
-                "change_type", F.lit("insert")
-            )
-        )
-        .unionByName(
-            vanished.withColumn("change_type", F.lit("update_preimage"))
-        )
-    )
+    feed = _cdf_table(spark, sf_dir, "delta_cdf").changes(spark, 1, 1)
     return feed.select("change_type", "c_custkey", "acctbal").orderBy(
         "change_type", "c_custkey"
     )
@@ -1638,47 +1665,18 @@ ORDER BY c_custkey
 def delta_cdf_downstream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDF → downstream pipeline end-to-end: an upstream table takes
     a MERGE (updates + inserts) then a DELETE; the downstream replica,
-    seeded at v0, catches up by reading the CHANGE FEED between
-    versions and applying it as ONE tombstone MERGE (update/insert
-    post-images upsert; delete changes ride the same source flagged
-    ``_tomb`` and fire WHEN MATCHED AND s._tomb THEN DELETE — the
-    r5 merge clause). This is the canonical Delta incremental-sync
-    pattern: downstream work is proportional to the CHANGES between
-    versions, never the table, which is the entire point of CDF at
-    100 TB. The oracle is the closed form of the upstream's final
-    state — the sync is correct iff the replica hash-matches it.
+    seeded at v0, catches up by reading the CHANGE FEED of each later
+    version from the log and applying it as one tombstone MERGE per
+    version, in order (``_apply_changes``, shared with
+    stream_cdf_downstream_sync). This is the canonical Delta
+    incremental-sync pattern: downstream work is proportional to the
+    CHANGES between versions, never the table, which is the entire point
+    of CDF at 100 TB. The oracle is the closed form of the upstream's
+    final state — the sync is correct iff the replica hash-matches it.
     """
-    def build(tbl: DeltaLikeTable) -> None:
-        c = t(spark, sf_dir, "customer").select(
-            "c_custkey", F.round("c_acctbal", 2).alias("acctbal")
-        )
-        tbl.write(c, mode="overwrite")
-        updates = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "acctbal", F.round(F.col("acctbal") + 1000, 2)
-        )
-        inserts = c.filter(F.col("c_custkey") % 97 == 0).withColumn(
-            "c_custkey", F.col("c_custkey") + 1000000
-        )
-        tbl.merge(spark, updates.unionByName(inserts), on="c_custkey")
-        tbl.delete(spark, F.col("c_custkey") % 13 == 7)
-
-    src = _staged_table(sf_dir, "delta_cdf_sync", build)
-    pre = src.read(spark, as_of=0)
-    post = src.read(spark)
-    # change feed v0 → latest (diff-derived, as in delta_change_data_feed)
-    appeared = post.exceptAll(pre).withColumn("_tomb", F.lit(False))
-    post_keys = post.select("c_custkey").distinct()
-    deletes = (
-        pre.exceptAll(post)
-        .join(post_keys, "c_custkey", "left_anti")
-        .withColumn("_tomb", F.lit(True))
-    )
-    changes = appeared.unionByName(deletes)
-    down = DeltaLikeTable(workdir(sf_dir, "delta_cdf_downstream"))
-    down.write(pre, mode="overwrite")  # replica seeded at v0
-    down.merge(
-        spark, changes, on="c_custkey", matched_delete_where="s._tomb"
-    )
+    src, down = _cdf_sync_tables(spark, sf_dir, "delta_cdf_downstream")
+    for v in range(1, src.latest_version + 1):
+        _apply_changes(spark, down, src.changes(spark, v, v))
     return down.read(spark).select("c_custkey", "acctbal").orderBy(
         "c_custkey"
     )

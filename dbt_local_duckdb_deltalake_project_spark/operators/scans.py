@@ -140,7 +140,7 @@ def scan_deltalike_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scan under the log schema, with deletion vectors, column
     mapping and partition values applied — the one batch read path of
     every Delta-like table. (The Python Data Source API serves the
-    streaming log tails in ``streaming_ops._log_tail``.)
+    per-commit log reads, ``DeltaLikeTable.changes`` and ``appends``.)
 
     Scale: planning is O(live add actions) metadata work, and the scan
     parallelizes per file split, with column pruning reaching the

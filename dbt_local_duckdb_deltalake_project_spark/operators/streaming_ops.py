@@ -23,13 +23,10 @@ queries execute the SAME logical transformations through
 
 from __future__ import annotations
 
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from ..sources import deltalog
 from ..streaming.twins import (
     read_staged_stream,
     replay,
@@ -39,66 +36,6 @@ from ..streaming.twins import (
 from .registry import register
 
 DEC = "decimal(38,6)"
-
-# The log-tailing readers run in Python workers that may not be able to
-# import this package: cloudpickle ships ``deltalog`` with them by value.
-cloudpickle.register_pickle_by_value(deltalog)
-
-
-def _log_tail(
-    spark: SparkSession,
-    fmt: str,
-    schema: str,
-    table_path: str,
-    first: int,
-    rows_of,
-    columns: list[str],
-) -> DataFrame:
-    """A stream over the log of the table at ``table_path``, from version
-    ``first``: registers the Python data source ``fmt`` and returns its
-    streaming frame.
-
-    Offsets are log versions ({"version": v}), so a restart replays
-    exactly the versions its checkpoint has not committed.
-    ``latestOffset`` lists the log (file names, no rows), ``partitions``
-    emits one InputPartition per new commit, and ``read`` runs
-    ``rows_of(table_path, version, columns)`` — a ``deltalog`` function —
-    on the executors, so rows never materialize on the driver. The
-    classes are defined in this function, so cloudpickle ships them by
-    value. An availableNow trigger drains every new version in one
-    batch."""
-
-    class _Reader(DataSourceStreamReader):
-        def initialOffset(self):
-            return {"version": first}
-
-        def latestOffset(self):
-            return {"version": deltalog.DeltaLog(table_path).latest_version + 1}
-
-        def partitions(self, start, end):
-            return [
-                InputPartition(v) for v in range(start["version"], end["version"])
-            ]
-
-        def read(self, partition):
-            yield from rows_of(table_path, partition.value, columns)
-
-        def commit(self, end):
-            pass
-
-    class _Source(DataSource):
-        @classmethod
-        def name(cls):
-            return fmt
-
-        def schema(self):
-            return schema
-
-        def streamReader(self, schema):
-            return _Reader()
-
-    spark.dataSource.register(_Source)
-    return spark.readStream.format(fmt).load()
 
 
 def _tumbling(stream: DataFrame) -> DataFrame:
@@ -343,7 +280,7 @@ def stream_sink_deltalike(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("w.start").alias("window_start"), "n_events")
         )
 
-    src, ckpt = stage_event_files(spark, sf_dir, "sinkdl", late_fraction=False)
+    src, ckpt = stage_event_files(spark, sf_dir, "sinkdl")
     replay(
         spark, lambda s: transform(read_staged_stream(s, src)), ckpt,
         foreach_batch=commit_batch, output_mode="update", no_data_batch=False,
@@ -416,7 +353,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             tbl.merge(batch_df.sparkSession, latest, on="user_id")
 
-    src, ckpt = stage_event_files(spark, sf_dir, "upsertfb", late_fraction=False)
+    src, ckpt = stage_event_files(spark, sf_dir, "upsertfb")
     replay(
         spark, lambda s: read_staged_stream(s, src), ckpt,
         foreach_batch=upsert_batch, partitions=8,
@@ -568,6 +505,80 @@ def stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _click_purchase_join(how: str):
+    """The attribution join of the three stream-stream twins, as a
+    replay transform: the clicks and the purchases of one replayed
+    stream, each watermarked 10 minutes, joined per user where the
+    purchase falls within 1 hour after the click. ``user_id`` is
+    ``coalesce(c_user, p_user)``, which is ``c_user`` for the inner and
+    left joins (the click side is never null-extended)."""
+
+    def join_pairs(stream: DataFrame) -> DataFrame:
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id").alias("c_user"),
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", "10 minutes")
+        )
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user"),
+                F.col("ts").alias("purchase_ts"),
+            )
+            .withWatermark("purchase_ts", "10 minutes")
+        )
+        return (
+            clicks.join(
+                purchases,
+                (F.col("p_user") == F.col("c_user"))
+                & (F.col("purchase_ts") >= F.col("click_ts"))
+                & (
+                    F.col("purchase_ts")
+                    <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")
+                ),
+                how,
+            )
+            .select(
+                "click_id",
+                "purchase_id",
+                F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
+                "click_ts",
+                "purchase_ts",
+            )
+        )
+
+    return join_pairs
+
+
+def _outer_join_twin(
+    spark: SparkSession, sf_dir: str, tag: str, how: str
+) -> DataFrame:
+    """An outer stream-stream join twin, drained with its final no-data
+    batch (the null-side rows emit in it). Nullable timestamps surface as
+    unix_micros longs: a NULL BIGINT is the driver-hasher-proven null
+    path (NULL TIMESTAMP would be the first of its kind through the
+    pandas NaT conversion)."""
+    return (
+        run_stream_to_batch(
+            spark, sf_dir, tag, _click_purchase_join(how), output_mode="append",
+            partitions=4,
+        )
+        .select(
+            "click_id",
+            "purchase_id",
+            "user_id",
+            F.unix_micros("click_ts").alias("click_us"),
+            F.unix_micros("purchase_ts").alias("purchase_us"),
+        )
+        .orderBy("click_id", "purchase_id")
+    )
+
+
 @register(
     "stream_stream_join",
     """
@@ -599,47 +610,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark delay. At 100 TB the same plan shuffles both streams on
     user_id once; state size = clicks within the 1h horizon.
     """
-
-    def join_pairs(stream: DataFrame) -> DataFrame:
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "10 minutes")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "10 minutes")
-        )
-        return (
-            clicks.join(
-                purchases,
-                (F.col("p_user") == F.col("c_user"))
-                & (F.col("purchase_ts") >= F.col("click_ts"))
-                & (
-                    F.col("purchase_ts")
-                    <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")
-                ),
-            )
-            .select(
-                "click_id",
-                "purchase_id",
-                F.col("c_user").alias("user_id"),
-                "click_ts",
-                "purchase_ts",
-            )
-        )
-
     return run_stream_to_batch(
-        spark, sf_dir, "ssjoin", join_pairs, output_mode="append",
+        spark, sf_dir, "ssjoin", _click_purchase_join("inner"), output_mode="append",
         partitions=4,
         # r14: INNER join — every pair emits on match, so the trailing
         # no-data micro-batch does pure state cleanup; skipping it cuts
@@ -662,10 +634,10 @@ def stream_deltalike_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Source streaming API): offsets are log versions, each batch drains
     the commits since the last — the "Delta table as a stream" pattern
     that lets downstream consumers tail a warehouse table incrementally
-    instead of re-scanning it. ``_log_tail`` reads each commit's appended
-    rows (``deltalog.appended_rows``, which refuses a commit that removes
-    files). Draining all three appends in complete mode must reproduce
-    the batch aggregate (oracle parity).
+    instead of re-scanning it. ``DeltaLikeTable.appends`` reads each
+    commit's appended rows (``deltalog.appended_rows``, which refuses a
+    commit that removes files). Draining all three appends in complete
+    mode must reproduce the batch aggregate (oracle parity).
     """
     from ..catalog import t
     from ..sources.deltalike import DeltaLikeTable
@@ -681,10 +653,9 @@ def stream_deltalike_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = _staged_table(sf_dir, "delta_stream_src", build)
 
     def agg(s: SparkSession) -> DataFrame:
-        return _log_tail(
-            s, "deltalike_stream", "o_orderkey bigint, o_orderstatus string",
-            tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
-        ).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_orders"))
+        return tbl.appends(s, 0).groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).alias("n_orders")
+        )
 
     ckpt = workdir(sf_dir, "stream_ckpt_dlsrc")
     return replay(spark, agg, ckpt, output_mode="complete").orderBy("o_orderstatus")
@@ -730,7 +701,7 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_pass(tag: str) -> None:
-        src, ckpt = stage_event_files(spark, sf_dir, tag, late_fraction=False)
+        src, ckpt = stage_event_files(spark, sf_dir, tag)
         replay(
             spark, lambda s: read_staged_stream(s, src), ckpt,
             foreach_batch=ingest, partitions=8,
@@ -755,9 +726,6 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-
-
-_CDF_SCHEMA = "version int, change_type string, c_custkey bigint, acctbal double"
 
 
 @register(
@@ -797,49 +765,30 @@ def stream_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch emits classified (insert / update_pre / update_post /
     delete) rows for the commits it drains — the CDC hand-off that
     feeds incremental models without re-diffing table snapshots
-    (`delta_change_data_feed` is the batch two-version diff; this is
-    the continuous form). The reader derives changes the way Delta's
-    legacy CDF read does when no cdc files exist: per commit, the
-    multiset diff of rows in added vs removed files (copy-on-write
-    commits carry both), classified by key presence on the opposite
-    side; v0 (the initial snapshot) is below the starting offset, like
-    readChangeFeed startingVersion=1. Per-commit state is bounded by
-    that commit's rewritten files, not the table.
+    (`delta_change_data_feed` is the batch read of the same feed; this
+    is the continuous form). ``DeltaLikeTable.changes`` derives changes
+    the way Delta's legacy CDF read does when no cdc files exist: per
+    commit, the multiset diff of rows in added vs removed files
+    (copy-on-write commits carry both), classified by key presence on
+    the opposite side (``deltalog.change_diff``); v0 (the initial
+    snapshot) is below the starting offset, like readChangeFeed
+    startingVersion=1.
 
-    The tail is ``_log_tail``'s partitioned ``DataSourceStreamReader``
-    (the driver only lists log file names for offsets, and
-    ``read(partition)`` derives one commit's changes with
-    ``deltalog.change_diff`` ON THE EXECUTORS), so at 100 TB the CDF
-    tail scales with change volume across the cluster. Output aggregates
-    per (version, change_type) with an exact key checksum — complete
-    mode must reproduce the relational expectation.
+    The stream reader is partitioned (the driver only lists log file
+    names for offsets, and each commit's changes are derived ON THE
+    EXECUTORS), so at 100 TB the CDF tail scales with change volume
+    across the cluster. Output aggregates per (version, change_type)
+    with an exact key checksum — complete mode must reproduce the
+    relational expectation.
     """
-    from ..catalog import t
-    from ..sources.deltalike import DeltaLikeTable
     from ..sources.workspace import workdir
-    from .delta_ops import _staged_table
+    from .delta_ops import _cdf_table
 
-    def build(tbl: DeltaLikeTable) -> None:
-        c = t(spark, sf_dir, "customer").select(
-            "c_custkey", F.round("c_acctbal", 2).alias("acctbal")
-        )
-        tbl.write(c, mode="overwrite")
-        updates = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "acctbal", F.round(F.col("acctbal") + 1000, 2)
-        )
-        inserts = c.filter(F.col("c_custkey") % 97 == 0).withColumn(
-            "c_custkey", F.col("c_custkey") + 1000000
-        )
-        tbl.merge(spark, updates.unionByName(inserts), on="c_custkey")
-        tbl.delete(spark, F.col("c_custkey") % 53 == 0)
-
-    tbl = _staged_table(sf_dir, "delta_cdf_stream", build)
+    tbl = _cdf_table(spark, sf_dir, "delta_cdf_stream", "c_custkey % 53 = 0")
 
     def agg(s: SparkSession) -> DataFrame:
-        return _log_tail(
-            s, "deltalike_cdf_stream", _CDF_SCHEMA, tbl.path, 1,
-            deltalog.change_diff, ["c_custkey", "acctbal"],
-        ).groupBy("version", "change_type").agg(
+        feed = tbl.changes(s, 1, stream=True)
+        return feed.groupBy("version", "change_type").agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("c_custkey").alias("key_checksum"),
         )
@@ -869,8 +818,8 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     final complete-mode counts must equal the batch aggregate over ALL
     commits — together those two facts prove exactly-once across a
     restart. The source is the versioned table tailed by log-version
-    offsets (``_log_tail`` over ``deltalog.appended_rows``; fresh per
-    call, since the op mutates it mid-stream).
+    offsets (``DeltaLikeTable.appends``; fresh per call, since the op
+    mutates it mid-stream).
     """
     import json as _json
     import os
@@ -887,10 +836,9 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = workdir(sf_dir, "stream_ckpt_recovery")
 
     def agg(s: SparkSession) -> DataFrame:
-        return _log_tail(
-            s, "ckpt_recovery_stream", "o_orderkey bigint, o_orderstatus string",
-            tbl.path, 0, deltalog.appended_rows, ["o_orderkey", "o_orderstatus"],
-        ).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_orders"))
+        return tbl.appends(s, 0).groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).alias("n_orders")
+        )
 
     replay(spark, agg, ckpt, output_mode="complete")
     # stream is stopped; two more commits land
@@ -1130,63 +1078,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon, evicted as the watermark moves — bounded on an unbounded
     stream, which is the property the batch twin can't express.
     """
-
-    def join_pairs(stream: DataFrame) -> DataFrame:
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "10 minutes")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "10 minutes")
-        )
-        return (
-            clicks.join(
-                purchases,
-                (F.col("p_user") == F.col("c_user"))
-                & (F.col("purchase_ts") >= F.col("click_ts"))
-                & (
-                    F.col("purchase_ts")
-                    <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")
-                ),
-                "left_outer",
-            )
-            .select(
-                "click_id",
-                "purchase_id",
-                F.col("c_user").alias("user_id"),
-                "click_ts",
-                "purchase_ts",
-            )
-        )
-
-    # nullable timestamps surface as unix_micros longs: a NULL BIGINT is
-    # the driver-hasher-proven null path (NULL TIMESTAMP would be the
-    # first of its kind through the pandas NaT conversion)
-    return (
-        run_stream_to_batch(
-            spark, sf_dir, "lojoin", join_pairs, output_mode="append",
-            partitions=4,
-        )
-        .select(
-            "click_id",
-            "purchase_id",
-            "user_id",
-            F.unix_micros("click_ts").alias("click_us"),
-            F.unix_micros("purchase_ts").alias("purchase_us"),
-        )
-        .orderBy("click_id", "purchase_id")
-    )
+    return _outer_join_twin(spark, sf_dir, "lojoin", "left_outer")
 
 
 _FULL_OUTER_JOIN_ORACLE = """
@@ -1259,64 +1151,7 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     left variant; in-order availableNow replay + final no-data batch
     flush make the result deterministic.
     """
-
-    def join_pairs(stream: DataFrame) -> DataFrame:
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "10 minutes")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "10 minutes")
-        )
-        return (
-            clicks.join(
-                purchases,
-                (F.col("p_user") == F.col("c_user"))
-                & (F.col("purchase_ts") >= F.col("click_ts"))
-                & (
-                    F.col("purchase_ts")
-                    <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")
-                ),
-                "full_outer",
-            )
-            .select(
-                "click_id",
-                "purchase_id",
-                F.coalesce(F.col("c_user"), F.col("p_user")).alias(
-                    "user_id"
-                ),
-                "click_ts",
-                "purchase_ts",
-            )
-        )
-
-    # unix_micros at the edge for the same driver-hasher reason as the
-    # left variant (NULL BIGINT is the proven null path)
-    return (
-        run_stream_to_batch(
-            spark, sf_dir, "fojoin", join_pairs, output_mode="append",
-            partitions=4,
-        )
-        .select(
-            "click_id",
-            "purchase_id",
-            "user_id",
-            F.unix_micros("click_ts").alias("click_us"),
-            F.unix_micros("purchase_ts").alias("purchase_us"),
-        )
-        .orderBy("click_id", "purchase_id")
-    )
+    return _outer_join_twin(spark, sf_dir, "fojoin", "full_outer")
 
 
 _STREAM_CDF_SYNC_ORACLE = """
@@ -1353,60 +1188,22 @@ def stream_cdf_downstream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     is correct iff it hash-matches the upstream's closed-form final
     state.
     """
-    from ..catalog import t
-    from ..sources.deltalike import DeltaLikeTable
     from ..sources.workspace import workdir
-    from .delta_ops import _staged_table
+    from .delta_ops import _apply_changes, _cdf_sync_tables
 
-    def build(tbl: DeltaLikeTable) -> None:
-        c = t(spark, sf_dir, "customer").select(
-            "c_custkey", F.round("c_acctbal", 2).alias("acctbal")
-        )
-        tbl.write(c, mode="overwrite")
-        updates = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
-            "acctbal", F.round(F.col("acctbal") + 1000, 2)
-        )
-        inserts = c.filter(F.col("c_custkey") % 97 == 0).withColumn(
-            "c_custkey", F.col("c_custkey") + 1000000
-        )
-        tbl.merge(spark, updates.unionByName(inserts), on="c_custkey")
-        tbl.delete(spark, F.col("c_custkey") % 13 == 7)
-
-    src = _staged_table(sf_dir, "delta_cdf_sync_stream", build)
-    down = DeltaLikeTable(workdir(sf_dir, "stream_cdf_downstream"))
-    down.write(src.read(spark, as_of=0), mode="overwrite")
+    src, down = _cdf_sync_tables(spark, sf_dir, "stream_cdf_downstream")
 
     def apply_batch(batch_df: DataFrame, _bid: int) -> None:
         vdf = batch_df.select(
             "version"
         ).distinct().toPandas()  # bounded: one row per upstream commit
-        vers = sorted(vdf["version"])
-        for v in vers:
-            changes = (
-                batch_df.filter(
-                    (F.col("version") == v)
-                    & (F.col("change_type") != "update_preimage")
-                )
-                .select(
-                    "c_custkey",
-                    "acctbal",
-                    (F.col("change_type") == "delete").alias("_tomb"),
-                )
-            )
-            down.merge(
-                spark, changes, on="c_custkey",
-                matched_delete_where="s._tomb",
-            )
+        for v in sorted(vdf["version"]):
+            _apply_changes(spark, down, batch_df.filter(F.col("version") == v))
 
     ckpt = workdir(sf_dir, "stream_ckpt_cdf_sync")
     # v0 seeded the replica, so the tail starts at v1
     replay(
-        spark,
-        lambda s: _log_tail(
-            s, "deltalike_cdf_sync_stream", _CDF_SCHEMA, src.path, 1,
-            deltalog.change_diff, ["c_custkey", "acctbal"],
-        ),
-        ckpt,
+        spark, lambda s: src.changes(s, 1, stream=True), ckpt,
         foreach_batch=apply_batch,
     )
     return (

@@ -23,7 +23,7 @@ def prestage(spark: SparkSession, sf_dir: str) -> None:
     ensure_bucketed_tables(spark, sf_dir)
     # Replay orders: in-order (fwd) and the three-file out-of-order
     # replay (rev3 — the one whose late-data drop is real; twins.py).
-    stage_event_files(spark, sf_dir, "prestage_fwd", late_fraction=False)
+    stage_event_files(spark, sf_dir, "prestage_fwd")
     stage_event_files_3way(spark, sf_dir, "prestage_rev3")
     stage_bronze_csv(spark, sf_dir)
     # Read-path Delta layouts (pruning / skipping / CDF / data-source

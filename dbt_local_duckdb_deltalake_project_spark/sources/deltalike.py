@@ -50,10 +50,18 @@ import time
 import uuid
 from typing import Callable
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 from pyspark.sql.types import StructField, StructType
 
+from . import deltalog
 from .deltalog import (
     CHECKPOINT_INTERVAL,  # noqa: F401 — re-exported for callers of this module
     COLUMN_MAPPING_KEY,
@@ -72,6 +80,10 @@ from .deltalog import (
 # packed-array stand-in keeps the same descriptor contract (documented
 # divergence, same class as the media-codec stub).
 _DV_INLINE_MAX = 64
+
+# The log readers run in Python workers that may not be able to import
+# this package: cloudpickle ships ``deltalog`` with them by value.
+cloudpickle.register_pickle_by_value(deltalog)
 
 
 def _file_stats(path: str) -> str:
@@ -236,6 +248,127 @@ def _base_path(paths: list[str]) -> str:
             d = os.path.dirname(d)
         roots.add(d)
     return os.path.commonpath(sorted(roots))
+
+
+def _log_source() -> type:
+    """The Python data source ``deltalike_log``: a table's log read one
+    commit per partition, in batch or as a stream.
+
+    Its parameters travel as options, so reads of different tables on one
+    session never share state: ``path``; ``readChangeFeed`` ("true" for
+    the change feed, ``deltalog.change_diff``, else the appended rows,
+    ``deltalog.appended_rows``); and ``startingVersion`` and
+    ``endingVersion``, inclusive, Delta's option names. The schema is the
+    snapshot's metaData (``deltalog.row_fields``), after ``version`` and
+    ``change_type`` for the change feed. Stream offsets are log versions
+    (``{"version": v}``): ``latestOffset`` lists the log (file names, no
+    rows), ``partitions`` emits one InputPartition per new commit, and a
+    restart replays exactly the versions its checkpoint has not committed.
+    ``read`` runs on the executors, so rows never materialize on the
+    driver. The classes are defined in this function and reference only
+    ``deltalog`` and pyspark, so cloudpickle ships them by value.
+
+    Scale: one partition holds one commit's added and removed files.
+    Until MERGE rewrites only the files it touches, a MERGE commit
+    rewrites every file, so one Python worker diffs the whole table for
+    it. MERGE writing the protocol's ``cdc`` actions bounds it by the
+    change.
+
+    Trigger.AvailableNow: PySpark 4.1's Python stream readers do not
+    support it, so Spark drains them in a single batch. After a crash
+    that left a planned but uncommitted batch, a restart replays only
+    that batch and stops, without the versions committed since."""
+
+    class _Commits:
+        def __init__(self, options, schema: StructType):
+            self.path = options["path"]
+            change_feed = options.get("readChangeFeed") == "true"
+            self.rows_of = (
+                deltalog.change_diff if change_feed else deltalog.appended_rows
+            )
+            self.columns = schema.names[2:] if change_feed else schema.names
+            self.first = int(options.get("startingVersion", 0))
+            self.last = options.get("endingVersion")
+
+        def read(self, partition):
+            if partition is not None:  # Spark reads no partition as [None]
+                yield from self.rows_of(self.path, partition.value, self.columns)
+
+    class _Batch(_Commits, DataSourceReader):
+        def partitions(self):
+            return [
+                InputPartition(v) for v in range(self.first, int(self.last) + 1)
+            ]
+
+    class _Stream(_Commits, DataSourceStreamReader):
+        def initialOffset(self):
+            return {"version": self.first}
+
+        def latestOffset(self):
+            latest = deltalog.DeltaLog(self.path).latest_version
+            if self.last is not None:
+                latest = min(latest, int(self.last))
+            return {"version": latest + 1}
+
+        def partitions(self, start, end):
+            return [
+                InputPartition(v) for v in range(start["version"], end["version"])
+            ]
+
+        def commit(self, end):
+            pass
+
+    class _Source(DataSource):
+        @classmethod
+        def name(cls):
+            return "deltalike_log"
+
+        def schema(self):
+            last = self.options.get("endingVersion")
+            snap = deltalog.DeltaLog(self.options["path"]).snapshot(
+                None if last is None else int(last)
+            )
+            fields = deltalog.row_fields(snap)
+            if self.options.get("readChangeFeed") == "true":
+                fields = [
+                    {"name": "version", "type": "integer", "nullable": False,
+                     "metadata": {}},
+                    {"name": "change_type", "type": "string", "nullable": False,
+                     "metadata": {}},
+                ] + fields
+            return StructType.fromJson({"type": "struct", "fields": fields})
+
+        def reader(self, schema):
+            return _Batch(self.options, schema)
+
+        def streamReader(self, schema):
+            return _Stream(self.options, schema)
+
+    return _Source
+
+
+_LOG_SOURCE = _log_source()
+
+
+def _register_log_source(spark: SparkSession) -> None:
+    """Register ``_LOG_SOURCE`` on ``spark`` unless it already is. Spark
+    refuses a name that the thread's ACTIVE session knows even when
+    ``spark`` does not (a ``newSession()`` made after its parent
+    registered it), so the registration runs with ``spark`` active, as
+    ``createDataFrame`` makes its own session active."""
+    jss = spark._jsparkSession
+    if jss.sessionState().dataSourceManager().dataSourceExists("deltalike_log"):
+        return
+    jcls = SparkSession._get_j_spark_session_class(spark._jvm)
+    active = jcls.getActiveSession()
+    jcls.setActiveSession(jss)
+    try:
+        spark.dataSource.register(_LOG_SOURCE)
+    finally:
+        if active.isDefined():
+            jcls.setActiveSession(active.get())
+        else:
+            jcls.clearActiveSession()
 
 
 class DeltaLikeTable:
@@ -713,6 +846,47 @@ class DeltaLikeTable:
         return self._scan(
             spark, snap, _prune(list(snap.adds.values()), partition_filter, stats_filter)
         )
+
+    def changes(
+        self,
+        spark: SparkSession,
+        start: int,
+        end: int | None = None,
+        *,
+        stream: bool = False,
+    ) -> DataFrame:
+        """Delta's change data feed of versions ``start`` to ``end``
+        (inclusive; default: latest), as ``(version, change_type,
+        *columns)`` rows: ``deltalog.change_diff`` per commit, keyed by
+        the table's first column. ``stream=True`` tails the log from
+        ``start`` instead. A partitioned or column-mapped table raises
+        ValueError."""
+        return self._log_read(spark, start, end, stream, change_feed=True)
+
+    def appends(self, spark: SparkSession, start: int) -> DataFrame:
+        """A stream of the rows each version from ``start`` on appended
+        (``deltalog.appended_rows``, which refuses a commit after v0 that
+        removes files): the table tailed as a streaming source."""
+        return self._log_read(spark, start, None, True, change_feed=False)
+
+    def _log_read(
+        self, spark: SparkSession, start: int, end: int | None, stream: bool,
+        change_feed: bool,
+    ) -> DataFrame:
+        """A read of ``_log_source`` on ``spark``. A batch read is pinned
+        to the version that is latest now, unless ``end`` is given."""
+        snap = self.log.snapshot(end)
+        deltalog.row_fields(snap)  # raise here, not in a Python worker
+        options = {
+            "path": self.path,
+            "readChangeFeed": str(change_feed).lower(),
+            "startingVersion": str(start),
+        }
+        if end is not None or not stream:
+            options["endingVersion"] = str(snap.version)
+        _register_log_source(spark)
+        reader = spark.readStream if stream else spark.read
+        return reader.format("deltalike_log").options(**options).load()
 
     def _scan(self, spark: SparkSession, snap: Snapshot, adds: list[dict]) -> DataFrame:
         """The rows of ``adds``, live adds of ``snap``, under its log

@@ -8,16 +8,17 @@ Everything the engine knows about a table's log lives here::
 
 commit paths and listing, ``Snapshot`` replay, parquet checkpoints, the
 put-if-absent commit, history and timestamp resolution, VACUUM, and the
-per-commit file and change helpers the streaming readers call.
+per-commit file and change helpers the log data source calls.
 
 The module imports only the standard library (pyarrow inside the
 functions that read or write parquet), so three kinds of caller share
-it: ``deltalike.DeltaLikeTable``, which adds the Spark I/O; the stream
-readers in ``operators/streaming_ops.py``, which run in Python workers
-and receive this module by value (registered with cloudpickle there);
-and the model test in ``tests/test_deltalog_model.py``, which drives it
-with no JVM. Nothing in it may hold an unpicklable object at module
-level (a ``functools.cached_property`` holds a lock on Python 3.11).
+it: ``deltalike.DeltaLikeTable``, which adds the Spark I/O; the log
+data source's readers (``deltalike.DeltaLikeTable.changes`` and
+``appends``), which run in Python workers and receive this module by
+value (registered with cloudpickle there); and the model test in
+``tests/test_deltalog.py``, which drives it with no JVM. Nothing in it
+may hold an unpicklable object at module level (a
+``functools.cached_property`` holds a lock on Python 3.11).
 """
 
 import json
@@ -535,7 +536,23 @@ class DeltaLog:
         return sorted(deleted)
 
 
-# -- per-commit rows, for the streaming readers ------------------------------
+# -- per-commit rows, for the log data source --------------------------------
+def row_fields(snap: Snapshot) -> list[dict]:
+    """The schema fields of ``snap``, which ``rows`` reads from each data
+    file alone by logical name. A partitioned table keeps its partition
+    columns out of the files and a column-mapped one stores physical
+    names, so both raise, as ``DeltaLikeTable.delete_with_dv`` refuses
+    partitioned tables."""
+    if snap.metadata is None:
+        raise ValueError(f"no metaData at version {snap.version}")
+    if snap.metadata.get("partitionColumns") or snap.mapping:
+        raise ValueError(
+            "the per-commit readers do not read partitioned or column-mapped "
+            "tables"
+        )
+    return snap.fields
+
+
 def rows(root: str, paths: list[str], columns: list[str]) -> list[tuple]:
     """``columns`` of every row of the data files ``paths``, in order."""
     import pyarrow.parquet as pq
@@ -564,7 +581,8 @@ def appended_rows(root: str, version: int, columns: list[str]) -> list[tuple]:
 def change_diff(root: str, version: int, columns: list[str]) -> list[tuple]:
     """Commit ``version``'s change feed as Delta's legacy read derives it
     when no cdc files exist: the multiset diff of the rows of the files
-    it added and removed (copy-on-write commits carry both). Rows are
+    it added and removed (copy-on-write commits carry both). This is the
+    engine's one change-feed rule, batch and stream. Rows are
     keyed by ``columns[0]``: an appeared row is an ``update_postimage``
     if its key also vanished, else an ``insert``; a vanished row is an
     ``update_preimage`` if its key also appeared, else a ``delete``.

@@ -15,8 +15,8 @@ Multi-file replay is what makes watermarks real: the watermark advances
 between micro-batches, so late rows in later files are gated — and,
 from the THIRD file on, actually dropped: Spark applies the late-input
 filter with the watermark committed one trigger behind the one used for
-emission (measured on 4.1), so a two-file replay only demonstrates
-emission gating while ``stage_event_files_3way`` demonstrates the drop.
+emission (measured on 4.1), so the out-of-order replay
+(``stage_event_files_3way``) needs three files to make the drop real.
 At 100 TB the same code reads a Kafka/files source; only the staging
 step is test-local.
 """
@@ -36,32 +36,21 @@ from ..sources.workspace import staged, workdir
 
 
 def stage_event_files(
-    spark: SparkSession, sf_dir: str, tag: str, late_fraction: bool = False
+    spark: SparkSession, sf_dir: str, tag: str
 ) -> tuple[str, str]:
-    """Write events as ordered parquet files under a scratch source dir.
-
-    Default: two files split at the median day (early half then late
-    half) — an in-order replay. With ``late_fraction``: file 1 carries
-    the LATER half first, file 2 the earlier half — file 2's rows land
-    behind the EMISSION watermark (their windows only surface once the
-    watermark passes them) but are NOT input-dropped: the late-input
-    filter lags one trigger (see stage_event_files_3way for the replay
-    that makes the drop real).
-    """
+    """Write events as two ordered parquet files under a scratch source
+    dir, split at the median day (early half then late half) — an
+    in-order replay."""
     def build(src: str) -> None:
         ev = t(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
         cut = "2024-01-15 00:00:00"
-        early = ev.filter(F.col("ts") < cut)
-        late = ev.filter(F.col("ts") >= cut)
-        first, second = (late, early) if late_fraction else (early, late)
         # one file each: coalesce(1) so file order == micro-batch order
-        first.coalesce(1).write.parquet(f"{src}/f0")
-        second.coalesce(1).write.parquet(f"{src}/f1")
+        ev.filter(F.col("ts") < cut).coalesce(1).write.parquet(f"{src}/f0")
+        ev.filter(F.col("ts") >= cut).coalesce(1).write.parquet(f"{src}/f1")
 
-    order = "rev" if late_fraction else "fwd"
-    src = staged(sf_dir, f"stream_src_{order}", build)
+    src = staged(sf_dir, "stream_src_fwd", build)
     ckpt = workdir(sf_dir, f"stream_ckpt_{tag}")  # checkpoints never shared
     return src, ckpt
 
@@ -204,7 +193,6 @@ def run_stream_to_batch(
     sf_dir: str,
     tag: str,
     transform: Callable[[DataFrame], DataFrame],
-    late_fraction: bool = False,
     output_mode: str = "append",
     partitions: int = 1,
     three_way: bool = False,
@@ -215,7 +203,7 @@ def run_stream_to_batch(
     if three_way:
         src, ckpt = stage_event_files_3way(spark, sf_dir, tag)
     else:
-        src, ckpt = stage_event_files(spark, sf_dir, tag, late_fraction)
+        src, ckpt = stage_event_files(spark, sf_dir, tag)
     return replay(
         spark,
         lambda s: transform(read_staged_stream(s, src)),

@@ -306,3 +306,38 @@ def test_change_readers_skip_a_commit_that_only_rearranges_data(tmp_path, monkey
     assert deltalog.appended_rows(root, 2, ["k"]) == []
     assert deltalog.change_diff(root, 2, ["k"]) == []
     assert opened == []
+
+
+def test_change_diff_classifies_rows_by_key(tmp_path):
+    # Delta's legacy change feed of a copy-on-write commit: the multiset
+    # diff of the rows of the files it removed and added, keyed by the
+    # first column. An unchanged row yields nothing, a changed row an
+    # update pre-image/post-image pair, a new key an insert, and a key
+    # that only vanished a delete.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "t")
+    log = DeltaLog(root)
+
+    def add(name, keys, vals):
+        pq.write_table(pa.table({"k": keys, "v": vals}), os.path.join(root, name))
+        return {"add": {"path": name, "partitionValues": {}, "size": 4,
+                        "modificationTime": 0, "dataChange": True}}
+
+    def rm(name):
+        return {"remove": {"path": name, "deletionTimestamp": 0, "dataChange": True}}
+
+    os.makedirs(root)
+    log.commit([add("a.parquet", [1, 2], ["x", "y"]), _metadata(0)], "WRITE")
+    log.commit([rm("a.parquet"), add("b.parquet", [1, 2, 3], ["x", "Y", "z"])], "MERGE")
+    log.commit([rm("b.parquet"), add("c.parquet", [1], ["x"])], "DELETE")
+    assert deltalog.change_diff(root, 1, ["k", "v"]) == [
+        (1, "update_postimage", 2, "Y"),
+        (1, "insert", 3, "z"),
+        (1, "update_preimage", 2, "y"),
+    ]
+    assert deltalog.change_diff(root, 2, ["k", "v"]) == [
+        (2, "delete", 2, "Y"),
+        (2, "delete", 3, "z"),
+    ]

@@ -188,21 +188,23 @@ def test_no_unbounded_driver_collect_in_operators():
 
 def test_cdf_stream_reader_is_partitioned():
     # The CDF tail must materialize change rows on EXECUTORS: since r10
-    # stream_change_data_feed implements the partitioned
+    # stream_change_data_feed reads through the partitioned
     # DataSourceStreamReader (latestOffset = driver metadata walk,
     # partitions() = one InputPartition per commit, read() executor-side)
     # — a regression to the driver-side Simple API would silently make
-    # the 100 TB CDF tail a driver bottleneck. The reader is the shared
-    # log tail every Delta stream op builds through ``_log_tail``.
+    # the 100 TB CDF tail a driver bottleneck. The reader is the table
+    # layer's one log data source (``deltalike._log_source``), which
+    # every per-commit read builds through.
     import inspect
 
     from dbt_local_duckdb_deltalake_project_spark.operators import (
         streaming_ops,
     )
+    from dbt_local_duckdb_deltalake_project_spark.sources import deltalike
 
     op = inspect.getsource(streaming_ops.stream_change_data_feed)
-    assert "_log_tail(" in op
-    src = inspect.getsource(streaming_ops._log_tail)
+    assert ".changes(" in op and "stream=True" in op
+    src = inspect.getsource(deltalike._log_source)
     assert "DataSourceStreamReader" in src
     assert "def partitions(" in src and "def latestOffset(" in src
     assert "SimpleDataSourceStreamReader" not in src

@@ -143,7 +143,6 @@ def staged_sources(spark, sf_dir) -> list[str]:
     QUERIES["stream_corpus_ingest_dedup"](spark, sf_dir).count()
     return [
         stage_event_files(spark, sf_dir, "schema_fwd")[0],
-        stage_event_files(spark, sf_dir, "schema_rev", late_fraction=True)[0],
         stage_event_files_3way(spark, sf_dir, "schema_rev3")[0],
         workdir(sf_dir, "stream_doc_src", fresh=False),
     ]

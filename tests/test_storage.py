@@ -1537,3 +1537,73 @@ def test_cloned_session_sees_the_catalog(spark, sf_dir):
     assert got == catalog.t(spark, sf_dir, "region").count()
     assert catalog.t(clone, sf_dir, "region").sparkSession is clone
     assert catalog.t(spark, sf_dir, "region").sparkSession is spark
+
+
+def _change_history(spark, tbl, keys=(1, 2, 3)):
+    # v0 writes two keys; v1 updates one and inserts a third (a MERGE
+    # rewrites every file, the unchanged key included); v2 deletes the
+    # first key
+    a, b, c = keys
+    tbl.write(_df(spark, [(a, "a"), (b, "b")]), mode="overwrite")
+    tbl.merge(spark, _df(spark, [(b, "B"), (c, "c")]), on="k")
+    tbl.delete(spark, F.col("k") == a)
+    return [
+        (1, "insert", c, "c"),
+        (1, "update_postimage", b, "B"),
+        (1, "update_preimage", b, "b"),
+        (2, "delete", a, "a"),
+    ]
+
+
+def test_batch_changes_equal_the_stream_feed(spark, tbl, tmp_path):
+    from dbt_local_duckdb_deltalake_project_spark.streaming.twins import replay
+
+    expected = _change_history(spark, tbl)
+    batch = tbl.changes(spark, 1)
+    assert batch.columns == ["version", "change_type", "k", "v"]
+    stream = replay(
+        spark, lambda s: tbl.changes(s, 1, stream=True), str(tmp_path / "ckpt")
+    )
+    assert sorted(map(tuple, batch.collect())) == expected
+    assert sorted(map(tuple, stream.collect())) == expected
+    assert sorted(map(tuple, tbl.changes(spark, 1, 1).collect())) == expected[:3]
+
+
+def test_two_threads_read_the_changes_of_their_own_table(spark, tmp_path):
+    # the table travels as a read option, so two reads of one format
+    # name on one session cannot swap tables
+    import threading
+
+    tables = [DeltaLikeTable(str(tmp_path / n)) for n in ("a", "b")]
+    expected = [
+        _change_history(spark, tables[0]),
+        _change_history(spark, tables[1], keys=(10, 20, 30)),
+    ]
+    start = threading.Barrier(2)
+    got: list = [None, None]
+
+    def read(i):
+        start.wait()
+        got[i] = [
+            sorted(map(tuple, tables[i].changes(spark, 1).collect()))
+            for _ in range(3)
+        ]
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in (0, 1)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(300)
+    assert got == [[expected[0]] * 3, [expected[1]] * 3]
+
+
+@pytest.mark.parametrize("layout", ["partitioned", "column-mapped"])
+def test_changes_refuse_a_table_files_do_not_hold_by_name(spark, tbl, layout):
+    # the readers open each data file alone by logical column name
+    if layout == "partitioned":
+        tbl.write(_df(spark, [(1, "a")]), mode="overwrite", partition_by=["v"])
+    else:
+        tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
+        tbl.rename_column("v", "w")
+    with pytest.raises(ValueError, match="partitioned or column-mapped"):
+        tbl.changes(spark, 0)
