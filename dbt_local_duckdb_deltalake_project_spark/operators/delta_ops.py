@@ -780,11 +780,11 @@ def delta_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol's representation), survive unrelated writes, and gate every
     subsequent commit — a violating append must fail atomically (no
     partial data lands) while NULLs pass per SQL CHECK semantics.
-    Enforcement probes only the INCOMING frame (limit-1 existence scan),
-    so a clean 100 TB append pays one pass over the new data, never a
-    table scan. The op hash-checks: the post-rejection table state (the
-    bad appends left nothing behind), both rejections, and that the
-    ALTER itself appears in DESCRIBE HISTORY.
+    The write job asserts the checks over the INCOMING frame, so a clean
+    100 TB append pays no extra pass and never a table scan. The op
+    hash-checks: the post-rejection table state (the bad appends left
+    nothing behind), both rejections, and that the ALTER itself appears
+    in DESCRIBE HISTORY.
     """
     tbl = DeltaLikeTable(workdir(sf_dir, "delta_constraints"))
     o = t(spark, sf_dir, "orders").select(
@@ -1044,7 +1044,7 @@ def delta_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    tbl.write(o.limit(1), mode="overwrite")  # establish schema for ALTER
+    tbl.write(o.limit(0), mode="overwrite")  # establish schema for ALTER
     tbl.add_generated_column(
         "o_month", "date_trunc('month', o_orderdate)", dtype="timestamp"
     )

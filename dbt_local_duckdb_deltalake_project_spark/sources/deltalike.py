@@ -31,8 +31,8 @@ never from the data files.
 Scale notes (100 TB): reads are plain multi-path parquet scans, so column
 pruning / predicate pushdown all still fire; the log is O(#commits)
 driver-side JSON with a parquet checkpoint every ``CHECKPOINT_INTERVAL``
-commits, never shipped to executors. Commit = atomic rename of the next
-numbered log file, exactly the spec's put-if-absent contract. MERGE
+commits, never shipped to executors. A commit publishes the next numbered
+log file with ``os.link``, the spec's put-if-absent contract. MERGE
 shuffles both sides on the key — on a cluster you'd bucket the target by
 the merge key to make re-merges shuffle-free; with delta-spark installed
 the same calls map 1:1 onto ``DeltaTable`` operations and these tables
@@ -404,19 +404,18 @@ class DeltaLikeTable:
     ) -> list[dict]:
         """Stage ``df`` as data files of the table at ``snap``: the ``add``
         actions, plus a metaData action if the write changes the table's
-        metadata (schema or partitioning), as Delta does. ``df`` gets
-        the generated columns and is checked against the CHECK constraints
-        (and, for an append, the schema). Files land under ``partition_by``,
-        by default the table's own partition columns, in hive-style
+        metadata (schema or partitioning), as Delta does. The write job
+        asserts the table's checks (``_with_checks``); an append is also
+        checked against the schema. Files land under ``partition_by``, by
+        default the table's own partition columns, in hive-style
         ``col=value/`` directories; each add carries the spec's
         ``partitionValues``, which readers prune on without listing a file.
         Spark part-file names embed a job UUID, so moved files never
         collide. A file with no rows gets no add (Delta adds none for an
         empty write); the commit still lands."""
-        df = self._apply_generated_columns(df, snap)
+        df, checks = self._with_checks(df, snap)
         if append:
             self._enforce_schema(df, merge_schema, snap)
-        self._enforce_constraints(df, snap)
         parts = partition_by or (snap.metadata or {}).get("partitionColumns") or []
         # under column mapping the files carry the PHYSICAL names
         phys = dict(snap.mapping or [])
@@ -436,7 +435,14 @@ class DeltaLikeTable:
         df.sparkSession.conf.set(
             "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
         )
-        writer.parquet(tmp)
+        try:
+            writer.parquet(tmp)
+        except Exception as e:
+            shutil.rmtree(tmp, ignore_errors=True)
+            fired = next((m for m in checks if m in str(e)), None)
+            if fired is None:
+                raise
+            raise ValueError(fired) from None
         now = int(time.time() * 1000)
         adds = []
         for dirpath, _dirs, fnames in sorted(os.walk(tmp)):
@@ -539,19 +545,29 @@ class DeltaLikeTable:
     def check_constraints(self) -> dict[str, str]:
         return self.log.snapshot().constraints
 
-    def _enforce_constraints(self, df: DataFrame, snap: Snapshot) -> None:
-        """CHECK semantics (SQL standard, as Delta enforces them): a row
-        violates only when the expression evaluates FALSE — NULL passes.
-        The probe is a limit-1 existence scan per constraint pushed into
-        the incoming frame's plan, so a clean 100 TB append costs one
-        extra pass over the NEW data only, never the table."""
-        for name, expr in snap.constraints.items():
-            bad = df.filter(F.expr(expr).eqNullSafe(F.lit(False))).limit(1)
-            if bad.count() > 0:
-                raise ValueError(
-                    f"CHECK constraint {name} ({expr}) violated by write "
-                    f"to {self.path}"
-                )
+    def _with_checks(self, df: DataFrame, snap: Snapshot) -> tuple[DataFrame, list]:
+        """``df`` with its omitted generated columns computed and, if the
+        table has checks, one Filter that raises on the first row whose
+        CHECK constraint is FALSE (NULL passes) or whose supplied generated
+        column differs from its expression; and the checks' messages. The
+        write job runs the Filter, as Delta asserts invariants in its write
+        job: no extra pass, and the checked rows are the written rows (a
+        projected check column would be pruned by Catalyst, never run)."""
+        checks = []
+        for name, expr in snap.generated_columns.items():
+            if name not in df.columns:
+                df = df.withColumn(name, F.expr(expr))
+            else:
+                checks.append((~F.col(name).eqNullSafe(F.expr(expr)), (
+                    f"generated column {name!r} violated: supplied values "
+                    f"differ from GENERATED ALWAYS AS ({expr})")))
+        checks += [(F.expr(expr).eqNullSafe(False), (
+            f"CHECK constraint {name} ({expr}) violated by write to {self.path}"
+        )) for name, expr in snap.constraints.items()]
+        ok = F.lit(True)
+        for bad, msg in reversed(checks):
+            ok = F.when(bad, F.raise_error(msg)).otherwise(ok)
+        return (df.filter(ok) if checks else df), [m for _, m in checks]
 
     # -- column mapping (metadata-only rename / drop) ----------------------
     def _mapping_metadata_action(
@@ -609,8 +625,14 @@ class DeltaLikeTable:
         it and VALIDATES it when the writer supplies it (a mismatching
         value is rejected atomically), so derived partitioning/bucketing
         keys stay trustworthy however many writers feed the table.
-        Metadata-only commit."""
+        Metadata-only commit, so it computes nothing for written rows: a
+        table whose live files hold rows refuses it."""
         snap, meta = self._current_metadata()
+        stats = (json.loads(a.get("stats") or "{}") for a in snap.adds.values())
+        if any(st.get("numRecords", 1) for st in stats):  # no stats: assume rows
+            raise ValueError(
+                f"cannot add generated column {name!r}: {self.path} holds rows"
+            )
         sj = json.loads(meta["schemaString"])
         if name in [f["name"] for f in sj["fields"]]:
             raise ValueError(f"column {name!r} already exists")
@@ -627,23 +649,6 @@ class DeltaLikeTable:
             "ADD COLUMN",
             snap,
         )
-
-    def _apply_generated_columns(self, df: DataFrame, snap: Snapshot) -> DataFrame:
-        for name, expr in snap.generated_columns.items():
-            if name not in df.columns:
-                df = df.withColumn(name, F.expr(expr))
-            else:
-                bad = (
-                    df.filter(~F.col(name).eqNullSafe(F.expr(expr)))
-                    .limit(1)
-                    .count()
-                )
-                if bad:
-                    raise ValueError(
-                        f"generated column {name!r} violated: supplied "
-                        f"values differ from GENERATED ALWAYS AS ({expr})"
-                    )
-        return df
 
     def rename_column(self, old: str, new: str) -> int:
         """``ALTER TABLE ... RENAME COLUMN`` — METADATA-ONLY (protocol
@@ -736,11 +741,10 @@ class DeltaLikeTable:
         unless (app_id, app_version) was already committed — a replayed
         micro-batch or retried job lands exactly once. Returns
         (table version, wrote?). The txn stamp rides in the SAME commit
-        as the data, so the dedup check and the data are atomic.
-        (Multi-writer note: like Delta, a concurrent writer race is
-        resolved by commit-time conflict rules; this layer's put-if-
-        absent commit serializes writers, and the loser's retry re-reads
-        the log — which then contains the winner's txn stamp.)"""
+        as the data. Gap (ROADMAP item 1): ``DeltaLog.commit`` retries a
+        lost put-if-absent at ``latest_version + 1`` without reading the
+        winner's ``txn``, so two concurrent writers of one (app_id,
+        app_version) both commit; Delta would reject the loser."""
         if app_version <= self.last_txn_version(app_id):
             return self.latest_version, False
         v = self.write(
@@ -1183,7 +1187,6 @@ class DeltaLikeTable:
         spark: SparkSession,
         source: DataFrame,
         on: str,
-        update_cols: list[str] | None = None,
         delete_not_matched_by_source: bool = False,
         evolve_schema: bool = False,
         matched_delete_where: str | None = None,
@@ -1192,9 +1195,9 @@ class DeltaLikeTable:
         WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT`` —
         a rewrite of the live files; returns the merged state.
 
-        Full-outer-join rewrite: matched rows take source values for
-        ``update_cols`` (default: all non-key columns), unmatched target
-        rows pass through, unmatched source rows are inserts.
+        Full-outer-join rewrite: matched rows take the source value of
+        every column the source carries, unmatched target rows pass
+        through, unmatched source rows are inserts.
 
         ``delete_not_matched_by_source=True`` adds ``WHEN NOT MATCHED BY
         SOURCE THEN DELETE`` — target rows absent from the source are
@@ -1218,7 +1221,6 @@ class DeltaLikeTable:
             evolved = [
                 c for c in source.columns if c not in cols and c != on
             ] if evolve_schema else []
-            upd_cols = update_cols or [c for c in cols if c != on]
             joined = target.alias("t").join(
                 source.alias("s"), F.col(f"t.{on}") == F.col(f"s.{on}"), "full_outer"
             )
@@ -1239,22 +1241,18 @@ class DeltaLikeTable:
                 joined = joined.filter(~(matched & cond))
 
             def _merged_col(c: str):
-                s_c = (
-                    F.col(f"s.{c}") if c in source.columns
-                    else F.lit(None).cast(target.schema[c].dataType)
-                )
-                t_c = F.col(f"t.{c}")
-                upd = s_c if (c in upd_cols and c in source.columns) else t_c
-                return F.when(matched, upd).when(inserted, s_c).otherwise(t_c).alias(c)
+                # matched rows take each column the source carries, keep the rest
+                carried = c in source.columns
+                s_c = F.col(f"s.{c}") if carried else F.lit(None)
+                touched = (matched | inserted) if carried else inserted
+                return F.when(touched, s_c).otherwise(F.col(f"t.{c}")).alias(c)
 
             # a new column: only rows the source touched carry a value
             out_cols = [_merged_col(c) for c in cols if c != on] + [
                 F.when(matched | inserted, F.col(f"s.{c}")).alias(c) for c in evolved
             ]
             if delete_not_matched_by_source:
-                return joined.filter(F.col(f"s.{on}").isNotNull()).select(
-                    F.col(f"s.{on}").alias(on), *out_cols
-                )
+                joined = joined.filter(F.col(f"s.{on}").isNotNull())
             return joined.select(
                 F.coalesce(F.col(f"s.{on}"), F.col(f"t.{on}")).alias(on), *out_cols
             )

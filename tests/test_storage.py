@@ -997,7 +997,7 @@ def test_column_mapping_blocked_by_constraint_reference(spark, tbl):
 
 def test_generated_column_computed_and_validated(spark, tbl):
     df = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    tbl.write(df, mode="overwrite")
+    tbl.write(df.limit(0), mode="overwrite")
     tbl.add_generated_column("v2", "v * 2", dtype="integer")
     # overwrite WITHOUT the column → engine computes it
     tbl.write(df, mode="overwrite")
@@ -1064,7 +1064,7 @@ def test_vacuum_reclaims_dv_sidecar_orphaned_by_overwrite(spark, tbl):
 
 def test_generated_column_blocks_rename_drop_of_referenced(spark, tbl):
     df = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
-    tbl.write(df, mode="overwrite")
+    tbl.write(df.limit(0), mode="overwrite")
     tbl.add_generated_column("v2", "v * 2", dtype="integer")
     with pytest.raises(ValueError, match="generated column"):
         tbl.rename_column("v", "value")
@@ -1318,7 +1318,7 @@ def test_model_graph_reads_each_table_at_most_twice(spark, tmp_path, monkeypatch
 def test_write_replays_log_once(spark, tbl, monkeypatch):
     # one write derives table state from one snapshot: a new handle opens
     # each commit file once, a warm one opens none
-    tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
+    tbl.write(_df(spark, []), mode="overwrite")
     tbl.add_check_constraint("pos", "k > 0")
     tbl.add_generated_column("k2", "k * 2", dtype="integer")
     loads, opened = [], []
@@ -1607,3 +1607,113 @@ def test_changes_refuse_a_table_files_do_not_hold_by_name(spark, tbl, layout):
         tbl.rename_column("v", "w")
     with pytest.raises(ValueError, match="partitioned or column-mapped"):
         tbl.changes(spark, 0)
+
+
+def test_add_generated_column_refuses_a_table_with_rows(spark, tbl):
+    # the ALTER computes nothing for rows already written: a table whose
+    # live files hold rows refuses it, one whose live files hold none
+    # accepts it
+    tbl.write(spark.createDataFrame([(1, 10)], "k int, v int"), mode="overwrite")
+    with pytest.raises(ValueError, match="holds rows"):
+        tbl.add_generated_column("v2", "v * 2", dtype="integer")
+    assert tbl.latest_version == 0
+    tbl.delete(spark, F.col("k") == 1)
+    tbl.add_generated_column("v2", "v * 2", dtype="integer")
+    tbl.write(spark.createDataFrame([(2, 20)], "k int, v int"))
+    assert [tuple(r) for r in tbl.read(spark).collect()] == [(2, 20, 40)]
+
+
+def _checked_table(spark, path, checked):
+    """A (k, v, g) table with no rows. ``checked`` makes g the generated
+    column ``v * 2`` and adds three CHECK constraints."""
+    tbl = DeltaLikeTable(path)
+    if not checked:
+        tbl.write(spark.createDataFrame([], "k int, v int, g int"), mode="overwrite")
+        return tbl
+    tbl.write(spark.createDataFrame([], "k int, v int"), mode="overwrite")
+    tbl.add_generated_column("g", "v * 2", dtype="integer")
+    for name, expr in [("k_pos", "k > 0"), ("v_pos", "v > 0"), ("k_is_v", "k = v")]:
+        tbl.add_check_constraint(name, expr)
+    return tbl
+
+
+def test_checks_add_no_spark_job_to_a_write(spark, tmp_path):
+    # the CHECK constraints and the supplied generated column are asserted
+    # inside the job that writes the rows: an append, an OPTIMIZE and a
+    # MERGE start as many jobs as on the same table without them
+    def rows(keys):
+        return spark.createDataFrame(
+            [(k, k, 2 * k) for k in keys], "k int, v int, g int"
+        )
+
+    def jobs(checked):
+        tbl = _checked_table(spark, str(tmp_path / str(checked)), checked)
+        n = [
+            len(_jobs_during(spark, op)[1])
+            for op in (
+                lambda: tbl.write(rows(range(1, 101))),
+                lambda: tbl.compact(spark),
+                lambda: tbl.merge(spark, rows(range(90, 111)), on="k"),
+            )
+        ]
+        assert tbl.read(spark).count() == 110
+        return n
+
+    assert jobs(True) == jobs(False)
+
+
+def test_checks_see_the_rows_the_write_writes(spark, tbl, tmp_path):
+    # a frame whose values turn invalid when it is evaluated again: the
+    # check and the write must see the same rows, so no committed row
+    # breaks the constraint (the write may instead refuse, committing
+    # nothing)
+    calls, n = str(tmp_path / "calls"), 10
+    open(calls, "w").close()
+
+    def value(_k):
+        import fcntl
+
+        with open(calls, "a+") as f:  # counts across Python workers
+            fcntl.flock(f, fcntl.LOCK_EX)
+            f.seek(0)
+            seen = len(f.read())
+            f.write("x")
+        return 1 if seen < n else -1
+
+    tbl.write(spark.createDataFrame([], "k long, v int"), mode="overwrite")
+    tbl.add_check_constraint("v_positive", "v > 0")
+    df = spark.range(n, numPartitions=1).select(
+        F.col("id").alias("k"),
+        F.udf(value, "int").asNondeterministic()("id").alias("v"),
+    )
+    before = tbl.latest_version
+    try:
+        tbl.write(df)
+    except ValueError:
+        assert tbl.latest_version == before
+    assert tbl.read(spark).filter("NOT (v > 0)").count() == 0
+
+
+def test_violating_write_commits_nothing_and_leaves_no_staging(spark, tbl):
+    # each check fails the write job with its own ValueError; any other
+    # failure of the job is re-raised as it is
+    import os
+
+    tbl = _checked_table(spark, tbl.path, checked=True)
+    tbl.write(spark.createDataFrame([(1, 1)], "k int, v int"))
+    before = tbl.latest_version
+    with pytest.raises(ValueError, match=r"CHECK constraint k_is_v \(k = v\)"):
+        tbl.write(spark.createDataFrame([(2, 3)], "k int, v int"))
+    with pytest.raises(ValueError, match="generated column 'g' violated"):
+        tbl.write(spark.createDataFrame([(2, 2, 5)], "k int, v int, g int"))
+    with pytest.raises(ValueError, match="CHECK constraint k_is_v"):
+        tbl.merge(spark, spark.createDataFrame([(1, 7, 14)], "k int, v int, g int"), on="k")
+    with pytest.raises(Exception, match="unrelated failure") as err:
+        tbl.write(spark.range(1).select(
+            F.lit(2).alias("k"),
+            F.when(F.col("id") == 0, F.raise_error("unrelated failure"))
+            .otherwise(2).alias("v"),
+        ))
+    assert not str(err.value).startswith(("CHECK", "generated"))
+    assert tbl.latest_version == before
+    assert [e for e in os.listdir(tbl.path) if e.startswith(".tmp-")] == []
