@@ -1392,7 +1392,7 @@ def delta_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     one atomic commit (the selective-backfill verb: recompute one
     status/date/region and swap it in while every other row stays
     byte-identical and readers never see a gap). Semantically: new
-    data must satisfy the predicate (validated up front — a backfill
+    data must satisfy the predicate (validated inside the write job — a backfill
     that writes outside its declared slice is corrupt), surviving
     rows = NOT(predicate), and kept ∪ fresh commits as one version.
     Unlike full overwrite, the blast radius is the predicate; unlike
@@ -1417,17 +1417,32 @@ def delta_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "price", F.expr("CAST(price DIV 10 AS DOUBLE) / 100")
     )
-    # replaceWhere contract: reject data that violates the predicate.
-    n_bad = fresh.filter(~pred.eqNullSafe(True)).limit(1).count()
-    if n_bad:
-        raise ValueError("replaceWhere: data outside the declared slice")
-    kept = tbl.read(spark).filter(~pred.eqNullSafe(True))
-    tbl.write(
-        kept.unionByName(fresh), mode="overwrite", operation="REPLACE WHERE"
-    )
+    _replace_where(spark, tbl, pred, fresh)
     return tbl.read(spark).select(
         "o_orderkey", "o_orderstatus", "price"
     ).orderBy("o_orderkey")
+
+
+def _replace_where(spark: SparkSession, tbl: DeltaLikeTable, pred, fresh) -> int:
+    """Commit ``tbl``'s rows outside ``pred`` plus ``fresh`` as one
+    overwrite; returns the version. The replaceWhere contract rejects
+    data that violates the predicate: a raising Filter on ``fresh`` that
+    the write job evaluates, as ``DeltaLikeTable._with_checks`` does, so
+    the rows checked are the rows written and a violation commits
+    nothing."""
+    msg = "replaceWhere: data outside the declared slice"
+    checked = fresh.filter(
+        F.when(~pred.eqNullSafe(True), F.raise_error(msg)).otherwise(F.lit(True))
+    )
+    kept = tbl.read(spark).filter(~pred.eqNullSafe(True))
+    try:
+        return tbl.write(
+            kept.unionByName(checked), mode="overwrite", operation="REPLACE WHERE"
+        )
+    except Exception as e:
+        if msg not in str(e):
+            raise
+        raise ValueError(msg) from None
 
 
 @register(

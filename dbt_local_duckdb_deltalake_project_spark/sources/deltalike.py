@@ -41,12 +41,11 @@ are readable as real Delta.
 
 from __future__ import annotations
 
-import base64
 import json
 import os
 import shutil
-import struct
 import time
+import urllib.parse
 import uuid
 from typing import Callable
 
@@ -70,16 +69,6 @@ from .deltalog import (
     Snapshot,
     remove,
 )
-
-# Deletion vectors: descriptors with at most this many deleted rows are
-# stored inline in the add action (storageType "i", ascii85 payload —
-# the spec's inline DV form); larger ones go to a sidecar file at the
-# table root (storageType "p", path relative to the table root). The
-# payload is packed little-endian uint64 row indexes, sorted — the spec
-# uses a RoaringBitmap here; the container has no roaring codec, so the
-# packed-array stand-in keeps the same descriptor contract (documented
-# divergence, same class as the media-codec stub).
-_DV_INLINE_MAX = 64
 
 # The log readers run in Python workers that may not be able to import
 # this package: cloudpickle ships ``deltalog`` with them by value.
@@ -221,7 +210,7 @@ def _prune(
 def _removes(adds, data_change: bool = True) -> list[dict]:
     """The remove actions of ``adds``, stamped now."""
     now = int(time.time() * 1000)
-    return [remove(a["path"], now, data_change) for a in adds]
+    return [remove(a, now, data_change) for a in adds]
 
 
 def _partition(add: dict) -> tuple:
@@ -258,9 +247,13 @@ def _log_source() -> type:
     session never share state: ``path``; ``readChangeFeed`` ("true" for
     the change feed, ``deltalog.change_diff``, else the appended rows,
     ``deltalog.appended_rows``); and ``startingVersion`` and
-    ``endingVersion``, inclusive, Delta's option names. The schema is the
-    snapshot's metaData (``deltalog.row_fields``), after ``version`` and
-    ``change_type`` for the change feed. Stream offsets are log versions
+    ``endingVersion``, inclusive, Delta's option names. ``schema``
+    resolves the snapshot at ``endingVersion`` (else the latest) on the
+    driver: its metaData fields, after ``version`` and ``change_type`` for
+    the change feed, are the schema, and the readers carry that metaData
+    so ``deltalog.rows`` reads every commit's files as ``read()`` reads
+    them (deletion vectors, partition values, column mapping, columns a
+    file lacks). Stream offsets are log versions
     (``{"version": v}``): ``latestOffset`` lists the log (file names, no
     rows), ``partitions`` emits one InputPartition per new commit, and a
     restart replays exactly the versions its checkpoint has not committed.
@@ -280,19 +273,18 @@ def _log_source() -> type:
     that batch and stops, without the versions committed since."""
 
     class _Commits:
-        def __init__(self, options, schema: StructType):
-            self.path = options["path"]
+        def __init__(self, options, meta: deltalog.Snapshot):
+            self.path, self.meta = options["path"], meta
             change_feed = options.get("readChangeFeed") == "true"
             self.rows_of = (
                 deltalog.change_diff if change_feed else deltalog.appended_rows
             )
-            self.columns = schema.names[2:] if change_feed else schema.names
             self.first = int(options.get("startingVersion", 0))
             self.last = options.get("endingVersion")
 
         def read(self, partition):
             if partition is not None:  # Spark reads no partition as [None]
-                yield from self.rows_of(self.path, partition.value, self.columns)
+                yield from self.rows_of(self.path, partition.value, self.meta)
 
     class _Batch(_Commits, DataSourceReader):
         def partitions(self):
@@ -328,7 +320,9 @@ def _log_source() -> type:
             snap = deltalog.DeltaLog(self.options["path"]).snapshot(
                 None if last is None else int(last)
             )
-            fields = deltalog.row_fields(snap)
+            # the metaData alone travels to the readers, not the live adds
+            self.meta = deltalog.Snapshot(metadata=snap.metadata)
+            fields = snap.fields
             if self.options.get("readChangeFeed") == "true":
                 fields = [
                     {"name": "version", "type": "integer", "nullable": False,
@@ -339,10 +333,10 @@ def _log_source() -> type:
             return StructType.fromJson({"type": "struct", "fields": fields})
 
         def reader(self, schema):
-            return _Batch(self.options, schema)
+            return _Batch(self.options, self.meta)
 
         def streamReader(self, schema):
-            return _Stream(self.options, schema)
+            return _Stream(self.options, self.meta)
 
     return _Source
 
@@ -454,11 +448,15 @@ class DeltaLikeTable:
                 if json.loads(stats)["numRecords"] == 0:
                     continue  # left in tmp, removed with it below
                 rel = os.path.relpath(staged, tmp)
-                pvals = dict(
-                    part.split("=", 1)
-                    for part in rel.split(os.sep)[:-1]
-                    if "=" in part
-                )
+                # Delta records the value, not Spark's escaped directory name
+                pvals = {
+                    k: None if v == "__HIVE_DEFAULT_PARTITION__"
+                    else urllib.parse.unquote(v)
+                    for k, v in (
+                        part.split("=", 1)
+                        for part in rel.split(os.sep)[:-1] if "=" in part
+                    )
+                }
                 dst = os.path.join(self.path, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(staged, dst)
@@ -553,14 +551,16 @@ class DeltaLikeTable:
         write job runs the Filter, as Delta asserts invariants in its write
         job: no extra pass, and the checked rows are the written rows (a
         projected check column would be pruned by Catalyst, never run)."""
-        checks = []
-        for name, expr in snap.generated_columns.items():
-            if name not in df.columns:
-                df = df.withColumn(name, F.expr(expr))
-            else:
-                checks.append((~F.col(name).eqNullSafe(F.expr(expr)), (
-                    f"generated column {name!r} violated: supplied values "
-                    f"differ from GENERATED ALWAYS AS ({expr})")))
+        generated = snap.generated_columns
+        computed = {n: F.expr(e) for n, e in generated.items() if n not in df.columns}
+        if computed:  # each in its place in the table's column order
+            df = df.withColumns(computed)
+            order = [f["name"] for f in snap.fields if f["name"] in df.columns]
+            df = df.select(order + [c for c in df.columns if c not in order])
+        checks = [(~F.col(name).eqNullSafe(F.expr(expr)), (
+            f"generated column {name!r} violated: supplied values "
+            f"differ from GENERATED ALWAYS AS ({expr})"
+        )) for name, expr in generated.items() if name not in computed]
         checks += [(F.expr(expr).eqNullSafe(False), (
             f"CHECK constraint {name} ({expr}) violated by write to {self.path}"
         )) for name, expr in snap.constraints.items()]
@@ -636,12 +636,12 @@ class DeltaLikeTable:
         sj = json.loads(meta["schemaString"])
         if name in [f["name"] for f in sj["fields"]]:
             raise ValueError(f"column {name!r} already exists")
-        sj["fields"].append(
+        sj["fields"].append(  # keys in the order Spark's schema JSON has
             {
-                "name": name,
-                "type": dtype,
-                "nullable": True,
                 "metadata": {"delta.generationExpression": expr_sql},
+                "name": name,
+                "nullable": True,
+                "type": dtype,
             }
         )
         return self.log.commit(
@@ -862,9 +862,10 @@ class DeltaLikeTable:
         """Delta's change data feed of versions ``start`` to ``end``
         (inclusive; default: latest), as ``(version, change_type,
         *columns)`` rows: ``deltalog.change_diff`` per commit, keyed by
-        the table's first column. ``stream=True`` tails the log from
-        ``start`` instead. A partitioned or column-mapped table raises
-        ValueError."""
+        the table's first column. Each commit's rows are the rows
+        ``read`` sees in its removed and added files (deletion vectors,
+        partition values and column mapping applied), so every layout
+        reads. ``stream=True`` tails the log from ``start`` instead."""
         return self._log_read(spark, start, end, stream, change_feed=True)
 
     def appends(self, spark: SparkSession, start: int) -> DataFrame:
@@ -880,7 +881,6 @@ class DeltaLikeTable:
         """A read of ``_log_source`` on ``spark``. A batch read is pinned
         to the version that is latest now, unless ``end`` is given."""
         snap = self.log.snapshot(end)
-        deltalog.row_fields(snap)  # raise here, not in a Python worker
         options = {
             "path": self.path,
             "readChangeFeed": str(change_feed).lower(),
@@ -922,24 +922,6 @@ class DeltaLikeTable:
             df = df.select([F.col(p).alias(l) for l, p in snap.mapping])
         return df
 
-    def _dv_file_uri(self, add: dict) -> str:
-        """The ``_metadata.file_path`` URI of an add action's data file
-        (Spark renders local paths as ``file:`` + abspath)."""
-        p = add["path"]
-        full = p if os.path.isabs(p) else os.path.join(self.path, p)
-        return "file:" + os.path.abspath(full)
-
-    def _load_dv(self, desc: dict) -> list[int]:
-        """Deleted row indexes from a deletionVector descriptor."""
-        if desc["storageType"] == "i":
-            payload = base64.a85decode(desc["pathOrInlineDv"])
-        else:
-            p = desc["pathOrInlineDv"]
-            full = p if os.path.isabs(p) else os.path.join(self.path, p)
-            with open(full, "rb") as f:
-                payload = f.read()
-        return list(struct.unpack(f"<{len(payload) // 8}Q", payload))
-
     def _apply_deletion_vectors(
         self, spark: SparkSession, df: DataFrame, dv_adds: list[dict]
     ) -> DataFrame:
@@ -951,9 +933,9 @@ class DeltaLikeTable:
         shuffle. ``_metadata.row_index`` is the physical row position the
         descriptors index, provided by the parquet reader for free."""
         pairs = [
-            (self._dv_file_uri(a), int(ri))
+            (deltalog.file_uri(self.path, a["path"]), ri)
             for a in dv_adds
-            for ri in self._load_dv(a["deletionVector"])
+            for ri in deltalog.load_dv(self.path, a["deletionVector"])
         ]
         dv_df = spark.createDataFrame(pairs, "_dv_fp string, _dv_ri long")
         masked = (
@@ -1025,19 +1007,18 @@ class DeltaLikeTable:
         Deletes larger than ``max_cardinality`` rows per file refuse and
         direct the caller to the rewrite path — the same heuristic real
         engines apply, since a mostly-dead file is better rewritten.
-        Partitioned tables use ``delete`` (hive-materialized partition
-        columns are not in the physical file, so the predicate could not
-        be evaluated against raw per-file reads uniformly)."""
+        The predicate sees what ``read`` sees, partition columns included.
+        Matched rows are keyed by the file URI Spark renders
+        (``deltalog.file_uri``); the codec is ``deltalog.store_dv``.
+        Each remove carries the DV of the add it retires, so the change
+        feed reads the commit's deleted rows from the commit alone.
+        Returns the committed version, or the current one when no row
+        matched."""
         snap = self.log.snapshot()
         active = list(snap.adds.values())
         if not active:
             return snap.version  # no live file, no row to delete
-        if any(a.get("partitionValues") for a in active):
-            raise ValueError(
-                "DV delete on partitioned tables is not supported; "
-                "use delete() (copy-on-write)"
-            )
-        by_uri = {self._dv_file_uri(a): a for a in active}
+        by_uri = {deltalog.file_uri(self.path, a["path"]): a for a in active}
         # the scan without the DVs, under logical names (the caller's
         # predicate speaks them); the projection keeps _metadata reachable
         base = self._scan(
@@ -1055,40 +1036,27 @@ class DeltaLikeTable:
             .agg(F.sort_array(F.collect_list("_ri")).alias("idxs"))
             .collect()
         )  # bounded: ≤ max_cardinality rows per file, checked below
+        retired: list[dict] = []
         rewritten: list[dict] = []
         for row in hits:
-            add = by_uri.get(row["_fp"])
-            if add is None:
-                continue
-            old = (
-                set(self._load_dv(add["deletionVector"]))
-                if add.get("deletionVector")
-                else set()
-            )
+            add = by_uri[row["_fp"]]  # a hit no live add names is a bug: raise
+            old = set(deltalog.load_dv(self.path, add.get("deletionVector")))
             idxs = sorted(old | {int(i) for i in row["idxs"]})
-            if len(idxs) - len(old) == 0:
+            if len(idxs) == len(old):
                 continue  # every matched row was already deleted
             if len(idxs) > max_cardinality:
                 raise ValueError(
                     f"DV for {add['path']} would hold {len(idxs)} rows "
                     f"(> {max_cardinality}); rewrite with delete() instead"
                 )
-            payload = struct.pack(f"<{len(idxs)}Q", *idxs)
-            if len(idxs) <= _DV_INLINE_MAX:
-                kind, where = "i", base64.a85encode(payload).decode()
-            else:
-                kind, where = "p", f"deletion_vector_{uuid.uuid4().hex}.bin"
-                tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
-                with open(tmp, "wb") as f:
-                    f.write(payload)
-                os.replace(tmp, os.path.join(self.path, where))
-            rewritten.append({**add, "deletionVector": {
-                "storageType": kind, "pathOrInlineDv": where,
-                "sizeInBytes": len(payload), "cardinality": len(idxs),
-            }})
+            retired.append(add)
+            rewritten.append({  # a data change, even of an OPTIMIZE's file
+                **add, "dataChange": True,
+                "deletionVector": deltalog.store_dv(self.path, idxs),
+            })
         if not rewritten:
             return snap.version
-        actions = _removes(rewritten) + [{"add": a} for a in rewritten]
+        actions = _removes(retired) + [{"add": a} for a in rewritten]
         return self.log.commit(actions, "DELETE", snap)
 
     def restore(self, version: int) -> int:
@@ -1137,20 +1105,14 @@ class DeltaLikeTable:
         snap = self.log.snapshot(as_of)
         actions: list[dict] = []
         for a in snap.adds.values():
-            src = os.path.join(self.path, a["path"])
-            add = {**a, "path": os.path.abspath(src)}
-            dv = a.get("deletionVector")
-            if dv and dv["storageType"] == "p" and not os.path.isabs(
-                dv["pathOrInlineDv"]
-            ):
+            add = {**a, "path": os.path.abspath(os.path.join(self.path, a["path"]))}
+            sidecar = deltalog.dv_sidecar(self.path, a.get("deletionVector"))
+            if sidecar is not None:
                 # sidecar DVs live under the SOURCE root — absolutize so
                 # the clone resolves them without copying (inline DVs
                 # travel in the descriptor itself)
                 add["deletionVector"] = {
-                    **dv,
-                    "pathOrInlineDv": os.path.abspath(
-                        os.path.join(self.path, dv["pathOrInlineDv"])
-                    ),
+                    **a["deletionVector"], "pathOrInlineDv": os.path.abspath(sidecar),
                 }
             actions.append({"add": add})
         if snap.metadata is not None:  # a clone is a new table: its own id
@@ -1215,21 +1177,34 @@ class DeltaLikeTable:
         matched and inserted rows take the source value, untouched
         target rows get NULL (Delta's automatic-schema-evolution
         semantics for MERGE); the commit's metaData action carries the
-        widened schemaString."""
+        widened schemaString.
+
+        A generated column the source does not carry is left out of the
+        merged rows, so the write computes it for every row, as for any
+        write; the table's column order is kept."""
+        snap = self.log.snapshot()
+        generated = snap.generated_columns
+
         def upsert(target: DataFrame) -> DataFrame:
-            cols = target.columns
+            cols = [
+                c for c in target.columns
+                if c in source.columns or c not in generated
+            ]
             evolved = [
                 c for c in source.columns if c not in cols and c != on
             ] if evolve_schema else []
-            joined = target.alias("t").join(
-                source.alias("s"), F.col(f"t.{on}") == F.col(f"s.{on}"), "full_outer"
+            joined = target.withColumn("_merge_t", F.lit(True)).alias("t").join(
+                source.withColumn("_merge_s", F.lit(True)).alias("s"),
+                F.col(f"t.{on}") == F.col(f"s.{on}"), "full_outer",
             )
-            # Matched/insert are decided by join-key presence, NOT coalesce on
-            # values: WHEN MATCHED THEN UPDATE sets the column to the source
-            # value even when that value is NULL, and inserted rows take source
-            # values for every column the source carries.
-            matched = F.col(f"s.{on}").isNotNull() & F.col(f"t.{on}").isNotNull()
-            inserted = F.col(f"t.{on}").isNull()
+            # Matched/insert are decided by which side of the join is
+            # present, NOT by key or value nullness: a NULL key matches
+            # nothing, so its target row passes through and its source row
+            # is inserted; WHEN MATCHED THEN UPDATE sets the column to the
+            # source value even when that value is NULL, and inserted rows
+            # take source values for every column the source carries.
+            in_s = F.col("_merge_s").isNotNull()
+            matched = F.col("_merge_t").isNotNull() & in_s
             if matched_delete_where is not None:
                 # WHEN MATCHED AND cond THEN DELETE: drop the joined row
                 # entirely — neither the update nor the pass-through branch
@@ -1240,23 +1215,17 @@ class DeltaLikeTable:
                 cond = F.coalesce(F.expr(matched_delete_where), F.lit(False))
                 joined = joined.filter(~(matched & cond))
 
-            def _merged_col(c: str):
-                # matched rows take each column the source carries, keep the rest
-                carried = c in source.columns
-                s_c = F.col(f"s.{c}") if carried else F.lit(None)
-                touched = (matched | inserted) if carried else inserted
-                return F.when(touched, s_c).otherwise(F.col(f"t.{c}")).alias(c)
-
-            # a new column: only rows the source touched carry a value
-            out_cols = [_merged_col(c) for c in cols if c != on] + [
-                F.when(matched | inserted, F.col(f"s.{c}")).alias(c) for c in evolved
-            ]
+            # rows from the source take each column it carries and keep the
+            # rest (an insert has no target side: NULL); a new column has a
+            # value only on the rows the source touched
+            out_cols = [
+                (F.when(in_s, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
+                 if c in source.columns else F.col(f"t.{c}")).alias(c)
+                for c in cols
+            ] + [F.col(f"s.{c}").alias(c) for c in evolved]
             if delete_not_matched_by_source:
-                joined = joined.filter(F.col(f"s.{on}").isNotNull())
-            return joined.select(
-                F.coalesce(F.col(f"s.{on}"), F.col(f"t.{on}")).alias(on), *out_cols
-            )
+                joined = joined.filter(in_s)
+            return joined.select(*out_cols)
 
-        snap = self.log.snapshot()
         v = self._rewrite(spark, snap, list(snap.adds.values()), upsert, "MERGE")
         return self.read(spark, as_of=v)

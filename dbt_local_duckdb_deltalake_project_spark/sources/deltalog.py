@@ -7,8 +7,10 @@ Everything the engine knows about a table's log lives here::
     <root>/_delta_log/_last_checkpoint
 
 commit paths and listing, ``Snapshot`` replay, parquet checkpoints, the
-put-if-absent commit, history and timestamp resolution, VACUUM, and the
-per-commit file and change helpers the log data source calls.
+put-if-absent commit, history and timestamp resolution, VACUUM, the
+deletion-vector codec, and ``rows``: the one Spark-free reader of the
+rows a set of add or remove actions holds, which the log data source's
+per-commit helpers read through.
 
 The module imports only the standard library (pyarrow inside the
 functions that read or write parquet), so three kinds of caller share
@@ -21,10 +23,15 @@ may hold an unpicklable object at module level (a
 ``functools.cached_property`` holds a lock on Python 3.11).
 """
 
+import base64
+import datetime
+import decimal
 import json
 import os
 import shutil
+import struct
 import time
+import urllib.parse
 import uuid
 from collections import Counter
 from dataclasses import dataclass, field
@@ -43,6 +50,18 @@ CHECKPOINT_INTERVAL = 10
 COLUMN_MAPPING_KEY = "delta.columnMapping.mode"
 PHYSICAL_NAME_KEY = "delta.columnMapping.physicalName"
 
+# Deletion vectors (PROTOCOL.md): a descriptor of at most this many
+# deleted rows is stored inline in its action (storageType "i", an ascii85
+# payload); a larger one names a sidecar file under the table root
+# (storageType "p", a path relative to the root). The payload is the
+# sorted row indexes packed as little-endian uint64: the protocol's
+# RoaringBitmap needs a codec the engine does not ship, and the packed
+# array keeps the same descriptor contract (a documented divergence, like
+# the media-codec stub). ``dv_sidecar``, ``load_dv`` and ``store_dv`` are
+# the only code that knows this format; the Spark mask and ``rows`` both
+# decode through ``load_dv``.
+_DV_INLINE_MAX = 64
+
 _LAST_CHECKPOINT = "_last_checkpoint"
 
 
@@ -50,10 +69,20 @@ def commit_path(root: str, version: int) -> str:
     return os.path.join(root, "_delta_log", f"{version:020d}.json")
 
 
-def remove(path: str, now: int, data_change: bool = True) -> dict:
-    return {"remove": {
-        "path": path, "deletionTimestamp": now, "dataChange": data_change,
-    }}
+def remove(add: dict, now: int, data_change: bool = True) -> dict:
+    """The remove action that retires ``add``. It carries the protocol's
+    extended file metadata — the add's ``partitionValues``, ``size`` and
+    ``deletionVector`` — so a reader of the commit alone knows which rows
+    the file held until now."""
+    act = {
+        "path": add["path"], "deletionTimestamp": now, "dataChange": data_change,
+        "extendedFileMetadata": True,
+        "partitionValues": add.get("partitionValues") or {},
+        "size": add.get("size"),
+    }
+    if add.get("deletionVector"):
+        act["deletionVector"] = add["deletionVector"]
+    return {"remove": act}
 
 
 def _now_ms() -> int:
@@ -224,19 +253,19 @@ class DeltaLog:
         with open(commit_path(self.root, version)) as f:
             return [json.loads(ln) for ln in f if ln.strip()]
 
-    def commit_files(self, version: int) -> tuple[list[str], list[str]]:
-        """(added, removed) data-file paths of commit ``version``, without
-        the ``dataChange: false`` ones: an OPTIMIZE only rearranges rows
+    def commit_files(self, version: int) -> tuple[list[dict], list[dict]]:
+        """(add, remove) actions of commit ``version``, without the
+        ``dataChange: false`` ones: an OPTIMIZE only rearranges rows
         (PROTOCOL.md), so a reader of changes skips its files."""
         acts = self.read_commit(version)
 
-        def paths(kind: str) -> list[str]:
+        def files(kind: str) -> list[dict]:
             return [
-                a[kind]["path"] for a in acts
+                a[kind] for a in acts
                 if kind in a and a[kind].get("dataChange", True)
             ]
 
-        return paths("add"), paths("remove")
+        return files("add"), files("remove")
 
     # -- checkpoints ------------------------------------------------------
     def _checkpoint_path(self, version: int) -> str:
@@ -500,12 +529,11 @@ class DeltaLog:
         ]
         root = os.path.abspath(self.root)
         keep = {
-            os.path.normpath(os.path.join(root, p))
-            for p in [a["path"] for a in adds] + [
-                a["deletionVector"]["pathOrInlineDv"]
-                for a in adds
-                if (a.get("deletionVector") or {}).get("storageType") == "p"
-            ]
+            os.path.normpath(p)
+            for a in adds
+            for p in (os.path.join(root, a["path"]),
+                      dv_sidecar(root, a.get("deletionVector")))
+            if p is not None
         }
 
         def older(path: str) -> bool:
@@ -536,38 +564,121 @@ class DeltaLog:
         return sorted(deleted)
 
 
-# -- per-commit rows, for the log data source --------------------------------
-def row_fields(snap: Snapshot) -> list[dict]:
-    """The schema fields of ``snap``, which ``rows`` reads from each data
-    file alone by logical name. A partitioned table keeps its partition
-    columns out of the files and a column-mapped one stores physical
-    names, so both raise, as ``DeltaLikeTable.delete_with_dv`` refuses
-    partitioned tables."""
-    if snap.metadata is None:
-        raise ValueError(f"no metaData at version {snap.version}")
-    if snap.metadata.get("partitionColumns") or snap.mapping:
-        raise ValueError(
-            "the per-commit readers do not read partitioned or column-mapped "
-            "tables"
-        )
-    return snap.fields
+# -- deletion vectors ---------------------------------------------------------
+def dv_sidecar(root: str, desc: dict | None) -> str | None:
+    """The sidecar file a deletionVector descriptor names (None for no
+    descriptor or an inline one), resolved against ``root``; a shallow
+    clone's descriptors name absolute paths, which stay as they are."""
+    if not desc or desc["storageType"] != "p":
+        return None
+    return os.path.join(root, desc["pathOrInlineDv"])
 
 
-def rows(root: str, paths: list[str], columns: list[str]) -> list[tuple]:
-    """``columns`` of every row of the data files ``paths``, in order."""
+def load_dv(root: str, desc: dict | None) -> list[int]:
+    """The deleted row indexes of a deletionVector descriptor (none for
+    None)."""
+    if not desc:
+        return []
+    sidecar = dv_sidecar(root, desc)
+    if sidecar is None:
+        payload = base64.a85decode(desc["pathOrInlineDv"])
+    else:
+        with open(sidecar, "rb") as f:
+            payload = f.read()
+    return list(struct.unpack(f"<{len(payload) // 8}Q", payload))
+
+
+def store_dv(root: str, idxs: list[int]) -> dict:
+    """The descriptor of the sorted row indexes ``idxs``: inline up to
+    ``_DV_INLINE_MAX`` rows, else a new sidecar under ``root``, published
+    by rename."""
+    payload = struct.pack(f"<{len(idxs)}Q", *idxs)
+    if len(idxs) <= _DV_INLINE_MAX:
+        kind, where = "i", base64.a85encode(payload).decode()
+    else:
+        kind, where = "p", f"deletion_vector_{uuid.uuid4().hex}.bin"
+        tmp = os.path.join(root, f".tmp-{uuid.uuid4().hex}")
+        with open(tmp, "wb") as f:
+            f.write(payload)
+        os.replace(tmp, os.path.join(root, where))
+    return {"storageType": kind, "pathOrInlineDv": where,
+            "sizeInBytes": len(payload), "cardinality": len(idxs)}
+
+
+def file_uri(root: str, path: str) -> str:
+    """A data file's ``_metadata.file_path`` as Spark renders it (Hadoop's
+    ``Path.toUri``): ``file:`` and the absolute path, with each ASCII
+    character a URI path may not hold percent-encoded — a space becomes
+    ``%20``, the ``%`` of an escaped partition directory ``%25`` — and
+    non-ASCII characters kept."""
+    full = os.path.abspath(os.path.join(root, path))
+    return "file:" + "".join(
+        urllib.parse.quote(c, safe="/!$&'()*+,;=:@") if c.isascii() else c
+        for c in full
+    )
+
+
+# -- the rows a set of files holds ---------------------------------------------
+def _partition_value(value: str | None, dtype) -> object:
+    """A ``partitionValues`` string as the value of schema type ``dtype``
+    (PROTOCOL.md, partition value serialization); null stays None."""
+    if value is None:
+        return None
+    if dtype in ("byte", "short", "integer", "long"):
+        return int(value)
+    if dtype in ("float", "double"):
+        return float(value)
+    if dtype == "boolean":
+        return value == "true"
+    if dtype == "date":
+        return datetime.date.fromisoformat(value)
+    if dtype == "timestamp":  # written in the session zone, pinned to UTC
+        return datetime.datetime.fromisoformat(value).replace(
+            tzinfo=datetime.timezone.utc)
+    if dtype == "timestamp_ntz":
+        return datetime.datetime.fromisoformat(value)
+    if str(dtype).startswith("decimal"):
+        return decimal.Decimal(value)
+    return value
+
+
+def rows(root: str, snap: Snapshot, files: list[dict]) -> list[tuple]:
+    """The rows the data files of ``files`` (add or remove actions) hold,
+    under ``snap``'s metaData, as ``DeltaLikeTable._scan`` reads them: the
+    rows a file's deletion vector names are dropped, partition columns
+    come from ``partitionValues`` typed by the schema, physical column
+    names are read under their logical ones, and a column a file does not
+    have reads as NULL. Each row is a tuple in schema order."""
     import pyarrow.parquet as pq
 
+    phys = dict(snap.mapping or [])
+    fields = [(phys.get(f["name"], f["name"]), f["type"]) for f in snap.fields]
     out: list[tuple] = []
-    for p in paths:
-        data = pq.read_table(os.path.join(root, p), columns=columns)
-        out.extend(zip(*(data.column(c).to_pylist() for c in columns)))
+    for f in files:
+        parts = f.get("partitionValues") or {}
+        data = pq.read_table(os.path.join(root, f["path"]), partitioning=None)
+        n, names = data.num_rows, set(data.column_names)
+        cols = [
+            [_partition_value(parts[p], t)] * n if p in parts
+            else data.column(p).to_pylist() if p in names
+            else [None] * n
+            for p, t in fields
+        ]
+        dead = set(load_dv(root, f.get("deletionVector")))
+        out.extend(r for i, r in enumerate(zip(*cols)) if i not in dead)
     return out
 
 
-def appended_rows(root: str, version: int, columns: list[str]) -> list[tuple]:
-    """The rows commit ``version`` appended: the tail of an append-only
-    table. A commit after v0 that removes files (an overwrite, MERGE or
-    DELETE) is refused, because replaying its adds would count the
+def _order(item: tuple) -> list:
+    """Sort key of a (row, count) item: a NULL sorts after every value."""
+    return [(v is None, v) for v in item[0]]
+
+
+def appended_rows(root: str, version: int, snap: Snapshot) -> list[tuple]:
+    """The rows commit ``version`` appended (``rows`` of its adds, under
+    ``snap``'s metaData): the tail of an append-only table. A commit
+    after v0 that removes files (an overwrite, MERGE, DELETE or DV
+    delete) is refused, because replaying its adds would count the
     rewritten rows twice; an OPTIMIZE appends no row."""
     added, removed = DeltaLog(root).commit_files(version)
     if version > 0 and removed:
@@ -575,28 +686,31 @@ def appended_rows(root: str, version: int, columns: list[str]) -> list[tuple]:
             f"commit {version} of {root} removes files; this tail reads "
             "append-only tables"
         )
-    return rows(root, added, columns)
+    return rows(root, snap, added)
 
 
-def change_diff(root: str, version: int, columns: list[str]) -> list[tuple]:
+def change_diff(root: str, version: int, snap: Snapshot) -> list[tuple]:
     """Commit ``version``'s change feed as Delta's legacy read derives it
-    when no cdc files exist: the multiset diff of the rows of the files
-    it added and removed (copy-on-write commits carry both). This is the
-    engine's one change-feed rule, batch and stream. Rows are
-    keyed by ``columns[0]``: an appeared row is an ``update_postimage``
-    if its key also vanished, else an ``insert``; a vanished row is an
-    ``update_preimage`` if its key also appeared, else a ``delete``.
-    Returns ``(version, change_type, *row)`` tuples, appeared rows first.
-    The work is bounded by the commit's rewritten files, not the table."""
+    when no cdc files exist: the multiset diff of the rows visible under
+    its removes (each with the deletion vector of the add it retires) and
+    under its adds, both read by ``rows`` under ``snap``'s metaData. So a
+    copy-on-write rewrite and a DV delete are diffed alike, from the
+    commit alone. This is the engine's one change-feed rule, batch and
+    stream. Rows are keyed by their first column: an appeared row is an
+    ``update_postimage`` if its key also vanished, else an ``insert``; a
+    vanished row is an ``update_preimage`` if its key also appeared, else
+    a ``delete``. Returns ``(version, change_type, *row)`` tuples,
+    appeared rows first. The work is bounded by the commit's files, not
+    the table."""
     added, removed = DeltaLog(root).commit_files(version)
-    before = Counter(rows(root, removed, columns))
-    after = Counter(rows(root, added, columns))
+    before = Counter(rows(root, snap, removed))
+    after = Counter(rows(root, snap, added))
     appeared, vanished = after - before, before - after
     app_keys = {r[0] for r in appeared}
     van_keys = {r[0] for r in vanished}
     out: list[tuple] = []
-    for r, n in sorted(appeared.items()):
+    for r, n in sorted(appeared.items(), key=_order):
         out += [(version, "update_postimage" if r[0] in van_keys else "insert", *r)] * n
-    for r, n in sorted(vanished.items()):
+    for r, n in sorted(vanished.items(), key=_order):
         out += [(version, "update_preimage" if r[0] in app_keys else "delete", *r)] * n
     return out

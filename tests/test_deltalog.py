@@ -4,7 +4,9 @@ A Hypothesis state machine drives ``DeltaLog`` directly against an
 in-memory model of one table: appends, overwrites, MERGE- and
 OPTIMIZE-shaped action sets, checkpoints, a writer that crashes before
 its commit is published, and VACUUM under an injected clock. Concurrent
-conflicting writers are not modelled here.
+conflicting writers are not modelled here. A second machine writes real
+parquet files and checks the change feed of every commit against the
+model's rows.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, Phase, settings
@@ -43,11 +46,16 @@ def _dead_writer(src, dst):
     raise OSError("writer died before its commit was published")
 
 
-def _metadata(now: int) -> dict:
+def _metadata(now: int, fields=(), partition_columns=()) -> dict:
+    """A metaData action; ``fields`` are (name, type) pairs."""
     return {"metaData": {
         "id": "model", "format": {"provider": "parquet"},
-        "schemaString": json.dumps({"type": "struct", "fields": []}),
-        "partitionColumns": [], "configuration": {}, "createdTime": now,
+        "schemaString": json.dumps({"type": "struct", "fields": [
+            {"name": n, "type": t, "nullable": True, "metadata": {}}
+            for n, t in fields
+        ]}),
+        "partitionColumns": list(partition_columns), "configuration": {},
+        "createdTime": now,
     }}
 
 
@@ -96,7 +104,8 @@ class LogModel(RuleBasedStateMachine):
         self.now += TICK_MS
         adds = self._stage(k)
         self.now += 2 * TICK_MS
-        actions = [deltalog.remove(p, self.now) for p in sorted(removes)] + adds
+        actions = [deltalog.remove({"path": p}, self.now) for p in sorted(removes)]
+        actions += adds
         if not self.live or operation == "OVERWRITE":
             actions.append(_metadata(self.now))
         if extra.get("txn") is not None:
@@ -245,8 +254,8 @@ def test_vacuum_removes_the_partition_dirs_it_empties(tmp_path):
 
     log.commit([stage("p=1/part-a.parquet"), stage("p=2/part-b.parquet"),
                 stage("q=1/r=2/part-c.parquet")])
-    log.commit([deltalog.remove("p=1/part-a.parquet", 0),
-                deltalog.remove("q=1/r=2/part-c.parquet", 0)])
+    log.commit([deltalog.remove({"path": "p=1/part-a.parquet"}, 0),
+                deltalog.remove({"path": "q=1/r=2/part-c.parquet"}, 0)])
     future = int(time.time() * 1000) + 60_000
     assert log.vacuum(retention_ms=0, now_ms=future) == [
         "p=1/part-a.parquet", "q=1/r=2/part-c.parquet",
@@ -288,7 +297,7 @@ def test_change_readers_skip_a_commit_that_only_rearranges_data(tmp_path, monkey
                         "modificationTime": 0, "dataChange": data_change}}
 
     os.makedirs(root)
-    log.commit([stage("a.parquet", [1]), _metadata(0)], "WRITE")
+    log.commit([stage("a.parquet", [1]), _metadata(0, [("k", "long")])], "WRITE")
     log.commit([stage("b.parquet", [2])], "WRITE", blind_append=True)
     log.commit([
         {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": False}}
@@ -298,13 +307,15 @@ def test_change_readers_skip_a_commit_that_only_rearranges_data(tmp_path, monkey
     real_rows = deltalog.rows
     monkeypatch.setattr(
         deltalog, "rows",
-        lambda r, paths, cols: opened.extend(paths) or real_rows(r, paths, cols),
+        lambda r, snap, files: opened.extend(f["path"] for f in files)
+        or real_rows(r, snap, files),
     )
-    assert deltalog.appended_rows(root, 1, ["k"]) == [(2,)]
+    snap = log.snapshot()
+    assert deltalog.appended_rows(root, 1, snap) == [(2,)]
     assert opened == ["b.parquet"]
     opened.clear()
-    assert deltalog.appended_rows(root, 2, ["k"]) == []
-    assert deltalog.change_diff(root, 2, ["k"]) == []
+    assert deltalog.appended_rows(root, 2, snap) == []
+    assert deltalog.change_diff(root, 2, snap) == []
     assert opened == []
 
 
@@ -329,15 +340,182 @@ def test_change_diff_classifies_rows_by_key(tmp_path):
         return {"remove": {"path": name, "deletionTimestamp": 0, "dataChange": True}}
 
     os.makedirs(root)
-    log.commit([add("a.parquet", [1, 2], ["x", "y"]), _metadata(0)], "WRITE")
+    meta = _metadata(0, [("k", "long"), ("v", "string")])
+    log.commit([add("a.parquet", [1, 2], ["x", "y"]), meta], "WRITE")
     log.commit([rm("a.parquet"), add("b.parquet", [1, 2, 3], ["x", "Y", "z"])], "MERGE")
     log.commit([rm("b.parquet"), add("c.parquet", [1], ["x"])], "DELETE")
-    assert deltalog.change_diff(root, 1, ["k", "v"]) == [
+    snap = log.snapshot()
+    assert deltalog.change_diff(root, 1, snap) == [
         (1, "update_postimage", 2, "Y"),
         (1, "insert", 3, "z"),
         (1, "update_preimage", 2, "y"),
     ]
-    assert deltalog.change_diff(root, 2, ["k", "v"]) == [
+    assert deltalog.change_diff(root, 2, snap) == [
         (2, "delete", 2, "Y"),
         (2, "delete", 3, "z"),
     ]
+
+
+def test_change_feed_reports_a_dv_delete_at_its_own_version(tmp_path):
+    # a DV delete re-adds its file with a deletionVector and removes the
+    # add it retires, DV included: its feed is the delete, and the
+    # copy-on-write rewrite after it reads the file under that DV, so
+    # it does not report the delete again
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "t")
+    os.makedirs(root)
+    log = DeltaLog(root)
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}),
+                   os.path.join(root, "a.parquet"))
+    pq.write_table(pa.table({"k": [1, 3], "v": ["A", "c"]}),
+                   os.path.join(root, "b.parquet"))
+    a = {"path": "a.parquet", "partitionValues": {}, "size": 4,
+         "modificationTime": 0, "dataChange": True}
+    b = {**a, "path": "b.parquet"}
+    log.commit([{"add": a}, _metadata(0, [("k", "long"), ("v", "string")])])
+    a_dv = {**a, "deletionVector": deltalog.store_dv(root, [1])}
+    log.commit([deltalog.remove(a, 0), {"add": a_dv}], "DELETE")
+    log.commit([deltalog.remove(a_dv, 0), {"add": b}], "MERGE")
+    snap = log.snapshot()
+    assert deltalog.change_diff(root, 1, snap) == [(1, "delete", 2, "b")]
+    assert deltalog.change_diff(root, 2, snap) == [
+        (2, "update_postimage", 1, "A"),
+        (2, "update_preimage", 1, "a"),
+    ]
+    assert deltalog.rows(root, snap, list(snap.adds.values())) == [
+        (1, "A"), (3, "c"),
+    ]
+
+
+class ChangeFeedModel(RuleBasedStateMachine):
+    """One table of real parquet files, partitioned by ``p`` (values that
+    need escaping and NULL included), under appends, DV deletes,
+    copy-on-write rewrites and OPTIMIZE. The model keeps each live file's
+    rows and deleted row indexes; after every commit, ``change_diff`` must
+    equal the multiset diff of the model's visible rows, classified by
+    key."""
+
+    FIELDS = [("k", "long"), ("v", "string"), ("p", "string")]
+
+    def __init__(self):
+        super().__init__()
+        self.root = tempfile.mkdtemp(prefix="deltalog-feed-", dir=_TMPFS)
+        self.log = DeltaLog(self.root)
+        self.live: dict[str, tuple[dict, list, frozenset]] = {}  # add, rows, dead
+        self.files = 0
+
+    def teardown(self):
+        shutil.rmtree(self.root, ignore_errors=True)
+
+    def _visible(self) -> Counter:
+        return Counter(
+            r for _, rows, dead in self.live.values()
+            for i, r in enumerate(rows) if i not in dead
+        )
+
+    def _write(self, rows: list, data_change: bool = True) -> list[dict]:
+        """``rows`` as one file per partition; their adds (the model's
+        live set is updated by ``_commit``)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        adds = []
+        for p in sorted({r[2] for r in rows}, key=str):
+            part = [r for r in rows if r[2] == p]
+            self.files += 1
+            path = f"part-{self.files:05d}.parquet"
+            pq.write_table(
+                pa.table({"k": pa.array([r[0] for r in part], pa.int64()),
+                          "v": pa.array([r[1] for r in part], pa.string())}),
+                os.path.join(self.root, path),
+            )
+            add = {"path": path, "partitionValues": {"p": p}, "size": 4,
+                   "modificationTime": 0, "dataChange": data_change}
+            self.live[path] = (add, part, frozenset())
+            adds.append({"add": add})
+        return adds
+
+    def _commit(self, actions: list[dict], before: Counter) -> None:
+        if self.log.latest_version < 0:
+            actions.append(_metadata(0, self.FIELDS, ["p"]))
+        version = self.log.commit(actions)
+        after = self._visible()
+        appeared, vanished = after - before, before - after
+        app_keys, van_keys = {r[0] for r in appeared}, {r[0] for r in vanished}
+        expected = Counter()
+        for r, n in appeared.items():
+            expected[(version, "update_postimage" if r[0] in van_keys else "insert", *r)] += n
+        for r, n in vanished.items():
+            expected[(version, "update_preimage" if r[0] in app_keys else "delete", *r)] += n
+        got = deltalog.change_diff(self.root, version, self.log.snapshot())
+        assert Counter(got) == expected
+
+    def _retire(self, paths, data_change: bool = True) -> list[dict]:
+        return [
+            deltalog.remove(self.live.pop(p)[0], 0, data_change) for p in paths
+        ]
+
+    rows_ = st.lists(
+        st.tuples(st.integers(0, 5), st.sampled_from(["a", "b"]),
+                  st.sampled_from(["x", "x:y z", None])),
+        min_size=1, max_size=6,
+    )
+
+    @rule(rows=rows_)
+    def append(self, rows):
+        before = self._visible()
+        self._commit(self._write(rows), before)
+
+    @precondition(lambda self: self.live)
+    @rule(pick=st.integers(0, 2**16), mask=st.integers(1, 2**6 - 1))
+    def dv_delete(self, pick, mask):
+        before = self._visible()
+        path = sorted(self.live)[pick % len(self.live)]
+        add, rows, dead = self.live[path]
+        new = dead | {i for i in range(len(rows)) if mask >> i & 1}
+        if new == dead:
+            return
+        retired = self._retire([path])
+        add = {**add, "dataChange": True,
+               "deletionVector": deltalog.store_dv(self.root, sorted(new))}
+        self.live[path] = (add, rows, frozenset(new))
+        self._commit(retired + [{"add": add}], before)
+
+    @precondition(lambda self: self.live)
+    @rule(pick=st.integers(1, 2**16), drop=st.integers(0, 5), bump=st.integers(0, 5))
+    def rewrite(self, pick, drop, bump):
+        # a MERGE/DELETE-shaped copy-on-write: a subset of the files is
+        # rewritten without the rows of key ``drop`` and with key
+        # ``bump``'s values changed
+        before = self._visible()
+        current = sorted(self.live)
+        touched = [p for i, p in enumerate(current) if pick >> i & 1] or current[:1]
+        kept = [
+            (k, v + "'" if k == bump else v, p)
+            for path in touched
+            for i, (k, v, p) in enumerate(self.live[path][1])
+            if i not in self.live[path][2] and k != drop
+        ]
+        retired = self._retire(touched)
+        self._commit(retired + (self._write(kept) if kept else []), before)
+
+    @precondition(lambda self: len(self.live) >= 2)
+    @rule()
+    def optimize(self):
+        before = self._visible()
+        rows = [r for r, n in before.items() for _ in range(n)]
+        retired = self._retire(sorted(self.live), data_change=False)
+        self._commit(retired + self._write(rows, data_change=False), before)
+
+
+ChangeFeedModel.TestCase.settings = settings(
+    max_examples=300,
+    stateful_step_count=8,
+    deadline=None,
+    database=None,
+    phases=[Phase.generate],
+    suppress_health_check=[HealthCheck.too_slow],
+)
+TestChangeFeedModel = ChangeFeedModel.TestCase

@@ -195,6 +195,63 @@ def test_merge_matched_delete_null_condition_updates(spark, tbl):
     assert got == {1: None}  # k=1 updated (to NULL), k=2 deleted
 
 
+def test_merge_passes_a_null_target_key_through_and_inserts_a_null_source_key(
+    spark, tbl
+):
+    # a NULL key matches nothing: the target row stays as it is and a
+    # source row with a NULL key is an insert, as in Delta
+    tbl.write(_df(spark, [(None, "x"), (2, "b")]), mode="overwrite")
+    merged = tbl.merge(spark, _df(spark, [(1, "a")]), on="k")
+    assert sorted(map(tuple, merged.collect()), key=repr) == [
+        (1, "a"), (2, "b"), (None, "x"),
+    ]
+    merged = tbl.merge(spark, _df(spark, [(None, "y"), (2, "B")]), on="k")
+    assert sorted(map(tuple, merged.collect()), key=repr) == [
+        (1, "a"), (2, "B"), (None, "x"), (None, "y"),
+    ]
+
+
+def test_merge_computes_a_generated_column_the_source_omits(spark, tbl):
+    # matched and inserted rows get g = v * 2, and the merge keeps the
+    # table's columns in order, so it commits no metaData action
+    import json
+    import os
+
+    def merge(rows):
+        merged = tbl.merge(spark, spark.createDataFrame(rows, "k int, v int"), on="k")
+        with open(os.path.join(tbl.log.log_dir, f"{tbl.latest_version:020d}.json")) as f:
+            assert not any("metaData" in json.loads(ln) for ln in f)
+        return sorted(map(tuple, merged.collect()))
+
+    tbl.write(spark.createDataFrame([], "k int, v int"), mode="overwrite")
+    tbl.add_generated_column("g", "v * 2", dtype="integer")
+    assert merge([(1, 5)]) == [(1, 5, 10)]
+    assert merge([(3, 3)]) == [(1, 5, 10), (3, 3, 6)]
+    # a column after g: the computed g still takes its own place
+    tbl.write(spark.createDataFrame([(4, 4, "w")], "k int, v int, w string"),
+              merge_schema=True)
+    assert merge([(1, 6)]) == [(1, 6, 12, None), (3, 3, 6, None), (4, 4, 8, "w")]
+    assert tbl.read(spark).columns == ["k", "v", "g", "w"]
+
+
+def test_replace_where_refuses_a_row_outside_its_slice_in_the_write(spark, tbl):
+    # the slice check runs inside the write job: a frame with a row
+    # outside the predicate raises the replaceWhere error and commits
+    # nothing; a frame inside it replaces exactly the slice
+    from dbt_local_duckdb_deltalake_project_spark.operators.delta_ops import (
+        _replace_where,
+    )
+
+    tbl.write(_df(spark, [(1, "a"), (2, "b"), (3, "a")]), mode="overwrite")
+    pred = F.col("v") == "a"
+    before = tbl.latest_version
+    with pytest.raises(ValueError, match="replaceWhere: data outside the declared slice"):
+        _replace_where(spark, tbl, pred, _df(spark, [(4, "a"), (5, "c")]))
+    assert tbl.latest_version == before
+    assert _replace_where(spark, tbl, pred, _df(spark, [(4, "a")])) == before + 1
+    assert sorted(map(tuple, tbl.read(spark).collect())) == [(2, "b"), (4, "a")]
+
+
 def test_model_graph_topo_and_ephemeral(spark, tmp_path):
     g = ModelGraph(str(tmp_path / "models"))
     calls = []
@@ -888,11 +945,43 @@ def test_dv_cardinality_cap_refuses(spark, tbl):
         tbl.delete_with_dv(spark, F.col("id") >= 0, max_cardinality=10)
 
 
-def test_dv_partitioned_refuses(spark, tbl):
-    df = spark.range(20).withColumn("p", (F.col("id") % 2).cast("string"))
+def test_dv_delete_on_a_partitioned_table_with_escaped_values(spark, tbl):
+    # Spark escapes ':' in the partition directory and renders the file
+    # URI percent-encoded: the DV delete keys files as Spark renders them
+    # and deletes exactly the matching rows, in every partition
+    df = spark.range(20).withColumn(
+        "p", F.when(F.col("id") % 2 == 0, "a b").otherwise("x:y")
+    )
     tbl.write(df, mode="overwrite", partition_by=["p"])
-    with pytest.raises(ValueError, match="partitioned"):
-        tbl.delete_with_dv(spark, F.col("id") < 5)
+    paths = sorted(a["path"] for a in tbl.live_files())
+    v = tbl.delete_with_dv(spark, (F.col("id") < 5) | (F.col("p") == "x:y"))
+    assert v == 1 and sorted(a["path"] for a in tbl.live_files()) == paths
+    got = sorted((r.id, r.p) for r in tbl.read(spark).collect())
+    assert got == [(i, "a b") for i in range(6, 20, 2)]
+
+
+def test_dv_delete_under_a_root_with_a_space(spark, tmp_path):
+    tbl = DeltaLikeTable(str(tmp_path / "my table"))
+    tbl.write(spark.range(10), mode="overwrite")
+    assert tbl.delete_with_dv(spark, F.col("id") == 2) == 1
+    assert sorted(r.id for r in tbl.read(spark).collect()) == [
+        i for i in range(10) if i != 2
+    ]
+
+
+def test_partition_values_are_recorded_unescaped_and_null_as_null(spark, tbl):
+    # Delta records the partition value, not Spark's escaped directory
+    # name, and a NULL value as JSON null
+    import json
+    import os
+
+    df = spark.createDataFrame([(1, "x:y"), (2, None)], "k int, p string")
+    tbl.write(df, mode="overwrite", partition_by=["p"])
+    with open(os.path.join(tbl.log.log_dir, f"{0:020d}.json")) as f:
+        pvals = [json.loads(ln)["add"]["partitionValues"] for ln in f if '"add"' in ln]
+    assert sorted(map(json.dumps, pvals)) == ['{"p": "x:y"}', '{"p": null}']
+    got = tbl.read(spark, partition_filter={"p": "x:y"}).collect()
+    assert [(r.k, r.p) for r in got] == [(1, "x:y")]
 
 
 def test_column_mapping_rename_is_metadata_only(spark, tbl):
@@ -1519,7 +1608,7 @@ def test_compact_is_not_a_data_change(spark, tbl):
     files = [a[k] for a in acts for k in ("add", "remove") if k in a]
     assert len(files) == 3 and not any(f["dataChange"] for f in files)
     assert tbl.history()[0]["operation"] == "OPTIMIZE"
-    assert deltalog.appended_rows(tbl.path, v, ["k"]) == []
+    assert deltalog.appended_rows(tbl.path, v, tbl.log.snapshot()) == []
     assert sorted(r.k for r in tbl.read(spark).collect()) == [1, 2]
 
 
@@ -1597,16 +1686,59 @@ def test_two_threads_read_the_changes_of_their_own_table(spark, tmp_path):
     assert got == [[expected[0]] * 3, [expected[1]] * 3]
 
 
-@pytest.mark.parametrize("layout", ["partitioned", "column-mapped"])
-def test_changes_refuse_a_table_files_do_not_hold_by_name(spark, tbl, layout):
-    # the readers open each data file alone by logical column name
-    if layout == "partitioned":
-        tbl.write(_df(spark, [(1, "a")]), mode="overwrite", partition_by=["v"])
-    else:
-        tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
-        tbl.rename_column("v", "w")
-    with pytest.raises(ValueError, match="partitioned or column-mapped"):
-        tbl.changes(spark, 0)
+def _feed_equals_read_diff(spark, tbl, v):
+    """Assert ``changes(v, v)`` is the multiset diff of the reads of
+    versions v-1 and v: appeared rows are inserts or post-images and
+    vanished rows deletes or pre-images."""
+    before, after = tbl.read(spark, as_of=v - 1), tbl.read(spark, as_of=v)
+    cols = after.columns
+    before = before.select(cols)
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    feed = tbl.changes(spark, v, v).collect()
+
+    def fed(kinds):
+        return sorted(
+            (tuple(r[c] for c in cols) for r in feed if r.change_type in kinds),
+            key=repr,
+        )
+
+    assert fed(("insert", "update_postimage")) == rows(after.exceptAll(before))
+    assert fed(("delete", "update_preimage")) == rows(before.exceptAll(after))
+    assert {r.version for r in feed} <= {v}
+
+
+@pytest.mark.parametrize(
+    "case", ["partitioned", "column_mapped", "deletion_vectors", "merge_schema"]
+)
+def test_changes_of_a_delete_and_a_merge_equal_the_read_diff(spark, tbl, case):
+    # the change feed reads each commit's files as read() does, on every
+    # layout: a DV DELETE, a copy-on-write DELETE and a MERGE after the
+    # layout's own commits
+    read, _ = _read_case(spark, tbl, case)
+    cols = read().columns
+    tbl.delete_with_dv(spark, F.col("k") == 1)
+    tbl.delete(spark, F.col("k") == 3)
+    tbl.merge(spark, spark.createDataFrame(
+        [(2, "m"), (4, "n")], f"k int, {cols[1]} string"
+    ), on="k")
+    last = tbl.latest_version
+    for v in range(last - 2, last + 1):
+        _feed_equals_read_diff(spark, tbl, v)
+
+
+def test_changes_report_a_dv_delete_of_a_compacted_file(spark, tbl):
+    # an OPTIMIZE's adds say dataChange false; the DV delete that re-adds
+    # one of its files is a data change, so the feed reports it
+    tbl.write(_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
+    tbl.write(_df(spark, [(3, "c")]), mode="append")
+    tbl.compact(spark)
+    v = tbl.delete_with_dv(spark, F.col("k") == 2)
+    assert [tuple(r) for r in tbl.changes(spark, v, v).collect()] == [
+        (v, "delete", 2, "b"),
+    ]
 
 
 def test_add_generated_column_refuses_a_table_with_rows(spark, tbl):
