@@ -10,7 +10,9 @@ oracle comparison is non-trivial (a 0-row pass would match any oracle).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import t
@@ -559,6 +561,52 @@ ORDER BY c_custkey, valid_from
 """
 
 
+def snapshot_rows(
+    source: DataFrame,
+    key: str,
+    changed: Column,
+    stamp: Column,
+    invalidate_hard_deletes: bool,
+) -> Callable[[DataFrame], DataFrame]:
+    """One dbt snapshot run over an SCD2 dimension ``(key, tracked
+    columns..., valid_from, valid_to)``, as a ``DeltaLikeTable.rewrite``
+    transform. The open row (``valid_to`` NULL) of each key whose
+    ``source`` row is ``changed`` (a predicate over the dimension alias
+    ``d`` and the source alias ``n``) is closed at ``stamp``, and a row
+    with the source's tracked values opens at ``stamp``. With
+    ``invalidate_hard_deletes`` (dbt's ``hard_deletes: invalidate``) the
+    open row of each key gone from ``source`` is closed at ``stamp`` too;
+    ``stamp`` must then not read the source. Every other row, closed
+    history included, is carried; the dimension keeps its schema."""
+
+    def run(dim: DataFrame) -> DataFrame:
+        tracked = [c for c in dim.columns if c not in (key, "valid_from", "valid_to")]
+        cur = dim.alias("d")
+        is_open = F.col("d.valid_to").isNull()
+        open_rows = cur.filter(is_open)
+        hits = open_rows.join(source.alias("n"), key).filter(changed)
+        closed_at = stamp.cast(dim.schema["valid_to"].dataType).alias("valid_to")
+        closed = hits.select(
+            key, *[F.col(f"d.{c}").alias(c) for c in tracked], "d.valid_from", closed_at
+        )
+        opened = hits.select(
+            key, *[F.col(f"n.{c}").alias(c) for c in tracked],
+            stamp.cast(dim.schema["valid_from"].dataType).alias("valid_from"),
+            F.lit(None).cast(dim.schema["valid_to"].dataType).alias("valid_to"),
+        )
+        out, touched = closed.unionByName(opened), hits.select(key)
+        if invalidate_hard_deletes:
+            gone = open_rows.join(source.select(key), key, "left_anti")
+            out = out.unionByName(gone.select(key, *tracked, "valid_from", closed_at))
+            touched = touched.unionByName(gone.select(key))
+        carried = cur.filter(~is_open).unionByName(
+            open_rows.join(touched, key, "left_anti")
+        )
+        return carried.select(dim.columns).unionByName(out)
+
+    return run
+
+
 @register("dbt_snapshot_timestamp", _SNAPSHOT_TS_ORACLE)
 def dbt_snapshot_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dbt snapshot, TIMESTAMP strategy — change detection by the
@@ -569,9 +617,9 @@ def dbt_snapshot_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns still produces a version (exactly dbt's documented
     behavior, and why check vs timestamp is a modeling choice). Stamps
     are integers here (epoch-day stand-ins) to stay engine-exact. The
-    snapshot run is one join on the natural key + an anti-join for
-    carried rows — both broadcast-able dim-sized frames; the versioned
-    write goes through the Delta-protocol table like every SCD2 op.
+    snapshot run is ``snapshot_rows``, the rewrite every SCD2 op commits
+    through: a join on the natural key plus anti-joins for carried rows,
+    all dim-sized.
     """
     from ..sources.deltalike import DeltaLikeTable
 
@@ -600,30 +648,10 @@ def dbt_snapshot_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(100) + F.col("c_custkey") % 30)
         ).alias("updated_at"),
     )
-    cur = tbl.read(spark).alias("d")
-    new = snap2.alias("n")
-    changed = cur.join(new, "c_custkey").filter(
-        F.col("d.valid_to").isNull()
-        & (F.col("n.updated_at") > F.col("d.valid_from"))
-    )
-    closed = changed.select(
-        "c_custkey",
-        F.col("d.c_mktsegment").alias("c_mktsegment"),
-        F.col("d.valid_from").alias("valid_from"),
-        F.col("n.updated_at").alias("valid_to"),
-    )
-    opened = changed.select(
-        "c_custkey",
-        F.col("n.c_mktsegment").alias("c_mktsegment"),
-        F.col("n.updated_at").alias("valid_from"),
-        F.lit(None).cast("long").alias("valid_to"),
-    )
-    unchanged = cur.join(
-        changed.select("c_custkey"), "c_custkey", "left_anti"
-    ).select("c_custkey", "c_mktsegment", "valid_from", "valid_to")
-    tbl.write(
-        unchanged.unionByName(closed).unionByName(opened), mode="overwrite"
-    )
+    tbl.rewrite(spark, snapshot_rows(
+        snap2, "c_custkey", F.col("n.updated_at") > F.col("d.valid_from"),
+        F.col("n.updated_at"), invalidate_hard_deletes=False,
+    ), "MERGE")
     return tbl.read(spark).select(
         "c_custkey", "c_mktsegment", "valid_from", "valid_to"
     ).orderBy("c_custkey", "valid_from")
@@ -1129,11 +1157,10 @@ def dbt_snapshot_hard_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ignore` behavior, which `dbt_snapshot_timestamp`/`scd2_snapshot`
     model). Change detection here is the check strategy on
     s_nationkey; run 2's source hard-deletes every 5th supplier and
-    moves every 7th surviving one. Three dim-sized frames (changed /
-    deleted / carried) via one equi-join + two anti-joins on the
-    natural key — all broadcast-able at dim scale, no shuffle wider
-    than the dim itself; versions live in the Delta-protocol table.
-    Integer stamps (100/200) keep the oracle engine-exact.
+    moves every 7th surviving one. The run is ``snapshot_rows`` with
+    ``invalidate_hard_deletes``: one equi-join and anti-joins on the
+    natural key, all dim-sized. Integer stamps (100/200) keep the
+    oracle engine-exact.
     """
     from ..sources.deltalike import DeltaLikeTable
 
@@ -1153,43 +1180,10 @@ def dbt_snapshot_hard_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("s_nationkey"))
         .alias("s_nationkey"),
     )
-    cur = tbl.read(spark).alias("d")
-    new = snap2.alias("n")
-    open_rows = cur.filter(F.col("d.valid_to").isNull())
-    changed = open_rows.join(new, "s_suppkey").filter(
-        F.col("d.s_nationkey") != F.col("n.s_nationkey")
-    )
-    deleted = open_rows.join(
-        new.select("s_suppkey"), "s_suppkey", "left_anti"
-    )
-    closed = changed.select(
-        "s_suppkey",
-        F.col("d.s_nationkey").alias("s_nationkey"),
-        F.col("d.valid_from").alias("valid_from"),
-        F.lit(200).cast("long").alias("valid_to"),
-    )
-    invalidated = deleted.select(
-        "s_suppkey", "s_nationkey", "valid_from",
-        F.lit(200).cast("long").alias("valid_to"),
-    )
-    opened = changed.select(
-        "s_suppkey",
-        F.col("n.s_nationkey").alias("s_nationkey"),
-        F.lit(200).cast("long").alias("valid_from"),
-        F.lit(None).cast("long").alias("valid_to"),
-    )
-    touched = changed.select("s_suppkey").unionByName(
-        deleted.select("s_suppkey")
-    )
-    carried = cur.join(touched, "s_suppkey", "left_anti").select(
-        "s_suppkey", "s_nationkey", "valid_from", "valid_to"
-    )
-    tbl.write(
-        carried.unionByName(closed)
-        .unionByName(invalidated)
-        .unionByName(opened),
-        mode="overwrite",
-    )
+    tbl.rewrite(spark, snapshot_rows(
+        snap2, "s_suppkey", F.col("d.s_nationkey") != F.col("n.s_nationkey"),
+        F.lit(200), invalidate_hard_deletes=True,
+    ), "MERGE")
     return tbl.read(spark).select(
         "s_suppkey", "s_nationkey", "valid_from", "valid_to"
     ).orderBy("s_suppkey", "valid_from")

@@ -211,28 +211,12 @@ def scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl.write(dim, mode="overwrite")
 
     # snapshot run: close changed current rows, insert new versions.
-    cur = tbl.read(spark).alias("d")
-    new = snap2.alias("n")
-    changed = cur.join(new, "c_custkey").filter(
-        F.col("d.valid_to").isNull()
-        & (F.col("d.c_mktsegment") != F.col("n.c_mktsegment"))
-    )
-    closed = changed.select(
-        "c_custkey",
-        F.col("d.c_mktsegment").alias("c_mktsegment"),
-        F.col("d.valid_from").alias("valid_from"),
-        F.lit(2).alias("valid_to"),
-    )
-    opened = changed.select(
-        "c_custkey",
-        F.col("n.c_mktsegment").alias("c_mktsegment"),
-        F.lit(2).alias("valid_from"),
-        F.lit(None).cast("int").alias("valid_to"),
-    )
-    unchanged = cur.join(
-        changed.select("c_custkey"), "c_custkey", "left_anti"
-    ).select("c_custkey", "c_mktsegment", "valid_from", "valid_to")
-    tbl.write(unchanged.unionByName(closed).unionByName(opened), mode="overwrite")
+    from .dbt_ops import snapshot_rows  # here: dbt_ops registers after us
+
+    tbl.rewrite(spark, snapshot_rows(
+        snap2, "c_custkey", F.col("d.c_mktsegment") != F.col("n.c_mktsegment"),
+        F.lit(2), invalidate_hard_deletes=False,
+    ), "MERGE")
     return tbl.read(spark)
 
 
@@ -1167,9 +1151,10 @@ def delta_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays time-travelable, rows where the predicate is NULL are left
     untouched (SQL WHERE semantics, same discipline as DELETE). The
     rewrite itself is a single projection with CASE — no join, no
-    shuffle; at 100 TB the commit rewrites only the files whose stats
-    overlap the predicate (data-skipping bounded), which is exactly
-    how the engine-native UPDATE scopes its file set.
+    shuffle — committed through ``DeltaLikeTable.rewrite``, which
+    rewrites every live file. Rewriting only the files whose stats
+    overlap the predicate is ROADMAP item 4(a): one file selection in
+    ``_rewrite`` for every read-modify-write.
     """
     tbl = DeltaLikeTable(workdir(sf_dir, "delta_update"))
     c = t(spark, sf_dir, "customer").select(
@@ -1188,14 +1173,13 @@ def delta_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ELSE (CAST(ROUND(acctbal * 100) AS BIGINT) * 110 + 50) div 100 "
         "END AS DOUBLE) / 100"
     )
-    updated = tbl.read(spark).select(
+    tbl.rewrite(spark, lambda cur: cur.select(
         "c_custkey",
         F.when(cond, F.lit("BUILDING-PRIORITY"))
         .otherwise(F.col("c_mktsegment"))
         .alias("c_mktsegment"),
         F.when(cond, uplift).otherwise(F.col("acctbal")).alias("acctbal"),
-    )
-    tbl.write(updated, mode="overwrite", operation="UPDATE")
+    ), "UPDATE")
     return tbl.read(spark).select(
         "c_custkey", "c_mktsegment", "acctbal"
     ).orderBy("c_custkey")
@@ -1424,8 +1408,8 @@ def delta_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _replace_where(spark: SparkSession, tbl: DeltaLikeTable, pred, fresh) -> int:
-    """Commit ``tbl``'s rows outside ``pred`` plus ``fresh`` as one
-    overwrite; returns the version. The replaceWhere contract rejects
+    """Rewrite ``tbl`` as its rows outside ``pred`` plus ``fresh``;
+    returns the version. The replaceWhere contract rejects
     data that violates the predicate: a raising Filter on ``fresh`` that
     the write job evaluates, as ``DeltaLikeTable._with_checks`` does, so
     the rows checked are the rows written and a violation commits
@@ -1434,10 +1418,11 @@ def _replace_where(spark: SparkSession, tbl: DeltaLikeTable, pred, fresh) -> int
     checked = fresh.filter(
         F.when(~pred.eqNullSafe(True), F.raise_error(msg)).otherwise(F.lit(True))
     )
-    kept = tbl.read(spark).filter(~pred.eqNullSafe(True))
     try:
-        return tbl.write(
-            kept.unionByName(checked), mode="overwrite", operation="REPLACE WHERE"
+        return tbl.rewrite(
+            spark,
+            lambda cur: cur.filter(~pred.eqNullSafe(True)).unionByName(checked),
+            "REPLACE WHERE",
         )
     except Exception as e:
         if msg not in str(e):

@@ -880,13 +880,14 @@ def stream_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFram
     lambda-architecture staple (raw archive + serving aggregate from a
     single ingestion) and the place exactly-once quietly breaks: the
     two writes are NOT one transaction, so each sink must dedup
-    independently. Sink A appends raw rows txn-stamped per batch; sink
-    B MERGEs per-key running counts. A crash between A's write and B's
-    write replays the batch — A's high-water mark skips it, B's merge
-    re-derives the same counts — so both sinks converge without a
-    cross-sink transaction. The op drains the staged event replay,
-    then proves sink A's aggregate, sink B's serving table, and the
-    batch truth all agree (the consistency the pattern promises).
+    independently. Sink A appends raw rows txn-stamped per batch, so
+    its high-water mark skips a replayed batch. Sink B adds each
+    batch's per-key counts to the stored ones in one MERGE rewrite and
+    records no ``txn``: a batch replayed after a crash between B's
+    commit and the stream's offset commit is counted twice (ROADMAP
+    item 2(a)). The op drains the staged event replay, then proves
+    sink A's aggregate, sink B's serving table, and the batch truth all
+    agree (the consistency the pattern promises when no batch replays).
     """
     from ..sources.deltalike import DeltaLikeTable
     from ..sources.workspace import workdir
@@ -905,20 +906,15 @@ def stream_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFram
         if agg_sink.latest_version < 0:
             agg_sink.write(counts, mode="overwrite")
         else:
-            cur = agg_sink.read(rows.sparkSession).withColumnRenamed(
-                "n", "n_old"
-            )
-            merged = (
-                counts.join(cur, "event_type", "full_outer")
-                .select(
+            agg_sink.rewrite(rows.sparkSession, lambda cur: (
+                counts.join(
+                    cur.withColumnRenamed("n", "n_old"), "event_type", "full_outer"
+                ).select(
                     "event_type",
-                    (
-                        F.coalesce("n", F.lit(0))
-                        + F.coalesce("n_old", F.lit(0))
-                    ).alias("n"),
+                    (F.coalesce("n", F.lit(0)) + F.coalesce("n_old", F.lit(0)))
+                    .alias("n"),
                 )
-            )
-            agg_sink.write(merged, mode="overwrite", operation="MERGE")
+            ), "MERGE")
 
     src, ckpt = stage_event_files(spark, sf_dir, "msink")
     replay(

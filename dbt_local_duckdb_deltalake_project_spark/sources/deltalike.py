@@ -13,9 +13,10 @@ Capabilities the stack exercises:
 - append / overwrite writes (``write``)
 - read as of any version (``read(as_of=...)`` — time travel, by
   replaying add/remove actions up to that commit)
-- DELETE, MERGE upsert and OPTIMIZE-style compaction: one copy-on-write
-  rewrite (``_rewrite``) that commits removes for exactly the files it
-  read, against the snapshot it read them from
+- DELETE, MERGE upsert, every other read-modify-write (``rewrite``) and
+  OPTIMIZE-style compaction: one copy-on-write rewrite (``_rewrite``)
+  that commits removes for exactly the files it read, against the
+  snapshot it read them from
 - VACUUM by Delta's keep-set rule: list
   the table root, delete what no version inside the retention window
   references (crash orphans and ``.tmp-*`` staging included); at
@@ -64,6 +65,7 @@ from . import deltalog
 from .deltalog import (
     CHECKPOINT_INTERVAL,  # noqa: F401 — re-exported for callers of this module
     COLUMN_MAPPING_KEY,
+    GENERATION_EXPRESSION_KEY,
     PHYSICAL_NAME_KEY,
     DeltaLog,
     Snapshot,
@@ -638,7 +640,7 @@ class DeltaLikeTable:
             raise ValueError(f"column {name!r} already exists")
         sj["fields"].append(  # keys in the order Spark's schema JSON has
             {
-                "metadata": {"delta.generationExpression": expr_sql},
+                "metadata": {GENERATION_EXPRESSION_KEY: expr_sql},
                 "name": name,
                 "nullable": True,
                 "type": dtype,
@@ -894,20 +896,15 @@ class DeltaLikeTable:
 
     def _scan(self, spark: SparkSession, snap: Snapshot, adds: list[dict]) -> DataFrame:
         """The rows of ``adds``, live adds of ``snap``, under its log
-        schema: deletion vectors masked, column mapping applied and
-        partition columns re-materialized (last, where a partitioned file
-        scan puts them). No adds reads as an empty frame with that
-        schema."""
+        schema and in its column order: deletion vectors masked, column
+        mapping applied and partition columns re-materialized. No adds
+        reads as an empty frame with that schema."""
         if snap.version < 0:
             raise ValueError(f"empty table at {self.path}")
         if snap.metadata is None:
             raise ValueError(f"no metaData action in the log of {self.path}")
         if not adds:
-            schema, parts = _schema(snap), snap.metadata.get("partitionColumns") or []
-            return spark.createDataFrame([], StructType(
-                [f for f in schema.fields if f.name not in parts]
-                + [schema[p] for p in parts]
-            ))
+            return spark.createDataFrame([], _schema(snap))
         files = [os.path.join(self.path, a["path"]) for a in adds]
         reader = spark.read.schema(_read_schema(snap))
         if any(a.get("partitionValues") for a in adds):
@@ -916,10 +913,17 @@ class DeltaLikeTable:
         dv_adds = [a for a in adds if a.get("deletionVector")]
         if dv_adds:
             df = self._apply_deletion_vectors(spark, df, dv_adds)
-        if snap.mapping:
-            # physical→logical re-alias: a projection Catalyst collapses
-            # into the scan — column pruning still reaches the parquet reader
-            df = df.select([F.col(p).alias(l) for l, p in snap.mapping])
+        phys = dict(snap.mapping or [])
+        if phys or snap.metadata.get("partitionColumns"):
+            # physical names back to logical ones, partition columns back
+            # in their schema place (the file scan puts them last): a
+            # projection Catalyst collapses into the scan, so column
+            # pruning still reaches the parquet reader. Skipped when no
+            # column moves: its py4j calls cost about 3 ms a column (4 vCPU)
+            df = df.select([
+                F.col(f"`{phys.get(f['name'], f['name'])}`").alias(f["name"])
+                for f in snap.fields
+            ])
         return df
 
     def _apply_deletion_vectors(
@@ -961,16 +965,32 @@ class DeltaLikeTable:
         operation: str,
         data_change: bool = True,
     ) -> int:
-        """Copy-on-write, the one primitive under DELETE, MERGE and
-        OPTIMIZE: read exactly ``files`` (adds of ``snap``) as ``read``
-        does, stage ``transform`` of their rows under the table's
-        partitioning, and commit, against ``snap``, removes for exactly
-        those files plus the new adds. A commit that lands after ``snap``
-        keeps its files. Returns the committed version."""
-        staged = self._stage(
-            transform(self._scan(spark, snap, files)), snap, data_change=data_change
-        )
+        """Copy-on-write, the one primitive under every DML and OPTIMIZE:
+        read exactly ``files`` (adds of ``snap``) as ``read`` does, stage
+        ``transform`` of their rows under the table's partitioning, and
+        commit, against ``snap``, removes for exactly those files plus the
+        new adds. A commit that lands after ``snap`` keeps its files. The
+        rows carry each generated column's expression in the column's
+        metadata, as the log schema does. Returns the committed version."""
+        rows = self._scan(spark, snap, files)
+        for name, expr in snap.generated_columns.items():
+            rows = rows.withMetadata(name, {GENERATION_EXPRESSION_KEY: expr})
+        staged = self._stage(transform(rows), snap, data_change=data_change)
         return self.log.commit(_removes(files, data_change) + staged, operation, snap)
+
+    def rewrite(
+        self,
+        spark: SparkSession,
+        transform: Callable[[DataFrame], DataFrame],
+        operation: str,
+    ) -> int:
+        """Read-modify-write of the whole table, the one path of DELETE,
+        UPDATE, MERGE, replaceWhere and SCD2 snapshots: the table becomes
+        ``transform`` of the rows of one snapshot, committed against that
+        snapshot with removes for exactly the files it read (``_rewrite``).
+        Returns the committed version."""
+        snap = self.log.snapshot()
+        return self._rewrite(spark, snap, list(snap.adds.values()), transform, operation)
 
     def delete(self, spark: SparkSession, condition) -> DataFrame:
         """Delta ``DELETE WHERE condition``: rewrite the live files
@@ -979,10 +999,8 @@ class DeltaLikeTable:
         """
         # Delta DELETE removes rows where the predicate is TRUE; rows where
         # it evaluates NULL are KEPT (plain ~condition would drop them).
-        snap = self.log.snapshot()
-        v = self._rewrite(
-            spark, snap, list(snap.adds.values()),
-            lambda df: df.filter(~condition.eqNullSafe(True)), "DELETE",
+        v = self.rewrite(
+            spark, lambda df: df.filter(~condition.eqNullSafe(True)), "DELETE"
         )
         return self.read(spark, as_of=v)
 
@@ -1182,13 +1200,12 @@ class DeltaLikeTable:
         A generated column the source does not carry is left out of the
         merged rows, so the write computes it for every row, as for any
         write; the table's column order is kept."""
-        snap = self.log.snapshot()
-        generated = snap.generated_columns
 
         def upsert(target: DataFrame) -> DataFrame:
             cols = [
-                c for c in target.columns
-                if c in source.columns or c not in generated
+                f.name for f in target.schema.fields
+                if f.name in source.columns
+                or GENERATION_EXPRESSION_KEY not in f.metadata
             ]
             evolved = [
                 c for c in source.columns if c not in cols and c != on
@@ -1227,5 +1244,4 @@ class DeltaLikeTable:
                 joined = joined.filter(in_s)
             return joined.select(*out_cols)
 
-        v = self._rewrite(spark, snap, list(snap.adds.values()), upsert, "MERGE")
-        return self.read(spark, as_of=v)
+        return self.read(spark, as_of=self.rewrite(spark, upsert, "MERGE"))

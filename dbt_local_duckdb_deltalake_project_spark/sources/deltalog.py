@@ -50,6 +50,9 @@ CHECKPOINT_INTERVAL = 10
 COLUMN_MAPPING_KEY = "delta.columnMapping.mode"
 PHYSICAL_NAME_KEY = "delta.columnMapping.physicalName"
 
+# A generated column keeps its expression in its field's metadata.
+GENERATION_EXPRESSION_KEY = "delta.generationExpression"
+
 # Deletion vectors (PROTOCOL.md): a descriptor of at most this many
 # deleted rows is stored inline in its action (storageType "i", an ascii85
 # payload); a larger one names a sidecar file under the table root
@@ -184,9 +187,9 @@ class Snapshot:
     @property
     def generated_columns(self) -> dict[str, str]:
         return {
-            f["name"]: f["metadata"]["delta.generationExpression"]
+            f["name"]: f["metadata"][GENERATION_EXPRESSION_KEY]
             for f in self.fields
-            if (f.get("metadata") or {}).get("delta.generationExpression")
+            if (f.get("metadata") or {}).get(GENERATION_EXPRESSION_KEY)
         }
 
     @property

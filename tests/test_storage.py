@@ -1507,12 +1507,47 @@ def test_concurrent_writes_all_stage_timestamp_micros(spark, tbl, monkeypatch):
 
 # -- one rewrite primitive under DELETE, MERGE and OPTIMIZE ------------------
 
+def _dim(spark, rows):
+    """``(k, v)`` rows as an SCD2 dimension: each row open since 1."""
+    return spark.createDataFrame(
+        [(k, v, 1, None) for k, v in rows],
+        "k int, v string, valid_from int, valid_to int",
+    )
+
+
+def _replace_where(spark, tbl):
+    from dbt_local_duckdb_deltalake_project_spark.operators.delta_ops import (
+        _replace_where,
+    )
+
+    return _replace_where(spark, tbl, F.col("k") == 2, _dim(spark, [(2, "z")]))
+
+
+def _snapshot(spark, tbl):
+    # k=1 changes and k=3 is gone from the source: both open rows close
+    from dbt_local_duckdb_deltalake_project_spark.operators.dbt_ops import (
+        snapshot_rows,
+    )
+
+    source = _df(spark, [(1, "z"), (2, "b")])
+    return tbl.rewrite(spark, snapshot_rows(
+        source, "k", F.col("d.v") != F.col("n.v"), F.lit(2),
+        invalidate_hard_deletes=True,
+    ), "MERGE")
+
+
+# each read-modify-write, and the open rows it changes (None: closed or gone)
 _REWRITES = {
-    "compact": lambda spark, tbl: tbl.compact(spark),
-    "delete": lambda spark, tbl: tbl.delete(spark, F.col("k") == 2),
-    "merge": lambda spark, tbl: tbl.merge(
+    "compact": (lambda spark, tbl: tbl.compact(spark), {}),
+    "delete": (lambda spark, tbl: tbl.delete(spark, F.col("k") == 2), {2: None}),
+    "merge": (lambda spark, tbl: tbl.merge(
         spark, spark.createDataFrame([(1, "z")], "k int, v string"), on="k"
-    ),
+    ), {1: "z"}),
+    "replace_where": (_replace_where, {2: "z"}),
+    "snapshot": (_snapshot, {1: "z", 3: None}),
+    "update": (lambda spark, tbl: tbl.rewrite(spark, lambda d: d.withColumn(
+        "v", F.when(F.col("k") == 1, "z").otherwise(F.col("v"))
+    ), "UPDATE"), {1: "z"}),
 }
 
 
@@ -1525,7 +1560,7 @@ def test_rewrite_keeps_a_commit_that_lands_after_its_read(
     # append survives its commit
     from dbt_local_duckdb_deltalake_project_spark.sources.deltalog import DeltaLog
 
-    tbl.write(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), mode="overwrite")
+    tbl.write(_dim(spark, [(1, "a"), (2, "b"), (3, "c")]), mode="overwrite")
     real_snapshot = DeltaLog.snapshot
     fired = []
 
@@ -1533,29 +1568,27 @@ def test_rewrite_keeps_a_commit_that_lands_after_its_read(
         snap = real_snapshot(self, *a, **k)
         if self is tbl.log and not fired:
             fired.append(snap.version)
-            DeltaLikeTable(tbl.path).write(_df(spark, [(4, "d")]), mode="append")
+            DeltaLikeTable(tbl.path).write(_dim(spark, [(4, "d")]), mode="append")
         return snap
 
     monkeypatch.setattr(DeltaLog, "snapshot", snapshot)
-    _REWRITES[op](spark, tbl)
+    run, changed = _REWRITES[op]
+    run(spark, tbl)
     assert fired == [0] and tbl.latest_version == 2
-    got = {r.k: r.v for r in tbl.read(spark).collect()}
-    expect = {1: "a", 2: "b", 3: "c", 4: "d"}
-    if op == "delete":
-        del expect[2]
-    if op == "merge":
-        expect[1] = "z"
-    assert got == expect
+    got = {r.k: r.v for r in tbl.read(spark).filter("valid_to IS NULL").collect()}
+    expect = {1: "a", 2: "b", 3: "c", 4: "d", **changed}
+    assert got == {k: v for k, v in expect.items() if v is not None}
     assert tbl.history()[0]["readVersion"] == 0
+    if op == "snapshot":  # the closed rows keep their values
+        closed = tbl.read(spark).filter("valid_to IS NOT NULL").collect()
+        assert sorted(map(tuple, closed)) == [(1, "a", 1, 2), (3, "c", 1, 2)]
 
 
 @pytest.mark.parametrize("op", sorted(_REWRITES))
 def test_rewrite_keeps_the_table_partitioning(spark, tbl, op):
-    df = spark.createDataFrame(
-        [(1, "p1"), (2, "p1"), (3, "p1"), (4, "p2")], "k int, v string"
-    )
+    df = _dim(spark, [(1, "p1"), (2, "p1"), (3, "p1"), (4, "p2")])
     tbl.write(df, mode="overwrite", partition_by=["v"])
-    _REWRITES[op](spark, tbl)
+    _REWRITES[op][0](spark, tbl)
     assert tbl.log.snapshot().metadata["partitionColumns"] == ["v"]
     assert all(a["partitionValues"] for a in tbl.live_files())
     got = sorted(
@@ -1565,8 +1598,49 @@ def test_rewrite_keeps_the_table_partitioning(spark, tbl, op):
         "compact": [(1, "p1"), (2, "p1"), (3, "p1")],
         "delete": [(1, "p1"), (3, "p1")],
         "merge": [(2, "p1"), (3, "p1")],  # k=1 moved to partition "z"
+        "replace_where": [(1, "p1"), (3, "p1")],  # k=2 moved to "z"
+        "snapshot": [(1, "p1"), (2, "p1"), (3, "p1")],  # closed rows stay
+        "update": [(2, "p1"), (3, "p1")],
     }[op]
     assert got == expect
+
+
+def test_snapshot_rows_keep_the_history_of_a_key_that_changes_again(spark, tbl):
+    # a second snapshot run closes only the open row of a changed key:
+    # the row the first run closed is carried
+    from dbt_local_duckdb_deltalake_project_spark.operators.dbt_ops import (
+        snapshot_rows,
+    )
+
+    tbl.write(_dim(spark, [(1, "a"), (2, "b")]), mode="overwrite")
+    for stamp, v in ((2, "x"), (3, "y")):
+        tbl.rewrite(spark, snapshot_rows(
+            _df(spark, [(1, v), (2, "b")]), "k", F.col("d.v") != F.col("n.v"),
+            F.lit(stamp), invalidate_hard_deletes=False,
+        ), "MERGE")
+    assert sorted(map(tuple, tbl.read(spark).collect()), key=str) == [
+        (1, "a", 1, 2), (1, "x", 2, 3), (1, "y", 3, None), (2, "b", 1, None),
+    ]
+
+
+def test_a_partitioned_table_reads_in_its_schema_order(spark, tbl):
+    # the partition column keeps its place in the log schema: a read, an
+    # empty read, the change feed and a MERGE all see (p, k), so the
+    # MERGE commits no metaData action
+    import json
+    import os
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "p string, k int")
+    tbl.write(df, mode="overwrite", partition_by=["p"])
+    assert tbl.read(spark).columns == ["p", "k"]
+    assert tbl.read(spark, partition_filter={"p": "c"}).columns == ["p", "k"]
+    assert tbl.changes(spark, 0).columns == ["version", "change_type", "p", "k"]
+    source = spark.createDataFrame([("c", 1)], "p string, k int")
+    merged = tbl.merge(spark, source, on="k")
+    with open(os.path.join(tbl.log.log_dir, f"{tbl.latest_version:020d}.json")) as f:
+        assert not any("metaData" in json.loads(ln) for ln in f)
+    assert merged.columns == ["p", "k"]
+    assert sorted(map(tuple, merged.collect())) == [("b", 2), ("c", 1)]
 
 
 def test_compact_keeps_a_renamed_partition_column(spark, tbl):
