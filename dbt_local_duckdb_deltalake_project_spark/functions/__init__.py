@@ -1,1 +1,9 @@
-from .deterministic import DEC, davg, dsum, sql_davg, sql_dsum  # noqa: F401
+from .deterministic import (  # noqa: F401
+    DEC,
+    davg,
+    dsum,
+    micros,
+    sql_davg,
+    sql_dsum,
+    sql_micros,
+)

@@ -7,35 +7,57 @@ a naive SUM hash-mismatches the oracle run-to-run.
 Solution: route every multi-row accumulation through EXACT integer
 arithmetic, identically on both sides. All aggregated measures in the
 fixtures are money-like — quantized to ≤6 decimal places (2-dp columns
-and products of up to three 2-dp factors) — so scaling by 10^6 and
-rounding yields an exact integer on both engines:
+and products of up to three 2-dp factors) — so each row becomes an
+exact integer count of micros, and this module is the only code that
+spells that encoding:
 
-    Spark : CAST(SUM(CAST(ROUND(x * 1e6) AS LONG)) AS DOUBLE) / 1e6
-    DuckDB: CAST(SUM(CAST(ROUND(x * 1000000) AS BIGINT)) AS DOUBLE) / 1000000
+    micros(x) = FLOOR(x * 10^6 + 0.5)     (Spark: :func:`micros`,
+                                           both engines: :func:`sql_micros`)
 
-Why each step is bit-identical:
+Why FLOOR and not ROUND: x·10^6 lies within ~1e-4 of an integer for a
+≤6-dp value, where FLOOR(·+0.5) and ROUND return the same integer. But
+both engines evaluate FLOOR(x*1e6+0.5) as the same two IEEE operations
+and a floor, so they agree by construction, and Spark's FLOOR of a
+double is a primitive ``Math.floor``. Spark's ROUND on a double instead
+builds a ``java.math.BigDecimal`` per row (HALF_UP on the shortest
+decimal string, while DuckDB rounds the binary value): a JFR profile
+of the analyst ops put a quarter of executor samples in BigDecimal
+frames, and at an exact half it is the Final-ROUND tie hazard. The
+two encodings differ only at a negative exact half (-k.5 → -k here,
+-(k+1) under ROUND), which a ≤6-dp money value never produces.
+
+Why each summed result is bit-identical:
 - per-row double chains (x*y, 1-d, …) are IEEE-deterministic → the same
   double bits in both engines;
-- x·10^6 lands within ~1e-9·|x| of an integer (the true value is
-  ≤6-dp-quantized), so ROUND — despite the engines' different rounding
-  rules at exact .5 boundaries — returns the same integer;
 - integer SUM is exact and order-insensitive (DuckDB widens to HUGEINT;
   Spark errors loudly on long overflow under ANSI — see bound below);
 - int→double and the final /10^6 are IEEE-rounded identically.
 
-Performance: long sums stay on the primitive-type vectorized aggregate
-path (~2.5× faster than DECIMAL(38,6), which falls back to BigDecimal
-buffers — measured 0.48s vs 1.19s per sf0.1 lineitem aggregation).
+Bounds: per row, x·10^6 stays within ~0.1 of its integer while
+|x| ≤ 10^8, for products of up to three 2-dp factors
+(tests/test_money_encoding.py checks it in DuckDB and in the Spark
+float chain). Per sum, exactness holds while |Σ x·10^6| < 2^63, i.e.
+group sums below ~9.2e12 in measure units, with ~5 orders of magnitude
+of headroom per group at this project's scales. A deployment beyond it
+changes the body of :func:`dsum`/:func:`sql_dsum` (e.g. to a
+DECIMAL(38,6) accumulator) and nothing else.
 
-Bound: exactness holds while |Σ x·10^6| < 2^63, i.e. group sums below
-~9.2e12 in measure units. That covers this project's scales with ~5
-orders of magnitude of headroom per group. For deployments beyond it,
-``dsum_wide`` keeps the DECIMAL(38,6) accumulator (unbounded, slower) —
-the swap is one symbol because every query goes through these helpers.
+Accumulators that can pass 2^63 micros stay wide and do not use this
+encoding:
+- power sums of measures: Σx², Σy², Σxy in ``agg_stats`` and
+  ``agg_corr_covar`` (``SUM(CAST(x * y AS DECIMAL(38,6)))``, the
+  :data:`DEC` type), Σv²..Σv⁴ of cents in ``agg_higher_moments``;
+- cross products and scaled numerators of exact integer sums
+  (n·Σxy − Σx·Σy, num²·10^6) in the regression, correlation and ratio
+  ops of ``aggregates``, ``graph_ops``, ``llm_ops`` and ``windows``:
+  ``DECIMAL(38,0)`` in Spark, HUGEINT in DuckDB;
+- ``llm_ops``' embedding dot products and norms: ``DEC12``,
+  ``DECIMAL(38,12)``.
 
-Deliberately NO final ROUND anywhere: the two engines round doubles
+Deliberately NO final ROUND of a sum: the two engines round doubles
 differently at representation boundaries, and an unrounded double that
-is bit-identical on both sides always hashes identically.
+is bit-identical on both sides always hashes identically. A final
+per-group ``ROUND(v, k)`` of an output column is not this encoding.
 """
 
 from __future__ import annotations
@@ -47,11 +69,20 @@ DEC = "decimal(38,6)"
 _S = 1_000_000  # 10^6 scale: exact for ≤6-dp-quantized measures
 
 
+def micros(col: Column) -> Column:
+    """A ≤6-dp double as exact integer micros (BIGINT)."""
+    return F.floor(col * float(_S) + 0.5)
+
+
+def sql_micros(expr: str) -> str:
+    """SQL twin of :func:`micros`: the same text runs in Spark and DuckDB
+    (DuckDB's FLOOR returns DOUBLE, hence the cast)."""
+    return f"CAST(FLOOR(({expr}) * {_S} + 0.5) AS BIGINT)"
+
+
 def dsum(col: Column, alias: str) -> Column:
     """Order-insensitive SUM of a ≤6-dp-quantized double → double (exact)."""
-    return (
-        F.sum(F.round(col * _S).cast("long")).cast("double") / F.lit(float(_S))
-    ).alias(alias)
+    return (F.sum(micros(col)).cast("double") / F.lit(float(_S))).alias(alias)
 
 
 def davg(col: Column, alias: str) -> Column:
@@ -61,31 +92,17 @@ def davg(col: Column, alias: str) -> Column:
     quotient is bit-identical; no rounding.
     """
     return (
-        F.sum(F.round(col * _S).cast("long")).cast("double")
-        / (F.lit(float(_S)) * F.count(col))
+        F.sum(micros(col)).cast("double") / (F.lit(float(_S)) * F.count(col))
     ).alias(alias)
 
 
-def dsum_wide(col: Column, alias: str) -> Column:
-    """DECIMAL(38,6) variant: unbounded magnitude, ~2.5× slower. Use when
-    a group's sum can exceed ~9.2e12 measure units."""
-    return F.sum(col.cast(DEC)).cast("double").alias(alias)
-
-
 def sql_dsum(expr: str, alias: str) -> str:
-    """DuckDB-side twin of :func:`dsum` (same text works in Spark SQL)."""
-    return (
-        f"CAST(SUM(CAST(ROUND(({expr}) * 1000000) AS BIGINT)) AS DOUBLE)"
-        f" / 1000000 AS {alias}"
-    )
+    """SQL twin of :func:`dsum` (the same text runs in Spark and DuckDB)."""
+    return f"CAST(SUM({sql_micros(expr)}) AS DOUBLE) / {_S} AS {alias}"
 
 
 def sql_davg(expr: str, alias: str) -> str:
     return (
-        f"CAST(SUM(CAST(ROUND(({expr}) * 1000000) AS BIGINT)) AS DOUBLE)"
-        f" / (1000000 * COUNT({expr})) AS {alias}"
+        f"CAST(SUM({sql_micros(expr)}) AS DOUBLE)"
+        f" / ({_S} * COUNT({expr})) AS {alias}"
     )
-
-
-def sql_dsum_wide(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE) AS {alias}"

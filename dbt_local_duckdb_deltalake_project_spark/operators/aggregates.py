@@ -17,7 +17,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import sql, t
-from ..functions.deterministic import DEC, davg, dsum, sql_davg, sql_dsum
+from ..functions.deterministic import (
+    DEC,
+    davg,
+    dsum,
+    micros,
+    sql_davg,
+    sql_dsum,
+    sql_micros,
+)
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -212,19 +220,20 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_stats — stddev/variance/corr/covar via exact decimal power sums.
+# agg_stats — stddev/variance/corr/covar via exact power sums.
 # Native stddev/corr use Welford-style merges whose result depends on
 # partition order (nondeterministic run-to-run); computing from exact
-# decimal sums of x, x², y, y², xy makes the result bit-stable and
-# engine-portable. Same single shuffle as the native aggregate.
+# sums of x, y (micros) and x², y², xy (wide decimal: they can pass
+# 2^63 micros) makes the result bit-stable and engine-portable. Same
+# single shuffle as the native aggregate.
 # ---------------------------------------------------------------------------
 
-_STATS_ORACLE = """
+_STATS_ORACLE = f"""
 WITH s AS (
   SELECT
     c_mktsegment,
     COUNT(*) AS n,
-    SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS sx,
+    {sql_dsum("c_acctbal", "sx")},
     SUM(CAST(c_acctbal * c_acctbal AS DECIMAL(38,6))) AS sxx
   FROM customer GROUP BY c_mktsegment
 )
@@ -245,11 +254,11 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.col("c_acctbal")
     grouped = c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(x.cast(DEC)).alias("sx"),
+        dsum(x, "sx"),
         F.sum((x * x).cast(DEC)).alias("sxx"),
     )
     n = F.col("n")
-    sx = F.col("sx").cast("double")
+    sx = F.col("sx")
     sxx = F.col("sxx").cast("double")
     var = (sxx - sx * sx / n) / (n - 1)
     return grouped.select(
@@ -260,12 +269,12 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-_CORR_ORACLE = """
+_CORR_ORACLE = f"""
 WITH s AS (
   SELECT
     COUNT(*) AS n,
-    SUM(CAST(l_quantity AS DECIMAL(38,6))) AS sx,
-    SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS sy,
+    {sql_dsum("l_quantity", "sx")},
+    {sql_dsum("l_extendedprice", "sy")},
     SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6))) AS sxx,
     SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,6))) AS syy,
     SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6))) AS sxy
@@ -288,14 +297,14 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     s = li.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(x.cast(DEC)).alias("sx"),
-        F.sum(y.cast(DEC)).alias("sy"),
+        dsum(x, "sx"),
+        dsum(y, "sy"),
         F.sum((x * x).cast(DEC)).alias("sxx"),
         F.sum((y * y).cast(DEC)).alias("syy"),
         F.sum((x * y).cast(DEC)).alias("sxy"),
     )
     n = F.col("n")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
+    sx, sy = F.col("sx"), F.col("sy")
     sxx, syy = F.col("sxx").cast("double"), F.col("syy").cast("double")
     sxy = F.col("sxy").cast("double")
     corr = (n * sxy - sx * sy) / (
@@ -727,14 +736,14 @@ def agg_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MODE_MEDIAN_ORACLE = """
+_MODE_MEDIAN_ORACLE = f"""
 SELECT l_returnflag, l_linestatus,
        mode(CASE WHEN l_quantity <= 35 THEN 'standard' ELSE 'bulk' END)
          AS mode_class,
        CAST(mode(CAST(l_quantity <= 35 AS INTEGER)) AS INTEGER)
          AS mode_class_flag,
        median(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS median_qty_cents,
-       median(CAST(ROUND(l_extendedprice * 1000000) AS BIGINT))
+       median({sql_micros("l_extendedprice")})
          AS median_price_micros,
        COUNT(*) AS n
 FROM lineitem
@@ -777,7 +786,7 @@ def agg_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("l_quantity") * 100).cast("long")
             ).alias("median_qty_cents"),
             F.median(
-                F.round(F.col("l_extendedprice") * 1_000_000).cast("long")
+                micros(F.col("l_extendedprice"))
             ).alias("median_price_micros"),
             F.count(F.lit(1)).alias("n"),
         )
@@ -833,12 +842,12 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parts.join(orders, "l_returnflag").orderBy("l_returnflag")
 
 
-_HISTOGRAM_ORACLE = """
+_HISTOGRAM_ORACLE = f"""
 SELECT CAST(FLOOR((l_quantity - 1) / 5.0) AS BIGINT) + 1 AS bucket,
        CAST(1.0 + (CAST(FLOOR((l_quantity - 1) / 5.0) AS BIGINT)) * 5.0
             AS DOUBLE) AS bucket_lo,
        COUNT(*) AS n,
-       CAST(SUM(CAST(ROUND(l_extendedprice * 1000000) AS BIGINT))
+       CAST(SUM({sql_micros("l_extendedprice")})
             AS DOUBLE) / 1000000 AS revenue
 FROM lineitem
 GROUP BY 1, 2
@@ -868,7 +877,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
-                F.round(F.col("l_extendedprice") * 1_000_000).cast("long")
+                micros(F.col("l_extendedprice"))
             ).cast("double").alias("revenue"),
         )
         .withColumn("revenue", F.col("revenue") / 1_000_000)
@@ -1217,7 +1226,8 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     kurtosis() accumulate running central moments in partition order
     (engine- and order-dependent bits); this uses raw power sums
     instead: Σv..Σv⁴ as EXACT wide-decimal integers (v⁴ of a cent
-    value overflows BIGINT — the dsum_wide rationale), converted once
+    value overflows BIGINT — a wide accumulator in the sense of
+    functions/deterministic.py), converted once
     to double and pushed through an IDENTICAL arithmetic chain on both
     engines. Decimal aggregation is the documented ~2.5× slower path —
     paid only here, where longs cannot hold the moment. One scan,
@@ -1435,7 +1445,7 @@ def agg_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the period boundary, exact cents), then pooled moments and per-arm
     sums — two rows per arm over the wire. The cross-moment sums Σxy /
     Σx² and the θ numerator n·Σxy − Σx·Σy accumulate as EXACT
-    DECIMAL(38,0) (the dsum_wide/agg_higher_moments rationale: per-user
+    DECIMAL(38,0) (the agg_higher_moments wide-accumulator rationale: per-user
     x grows linearly with events-per-user, so x·y grows quadratically
     and the n-scaled numerator overflows BIGINT around 10× the sf0.1
     volume — caught by the r10 10× full differential, ARITHMETIC_
@@ -1616,15 +1626,15 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GINI_ORACLE = """
+_GINI_ORACLE = f"""
 WITH x AS (
   SELECT c_mktsegment,
-         CAST(ROUND(c_acctbal * 1000000) AS BIGINT) - (
-           SELECT CAST(ROUND(MIN(c_acctbal) * 1000000) AS BIGINT)
+         {sql_micros("c_acctbal")} - (
+           SELECT {sql_micros("MIN(c_acctbal)")}
            FROM customer) AS x_m,
          ROW_NUMBER() OVER (
            PARTITION BY c_mktsegment
-           ORDER BY CAST(ROUND(c_acctbal * 1000000) AS BIGINT), c_custkey
+           ORDER BY {sql_micros("c_acctbal")}, c_custkey
          ) AS rk
   FROM customer
 ),
@@ -1661,7 +1671,7 @@ def agg_gini_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     c = t(spark, sf_dir, "customer")
     min_m = c.agg(
-        F.round(F.min("c_acctbal") * 1_000_000).cast("long").alias("m")
+        micros(F.min("c_acctbal")).alias("m")
     )
     x = (
         c.crossJoin(F.broadcast(min_m))
@@ -1669,7 +1679,7 @@ def agg_gini_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
             "c_custkey",
             (
-                F.round(F.col("c_acctbal") * 1_000_000).cast("long")
+                micros(F.col("c_acctbal"))
                 - F.col("m")
             ).alias("x_m"),
         )
@@ -1696,7 +1706,7 @@ def agg_gini_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-_ENTROPY_ORACLE = """
+_ENTROPY_ORACLE = f"""
 WITH counts AS (
   SELECT user_id % 50 AS cohort, event_type,
          CAST(COUNT(*) AS BIGINT) AS c
@@ -1707,9 +1717,10 @@ tot AS (
 ),
 terms AS (
   SELECT c.cohort,
-         CAST(ROUND(ROUND(
-           (CAST(c.c AS DOUBLE) / t.n) * ln(CAST(t.n AS DOUBLE) / c.c),
-           9) * 1000000) AS BIGINT) AS h_m
+         {sql_micros(
+             "ROUND((CAST(c.c AS DOUBLE) / t.n) * ln(CAST(t.n AS "
+             "DOUBLE) / c.c), 9)"
+         )} AS h_m
   FROM counts c JOIN tot t USING (cohort)
 )
 SELECT cohort,
@@ -1737,16 +1748,13 @@ def agg_entropy_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = counts.groupBy("cohort").agg(F.sum("c").alias("n"))
     terms = counts.join(tot, "cohort").select(
         "cohort",
-        F.round(
+        micros(
             F.round(
                 (F.col("c").cast("double") / F.col("n"))
                 * F.log(F.col("n").cast("double") / F.col("c")),
                 9,
             )
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("h_m"),
+        ).alias("h_m"),
     )
     return (
         terms.groupBy("cohort")
@@ -1758,13 +1766,13 @@ def agg_entropy_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BOOTSTRAP_ORACLE = """
+_BOOTSTRAP_ORACLE = f"""
 WITH w AS (
   SELECT c_mktsegment, b.b,
          CAST(('0x' || substr(md5('bs:' || CAST(b.b AS VARCHAR) || ':'
                               || CAST(c_custkey AS VARCHAR)), 1, 4))
               AS INTEGER) % 4 AS wt,
-         CAST(ROUND(c_acctbal * 1000000) AS BIGINT) AS x_m
+         {sql_micros("c_acctbal")} AS x_m
   FROM customer, (SELECT unnest(range(0, 32)) AS b) b
 ),
 reps AS (
@@ -1806,7 +1814,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan = c.select(
         "c_mktsegment",
         "c_custkey",
-        F.round(F.col("c_acctbal") * 1_000_000).cast("long").alias("x_m"),
+        micros(F.col("c_acctbal")).alias("x_m"),
         F.explode(F.array(*[F.lit(i) for i in range(32)])).alias("b"),
     ).select(
         "c_mktsegment",
@@ -2201,10 +2209,10 @@ def agg_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fact stream.
 # ---------------------------------------------------------------------------
 
-_TARGET_ENCODE_ORACLE = """
+_TARGET_ENCODE_ORACLE = f"""
 WITH j AS (
   SELECT o.o_orderkey, c.c_mktsegment,
-         CAST(ROUND(o.o_totalprice * 1000000) AS BIGINT) AS t_m
+         {sql_micros("o.o_totalprice")} AS t_m
   FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 ),
 seg AS (
@@ -2226,7 +2234,7 @@ def agg_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = o.join(c, o.o_custkey == c.c_custkey).select(
         "o_orderkey",
         "c_mktsegment",
-        F.round(F.col("o_totalprice") * 1_000_000).cast("long").alias("t_m"),
+        micros(F.col("o_totalprice")).alias("t_m"),
     )
     seg = j.groupBy("c_mktsegment").agg(
         F.sum("t_m").alias("sum_m"), F.count(F.lit(1)).alias("n")
@@ -2503,7 +2511,7 @@ def agg_ks_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # then driver-scale arithmetic — scale-free.
 # ---------------------------------------------------------------------------
 
-_CHISQ_ORACLE = """
+_CHISQ_ORACLE = f"""
 WITH cell AS (
   SELECT event_type, user_id % 4 AS cohort, CAST(COUNT(*) AS BIGINT) AS o
   FROM events GROUP BY event_type, user_id % 4
@@ -2517,9 +2525,10 @@ m AS (
 ),
 terms AS (
   SELECT n,
-         CAST(ROUND(ROUND(
-             CAST((o * n - rt * ct) * (o * n - rt * ct) AS DOUBLE)
-             / (n * rt * ct), 9) * 1000000) AS BIGINT) AS t_m
+         {sql_micros(
+             "ROUND(CAST((o * n - rt * ct) * (o * n - rt * ct) AS "
+             "DOUBLE) / (n * rt * ct), 9)"
+         )} AS t_m
   FROM m
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
@@ -2553,14 +2562,13 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("o").over(W.partitionBy("cohort")).alias("ct"),
     ).crossJoin(F.broadcast(cell.agg(F.sum("o").alias("n"))))
     num = (F.col("o") * F.col("n") - F.col("rt") * F.col("ct"))
-    term = F.round(
+    term = micros(
         F.round(
             (num * num).cast("double")
             / (F.col("n") * F.col("rt") * F.col("ct")),
             9,
         )
-        * 1_000_000
-    ).cast("long")
+    )
     terms = m.select("n", term.alias("t_m"))
     dof = cell.agg(
         (
@@ -2694,7 +2702,7 @@ def agg_benford_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 # means table — scale-free.
 # ---------------------------------------------------------------------------
 
-_POWER_ORACLE = """
+_POWER_ORACLE = f"""
 WITH v AS (
   SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
   FROM events
@@ -2721,9 +2729,10 @@ x AS (
   -- (r7 hardening, ADVICE r6)
   SELECT event_type, n,
          (s1 // n) * 1000000 + ((s1 % n) * 1000000) // n AS mean_micros,
-         CAST(ROUND(ROUND(
-             CAST(n * s2d - s1d * s1d AS DOUBLE) / (n * (n - 1)), 9)
-             * 1000000) AS BIGINT) AS var_cents2_micros,
+         {sql_micros(
+             "ROUND(CAST(n * s2d - s1d * s1d AS DOUBLE) / (n * (n - "
+             "1)), 9)"
+         )} AS var_cents2_micros,
          ((s1 // n) * 1000000 + ((s1 % n) * 1000000) // n) // 20
            AS delta_micros
   FROM d
@@ -2765,17 +2774,14 @@ def agg_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "(s1 div n) * 1000000 + ((s1 % n) * 1000000) div n"
         ).alias("mean_micros"),
-        F.round(
+        micros(
             F.round(
                 (F.col("n") * F.col("s2d") - F.col("s1d") * F.col("s1d"))
                 .cast("double")
                 / (F.col("n") * (F.col("n") - 1)),
                 9,
             )
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("var_cents2_micros"),
+        ).alias("var_cents2_micros"),
         F.expr(
             "((s1 div n) * 1000000 + ((s1 % n) * 1000000) div n) div 20"
         ).alias("delta_micros"),
@@ -4091,7 +4097,7 @@ def agg_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 # polynomial (both engines lack erf); z is pure IEEE arithmetic on
 # exact integer counts (sqrt is correctly rounded per IEEE-754, so the
 # chain is bit-identical); p-values land as 9-dp-round micros ints.
-_BH_TEXT = """
+_BH_TEXT = f"""
 WITH c AS (
   SELECT user_id % 8 AS cohort, m.metric,
          COUNT(*) FILTER (WHERE ts < TIMESTAMP '2024-01-16') AS n1,
@@ -4121,10 +4127,11 @@ tt AS (
 ),
 p AS (
   SELECT metric, cohort,
-         CAST(ROUND(ROUND(
-           2 * phi * (t * (0.319381530 + t * (-0.356563782
-             + t * (1.781477937 + t * (-1.821255978
-             + t * 1.330274429))))), 9) * 1000000) AS BIGINT) AS p_micros
+         {sql_micros(
+             "ROUND(2 * phi * (t * (0.319381530 + t * (-0.356563782 + "
+             "t * (1.781477937 + t * (-1.821255978 + t * "
+             "1.330274429))))), 9)"
+         )} AS p_micros
   FROM tt
 ),
 r AS (
@@ -5370,7 +5377,7 @@ def agg_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cohort", "dur")
 
 
-_THEIL_ORACLE = """
+_THEIL_ORACLE = f"""
 WITH rev AS (
   SELECT s.s_nationkey AS nation, l.l_suppkey AS s,
          CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT))
@@ -5386,11 +5393,8 @@ tot AS (
 terms AS (
   SELECT r.nation,
          CAST((CAST(r.x AS HUGEINT) *
-               (CAST(ROUND(ROUND(ln(CAST(t.n AS DOUBLE)
-                                    * CAST(r.x AS DOUBLE)), 9)
-                           * 1000000) AS BIGINT)
-                - CAST(ROUND(ROUND(ln(CAST(t.xt AS DOUBLE)), 9)
-                             * 1000000) AS BIGINT))) // t.xt
+               ({sql_micros("ROUND(ln(CAST(t.n AS DOUBLE) * CAST(r.x AS DOUBLE)), 9)")}
+                - {sql_micros("ROUND(ln(CAST(t.xt AS DOUBLE)), 9)")})) // t.xt
               AS BIGINT) AS t_micros
   FROM rev r JOIN tot t ON t.nation = r.nation
 )
@@ -5442,16 +5446,13 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dec = "decimal(38,0)"
     dln = (
-        F.round(
+        micros(
             F.round(
                 F.log(F.col("n").cast("double") * F.col("x").cast("double")),
                 9,
             )
-            * 1_000_000
-        ).cast("long")
-        - F.round(
-            F.round(F.log(F.col("xt").cast("double")), 9) * 1_000_000
-        ).cast("long")
+        )
+        - micros(F.round(F.log(F.col("xt").cast("double")), 9))
     )
     num = F.col("x").cast(dec) * dln
     den = F.col("xt").cast(dec)

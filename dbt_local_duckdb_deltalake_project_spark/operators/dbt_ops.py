@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import dsum, sql_dsum
+from ..functions.deterministic import dsum, micros, sql_dsum, sql_micros
 from ..plans.graph import ModelGraph
 from ..sources.workspace import workdir
 from .registry import register
@@ -443,7 +443,7 @@ def dbt_select_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("selector", "model")
 
 
-_UNIT_TEST_ORACLE = """
+_UNIT_TEST_ORACLE = f"""
 WITH mock_silver(o_orderkey, o_orderdate, o_orderstatus, net) AS (
   VALUES (1, TIMESTAMP '1997-01-05', 'F', 100.50),
          (2, TIMESTAMP '1997-01-20', 'F', 49.50),
@@ -456,7 +456,7 @@ actual AS (
   SELECT CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS order_month,
          o_orderstatus,
          COUNT(*) AS n_items,
-         CAST(SUM(CAST(ROUND(net * 1000000) AS BIGINT)) AS DOUBLE)
+         CAST(SUM({sql_micros("net")}) AS DOUBLE)
            / 1000000 AS revenue
   FROM mock_silver GROUP BY 1, 2
 ),
@@ -863,7 +863,7 @@ WITH gold AS (
          o.o_orderstatus,
          COUNT(*) AS n_items,
          {sql_dsum("l.l_extendedprice * (1 - l.l_discount)", "revenue")},
-         CAST(SUM(CAST(ROUND(l.l_discount * 1000000) AS BIGINT)) AS BIGINT)
+         CAST(SUM({sql_micros("l.l_discount")}) AS BIGINT)
            AS disc_all_m
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
   WHERE l.l_returnflag <> 'A'
@@ -913,8 +913,7 @@ def dbt_incremental_on_schema_change(
                 (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                     "net"
                 ),
-                F.round(F.col("l_discount") * 1_000_000)
-                .cast("long")
+                micros(F.col("l_discount"))
                 .alias("disc_m"),
             )
         )
@@ -1191,12 +1190,11 @@ def dbt_snapshot_hard_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- semantic-layer metric query --------------------------------------------
 
-_SEMANTIC_METRIC_ORACLE = """
+_SEMANTIC_METRIC_ORACLE = f"""
 WITH base AS (
   SELECT CAST(DATE_TRUNC('month', o.o_orderdate) AS TIMESTAMP)
            AS order_month,
-         CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount)
-                             * 1000000) AS BIGINT)) AS BIGINT)
+         CAST(SUM({sql_micros("l.l_extendedprice * (1 - l.l_discount)")}) AS BIGINT)
            AS revenue_micros,
          CAST(COUNT(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -1239,10 +1237,7 @@ def dbt_semantic_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                    * 1_000_000
-                ).cast("long")
+                micros(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("revenue_micros"),
             F.countDistinct("o_orderkey").alias("n_orders"),
         )
@@ -1358,11 +1353,11 @@ def dbt_model_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dbt microbatch incremental (dbt 1.9 incremental_strategy='microbatch')
 # ---------------------------------------------------------------------------
 
-_MICROBATCH_ORACLE = """
+_MICROBATCH_ORACLE = f"""
 SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS event_day,
        event_type,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({sql_micros("value")}) AS DOUBLE)
          / 1000000 AS value_sum
 FROM events
 GROUP BY date_trunc('day', ts), event_type

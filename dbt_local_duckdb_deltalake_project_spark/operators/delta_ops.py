@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import t
+from ..functions.deterministic import micros, sql_micros
 from ..sources.deltalike import DeltaLikeTable
 from ..sources.workspace import staged, workdir
 from .registry import register
@@ -369,11 +370,10 @@ def delta_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "delta_data_skipping",
-    """
+    f"""
     SELECT o_orderstatus,
            COUNT(*) AS n_orders,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE), 2)
-             AS revenue
+           ROUND(CAST(SUM({sql_micros("o_totalprice")}) AS DOUBLE) / 1000000, 2) AS revenue
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '2000-01-01'
     GROUP BY o_orderstatus ORDER BY o_orderstatus
@@ -411,9 +411,8 @@ def delta_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast(
-                    "double"
-                ),
+                F.sum(micros(F.col("o_totalprice"))).cast("double")
+                / 1_000_000,
                 2,
             ).alias("revenue"),
         )
@@ -463,11 +462,10 @@ def delta_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "delta_shallow_clone",
-    """
+    f"""
     SELECT c_mktsegment,
            COUNT(*) AS n_customers,
-           ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE), 2)
-             AS total_balance
+           ROUND(CAST(SUM({sql_micros("c_acctbal")}) AS DOUBLE) / 1000000, 2) AS total_balance
     FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
     """,
 )
@@ -503,9 +501,7 @@ def delta_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
             F.round(
-                F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast(
-                    "double"
-                ),
+                F.sum(micros(F.col("c_acctbal"))).cast("double") / 1_000_000,
                 2,
             ).alias("total_balance"),
         )
@@ -603,11 +599,11 @@ def delta_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "delta_zorder",
-    """
+    f"""
     SELECT COUNT(*) AS n_li,
            CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-           CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,6)) * 1000000
-                         AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_price,
+           CAST(SUM({sql_micros("l_extendedprice")}) AS DOUBLE) / 1000000.0
+             AS sum_price,
            TRUE AS zorder_skips,
            TRUE AS zorder_beats_linear
     FROM lineitem
@@ -673,10 +669,7 @@ def delta_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_li"),
             F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
             (
-                F.sum(
-                    (F.col("l_extendedprice").cast("decimal(18,6)") * 1000000)
-                    .cast("bigint")
-                ).cast("double")
+                F.sum(micros(F.col("l_extendedprice"))).cast("double")
                 / 1000000.0
             ).alias("sum_price"),
         )
@@ -813,10 +806,10 @@ def delta_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DV_ORACLE = """
+_DV_ORACLE = f"""
 SELECT c_nationkey,
        COUNT(*) AS n_kept,
-       CAST(SUM(CAST(ROUND(c_acctbal * 1000000) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_micros("c_acctbal")}) AS BIGINT)
          AS bal_micros,
        TRUE AS files_unchanged,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
@@ -863,7 +856,7 @@ def delta_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
-            F.sum(F.round(F.col("c_acctbal") * 1_000_000).cast("long"))
+            F.sum(micros(F.col("c_acctbal")))
             .alias("bal_micros"),
         )
         .select(
@@ -997,10 +990,10 @@ def delta_txn_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GENCOL_ORACLE = """
+_GENCOL_ORACLE = f"""
 SELECT CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS o_month,
        COUNT(*) AS n_orders,
-       CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT)
          AS price_micros,
        TRUE AS wrong_value_rejected
 FROM orders
@@ -1050,7 +1043,7 @@ def delta_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.sum(
-                F.round(F.col("o_totalprice") * 1_000_000).cast("long")
+                micros(F.col("o_totalprice"))
             ).alias("price_micros"),
         )
         .select(

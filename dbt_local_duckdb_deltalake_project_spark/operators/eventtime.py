@@ -15,18 +15,17 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import DEC
+from ..functions.deterministic import micros, sql_micros
 from .registry import register
 
 
 @register(
     "stream_tumbling",
-    """
+    f"""
     SELECT date_trunc('hour', ts) AS window_start,
            event_type,
            COUNT(*) AS n_events,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 4)
-             AS total_value
+           ROUND(CAST(SUM({sql_micros("value")}) AS DOUBLE) / 1000000, 4) AS total_value
     FROM events
     GROUP BY 1, 2
     ORDER BY 1, 2
@@ -41,7 +40,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(F.col("value").cast(DEC)).cast("double"), 4
+                F.sum(micros(F.col("value"))).cast("double") / 1_000_000, 4
             ).alias("total_value"),
         )
         .select(

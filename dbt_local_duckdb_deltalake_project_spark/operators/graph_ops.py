@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
+from ..functions.deterministic import micros, sql_micros
 from .registry import register
 
 _PAGERANK_ORACLE = """
@@ -1298,7 +1299,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ADAMIC_ADAR_ORACLE = """
+_ADAMIC_ADAR_ORACLE = f"""
 WITH pairs AS (
   SELECT DISTINCT o_custkey AS c, l_suppkey AS s
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -1314,8 +1315,7 @@ cdeg AS (
   -- weights filter): ln(1) = 0 must never reach the division — on
   -- IEEE-float engines 1/0.0 is inf and CAST(inf AS BIGINT) raises
   SELECT c, d,
-         CAST(ROUND(ROUND(1.0 / ln(CAST(d AS DOUBLE)), 9)
-                    * 1000000) AS BIGINT) AS w_micros
+         {sql_micros("ROUND(1.0 / ln(CAST(d AS DOUBLE)), 9)")} AS w_micros
   FROM (SELECT c, CAST(COUNT(*) AS BIGINT) AS d FROM capped GROUP BY c)
   WHERE d >= 2
 ),
@@ -1375,11 +1375,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdeg = capped.groupBy("c").agg(F.count(F.lit(1)).alias("d"))
     weights = cdeg.filter(F.col("d") >= 2).select(
         F.col("c").alias("wc"),
-        F.round(
-            F.round(F.lit(1.0) / F.log(F.col("d").cast("double")), 9)
-            * 1_000_000
-        )
-        .cast("long")
+        micros(F.round(F.lit(1.0) / F.log(F.col("d").cast("double")), 9))
         .alias("w_micros"),
     )
     a = capped.alias("a")

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import sql, t
-from ..functions.deterministic import dsum, sql_dsum
+from ..functions.deterministic import dsum, micros, sql_dsum, sql_micros
 from .registry import register
 
 
@@ -411,10 +411,10 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_bucketed_colocated",
-    """
+    f"""
     SELECT o.o_orderkey, o.o_totalprice,
            COUNT(*) AS n_items,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * 1000000) AS BIGINT))
+           CAST(SUM({sql_micros("l.l_extendedprice")})
                 AS DOUBLE) / 1000000 AS item_total
     FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderkey, o.o_totalprice
@@ -784,10 +784,10 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NULLSAFE_ORACLE = """
+_NULLSAFE_ORACLE = f"""
 WITH a AS (
   SELECT o_orderkey, NULLIF(o_orderpriority, '3-MEDIUM') AS pr,
-         CAST(ROUND(o_totalprice * 1000000) AS BIGINT) AS price_m
+         {sql_micros("o_totalprice")} AS price_m
   FROM orders WHERE o_orderkey % 2 = 0
 ), b AS (
   SELECT NULLIF(o_orderpriority, '3-MEDIUM') AS pr,
@@ -820,8 +820,7 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM"))
     a = o.filter(F.col("o_orderkey") % 2 == 0).select(
         pr.alias("pr"),
-        F.round(F.col("o_totalprice") * 1_000_000)
-        .cast("long")
+        micros(F.col("o_totalprice"))
         .alias("price_m"),
     )
     b = (

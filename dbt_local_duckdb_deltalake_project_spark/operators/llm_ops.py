@@ -22,6 +22,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
+from ..functions.deterministic import micros, sql_micros
 from .registry import register
 
 DEC12 = "decimal(38,12)"
@@ -388,10 +389,10 @@ def llm_cosine_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_cosine_topk(e, e.join(cand, "vec_id"), k)
 
 
-_LSH_ORACLE = """
+_LSH_ORACLE = f"""
 WITH pts AS (
   SELECT vec_id, dim,
-         CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[dim] AS DOUBLE)")}
            AS x_m
   FROM embeddings, (SELECT unnest(range(1, 65)) AS dim)
 ),
@@ -451,7 +452,7 @@ def llm_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Random-hyperplane LSH with deterministic anchors (vectors 1..4
     serve as hyperplanes): bucket(v) = sign bits of v·anchor_j, with
-    the dot computed over HALF-AWAY-ROUNDED MICROS INTEGERS (int64
+    the dot computed over FLOOR(x*1e6 + 0.5) MICROS INTEGERS (int64
     matmul in numpy == SUM(x_m*a_m) in SQL — no float sign flips at
     the bucket boundary). Multi-probe: the query's bucket plus its
     four Hamming-1 neighbors are scanned (5/16 of the corpus in
@@ -467,9 +468,7 @@ def llm_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     def _micros(a):
-        return (np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5)).astype(
-            np.int64
-        )
+        return np.floor(a * 1e6 + 0.5).astype(np.int64)
 
     e = t(spark, sf_dir, "embeddings")
     head = {
@@ -508,10 +507,10 @@ def llm_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_cosine_topk(e, e.join(cand, "vec_id"), k)
 
 
-_IVF_ORACLE = """
+_IVF_ORACLE = f"""
 WITH pts AS (
   SELECT vec_id, dim,
-         CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[dim] AS DOUBLE)")}
            AS x_m
   FROM embeddings, (SELECT unnest(range(1, 65)) AS dim)
 ),
@@ -639,9 +638,7 @@ def llm_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
 
     def _micros(a):
-        return (np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5)).astype(
-            np.int64
-        )
+        return np.floor(a * 1e6 + 0.5).astype(np.int64)
 
     head = {
         r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
@@ -1783,7 +1780,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _cc_large_small_star(sym: DataFrame, max_rounds: int = 12):
+def _cc_large_small_star(sym: DataFrame):
     """Connected components of a symmetric edge list (doc_a, doc_b) via
     alternating large-star/small-star (Kiveris et al.). Returns
     ``(labels, rounds)`` where labels is (doc_id, label) with label =
@@ -1811,7 +1808,7 @@ def _cc_large_small_star(sym: DataFrame, max_rounds: int = 12):
 
     prev = _sig(e)
     rounds = 0
-    for _ in range(max_rounds):
+    for _ in range(12):
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         rounds += 1
         cur = _sig(e)
@@ -2396,10 +2393,10 @@ def pipeline_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_ORACLE = """
+_KMEANS_ORACLE = f"""
 WITH pts AS (
   SELECT vec_id, dim,
-         CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[dim] AS DOUBLE)")}
            AS x_m
   FROM embeddings, (SELECT unnest(range(1, 65)) AS dim)
 ),
@@ -2482,8 +2479,7 @@ def llm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "dim",
-        F.round(F.col("val").cast("double") * 1000000)
-        .cast("long").alias("x_m"),
+        micros(F.col("val").cast("double")).alias("x_m"),
     )
     c = pts.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("cluster"), "dim", F.col("x_m").alias("c_m")
@@ -2693,10 +2689,10 @@ def llm_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_ORACLE = """
+_PQ_ORACLE = f"""
 WITH pts AS (
   SELECT vec_id, dim,
-         CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[dim] AS DOUBLE)")}
            AS x_m,
          CAST((dim - 1) // 8 AS INTEGER) AS sub
   FROM embeddings, (SELECT unnest(range(1, 65)) AS dim)
@@ -2749,8 +2745,7 @@ def llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "dim0",
         F.floor(F.col("dim0") / 8).cast("int").alias("sub"),
-        F.round(F.col("x").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("x").cast("double"))
         .alias("x_m"),
     )
     cb = (
@@ -2885,7 +2880,7 @@ def llm_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PPL_ORACLE = """
+_PPL_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
 ),
@@ -2893,8 +2888,7 @@ tot AS (SELECT COUNT(*) AS n FROM tok),
 vocab AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
 q AS (
   SELECT w,
-         CAST(ROUND(ROUND(ln(CAST((SELECT n FROM tot) AS DOUBLE) / c), 9)
-                    * 1000000) AS BIGINT) AS nll_m
+         {sql_micros("ROUND(ln(CAST((SELECT n FROM tot) AS DOUBLE) / c), 9)")} AS nll_m
   FROM vocab
 )
 SELECT t.doc_id,
@@ -2929,11 +2923,7 @@ def llm_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     q = vocab.crossJoin(F.broadcast(tot)).select(
         "w",
-        F.round(
-            F.round(F.log(F.col("n").cast("double") / F.col("c")), 9)
-            * 1_000_000
-        )
-        .cast("long")
+        micros(F.round(F.log(F.col("n").cast("double") / F.col("c")), 9))
         .alias("nll_m"),
     )
     return (
@@ -3205,7 +3195,7 @@ def llm_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ENTROPY_ORACLE = """
+_ENTROPY_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
 ), cnt AS (
@@ -3213,13 +3203,11 @@ WITH tok AS (
 ), agg AS (
   SELECT doc_id,
          CAST(SUM(c) AS BIGINT) AS n_tokens,
-         CAST(SUM(c * CAST(ROUND(ROUND(ln(CAST(c AS DOUBLE)), 9) * 1000000)
-                           AS BIGINT)) AS BIGINT) AS s_clnc_m
+         CAST(SUM(c * {sql_micros("ROUND(ln(CAST(c AS DOUBLE)), 9)")}) AS BIGINT) AS s_clnc_m
   FROM cnt GROUP BY doc_id
 )
 SELECT doc_id, n_tokens, s_clnc_m,
-       CAST(CAST(ROUND(ROUND(ln(CAST(n_tokens AS DOUBLE)), 9) * 1000000)
-                 AS BIGINT) AS DOUBLE) / 1000000
+       CAST({sql_micros("ROUND(ln(CAST(n_tokens AS DOUBLE)), 9)")} AS DOUBLE) / 1000000
        - CAST(s_clnc_m AS DOUBLE) / 1000000 / CAST(n_tokens AS DOUBLE)
          AS entropy_nats
 FROM agg
@@ -3247,17 +3235,14 @@ def llm_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     q_ln_c = (
-        F.round(F.round(F.log(F.col("c").cast("double")), 9) * 1_000_000)
-        .cast("long")
+        micros(F.round(F.log(F.col("c").cast("double")), 9))
     )
     agg = cnt.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
         F.sum(F.col("c") * q_ln_c).alias("s_clnc_m"),
     )
     q_ln_n = (
-        F.round(
-            F.round(F.log(F.col("n_tokens").cast("double")), 9) * 1_000_000
-        ).cast("long")
+        micros(F.round(F.log(F.col("n_tokens").cast("double")), 9))
     )
     return agg.select(
         "doc_id", "n_tokens", "s_clnc_m",
@@ -3739,7 +3724,7 @@ def llm_sample_per_class_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_ORACLE = """
+_BM25_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
 ), dl AS (
@@ -3763,13 +3748,12 @@ WITH tok AS (
   FROM df
 ), scored AS (
   SELECT tf.doc_id,
-         CAST(ROUND(
-           idf.idf * (CAST(tf.tf AS DOUBLE) * 2.2)
-           / (CAST(tf.tf AS DOUBLE)
-              + 1.2 * (0.25 + 0.75 * CAST(dl.dlen AS DOUBLE)
-                       * CAST((SELECT n_docs FROM stats) AS DOUBLE)
-                       / CAST((SELECT total_len FROM stats) AS DOUBLE)))
-           * 1000000) AS BIGINT) AS term_score_m
+         {sql_micros(
+             "idf.idf * (CAST(tf.tf AS DOUBLE) * 2.2) / (CAST(tf.tf AS"
+             " DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.dlen AS DOUBLE) "
+             "* CAST((SELECT n_docs FROM stats) AS DOUBLE) / "
+             "CAST((SELECT total_len FROM stats) AS DOUBLE)))"
+         )} AS term_score_m
   FROM tf
   JOIN idf ON tf.term = idf.term
   JOIN dl ON tf.doc_id = dl.doc_id
@@ -3838,7 +3822,7 @@ def llm_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(stats))
         .select(
             "doc_id",
-            F.round(
+            micros(
                 F.col("idf")
                 * (F.col("tf").cast("double") * 2.2)
                 / (
@@ -3852,10 +3836,7 @@ def llm_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / F.col("total_len").cast("double")
                     )
                 )
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("term_score_m"),
+            ).alias("term_score_m"),
         )
     )
     return (
@@ -4048,12 +4029,11 @@ def llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MIX_TEMP_ORACLE = """
+_MIX_TEMP_ORACLE = f"""
 WITH g AS (
   SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-         CAST(ROUND(ROUND(sqrt(CAST(SUM(n_chars) AS DOUBLE)), 9) * 1000000)
-              AS BIGINT) AS s_m
+         {sql_micros("ROUND(sqrt(CAST(SUM(n_chars) AS DOUBLE)), 9)")} AS s_m
   FROM documents GROUP BY lang
 ),
 tot AS (SELECT SUM(s_m) AS total_m FROM g)
@@ -4086,10 +4066,7 @@ def llm_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("n_chars"),
-        F.round(
-            F.round(F.sqrt(F.sum("n_chars").cast("double")), 9) * 1_000_000
-        )
-        .cast("long")
+        micros(F.round(F.sqrt(F.sum("n_chars").cast("double")), 9))
         .alias("s_m"),
     )
     tot = g.agg(F.sum("s_m").alias("total_m"))
@@ -4110,7 +4087,7 @@ def llm_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DSIR_ORACLE = """
+_DSIR_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, source, unnest(string_split(text, ' ')) AS w
   FROM documents
@@ -4131,14 +4108,14 @@ sizes AS (
 ),
 wt AS (
   SELECT c.w,
-         CAST(ROUND(ROUND(ln((COALESCE(t.c_t, 0) + 1.0)
-                             / ((SELECT n_t FROM sizes)
-                                + (SELECT v FROM sizes))), 9)
-                    * 1000000) AS BIGINT)
-         - CAST(ROUND(ROUND(ln((c.c_a + 1.0)
-                               / ((SELECT n_a FROM sizes)
-                                  + (SELECT v FROM sizes))), 9)
-                      * 1000000) AS BIGINT) AS lr_m
+         {sql_micros(
+             "ROUND(ln((COALESCE(t.c_t, 0) + 1.0) / ((SELECT n_t FROM "
+             "sizes) + (SELECT v FROM sizes))), 9)"
+         )}
+         - {sql_micros(
+             "ROUND(ln((c.c_a + 1.0) / ((SELECT n_a FROM sizes) + "
+             "(SELECT v FROM sizes))), 9)"
+         )} AS lr_m
   FROM corpus c LEFT JOIN tgt t ON t.w = c.w
 ),
 scored AS (
@@ -4194,7 +4171,7 @@ def llm_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _logm(num, den):
         return (
-            F.round(F.round(F.log(num / den), 9) * 1_000_000).cast("long")
+            micros(F.round(F.log(num / den), 9))
         )
 
     wt = (
@@ -4242,10 +4219,10 @@ def llm_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMDEDUP_ORACLE = """
+_SEMDEDUP_ORACLE = f"""
 WITH pts AS (
   SELECT vec_id, dim,
-         CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[dim] AS DOUBLE)")}
            AS x_m
   FROM embeddings, (SELECT unnest(range(1, 65)) AS dim)
 ),
@@ -4323,8 +4300,7 @@ def llm_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "dim",
-        F.round(F.col("x").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("x").cast("double"))
         .alias("x_m"),
     )
     cent = pts.filter(F.col("vec_id") < 16).select(
@@ -4821,7 +4797,7 @@ def llm_dedup_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAM_NLL_ORACLE = """
+_BIGRAM_NLL_ORACLE = f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS a FROM documents),
 bg AS (
   SELECT doc_id, a[i] AS w1, a[i+1] AS w2
@@ -4835,8 +4811,7 @@ c1 AS (
 ),
 q AS (
   SELECT c2.w1, c2.w2,
-         CAST(ROUND(ROUND(ln(CAST(c1.c AS DOUBLE) / c2.c), 9) * 1000000)
-              AS BIGINT) AS nll_m
+         {sql_micros("ROUND(ln(CAST(c1.c AS DOUBLE) / c2.c), 9)")} AS nll_m
   FROM c2 JOIN c1 USING (w1)
 )
 SELECT b.doc_id,
@@ -4877,11 +4852,7 @@ def llm_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = c2.join(c1, "w1").select(
         "w1",
         "w2",
-        F.round(
-            F.round(F.log(F.col("c1").cast("double") / F.col("c")), 9)
-            * 1_000_000
-        )
-        .cast("long")
+        micros(F.round(F.log(F.col("c1").cast("double") / F.col("c")), 9))
         .alias("nll_m"),
     )
     return (
@@ -5451,7 +5422,7 @@ def llm_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- CCNet-style perplexity bucketing --------------------------------------
 
-_CCNET_ORACLE = """
+_CCNET_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
   FROM documents
@@ -5462,8 +5433,7 @@ vocab AS (
 ),
 q AS (
   SELECT w,
-         CAST(ROUND(ROUND(ln(CAST((SELECT n FROM tot) AS DOUBLE) / c), 9)
-                    * 1000000) AS BIGINT) AS nll_m
+         {sql_micros("ROUND(ln(CAST((SELECT n FROM tot) AS DOUBLE) / c), 9)")} AS nll_m
   FROM vocab
 ),
 scored AS (
@@ -5514,11 +5484,7 @@ def llm_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     q = vocab.crossJoin(F.broadcast(tot)).select(
         "w",
-        F.round(
-            F.round(F.log(F.col("n").cast("double") / F.col("c")), 9)
-            * 1_000_000
-        )
-        .cast("long")
+        micros(F.round(F.log(F.col("n").cast("double") / F.col("c")), 9))
         .alias("nll_m"),
     )
     scored = (
@@ -5916,10 +5882,10 @@ def llm_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- Embedding outlier detection --------------------------------------------
 
-_EMBED_OUTLIERS_ORACLE = """
+_EMBED_OUTLIERS_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, label, i - 1 AS pos,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
+         {sql_micros("CAST(embedding[i] AS DOUBLE)")} AS vm
   FROM embeddings, generate_series(1, 64) t(i)
 ),
 stats AS (
@@ -5971,8 +5937,7 @@ def llm_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             F.col("pos").cast("long").alias("pos"),
-            F.round(F.col("v").cast("double") * 1_000_000)
-            .cast("long")
+            micros(F.col("v").cast("double"))
             .alias("vm"),
         )
     )
@@ -6014,10 +5979,10 @@ def llm_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- Nearest-centroid classifier confusion matrix ---------------------------
 
-_EVAL_CONFUSION_ORACLE = """
+_EVAL_CONFUSION_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, label, i - 1 AS pos,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
+         {sql_micros("CAST(embedding[i] AS DOUBLE)")} AS vm
   FROM embeddings, generate_series(1, 64) t(i)
 ),
 cent AS (
@@ -6080,8 +6045,7 @@ def llm_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.col("pos").cast("long").alias("pos"),
-        F.round(F.col("v").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("v").cast("double"))
         .alias("vm"),
     )
     cent = e.groupBy(F.col("label").alias("clab"), "pos").agg(
@@ -6122,7 +6086,7 @@ def llm_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- nDCG ranking evaluation -------------------------------------------------
 
-_NDCG_ORACLE = """
+_NDCG_ORACLE = f"""
 WITH scored AS (
   SELECT user_id, event_id,
          CAST(('0x' || substr(md5('p:' || CAST(event_id AS VARCHAR)), 1, 8))
@@ -6144,16 +6108,18 @@ ideal AS (
 ),
 dcg AS (
   SELECT user_id,
-         CAST(SUM(CAST(ROUND(((1 << grade) - 1)
-               / (ROUND(ln(pos + 1.0), 9) / ROUND(ln(2.0), 9))
-               * 1000000) AS BIGINT)) AS BIGINT) AS dcg_m
+         CAST(SUM({sql_micros(
+             "((1 << grade) - 1) / (ROUND(ln(pos + 1.0), 9) / "
+             "ROUND(ln(2.0), 9))"
+         )}) AS BIGINT) AS dcg_m
   FROM ranked WHERE pos <= 10 GROUP BY user_id
 ),
 idcg AS (
   SELECT user_id,
-         CAST(SUM(CAST(ROUND(((1 << grade) - 1)
-               / (ROUND(ln(pos + 1.0), 9) / ROUND(ln(2.0), 9))
-               * 1000000) AS BIGINT)) AS BIGINT) AS idcg_m
+         CAST(SUM({sql_micros(
+             "((1 << grade) - 1) / (ROUND(ln(pos + 1.0), 9) / "
+             "ROUND(ln(2.0), 9))"
+         )}) AS BIGINT) AS idcg_m
   FROM ideal WHERE pos <= 10 GROUP BY user_id
 )
 SELECT d.user_id, d.dcg_m, i.idcg_m,
@@ -6204,10 +6170,7 @@ def llm_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         disc = F.round(F.log(F.col("pos") + 1.0), 9) / F.round(
             F.log(F.lit(2.0)), 9
         )
-        term = F.round(
-            (F.expr("shiftleft(1, cast(grade AS int))") - 1) / disc
-            * 1_000_000
-        ).cast("long")
+        term = micros((F.expr("shiftleft(1, cast(grade AS int))") - 1) / disc)
         return (
             ordered.filter(F.col("pos") <= 10)
             .groupBy("user_id")
@@ -6256,10 +6219,10 @@ def llm_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- Hard-negative mining ----------------------------------------------------
 
-_HARD_NEG_ORACLE = """
+_HARD_NEG_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, label, i - 1 AS pos,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
+         {sql_micros("CAST(embedding[i] AS DOUBLE)")} AS vm
   FROM embeddings, generate_series(1, 64) t(i)
 ),
 q AS (SELECT * FROM e WHERE vec_id % 50 = 0 AND vec_id < 500),
@@ -6313,8 +6276,7 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.col("pos").cast("long").alias("pos"),
-        F.round(F.col("v").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("v").cast("double"))
         .alias("vm"),
     )
     q = e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 500)).select(
@@ -6345,10 +6307,10 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- Classifier calibration (ECE bins) ---------------------------------------
 
-_CALIBRATION_ORACLE = """
+_CALIBRATION_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, label, i - 1 AS pos,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
+         {sql_micros("CAST(embedding[i] AS DOUBLE)")} AS vm
   FROM embeddings, generate_series(1, 64) t(i)
 ),
 cent AS (
@@ -6415,8 +6377,7 @@ def llm_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.col("pos").cast("long").alias("pos"),
-        F.round(F.col("v").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("v").cast("double"))
         .alias("vm"),
     )
     cent = e.groupBy(F.col("label").alias("clab"), "pos").agg(
@@ -6636,7 +6597,7 @@ def llm_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- Reciprocal-rank-fusion hybrid search ------------------------------------
 
-_RRF_ORACLE = """
+_RRF_ORACLE = f"""
 WITH queries(qid, t1, t2) AS (
   VALUES (CAST(0 AS BIGINT), 'query', 'table'),
          (CAST(1 AS BIGINT), 'merge', 'scan'),
@@ -6656,7 +6617,7 @@ lexrank AS (
 ),
 ev AS (
   SELECT vec_id, i - 1 AS pos,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
+         {sql_micros("CAST(embedding[i] AS DOUBLE)")} AS vm
   FROM embeddings, generate_series(1, 64) t(i)
 ),
 dots AS (
@@ -6751,8 +6712,7 @@ def llm_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "pos",
-            F.round(F.col("v").cast("double") * 1_000_000)
-            .cast("long")
+            micros(F.col("v").cast("double"))
             .alias("vm"),
         )
     )
@@ -6894,7 +6854,7 @@ def llm_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale-free by construction (76-row domain), driver-side cost zero.
 # ---------------------------------------------------------------------------
 
-_LSH_CURVE_ORACLE = """
+_LSH_CURVE_ORACLE = f"""
 WITH s AS (
   SELECT CAST(d AS BIGINT) AS s_pct20, CAST(d AS DOUBLE) / 20.0 AS sv
   FROM (SELECT unnest(range(1, 20)) AS d)
@@ -6939,7 +6899,7 @@ body AS (
 )
 SELECT s_pct20, CAST(bands AS BIGINT) AS bands,
        CAST(rows_per_band AS BIGINT) AS rows_per_band,
-       CAST(ROUND(ROUND(1.0 - miss, 9) * 1000000) AS BIGINT)
+       {sql_micros("ROUND(1.0 - miss, 9)")}
          AS p_collide_micros
 FROM body
 ORDER BY s_pct20, bands
@@ -6997,8 +6957,7 @@ def llm_lsh_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_pct20",
         "bands",
         "rows_per_band",
-        F.round(F.round(F.lit(1.0) - F.col("miss"), 9) * 1_000_000)
-        .cast("long")
+        micros(F.round(F.lit(1.0) - F.col("miss"), 9))
         .alias("p_collide_micros"),
     ).orderBy("s_pct20", "bands")
 
@@ -7094,13 +7053,13 @@ def llm_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # prefix-dim sums come free in the same pass (no 4x rescan).
 # ---------------------------------------------------------------------------
 
-_MATRYOSHKA_ORACLE = """
+_MATRYOSHKA_ORACLE = f"""
 WITH e AS (
   -- the house ANN-family domain: per-position integer micros; every
   -- dot/norm partial below is then an EXACT BIGINT sum (|vm| <= 1e6,
   -- 64-term products bounded by 6.4e13 — no decimal arithmetic at all)
   SELECT vec_id, i,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[i] AS DOUBLE)")}
            AS vm
   FROM embeddings, generate_series(1, 64) t(i)
 ),
@@ -7187,8 +7146,7 @@ def llm_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "pos",
-        F.round(F.col("v").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("v").cast("double"))
         .alias("vm"),
     )
     # FIXED query sample (≤ 21 queries at any corpus size): recall is
@@ -7483,7 +7441,6 @@ def _merge_apply_pass(toks: DataFrame, left: str, right: str) -> DataFrame:
 def _bpe_learn_rows(
     spark: SparkSession,
     sf_dir: str,
-    n_rounds: int = _BPE_N,
     round_plans: list[str] | None = None,
 ) -> list[tuple[int, str, str, int, int, int]]:
     """The N-round BPE learn loop (N = _BPE_N = 8 since r11), shared by
@@ -7534,7 +7491,7 @@ def _bpe_learn_rows(
     # n_merges/tokens_after (the oracle counts tokens directly)
     n_docs = d.filter(F.length("text") >= 1).count()
     prev_before = None
-    for i in range(1, n_rounds + 1):
+    for i in range(1, _BPE_N + 1):
         wd = W.partitionBy("doc_id").orderBy("pos")
         p = toks.select(
             "doc_id", "pos", "tok", F.lead("tok").over(wd).alias("nxt")
@@ -8680,7 +8637,7 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("stage")
 
 
-_ZIPF_ORACLE = """
+_ZIPF_ORACLE = f"""
 WITH tok AS (
   SELECT t.w
   FROM documents, UNNEST(string_split(text, ' ')) AS t(w)
@@ -8693,10 +8650,8 @@ ranked AS (
   FROM vocab
 ),
 head AS (
-  SELECT CAST(ROUND(ROUND(ln(CAST(rnk AS DOUBLE)), 9) * 1000000)
-              AS BIGINT) AS x,
-         CAST(ROUND(ROUND(ln(CAST(freq AS DOUBLE)), 9) * 1000000)
-              AS BIGINT) AS y
+  SELECT {sql_micros("ROUND(ln(CAST(rnk AS DOUBLE)), 9)")} AS x,
+         {sql_micros("ROUND(ln(CAST(freq AS DOUBLE)), 9)")} AS y
   FROM ranked WHERE rnk <= 1024
 ),
 m AS (
@@ -8780,9 +8735,7 @@ def agg_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w", "freq", (F.col("lrn") + F.col("off")).alias("rnk")
     )
     mic = lambda c: (  # noqa: E731 — 9-dp-round micros quantization
-        F.round(F.round(F.log(c.cast("double")), 9) * 1_000_000).cast(
-            "long"
-        )
+        micros(F.round(F.log(c.cast("double")), 9))
     )
     head = ranked.filter(F.col("rnk") <= 1024).select(
         mic(F.col("rnk")).alias("x"), mic(F.col("freq")).alias("y")
@@ -9343,10 +9296,10 @@ def _span_removal_frame(
     )
 
 
-_IVFPQ_ORACLE = """
+_IVFPQ_ORACLE = f"""
 WITH pts AS MATERIALIZED (
   SELECT vec_id, dim,
-         CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[dim] AS DOUBLE)")}
            AS x_m
   FROM embeddings, (SELECT unnest(range(1, 65)) AS dim)
 ),
@@ -9515,9 +9468,7 @@ def llm_cosine_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
 
     def _micros(a):
-        return (np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5)).astype(
-            np.int64
-        )
+        return np.floor(a * 1e6 + 0.5).astype(np.int64)
 
     head = {
         r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
@@ -9756,7 +9707,7 @@ def llm_speculative_ngram_accept(
     )
 
 
-_PMI_ORACLE = """
+_PMI_ORACLE = f"""
 WITH lst AS (
   SELECT doc_id, lang, string_split(text, ' ') AS parts FROM documents
 ),
@@ -9789,14 +9740,10 @@ ln_ AS (SELECT lang, CAST(SUM(c_ab) AS BIGINT) AS n_pairs
         FROM pc GROUP BY lang),
 scored AS (
   SELECT p.lang, p.a, p.b, p.c_ab, la.c_a, lb.c_b, ln_.n_pairs,
-         CAST(ROUND(ROUND(ln(CAST(p.c_ab AS DOUBLE)), 9) * 1000000)
-              AS BIGINT)
-         + CAST(ROUND(ROUND(ln(CAST(ln_.n_pairs AS DOUBLE)), 9) * 1000000)
-                AS BIGINT)
-         - CAST(ROUND(ROUND(ln(CAST(la.c_a AS DOUBLE)), 9) * 1000000)
-                AS BIGINT)
-         - CAST(ROUND(ROUND(ln(CAST(lb.c_b AS DOUBLE)), 9) * 1000000)
-                AS BIGINT) AS pmi_micros
+         {sql_micros("ROUND(ln(CAST(p.c_ab AS DOUBLE)), 9)")}
+         + {sql_micros("ROUND(ln(CAST(ln_.n_pairs AS DOUBLE)), 9)")}
+         - {sql_micros("ROUND(ln(CAST(la.c_a AS DOUBLE)), 9)")}
+         - {sql_micros("ROUND(ln(CAST(lb.c_b AS DOUBLE)), 9)")} AS pmi_micros
   FROM pc p
   JOIN la ON la.lang = p.lang AND la.a = p.a
   JOIN lb ON lb.lang = p.lang AND lb.b = p.b
@@ -9854,8 +9801,7 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def lnq(col):
         return (
-            F.round(F.round(F.log(col.cast("double")), 9) * 1_000_000)
-            .cast("long")
+            micros(F.round(F.log(col.cast("double")), 9))
         )
 
     scored = (
@@ -9886,7 +9832,7 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNIGRAM_ORACLE = """
+_UNIGRAM_ORACLE = f"""
 WITH docs AS MATERIALIZED (
   SELECT doc_id, substring(text, 1, 12) AS s,
          LEAST(12, length(text)) AS L
@@ -9931,10 +9877,8 @@ t0 AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot,
               CAST(COUNT(*) AS BIGINT) AS v FROM v0),
 sc0 AS MATERIALIZED (
   SELECT piece,
-         CAST(ROUND(ROUND(ln(CAST(t0.tot + t0.v AS DOUBLE)), 9) * 1000000)
-              AS BIGINT)
-         - CAST(ROUND(ROUND(ln(CAST(v0.cnt + 1 AS DOUBLE)), 9) * 1000000)
-                AS BIGINT) AS score
+         {sql_micros("ROUND(ln(CAST(t0.tot + t0.v AS DOUBLE)), 9)")}
+         - {sql_micros("ROUND(ln(CAST(v0.cnt + 1 AS DOUBLE)), 9)")} AS score
   FROM v0, t0
 ),
 m1 AS (
@@ -9965,10 +9909,8 @@ t2 AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot,
               CAST(COUNT(*) AS BIGINT) AS v FROM v2),
 sc2 AS MATERIALIZED (
   SELECT piece,
-         CAST(ROUND(ROUND(ln(CAST(t2.tot + t2.v AS DOUBLE)), 9) * 1000000)
-              AS BIGINT)
-         - CAST(ROUND(ROUND(ln(CAST(v2.cnt + 1 AS DOUBLE)), 9) * 1000000)
-                AS BIGINT) AS score
+         {sql_micros("ROUND(ln(CAST(t2.tot + t2.v AS DOUBLE)), 9)")}
+         - {sql_micros("ROUND(ln(CAST(v2.cnt + 1 AS DOUBLE)), 9)")} AS score
   FROM v2, t2
 ),
 m2 AS (
@@ -10134,8 +10076,7 @@ def llm_unigram_lm_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def lnq(col):
         return (
-            F.round(F.round(F.log(col.cast("double")), 9) * 1_000_000)
-            .cast("long")
+            micros(F.round(F.log(col.cast("double")), 9))
         )
 
     def scored(vocab):
@@ -10387,7 +10328,7 @@ def llm_watermark_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_JM_ORACLE = """
+_JM_ORACLE = f"""
 WITH lst AS (
   SELECT doc_id, string_split(text, ' ') AS parts FROM documents
 ),
@@ -10415,13 +10356,14 @@ cw AS (SELECT w2, CAST(SUM(c_vw) AS BIGINT) AS c_w FROM pc GROUP BY w2),
 nn AS (SELECT CAST(SUM(c_vw) AS BIGINT) AS n FROM pc),
 terms AS (
   SELECT o.doc_id,
-         CAST(ROUND(ROUND(ln(CAST(
-              4 * CAST(cv.c_v AS HUGEINT) * nn.n
-              AS DOUBLE)), 9) * 1000000) AS BIGINT)
-         - CAST(ROUND(ROUND(ln(CAST(
-              3 * CAST(p.c_vw AS HUGEINT) * nn.n
-              + CAST(cw.c_w AS HUGEINT) * cv.c_v
-              AS DOUBLE)), 9) * 1000000) AS BIGINT) AS nll
+         {sql_micros(
+             "ROUND(ln(CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n AS "
+             "DOUBLE)), 9)"
+         )}
+         - {sql_micros(
+             "ROUND(ln(CAST(3 * CAST(p.c_vw AS HUGEINT) * nn.n + "
+             "CAST(cw.c_w AS HUGEINT) * cv.c_v AS DOUBLE)), 9)"
+         )} AS nll
   FROM occ o
   JOIN pc p ON p.v = o.v AND p.w2 = o.w2
   JOIN cv ON cv.v = o.v
@@ -10474,8 +10416,7 @@ def llm_ngram_lm_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def lnq(col):
         return (
-            F.round(F.round(F.log(col.cast("double")), 9) * 1_000_000)
-            .cast("long")
+            micros(F.round(F.log(col.cast("double")), 9))
         )
 
     dec = "decimal(38,0)"
@@ -10698,7 +10639,7 @@ def llm_texttiling_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LENBIAS_ORACLE = """
+_LENBIAS_ORACLE = f"""
 WITH comp AS (
   SELECT doc_id, doc_id // 8 AS prompt_group,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS x,
@@ -10724,11 +10665,12 @@ g AS (
   FROM pairs GROUP BY prompt_group
 )
 SELECT prompt_group, n0, c, d, n1, n2,
-       CAST(CASE WHEN n0 > n1 AND n0 > n2 THEN
-              ROUND(ROUND(CAST(c - d AS DOUBLE)
-                    / sqrt(CAST((n0 - n1) * (n0 - n2) AS DOUBLE)), 9)
-                    * 1000000)
-            END AS BIGINT) AS tau_b_micros
+       CASE WHEN n0 > n1 AND n0 > n2 THEN
+              {sql_micros(
+                  "ROUND(CAST(c - d AS DOUBLE)"
+                  " / sqrt(CAST((n0 - n1) * (n0 - n2) AS DOUBLE)), 9)"
+              )}
+            END AS tau_b_micros
 FROM g ORDER BY prompt_group
 """
 
@@ -10777,7 +10719,7 @@ def llm_reward_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tau = F.when(
         (F.col("n0") > F.col("n1")) & (F.col("n0") > F.col("n2")),
-        F.round(
+        micros(
             F.round(
                 (F.col("c") - F.col("d")).cast("double")
                 / F.sqrt(
@@ -10786,9 +10728,8 @@ def llm_reward_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 9,
             )
-            * 1_000_000
         ),
-    ).cast("long")
+    )
     return g.select(
         "prompt_group", "n0", "c", "d", "n1", "n2",
         tau.alias("tau_b_micros"),
@@ -11074,9 +11015,7 @@ ORDER BY round
 )
 
 
-def _wp_learn_rows(
-    spark: SparkSession, sf_dir: str, n_rounds: int = _WP_N
-) -> list[tuple]:
+def _wp_learn_rows(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """WordPiece likelihood-argmax merge learning, _WP_N rounds over a
     bounded sample (doc_id % 10 == 1, first 64 chars — disjoint from
     llm_bpe_learn's % 10 == 0 sample so the two trainers exercise
@@ -11108,7 +11047,7 @@ def _wp_learn_rows(
     rows = []
     n_docs = d.filter(F.length("text") >= 1).count()
     prev_before = None
-    for i in range(1, n_rounds + 1):
+    for i in range(1, _WP_N + 1):
         wd = W.partitionBy("doc_id").orderBy("pos")
         cu = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
         p = toks.select(
@@ -11213,7 +11152,7 @@ def llm_wordpiece_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on (v,w) — the llm_tfidf join shape, linear end to end.
 # ---------------------------------------------------------------------------
 
-_POLICY_KL_ORACLE = """
+_POLICY_KL_ORACLE = f"""
 WITH lst AS (
   SELECT doc_id, string_split(text, ' ') AS parts FROM documents
 ),
@@ -11253,20 +11192,23 @@ nn AS (
 ),
 terms AS (
   SELECT o.doc_id,
-         CAST(ROUND(ROUND(ln(CAST(
-              3 * CAST(p.c_vw AS HUGEINT) * nn.n
-              + CAST(cw.c_w AS HUGEINT) * cv.c_v
-              AS DOUBLE)), 9) * 1000000) AS BIGINT)
-         - CAST(ROUND(ROUND(ln(CAST(
-              4 * CAST(cv.c_v AS HUGEINT) * nn.n
-              AS DOUBLE)), 9) * 1000000) AS BIGINT)
-         - CAST(ROUND(ROUND(ln(CAST(
-              (4 * CAST(p.c_vw AS HUGEINT) - 3) * nn.n_types
-              + 3 * CAST(cv.n1p_left AS HUGEINT) * cw.n1p_right
-              AS DOUBLE)), 9) * 1000000) AS BIGINT)
-         + CAST(ROUND(ROUND(ln(CAST(
-              4 * CAST(cv.c_v AS HUGEINT) * nn.n_types
-              AS DOUBLE)), 9) * 1000000) AS BIGINT) AS klt
+         {sql_micros(
+             "ROUND(ln(CAST(3 * CAST(p.c_vw AS HUGEINT) * nn.n + "
+             "CAST(cw.c_w AS HUGEINT) * cv.c_v AS DOUBLE)), 9)"
+         )}
+         - {sql_micros(
+             "ROUND(ln(CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n AS "
+             "DOUBLE)), 9)"
+         )}
+         - {sql_micros(
+             "ROUND(ln(CAST((4 * CAST(p.c_vw AS HUGEINT) - 3) * "
+             "nn.n_types + 3 * CAST(cv.n1p_left AS HUGEINT) * "
+             "cw.n1p_right AS DOUBLE)), 9)"
+         )}
+         + {sql_micros(
+             "ROUND(ln(CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n_types "
+             "AS DOUBLE)), 9)"
+         )} AS klt
   FROM occ o
   JOIN pc p ON p.v = o.v AND p.w2 = o.w2
   JOIN cv ON cv.v = o.v
@@ -11319,8 +11261,7 @@ def llm_policy_kl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def lnq(col):
         return (
-            F.round(F.round(F.log(col.cast("double")), 9) * 1_000_000)
-            .cast("long")
+            micros(F.round(F.log(col.cast("double")), 9))
         )
 
     dec = "decimal(38,0)"
@@ -11905,7 +11846,7 @@ def llm_nucleus_sampling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vocabulary- then 8-row-sized.
 # ---------------------------------------------------------------------------
 
-_SCALING_ORACLE = """
+_SCALING_ORACLE = f"""
 WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
 lst AS (
   SELECT doc_id, string_split(text, ' ') AS parts FROM documents
@@ -11930,13 +11871,10 @@ tkt AS (
 ),
 pts AS (
   SELECT c.k, t.t_k,
-         CAST(ROUND(ROUND(ln(CAST(t.t_k AS DOUBLE)), 9) * 1000000)
-              AS BIGINT) AS x_micros,
+         {sql_micros("ROUND(ln(CAST(t.t_k AS DOUBLE)), 9)")} AS x_micros,
          CAST(CAST(SUM(CAST(c.c AS HUGEINT) *
-           (CAST(ROUND(ROUND(ln(CAST(t.t_k AS DOUBLE)), 9) * 1000000)
-                 AS BIGINT)
-            - CAST(ROUND(ROUND(ln(CAST(c.c AS DOUBLE)), 9) * 1000000)
-                   AS BIGINT))) AS HUGEINT) // t.t_k AS BIGINT)
+           ({sql_micros("ROUND(ln(CAST(t.t_k AS DOUBLE)), 9)")}
+            - {sql_micros("ROUND(ln(CAST(c.c AS DOUBLE)), 9)")})) AS HUGEINT) // t.t_k AS BIGINT)
            AS y_micros
   FROM cnt c JOIN tkt t ON t.k = c.k
   GROUP BY c.k, t.t_k
@@ -11995,8 +11933,7 @@ def llm_scaling_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def lnq(col):
         return (
-            F.round(F.round(F.log(col.cast("double")), 9) * 1_000_000)
-            .cast("long")
+            micros(F.round(F.log(col.cast("double")), 9))
         )
 
     dec = "decimal(38,0)"
@@ -12053,8 +11990,8 @@ def llm_scaling_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by TWO unrolled power-iteration steps over the exact second-moment
 # matrix (the embedding-analytics primitive behind whitening, ABTT
 # "all-but-the-top" postprocessing, and drift monitoring). Components
-# quantize to micros once (ROUND(v*1e6) — the established double-round
-# parity), so S = Sigma x x^T folds as EXACT integers; each iteration
+# quantize to micros once (functions/deterministic.py's micros),
+# so S = Sigma x x^T folds as EXACT integers; each iteration
 # is u = S v followed by max-|component| normalization (v' =
 # u*1e6 // max|u| — max-norm instead of L2 keeps the whole trajectory
 # rational: no sqrt anywhere), with the signed floor via the portable
@@ -12063,10 +12000,10 @@ def llm_scaling_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vectors), and the iteration state is 16 rows regardless of corpus.
 # ---------------------------------------------------------------------------
 
-_PCA_ORACLE = """
+_PCA_ORACLE = f"""
 WITH x AS (
   SELECT vec_id, i - 1 AS p,
-         CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[i] AS DOUBLE)")}
            AS q
   FROM embeddings, generate_series(1, 16) g(i)
 ),
@@ -12116,8 +12053,7 @@ def llm_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("p") < 16).select(
         "vec_id",
         F.col("p").cast("long").alias("p"),
-        F.round(F.col("v").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("v").cast("double"))
         .alias("q"),
     )
     dec = "decimal(38,0)"

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
+from ..functions.deterministic import micros, sql_micros
 from .registry import register
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -808,7 +809,7 @@ def mm_interleave_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CROSSMODAL_ORACLE = """
+_CROSSMODAL_ORACLE = f"""
 WITH imgs AS (
   SELECT doc_id AS media_id, md5(text) AS h1, md5(text || ':2') AS h2
   FROM documents WHERE doc_id % 3 = 0 AND doc_id < 24
@@ -825,7 +826,7 @@ iv AS (
 nv AS (SELECT GREATEST(200, COUNT(*) // 10) AS rcand FROM embeddings),
 pts AS (
   SELECT vec_id, dim,
-         CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 1000000) AS BIGINT)
+         {sql_micros("CAST(embedding[dim] AS DOUBLE)")}
            AS x_m,
          CAST(ROUND(CAST(embedding[dim] AS DOUBLE) * 127) AS BIGINT)
            AS x_q
@@ -931,8 +932,7 @@ def mm_crossmodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         (F.col("dim0") + 1).alias("dim"),
-        F.round(F.col("x").cast("double") * 1_000_000)
-        .cast("long")
+        micros(F.col("x").cast("double"))
         .alias("x_m"),
         F.round(F.col("x").cast("double") * 127).cast("long").alias("x_q"),
     )

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import dsum, sql_dsum
+from ..functions.deterministic import dsum, micros, sql_dsum, sql_micros
 from ..sources.workspace import workdir
 from .registry import register
 
@@ -126,11 +126,10 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scan_deltalike_datasource",
-    """
+    f"""
     SELECT o_orderstatus,
            COUNT(*) AS n_orders,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE), 2)
-             AS revenue
+           ROUND(CAST(SUM({sql_micros("o_totalprice")}) AS DOUBLE) / 1000000, 2) AS revenue
     FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
 )
@@ -163,9 +162,8 @@ def scan_deltalike_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast(
-                    "double"
-                ),
+                F.sum(micros(F.col("o_totalprice"))).cast("double")
+                / 1_000_000,
                 2,
             ).alias("revenue"),
         )
@@ -275,10 +273,10 @@ def sink_partitioned_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PERMISSIVE_ORACLE = """
+_PERMISSIVE_ORACLE = f"""
 SELECT o_orderstatus,
        COUNT(*) AS n_good,
-       CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT)
          AS price_micros,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
         WHERE o_orderkey % 50 = 0) AS n_corrupt
@@ -338,7 +336,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_good"),
             F.sum(
-                F.round(F.col("o_totalprice_raw") * 1_000_000).cast("long")
+                micros(F.col("o_totalprice_raw"))
             ).alias("price_micros"),
         )
         .select(
@@ -388,7 +386,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGE_SCHEMA_ORACLE = """
+_MERGE_SCHEMA_ORACLE = f"""
 WITH unioned AS (
   SELECT o_orderkey, o_orderstatus,
          CAST(NULL AS DOUBLE) AS o_totalprice
@@ -400,7 +398,7 @@ WITH unioned AS (
 SELECT o_orderstatus,
        COUNT(*) AS n_rows,
        COUNT(o_totalprice) AS n_with_price,
-       CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT)
          AS price_checksum_m
 FROM unioned
 GROUP BY o_orderstatus
@@ -436,7 +434,7 @@ def scan_parquet_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.count("o_totalprice").alias("n_with_price"),
             F.sum(
-                F.round(F.col("o_totalprice") * 1_000_000).cast("long")
+                micros(F.col("o_totalprice"))
             ).alias("price_checksum_m"),
         )
         .orderBy("o_orderstatus")
@@ -478,10 +476,10 @@ def scan_csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JSONL_ORACLE = """
+_JSONL_ORACLE = f"""
 SELECT o_orderstatus, COUNT(*) AS n_rows,
        CAST(SUM(o_orderkey) AS BIGINT) AS key_checksum,
-       CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT)
          AS price_checksum_m
 FROM orders
 GROUP BY o_orderstatus
@@ -515,7 +513,7 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("o_orderkey").alias("key_checksum"),
             F.sum(
-                F.round(F.col("o_totalprice") * 1_000_000).cast("long")
+                micros(F.col("o_totalprice"))
             ).alias("price_checksum_m"),
         )
         .orderBy("o_orderstatus")

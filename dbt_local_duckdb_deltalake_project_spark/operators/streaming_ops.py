@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.deterministic import micros, sql_micros
 from ..streaming.twins import (
     read_staged_stream,
     replay,
@@ -35,8 +36,6 @@ from ..streaming.twins import (
 )
 from .registry import register
 
-DEC = "decimal(38,6)"
-
 
 def _tumbling(stream: DataFrame) -> DataFrame:
     return (
@@ -44,9 +43,9 @@ def _tumbling(stream: DataFrame) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 4).alias(
-                "total_value"
-            ),
+            F.round(
+                F.sum(micros(F.col("value"))).cast("double") / 1_000_000, 4
+            ).alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -59,12 +58,11 @@ def _tumbling(stream: DataFrame) -> DataFrame:
 
 @register(
     "stream_tumbling_streamed",
-    """
+    f"""
     SELECT date_trunc('hour', ts) AS window_start,
            event_type,
            COUNT(*) AS n_events,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 4)
-             AS total_value
+           ROUND(CAST(SUM({sql_micros("value")}) AS DOUBLE) / 1000000, 4) AS total_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -77,7 +75,7 @@ def stream_tumbling_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WATERMARK_LATE_ORACLE = """
+_WATERMARK_LATE_ORACLE = f"""
 WITH kept AS (
   SELECT * FROM events
   WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' OR event_id % 2 = 0
@@ -86,8 +84,7 @@ wm AS (SELECT MAX(ts) - INTERVAL 10 MINUTE AS w FROM events)
 SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       ROUND(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 4)
-         AS total_value
+       ROUND(CAST(SUM({sql_micros("value")}) AS DOUBLE) / 1000000, 4) AS total_value
 FROM kept
 GROUP BY 1, 2
 HAVING CAST(date_trunc('hour', MIN(ts)) AS TIMESTAMP) + INTERVAL 1 HOUR
@@ -455,12 +452,11 @@ def stream_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_join_static",
-    """
+    f"""
     SELECT date_trunc('hour', ts) AS window_start,
            c_mktsegment,
            COUNT(*) AS n_events,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 4)
-             AS total_value
+           ROUND(CAST(SUM({sql_micros("value")}) AS DOUBLE) / 1000000, 4) AS total_value
     FROM events JOIN customer ON c_custkey = user_id
     GROUP BY 1, 2
     """,
@@ -489,7 +485,8 @@ def stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.round(
-                    F.sum(F.col("value").cast(DEC)).cast("double"), 4
+                    F.sum(micros(F.col("value"))).cast("double") / 1_000_000,
+                    4,
                 ).alias("total_value"),
             )
             .select(

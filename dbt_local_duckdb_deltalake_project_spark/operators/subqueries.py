@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import sql, t
+from ..functions.deterministic import micros, sql_dsum, sql_micros
 from .registry import register
 
 
@@ -28,7 +29,7 @@ def _shared(qid: str, text: str):
 
 _shared(
     "cte_chain",
-    """
+    f"""
     WITH recent_orders AS (
       SELECT o_orderkey, o_custkey, o_totalprice
       FROM orders
@@ -36,16 +37,14 @@ _shared(
     ),
     cust_spend AS (
       SELECT o_custkey,
-             ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE), 2)
-               AS spend,
+             ROUND(CAST(SUM({sql_micros("o_totalprice")}) AS DOUBLE) / 1000000, 2) AS spend,
              COUNT(*) AS n_orders
       FROM recent_orders
       GROUP BY o_custkey
     )
     SELECT c_mktsegment,
            COUNT(*) AS n_customers,
-           ROUND(CAST(SUM(CAST(spend AS DECIMAL(38,6))) AS DOUBLE), 2)
-             AS segment_spend
+           ROUND(CAST(SUM({sql_micros("spend")}) AS DOUBLE) / 1000000, 2) AS segment_spend
     FROM cust_spend
     JOIN customer ON c_custkey = o_custkey
     GROUP BY c_mktsegment
@@ -55,12 +54,11 @@ _shared(
 
 _shared(
     "subq_scalar",
-    """
+    f"""
     SELECT o_orderkey, o_totalprice
     FROM orders
     WHERE o_totalprice > 1.75 * (
-      SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE)
-             / COUNT(*)
+      SELECT CAST(SUM({sql_micros("o_totalprice")}) AS DOUBLE) / 1000000 / COUNT(*)
       FROM orders
     )
     """,
@@ -81,11 +79,11 @@ _shared(
 
 _shared(
     "subq_correlated_agg",
-    """
+    f"""
     SELECT l_orderkey, l_partkey, l_quantity
     FROM lineitem l1
     WHERE l_quantity > 1.8 * (
-      SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*)
+      SELECT CAST(SUM({sql_micros("l_quantity")}) AS DOUBLE) / 1000000 / COUNT(*)
       FROM lineitem l2
       WHERE l2.l_partkey = l1.l_partkey
     )
@@ -137,7 +135,7 @@ _shared(
     # transitive closure (llm_dedup_clusters' oracle form) is NOT yet
     # expressible — the iterative min-label propagation there remains
     # the Spark-side implementation.
-    """
+    f"""
     WITH RECURSIVE months(month_start) AS (
       SELECT CAST('1995-01-01' AS TIMESTAMP) AS month_start
       UNION ALL
@@ -147,8 +145,7 @@ _shared(
     mo AS (
       SELECT date_trunc('month', o_orderdate) AS m,
              COUNT(*) AS n_orders,
-             ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE), 2)
-               AS revenue
+             ROUND(CAST(SUM({sql_micros("o_totalprice")}) AS DOUBLE) / 1000000, 2) AS revenue
       FROM orders GROUP BY 1
     )
     SELECT months.month_start,
@@ -164,27 +161,19 @@ _shared(
 # Classic TPC-H-shaped composite queries, adapted to the fixture schema
 # (o_orderpriority stands in for o_shippriority; trimmed address/phone
 # columns). These test multi-operator COMPOSITION — multiway join +
-# filtered agg + deterministic decimal revenue + top-k — through the
-# same identical-text path as the CTE family. Catalyst picks broadcast
-# for dims and TakeOrdered for the LIMIT; revenue rounds an
-# order-insensitive decimal sum so the hash compare is exact.
+# filtered agg + exact money sums + top-k — through the same
+# identical-text path as the CTE family. Catalyst picks broadcast for
+# dims and TakeOrdered for the LIMIT; every money sum is the exact
+# micros sum of functions/deterministic.py, so the hash compare is exact.
 # ---------------------------------------------------------------------------
 
-# Each FACTOR casts to decimal before the multiply (decimal×decimal is
-# exact), and the exact sum casts to double with NO final ROUND — a
-# revenue landing on a cent midpoint (…,595) was measured to round
-# differently per engine (Spark HALF_UP on the shortest decimal repr vs
-# DuckDB on the raw binary), while the unrounded cast is bit-identical.
-_REV = (
-    "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) "
-    "* CAST(1 - l_discount AS DECIMAL(18,6))) AS DOUBLE)"
-)
+_DISC_PRICE = "l_extendedprice * (1 - l_discount)"
 
 _shared(
     "tpch_q3",
     f"""
     SELECT l_orderkey,
-           {_REV} AS revenue,
+           {sql_dsum(_DISC_PRICE, "revenue")},
            o_orderdate,
            o_orderpriority
     FROM customer
@@ -203,7 +192,7 @@ _shared(
     "tpch_q5",
     f"""
     SELECT n_name,
-           {_REV} AS revenue
+           {sql_dsum(_DISC_PRICE, "revenue")}
     FROM customer
     JOIN orders   ON c_custkey  = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -218,32 +207,6 @@ _shared(
     """,
 )
 
-# Money sums in the q1 family go through EXACT SCALED-LONG MICROS
-# (functions/deterministic.py's pattern, inlined as shared SQL): the raw
-# measures are ≤2-dp money values, so every product below has ≤6 exact
-# decimal places — narrowing the decimal product to scale 6 is exact,
-# multiplying by 10^6 yields an integer-valued decimal, and the BIGINT
-# cast is therefore divergence-free (Spark truncates decimal→long,
-# DuckDB rounds — identical on integers). SUM(BIGINT) is exact, and
-# int64→double + /1e6 are IEEE-identical single roundings in both
-# engines. The plain DECIMAL(38,12)→DOUBLE route was MEASURED to differ
-# in the last bit at sf0.001 (DuckDB double-rounds int128→double→÷10^12).
-_DISC_PRICE_M = (
-    "CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,6)) "
-    "* CAST(1 - l_discount AS DECIMAL(18,6)) AS DECIMAL(24,6)) "
-    "* 1000000 AS BIGINT)"
-)
-# charge = ep*(1-disc)*(1+tax): first product kept at scale 12 (exact),
-# narrowed to (26,12) so the second multiply stays inside 38 digits in
-# BOTH engines (Spark: 26+11+1=38; DuckDB: 26+11=37), then scale-6
-# narrowing (exact — 2dp×2dp×2dp = 6dp) feeds the micros cast.
-_CHARGE_M = (
-    "CAST(CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,6)) "
-    "* CAST(1 - l_discount AS DECIMAL(18,6)) AS DECIMAL(26,12)) "
-    "* CAST(1 + l_tax AS DECIMAL(11,6)) AS DECIMAL(30,6)) "
-    "* 1000000 AS BIGINT)"
-)
-
 _shared(
     "tpch_q1",
     # Pricing-summary report: one scan of lineitem, grouped on the
@@ -254,14 +217,11 @@ _shared(
     f"""
     WITH l AS (
       SELECT l_returnflag, l_linestatus,
-             CAST(CAST(l_quantity AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-               AS qty_m,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-               AS price_m,
-             CAST(CAST(l_discount AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-               AS disc_m,
-             {_DISC_PRICE_M} AS disc_price_m,
-             {_CHARGE_M} AS charge_m
+             {sql_micros("l_quantity")} AS qty_m,
+             {sql_micros("l_extendedprice")} AS price_m,
+             {sql_micros("l_discount")} AS disc_m,
+             {sql_micros(_DISC_PRICE)} AS disc_price_m,
+             {sql_micros(_DISC_PRICE + " * (1 + l_tax)")} AS charge_m
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '2001-09-02'
     )
@@ -305,12 +265,10 @@ _shared(
     "tpch_q6",
     # Forecast-revenue change: the pushdown showcase — every predicate
     # reaches the parquet scan (shipdate range + discount band +
-    # quantity), then a single global exact-decimal sum.
-    """
-    SELECT CAST(SUM(CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,6))
-                    * CAST(l_discount AS DECIMAL(18,6)) AS DECIMAL(24,6))
-                    * 1000000 AS BIGINT)) AS DOUBLE) / 1000000.0
-             AS revenue
+    # quantity), then a single global exact micros sum.
+    f"""
+    SELECT CAST(SUM({sql_micros("l_extendedprice * l_discount")}) AS DOUBLE)
+             / 1000000.0 AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate <  TIMESTAMP '1997-01-01'
@@ -327,8 +285,8 @@ _shared(
     # engines; the final ratio is double÷double on identical operands.
     f"""
     SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-                   THEN {_DISC_PRICE_M} ELSE 0 END) AS DOUBLE)
-             / CAST(SUM({_DISC_PRICE_M}) AS DOUBLE)
+                   THEN {sql_micros(_DISC_PRICE)} ELSE 0 END) AS DOUBLE)
+             / CAST(SUM({sql_micros(_DISC_PRICE)}) AS DOUBLE)
              AS promo_revenue_pct
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
@@ -343,17 +301,16 @@ _shared(
     # table (threshold 250 ≈ fixture p99 of per-order quantity).
     # Catalyst plans the IN as a semi-join against the pre-aggregated
     # orderkeys — the big groupBy happens once, map-side partials first.
-    """
+    f"""
     SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
-             AS total_qty
+           {sql_dsum("l_quantity", "total_qty")}
     FROM customer
     JOIN orders   ON c_custkey  = o_custkey
     JOIN lineitem ON o_orderkey = l_orderkey
     WHERE o_orderkey IN (
         SELECT l_orderkey FROM lineitem
         GROUP BY l_orderkey
-        HAVING SUM(CAST(l_quantity AS DECIMAL(18,6))) > 250)
+        HAVING SUM({sql_micros("l_quantity")}) > 250 * 1000000)
     GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
     ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
     LIMIT 100
@@ -368,7 +325,7 @@ _shared(
     # equi-join with the residual disjunction as a post-join filter —
     # and pushes the brand/size/quantity envelope down to both scans.
     f"""
-    SELECT CAST(SUM({_DISC_PRICE_M}) AS DOUBLE) / 1000000.0 AS revenue
+    SELECT CAST(SUM({sql_micros(_DISC_PRICE)}) AS DOUBLE) / 1000000.0 AS revenue
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
@@ -385,7 +342,7 @@ _shared(
     f"""
     SELECT c_custkey,
            c_name,
-           {_REV} AS revenue,
+           {sql_dsum(_DISC_PRICE, "revenue")},
            c_acctbal,
            n_name
     FROM customer
@@ -402,11 +359,10 @@ _shared(
 )
 
 
-_PIPE_ORACLE = """
+_PIPE_ORACLE = f"""
 SELECT l_returnflag,
        COUNT(*) AS n_items,
-       CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000)
-                     AS BIGINT)) AS DOUBLE) / 1000000 AS revenue
+       {sql_dsum(_DISC_PRICE, "revenue")}
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1997-01-01'
   AND l_shipdate <  TIMESTAMP '1998-01-01'
@@ -430,25 +386,22 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql(
         spark,
         sf_dir,
-        """
+        f"""
         FROM lineitem
         |> WHERE l_shipdate >= TIMESTAMP '1997-01-01'
              AND l_shipdate <  TIMESTAMP '1998-01-01'
-        |> EXTEND l_extendedprice * (1 - l_discount) AS disc_price
-        |> AGGREGATE COUNT(*) AS n_items,
-             CAST(SUM(CAST(ROUND(disc_price * 1000000) AS BIGINT))
-                  AS DOUBLE) / 1000000 AS revenue
+        |> EXTEND {_DISC_PRICE} AS disc_price
+        |> AGGREGATE COUNT(*) AS n_items, {sql_dsum("disc_price", "revenue")}
            GROUP BY l_returnflag
         |> ORDER BY l_returnflag
         """,
     )
 
 
-_SESSION_VARS_ORACLE = """
+_SESSION_VARS_ORACLE = f"""
 SELECT l_returnflag,
        COUNT(*) AS n_items,
-       CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000)
-                     AS BIGINT)) AS DOUBLE) / 1000000 AS revenue
+       {sql_dsum(_DISC_PRICE, "revenue")}
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1997-03-01'
   AND l_quantity >= 10
@@ -481,12 +434,10 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql(
         spark,
         sf_dir,
-        """
+        f"""
         SELECT l_returnflag,
                COUNT(*) AS n_items,
-               CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount)
-                                   * 1000000) AS BIGINT)) AS DOUBLE)
-                 / 1000000 AS revenue
+               {sql_dsum(_DISC_PRICE, "revenue")}
         FROM IDENTIFIER(sv_table)
         WHERE l_shipdate >= sv_ship_start
           AND l_quantity >= sv_min_qty
@@ -496,11 +447,10 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REUSE_ORACLE = """
+_REUSE_ORACLE = f"""
 WITH spend AS (
   SELECT o_custkey, COUNT(*) AS n_orders,
-         CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT)) AS BIGINT)
-           AS spend_m
+         CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT) AS spend_m
   FROM orders GROUP BY o_custkey
 ), stats AS (
   SELECT CAST(MAX(spend_m) AS BIGINT) AS max_m,
@@ -534,9 +484,7 @@ def cte_reuse_exchange(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(
-            F.round(F.col("o_totalprice") * 1_000_000).cast("long")
-        ).alias("spend_m"),
+        F.sum(micros(F.col("o_totalprice"))).alias("spend_m"),
     )
     # total_orders keeps BOTH spend columns referenced by the stats
     # consumer — otherwise column pruning specializes the second
@@ -601,11 +549,10 @@ _shared(
 # reason style guides say NOT EXISTS) and NOT EXISTS to a plain anti.
 
 
-_EXEC_IMMEDIATE_ORACLE = """
+_EXEC_IMMEDIATE_ORACLE = f"""
 SELECT c_mktsegment,
        COUNT(*) AS n_orders,
-       CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT)) AS BIGINT)
-         AS total_micros
+       CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT) AS total_micros
 FROM orders JOIN customer ON o_custkey = c_custkey
 WHERE o_orderdate >= TIMESTAMP '1996-01-01'
   AND c_mktsegment IN ('BUILDING', 'MACHINERY')
@@ -633,11 +580,10 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import register_views
 
     register_views(spark, sf_dir)
-    qtext = """
+    qtext = f"""
         SELECT c_mktsegment,
                COUNT(*) AS n_orders,
-               CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT))
-                    AS BIGINT) AS total_micros
+               CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT) AS total_micros
         FROM orders JOIN customer ON o_custkey = c_custkey
         WHERE o_orderdate >= :cutoff
           AND c_mktsegment IN ('BUILDING', 'MACHINERY')

@@ -13,11 +13,7 @@ fixture-expressible stand-ins, noted per query.
 All queries run through the identical-text path (`_shared`): the same
 ANSI SQL is executed by Spark and the DuckDB oracle, so there is zero
 drift between the implementation and the correctness contract. Money
-arithmetic uses the exact scaled-long micros discipline from
-subqueries.py (see the _DISC_PRICE_M commentary there): products of
-<=2-dp money values are narrowed to an exact decimal scale, scaled to
-integer micros, and summed as BIGINT — bit-identical across engines,
-order-insensitive, and ~2.5x faster than decimal(38,x) aggregation.
+sums are exact BIGINT micros sums (functions/deterministic.py).
 Threshold comparisons that TPC-H states as `x < frac * AVG(...)` are
 rewritten integer-exact (`k * x * n < sum`) so no engine-specific double
 rounding can flip a boundary row.
@@ -25,12 +21,8 @@ rounding can flip a boundary row.
 
 from __future__ import annotations
 
-from .subqueries import _DISC_PRICE_M, _REV, _shared
-
-# Exact integer micros for single ≤2-dp money/quantity measures.
-_QTY_M = "CAST(CAST(l_quantity AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
-_PRICE_M = "CAST(CAST(l_extendedprice AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
-_ACCT_M = "CAST(CAST(c_acctbal AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
+from ..functions.deterministic import sql_micros
+from .subqueries import _DISC_PRICE, _shared
 
 
 _shared(
@@ -78,7 +70,7 @@ _shared(
     WITH shipping AS (
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(year(l_shipdate) AS INT) AS l_year,
-             {_DISC_PRICE_M} AS volume_m
+             {sql_micros(_DISC_PRICE)} AS volume_m
       FROM supplier
       JOIN lineitem ON s_suppkey = l_suppkey
       JOIN orders   ON o_orderkey = l_orderkey
@@ -109,7 +101,7 @@ _shared(
     f"""
     WITH all_nations AS (
       SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-             {_DISC_PRICE_M} AS volume_m,
+             {sql_micros(_DISC_PRICE)} AS volume_m,
              n2.n_name AS nation
       FROM part
       JOIN lineitem ON p_partkey = l_partkey
@@ -137,8 +129,7 @@ _shared(
 _shared(
     "tpch_q9",
     # Product-type profit by supplier nation and year. No
-    # ps_supplycost, so cost is half the part's retail price per unit
-    # (2-dp × integer quantity × 0.5e6 — integer micros, exact). The
+    # ps_supplycost, so cost is half the part's retail price per unit. The
     # LIKE filter on p_name prunes the part dim BEFORE it broadcasts
     # into the fact join, which is what keeps this one fact-scan at
     # scale.
@@ -146,10 +137,8 @@ _shared(
     WITH profit AS (
       SELECT n_name AS nation,
              CAST(year(o_orderdate) AS INT) AS o_year,
-             {_DISC_PRICE_M}
-             - CAST(CAST(CAST(p_retailprice AS DECIMAL(18,6))
-                 * CAST(l_quantity AS DECIMAL(18,6)) AS DECIMAL(24,6))
-                 * 500000 AS BIGINT) AS amount_m
+             {sql_micros(_DISC_PRICE)}
+             - {sql_micros("0.5 * p_retailprice * l_quantity")} AS amount_m
       FROM part
       JOIN lineitem ON p_partkey = l_partkey
       JOIN supplier ON s_suppkey = l_suppkey
@@ -176,7 +165,7 @@ _shared(
     # broadcast of one row, not a rescan per group.
     f"""
     WITH nation_value AS (
-      SELECT l_partkey AS ps_partkey, {_PRICE_M} AS val_m
+      SELECT l_partkey AS ps_partkey, {sql_micros("l_extendedprice")} AS val_m
       FROM lineitem
       JOIN supplier ON s_suppkey = l_suppkey
       JOIN nation   ON s_nationkey = n_nationkey
@@ -244,7 +233,7 @@ _shared(
     # never a double compare.
     f"""
     WITH revenue0 AS (
-      SELECT l_suppkey AS supplier_no, SUM({_DISC_PRICE_M}) AS total_m
+      SELECT l_suppkey AS supplier_no, SUM({sql_micros(_DISC_PRICE)}) AS total_m
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1996-04-01'
@@ -288,15 +277,15 @@ _shared(
     # of a correlated rescan.
     f"""
     WITH part_qty AS (
-      SELECT l_partkey, SUM({_QTY_M}) AS qty_sum_m, COUNT(*) AS n
+      SELECT l_partkey, SUM({sql_micros("l_quantity")}) AS qty_sum_m, COUNT(*) AS n
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT CAST(SUM({_PRICE_M}) AS DOUBLE) / 1000000.0 / 7.0 AS avg_yearly
+    SELECT CAST(SUM({sql_micros("l_extendedprice")}) AS DOUBLE) / 1000000.0 / 7.0 AS avg_yearly
     FROM lineitem
     JOIN part ON p_partkey = lineitem.l_partkey
     JOIN part_qty ON part_qty.l_partkey = lineitem.l_partkey
     WHERE p_brand = 'Brand#12'
-      AND 5 * {_QTY_M} * n < qty_sum_m
+      AND 5 * {sql_micros("l_quantity")} * n < qty_sum_m
     """,
 )
 
@@ -319,7 +308,7 @@ _shared(
         AND l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1997-01-01'
       GROUP BY l_suppkey
-      HAVING SUM({_QTY_M}) > 100000000)
+      HAVING SUM({sql_micros("l_quantity")}) > 100000000)
     ORDER BY s_name
     """,
 )
@@ -365,16 +354,16 @@ _shared(
     # the customer scan. NOT EXISTS anti-joins recent orders.
     f"""
     WITH pos AS (
-      SELECT SUM({_ACCT_M}) AS pos_sum_m, COUNT(*) AS pos_n
+      SELECT SUM({sql_micros("c_acctbal")}) AS pos_sum_m, COUNT(*) AS pos_n
       FROM customer
       WHERE c_acctbal > 0.0 AND c_nationkey < 13
     )
     SELECT c_nationkey AS cntrycode,
            COUNT(*) AS numcust,
-           CAST(SUM({_ACCT_M}) AS DOUBLE) / 1000000.0 AS totacctbal
+           CAST(SUM({sql_micros("c_acctbal")}) AS DOUBLE) / 1000000.0 AS totacctbal
     FROM customer CROSS JOIN pos
     WHERE c_nationkey < 13
-      AND {_ACCT_M} * pos_n > pos_sum_m
+      AND {sql_micros("c_acctbal")} * pos_n > pos_sum_m
       AND NOT EXISTS (
             SELECT 1 FROM orders
             WHERE o_custkey = c_custkey

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import t
+from ..functions.deterministic import micros, sql_micros
 from .registry import register
 
 
@@ -191,16 +192,16 @@ def udtf_explode_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COGROUP_ORACLE = """
+_COGROUP_ORACLE = f"""
 WITH c AS (
   SELECT c_nationkey AS nk, COUNT(*) AS n_cust,
-         CAST(SUM(CAST(ROUND(c_acctbal * 1000000) AS BIGINT)) AS BIGINT)
+         CAST(SUM({sql_micros("c_acctbal")}) AS BIGINT)
            AS cust_micros
   FROM customer GROUP BY c_nationkey
 ),
 s AS (
   SELECT s_nationkey AS nk, COUNT(*) AS n_supp,
-         CAST(SUM(CAST(ROUND(s_acctbal * 1000000) AS BIGINT)) AS BIGINT)
+         CAST(SUM({sql_micros("s_acctbal")}) AS BIGINT)
            AS supp_micros
   FROM supplier GROUP BY s_nationkey
 )
@@ -225,12 +226,11 @@ def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each key's pair of pandas frames lands in ONE Python call,
     the escape hatch for custom merges (as-of logic, per-entity
     reconciliation) no SQL join expresses. Here: per-nation customer
-    vs supplier balance reconciliation with exact scaled-micros sums
-    (np round half-even, SQL half-away, and Spark half-up all agree
-    because 2-dp money ×10^6 is within 1e-9 of an integer —
-    functions/deterministic.py); one side may be empty for a key,
-    which the callable must (and does) handle, mirrored by the
-    oracle's FULL JOIN. 25 nation groups → 25 fat Arrow batches; a
+    vs supplier balance reconciliation with exact micros sums (the
+    closure spells functions/deterministic.py's FLOOR(x*1e6 + 0.5) in
+    numpy — a Python worker cannot import this package); one side may
+    be empty for a key, which the callable must (and does) handle,
+    mirrored by the oracle's FULL JOIN. 25 nation groups → 25 fat Arrow batches; a
     high-cardinality key would bucket first (udf_grouped_map pattern).
     """
     c = t(spark, sf_dir, "customer").select("c_nationkey", "c_acctbal")
@@ -244,7 +244,7 @@ def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(col) == 0:
                 return 0
             return int(
-                np.round(col.to_numpy() * 1e6).astype(np.int64).sum()
+                np.floor(col.to_numpy() * 1e6 + 0.5).astype(np.int64).sum()
             )
 
         nc, ns = len(cpdf), len(spdf)
@@ -506,10 +506,9 @@ def udf_pandas_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-_MAP_IN_ARROW_ORACLE = """
+_MAP_IN_ARROW_ORACLE = f"""
 SELECT l_returnflag,
-       CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 1000000)
-                     AS BIGINT)) AS BIGINT) AS revenue_micros,
+       CAST(SUM({sql_micros("l_extendedprice * (1 - l_discount)")}) AS BIGINT) AS revenue_micros,
        COUNT(*) AS n_rows
 FROM lineitem
 GROUP BY l_returnflag
@@ -527,10 +526,10 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the worker — the map-side combine Catalyst can't inject across the
     Python boundary), so what crosses back to the JVM is
     O(groups·batches), not O(rows); the final groupBy then reduces
-    partials. Revenue goes through the deterministic.py contract
-    (round(x·1e6) is the same integer under ANY rounding mode because
-    the true value is ≤6-dp; integer sums are exact both sides), so the
-    Arrow path hash-matches the relational oracle bit-for-bit. Imports
+    partials. Revenue goes through the deterministic.py encoding,
+    FLOOR(x·1e6 + 0.5) in pyarrow compute (integer sums are exact both
+    sides), so the Arrow path hash-matches the relational oracle
+    bit-for-bit. Imports
     live INSIDE the closure (cloudpickle ships no repo globals —
     CLAUDE.md).
     """
@@ -541,15 +540,18 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         for b in batches:
             cents = pc.cast(
-                pc.round(
-                    pc.multiply(
+                pc.floor(
+                    pc.add(
                         pc.multiply(
-                            b.column("l_extendedprice"),
-                            pc.subtract(
-                                pa.scalar(1.0), b.column("l_discount")
+                            pc.multiply(
+                                b.column("l_extendedprice"),
+                                pc.subtract(
+                                    pa.scalar(1.0), b.column("l_discount")
+                                ),
                             ),
+                            pa.scalar(1_000_000.0),
                         ),
-                        pa.scalar(1_000_000.0),
+                        pa.scalar(0.5),
                     )
                 ),
                 pa.int64(),

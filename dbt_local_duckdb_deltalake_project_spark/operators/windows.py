@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import DEC
+from ..functions.deterministic import micros, sql_micros
 from .registry import register
 
 
@@ -103,13 +103,13 @@ def win_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "win_running_sum",
-    """
+    f"""
     SELECT o_orderkey, o_custkey, o_orderdate,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) OVER (
+           ROUND(CAST(SUM({sql_micros("o_totalprice")}) OVER (
              PARTITION BY o_custkey
              ORDER BY o_orderdate ASC, o_orderkey ASC
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS DOUBLE), 2) AS running_spend
+           ) AS DOUBLE) / 1000000, 2) AS running_spend
     FROM orders
     """,
 )
@@ -124,17 +124,19 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderdate",
         F.round(
-            F.sum(F.col("o_totalprice").cast(DEC)).over(w).cast("double"), 2
+            F.sum(micros(F.col("o_totalprice"))).over(w).cast("double")
+            / 1_000_000,
+            2,
         ).alias("running_spend"),
     )
 
 
 @register(
     "win_moving_avg_rows",
-    """
+    f"""
     SELECT o_orderkey, o_custkey,
-           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) OVER w AS DOUBLE)
-                 / COUNT(o_totalprice) OVER w, 6) AS moving_avg_7
+           ROUND(CAST(SUM({sql_micros("o_totalprice")}) OVER w AS DOUBLE)
+                 / 1000000 / COUNT(o_totalprice) OVER w, 6) AS moving_avg_7
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey
                  ORDER BY o_orderdate ASC, o_orderkey ASC
@@ -151,7 +153,8 @@ def win_moving_avg_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         F.round(
-            F.sum(F.col("o_totalprice").cast(DEC)).over(w).cast("double")
+            F.sum(micros(F.col("o_totalprice"))).over(w).cast("double")
+            / 1_000_000
             / F.count("o_totalprice").over(w),
             6,
         ).alias("moving_avg_7"),
@@ -160,12 +163,12 @@ def win_moving_avg_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "win_range_frame",
-    """
+    f"""
     SELECT event_id, user_id, ts,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER (
+           ROUND(CAST(SUM({sql_micros("value")}) OVER (
              PARTITION BY user_id ORDER BY ts
              RANGE BETWEEN INTERVAL 3 DAYS PRECEDING AND CURRENT ROW
-           ) AS DOUBLE), 4) AS value_3d
+           ) AS DOUBLE) / 1000000, 4) AS value_3d
     FROM events
     """,
 )
@@ -184,7 +187,8 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         F.round(
-            F.sum(F.col("value").cast(DEC)).over(w).cast("double"), 4
+            F.sum(micros(F.col("value"))).over(w).cast("double") / 1_000_000,
+            4,
         ).alias("value_3d"),
     )
 
@@ -646,10 +650,10 @@ def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "event_id")
 
 
-_RATIO_ORACLE = """
+_RATIO_ORACLE = f"""
 WITH x AS (
   SELECT o_custkey, o_orderkey,
-         CAST(ROUND(o_totalprice * 1000000) AS BIGINT) AS price_m
+         {sql_micros("o_totalprice")} AS price_m
   FROM orders
 ), s AS (
   SELECT o_custkey, o_orderkey, price_m,
@@ -685,8 +689,7 @@ def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     x = o.select(
         "o_custkey", "o_orderkey",
-        F.round(F.col("o_totalprice") * 1_000_000)
-        .cast("long")
+        micros(F.col("o_totalprice"))
         .alias("price_m"),
     )
     by_cust = W.partitionBy("o_custkey")
@@ -709,10 +712,10 @@ def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_custkey", "o_orderkey")
 
 
-_PARETO_ORACLE = """
+_PARETO_ORACLE = f"""
 WITH spend AS (
   SELECT o_custkey,
-         CAST(SUM(CAST(ROUND(o_totalprice * 1000000) AS BIGINT)) AS BIGINT)
+         CAST(SUM({sql_micros("o_totalprice")}) AS BIGINT)
            AS spend_m
   FROM orders GROUP BY o_custkey
 ), ranked AS (
@@ -756,7 +759,7 @@ def win_pareto_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(
-            F.round(F.col("o_totalprice") * 1_000_000).cast("long")
+            micros(F.col("o_totalprice"))
         ).alias("spend_m")
     )
     parts = (
@@ -1021,10 +1024,10 @@ def win_lead_lag_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "ts", "event_id")
 
 
-_DRAWDOWN_ORACLE = """
+_DRAWDOWN_ORACLE = f"""
 WITH series AS (
   SELECT user_id, ts, event_id,
-         CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) OVER (
+         CAST(SUM({sql_micros("value")}) OVER (
            PARTITION BY user_id ORDER BY ts, event_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
            AS equity_m
@@ -1067,7 +1070,7 @@ def win_running_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        F.sum(F.round(F.col("value") * 1_000_000).cast("long"))
+        F.sum(micros(F.col("value")))
         .over(w)
         .alias("equity_m"),
     )
@@ -1085,13 +1088,13 @@ def win_running_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NTILE_ORACLE = """
+_NTILE_ORACLE = f"""
 WITH tiled AS (
   SELECT c_mktsegment,
-         CAST(ROUND(c_acctbal * 1000000) AS BIGINT) AS bal_m,
+         {sql_micros("c_acctbal")} AS bal_m,
          NTILE(10) OVER (
            PARTITION BY c_mktsegment
-           ORDER BY CAST(ROUND(c_acctbal * 1000000) AS BIGINT), c_custkey
+           ORDER BY {sql_micros("c_acctbal")}, c_custkey
          ) AS decile
   FROM customer
 )
@@ -1117,7 +1120,7 @@ def win_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy.
     """
     c = t(spark, sf_dir, "customer")
-    bal_m = F.round(F.col("c_acctbal") * 1_000_000).cast("long")
+    bal_m = micros(F.col("c_acctbal"))
     tiled = c.select(
         "c_mktsegment",
         bal_m.alias("bal_m"),

@@ -81,8 +81,12 @@ def _file_stats(path: str) -> str:
     """Per-file column statistics for the add action's ``stats`` field
     (the protocol stores them as a JSON string): numRecords plus
     min/maxValues per leaf column, read from the parquet footer — no
-    data pages touched. Readers use them for data skipping."""
+    data pages touched. Readers use them for data skipping. A decimal
+    is a JSON number, as the protocol writes it; one with more digits
+    than a double carries exactly gets no min/max (its file is never
+    skipped on that column)."""
     import datetime
+    import decimal
 
     import pyarrow.parquet as pq
 
@@ -99,7 +103,24 @@ def _file_stats(path: str) -> str:
             return str(v)
         if isinstance(v, bytes):
             return v.decode("utf-8", "replace")
+        if isinstance(v, decimal.Decimal):
+            f = float(v)
+            return f if decimal.Decimal(repr(f)) == v else None
         return v
+
+    def _min_max(st, ci: int):
+        """The stat pair; a decimal's from its unscaled physical value
+        (pyarrow decodes no INT32/INT64-backed decimal, Spark's and
+        DuckDB's layout up to 18 digits)."""
+        cs = md.schema.column(ci)
+        if cs.logical_type.type != "DECIMAL":
+            return st.min, st.max
+        return tuple(
+            decimal.Decimal(
+                v if isinstance(v, int) else int.from_bytes(v, "big", signed=True)
+            ).scaleb(-cs.scale)
+            for v in (st.min_raw, st.max_raw)
+        )
 
     raw_min: dict = {}
     raw_max: dict = {}
@@ -110,15 +131,21 @@ def _file_stats(path: str) -> str:
             if st is None or not st.has_min_max:
                 continue
             name = col.path_in_schema
-            if name not in raw_min or st.min < raw_min[name]:
-                raw_min[name] = st.min
-            if name not in raw_max or st.max > raw_max[name]:
-                raw_max[name] = st.max
+            lo, hi = _min_max(st, ci)
+            if name not in raw_min or lo < raw_min[name]:
+                raw_min[name] = lo
+            if name not in raw_max or hi > raw_max[name]:
+                raw_max[name] = hi
+
+    def _values(raw: dict) -> dict:
+        out = {k: _jsonable(v) for k, v in raw.items()}
+        return {k: v for k, v in out.items() if v is not None}
+
     return json.dumps(
         {
             "numRecords": md.num_rows,
-            "minValues": {k: _jsonable(v) for k, v in raw_min.items()},
-            "maxValues": {k: _jsonable(v) for k, v in raw_max.items()},
+            "minValues": _values(raw_min),
+            "maxValues": _values(raw_max),
         }
     )
 
@@ -166,8 +193,15 @@ def _prune(
         though the instants are equal. Parse both sides as ISO
         timestamps when possible (a bare date parses as its
         midnight instant); on any parse failure fall back to the
-        raw values, which keeps numeric stats exact."""
+        raw values, which keeps numeric stats exact. A decimal
+        column's stat is the JSON number of its exact digits, so
+        against a Decimal bound it compares as those digits (the
+        double it parsed to is not the decimal's value)."""
         import datetime as _dt
+        import decimal as _dec
+
+        if isinstance(y, _dec.Decimal) and isinstance(x, float):
+            return _dec.Decimal(repr(x)), y
 
         def parse(v):
             if isinstance(v, _dt.datetime):
@@ -804,7 +838,6 @@ class DeltaLikeTable:
     def live_files(
         self,
         as_of: int | None = None,
-        partition_filter: dict[str, str] | None = None,
         stats_filter: dict[str, tuple] | None = None,
     ) -> list[dict]:
         """The add actions a ``read`` with these filters would open.
@@ -816,7 +849,7 @@ class DeltaLikeTable:
         which is how OPTIMIZE ZORDER's benefit is measured at 100 TB
         without touching data."""
         adds = list(self.log.snapshot(as_of).adds.values())
-        return _prune(adds, partition_filter, stats_filter)
+        return _prune(adds, None, stats_filter)
 
     def read(
         self,
@@ -1108,7 +1141,7 @@ class DeltaLikeTable:
             actions.append({"metaData": old.metadata})
         return self.log.commit(actions, "RESTORE", snap)
 
-    def clone_to(self, target_path: str, as_of: int | None = None) -> "DeltaLikeTable":
+    def clone_to(self, target_path: str) -> "DeltaLikeTable":
         """SHALLOW CLONE: a new table whose first commit re-ADDs the
         source's live files by ABSOLUTE path (the protocol allows path
         URIs outside the table root) — zero data copied, O(live adds)
@@ -1120,7 +1153,7 @@ class DeltaLikeTable:
         root."""
         clone = DeltaLikeTable(target_path)
         os.makedirs(target_path, exist_ok=True)
-        snap = self.log.snapshot(as_of)
+        snap = self.log.snapshot()
         actions: list[dict] = []
         for a in snap.adds.values():
             add = {**a, "path": os.path.abspath(os.path.join(self.path, a["path"]))}

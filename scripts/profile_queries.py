@@ -3,7 +3,9 @@
 
 Runs each named query (or the N most expensive per BENCH_DETAIL.json)
 SERIALLY in one warm session against $SPARK_GRAFT_SF_DIR through the
-noop sink, prints per-query wall seconds and Janino compiles, and (with
+noop sink, prints per-query wall seconds, executor CPU seconds (summed
+over the query's stages from Spark's status store, as perfbench's
+``exec.cpu_s``) and Janino compiles, and (with
 --plans DIR) writes `<query>_<tag>.txt` files containing
 explain("formatted") output.
 
@@ -66,6 +68,7 @@ def main() -> None:
 
     from dbt_local_duckdb_deltalake_project_spark.prestage import prestage
     from dbt_local_duckdb_deltalake_project_spark.session import get_spark
+    from perfbench.sparkstats import group_for, read_group
 
     qs = queries()
     names = list(args.names)
@@ -92,7 +95,7 @@ def main() -> None:
     )
     results: dict[str, float] = {}
     for p in range(max(1, args.repeat)):
-        print(f"# pass {p + 1}: wall_s  janino_compiles  query", flush=True)
+        print(f"# pass {p + 1}: wall_s  cpu_s  janino_compiles  query", flush=True)
         for name in names:
             s = (
                 spark.newSession()
@@ -100,14 +103,19 @@ def main() -> None:
                 or name.endswith(own_session_markers[0])
                 else spark
             )
-            spark.sparkContext.setJobDescription(f"profile:{name}")
+            group = group_for(name)
+            spark.sparkContext.setJobGroup(group, f"profile:{name}")
             c0 = compiles.getCount()
             t0 = time.perf_counter()
             df = qs[name](s, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
+            cpu = read_group(spark.sparkContext, group)["exec.cpu_s"]
             results[name] = round(min(dt, results.get(name, dt)), 3)
-            print(f"{dt:8.3f}  {compiles.getCount() - c0:5d}  {name}", flush=True)
+            print(
+                f"{dt:8.3f}  {cpu:7.3f}  {compiles.getCount() - c0:5d}  {name}",
+                flush=True,
+            )
             if args.plans and p == 0:
                 _write_plan(df, os.path.join(_REPO, args.plans), name, args.tag)
     print(json.dumps({"total": round(sum(results.values()), 3), "n": len(results)}))

@@ -11,6 +11,10 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from dbt_local_duckdb_deltalake_project_spark.functions.deterministic import (
+    micros,
+)
+
 ROW = st.tuples(
     st.integers(min_value=0, max_value=9),
     st.integers(min_value=-100, max_value=100),
@@ -350,9 +354,7 @@ def test_temperature_weights_are_a_subdistribution(spark, sizes):
     g = spark.createDataFrame(rows, "lang string, n_chars long").select(
         "lang",
         "n_chars",
-        F.round(
-            F.round(F.sqrt(F.col("n_chars").cast("double")), 9) * 1_000_000
-        ).cast("long").alias("s_m"),
+        micros(F.round(F.sqrt(F.col("n_chars").cast("double")), 9)).alias("s_m"),
     )
     tot = g.agg(F.sum("s_m").alias("total_m"))
     out = (

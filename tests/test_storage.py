@@ -609,6 +609,56 @@ def test_stats_data_skipping_prunes_files(spark, tbl):
     assert sorted(r.k for r in tbl.read(spark).collect()) == [1, 2, 10, 20]
 
 
+def test_file_stats_write_a_decimal_column_as_json_numbers(tmp_path):
+    # JVM-free: decimals stored as INT64 (x), INT32 (s) and fixed-length
+    # bytes (w, p) — the stats carry them as JSON numbers with the
+    # decimal's exact digits.
+    import json
+
+    import duckdb
+
+    from dbt_local_duckdb_deltalake_project_spark.sources.deltalike import (
+        _file_stats,
+    )
+
+    path = str(tmp_path / "d.parquet")
+    duckdb.sql(
+        "COPY (SELECT * FROM (VALUES"
+        " (-1.25::DECIMAL(10,2), 5::DECIMAL(4,0), 2.5::DECIMAL(30,1),"
+        "  0.1234567890123456789::DECIMAL(38,19)),"
+        " (3.10::DECIMAL(10,2), 7::DECIMAL(4,0), -4.5::DECIMAL(30,1),"
+        "  0.1234567890123456789::DECIMAL(38,19)),"
+        " (2.00::DECIMAL(10,2), 6::DECIMAL(4,0), 0.0::DECIMAL(30,1),"
+        "  0.1234567890123456789::DECIMAL(38,19))"
+        f") t(x, s, p, w)) TO '{path}'"
+    )
+    st = json.loads(_file_stats(path))
+    assert st["numRecords"] == 3
+    lo, hi = st["minValues"], st["maxValues"]
+    assert (lo["x"], hi["x"]) == (-1.25, 3.1)
+    assert (lo["s"], hi["s"]) == (5, 7)
+    assert (lo["p"], hi["p"]) == (-4.5, 2.5)
+    # more digits than a double carries: no min/max, never skipped on it
+    assert "w" not in lo and "w" not in hi
+
+
+def test_stats_skipping_on_a_decimal_column(spark, tbl):
+    import decimal
+
+    d = decimal.Decimal
+    for i, x in enumerate(["1.10", "2.20", "3.30"]):
+        tbl.write(
+            spark.createDataFrame([(i, d(x))], "k int, x decimal(10,2)").coalesce(1),
+            mode="overwrite" if i == 0 else "append",
+        )
+    assert len(tbl.live_files()) == 3
+    # the 2.20 file's max equals the bound's exact digits: kept
+    kept = tbl.read(spark, stats_filter={"x": (d("2.2"), None)})
+    assert sorted(r.k for r in kept.collect()) == [1, 2]
+    assert len(tbl.live_files(stats_filter={"x": (None, d("1.1"))})) == 1
+    assert len(tbl.live_files(stats_filter={"x": (d("3.31"), None)})) == 0
+
+
 def test_append_schema_enforcement(spark, tbl):
     tbl.write(_df(spark, [(1, "a")]), mode="overwrite")
     # type change on a shared column → rejected
