@@ -19,11 +19,15 @@ from pyspark.sql import functions as F
 from ..catalog import sql, t
 from ..functions.deterministic import (
     DEC,
+    cents,
     davg,
     dsum,
+    ln_micros,
     micros,
+    sql_cents,
     sql_davg,
     sql_dsum,
+    sql_ln_micros,
     sql_micros,
 )
 from .registry import register
@@ -742,7 +746,7 @@ SELECT l_returnflag, l_linestatus,
          AS mode_class,
        CAST(mode(CAST(l_quantity <= 35 AS INTEGER)) AS INTEGER)
          AS mode_class_flag,
-       median(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS median_qty_cents,
+       median({sql_cents("l_quantity")}) AS median_qty_cents,
        median({sql_micros("l_extendedprice")})
          AS median_price_micros,
        COUNT(*) AS n
@@ -782,9 +786,7 @@ def agg_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.mode((F.col("l_quantity") <= 35).cast("int")).alias(
                 "mode_class_flag"
             ),
-            F.median(
-                F.round(F.col("l_quantity") * 100).cast("long")
-            ).alias("median_qty_cents"),
+            F.median(cents(F.col("l_quantity"))).alias("median_qty_cents"),
             F.median(
                 micros(F.col("l_extendedprice"))
             ).alias("median_price_micros"),
@@ -952,10 +954,10 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AB_TTEST_ORACLE = """
+_AB_TTEST_ORACLE = f"""
 WITH x AS (
   SELECT event_type, user_id % 2 AS arm,
-         CAST(ROUND(value * 100) AS BIGINT) AS v
+         {sql_cents("value")} AS v
   FROM events
 ), s AS (
   SELECT event_type, arm, COUNT(*) AS n,
@@ -1009,7 +1011,7 @@ def agg_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = e.select(
         "event_type",
         (F.col("user_id") % 2).alias("arm"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
+        cents(F.col("value")).alias("v"),
     )
     s = x.groupBy("event_type", "arm").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1109,12 +1111,12 @@ def agg_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REGR_ORACLE = """
+_REGR_ORACLE = f"""
 WITH x AS (
   SELECT event_type,
          CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
               AS BIGINT) AS xd,
-         CAST(ROUND(value * 100) AS BIGINT) AS yc
+         {sql_cents("value")} AS yc
   FROM events
 ), s AS (
   SELECT event_type, COUNT(*) AS n,
@@ -1156,7 +1158,7 @@ def agg_regression_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("ts"), F.lit("2024-01-01"))
         .cast("long")
         .alias("xd"),
-        F.round(F.col("value") * 100).cast("long").alias("yc"),
+        cents(F.col("value")).alias("yc"),
     )
     s = x.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1178,9 +1180,9 @@ def agg_regression_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_MOMENTS_ORACLE = """
+_MOMENTS_ORACLE = f"""
 WITH x AS (
-  SELECT event_type, CAST(CAST(ROUND(value * 100) AS BIGINT) AS HUGEINT) AS v
+  SELECT event_type, CAST({sql_cents("value")} AS HUGEINT) AS v
   FROM events
 ), s0 AS (
   SELECT event_type, COUNT(*) AS n,
@@ -1234,7 +1236,7 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     four accumulators per group, any scale.
     """
     e = t(spark, sf_dir, "events")
-    v = F.round(F.col("value") * 100).cast("long").cast("decimal(38,0)")
+    v = cents(F.col("value")).cast("decimal(38,0)")
     x = e.select("event_type", v.alias("v"))
     s0 = x.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1384,14 +1386,14 @@ def agg_wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_CUPED_ORACLE = """
+_CUPED_ORACLE = f"""
 WITH u AS (
   SELECT user_id, user_id % 2 AS arm,
          CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-07-01'
-                       THEN CAST(ROUND(value * 100) AS BIGINT)
+                       THEN {sql_cents("value")}
                        ELSE 0 END) AS BIGINT) AS x,
          CAST(SUM(CASE WHEN ts >= TIMESTAMP '2024-07-01'
-                       THEN CAST(ROUND(value * 100) AS BIGINT)
+                       THEN {sql_cents("value")}
                        ELSE 0 END) AS BIGINT) AS y
   FROM events GROUP BY user_id
 ), g AS (
@@ -1457,11 +1459,11 @@ def agg_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     same sample size.
     """
     e = t(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    v = cents(F.col("value"))
     boundary = F.lit("2024-07-01").cast("timestamp")
     u = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("ts") < boundary, cents).otherwise(0)).alias("x"),
-        F.sum(F.when(F.col("ts") >= boundary, cents).otherwise(0)).alias("y"),
+        F.sum(F.when(F.col("ts") < boundary, v).otherwise(0)).alias("x"),
+        F.sum(F.when(F.col("ts") >= boundary, v).otherwise(0)).alias("y"),
     ).select("user_id", (F.col("user_id") % 2).alias("arm"), "x", "y")
     xd = F.col("x").cast("decimal(38,0)")
     yd = F.col("y").cast("decimal(38,0)")
@@ -1919,10 +1921,10 @@ def agg_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINSOR_ORACLE = """
+_WINSOR_ORACLE = f"""
 WITH v AS (
   SELECT event_id, event_type,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 ranked AS (
@@ -1974,7 +1976,7 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = t(spark, sf_dir, "events").select(
         "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     g = v.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).alias("c")
@@ -2261,10 +2263,10 @@ def agg_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scale.
 # ---------------------------------------------------------------------------
 
-_SEASONALITY_ORACLE = """
+_SEASONALITY_ORACLE = f"""
 WITH v AS (
   SELECT event_type, CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hr,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 cell AS (
@@ -2291,7 +2293,7 @@ def agg_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = t(spark, sf_dir, "events").select(
         "event_type",
         F.hour("ts").cast("long").alias("hr"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     cell = v.groupBy("event_type", "hr").agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
@@ -2329,11 +2331,11 @@ def agg_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly. Oracle keeps the textbook per-row rank form (value-equal).
 # ---------------------------------------------------------------------------
 
-_MANN_WHITNEY_ORACLE = """
+_MANN_WHITNEY_ORACLE = f"""
 WITH v AS (
   SELECT user_id % 8 AS cohort,
          event_type = 'purchase' AS g1,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events WHERE event_type IN ('purchase', 'click')
 ),
 r AS (
@@ -2368,7 +2370,7 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             (F.col("user_id") % 8).alias("cohort"),
             (F.col("event_type") == "purchase").alias("g1"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents(F.col("value")).alias("cents"),
         )
     )
     # doubled average rank: 2·rank + (#ties at this value) − 1 is always
@@ -2423,11 +2425,11 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cardinality, not event volume.
 # ---------------------------------------------------------------------------
 
-_KS_2SAMPLE_ORACLE = """
+_KS_2SAMPLE_ORACLE = f"""
 WITH v AS (
   SELECT user_id % 8 AS cohort,
          event_type = 'purchase' AS g1,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events WHERE event_type IN ('purchase', 'click')
 ),
 pts AS (
@@ -2466,7 +2468,7 @@ def agg_ks_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             (F.col("user_id") % 8).alias("cohort"),
             (F.col("event_type") == "purchase").alias("g1"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents(F.col("value")).alias("cents"),
         )
     )
     pts = v.groupBy("cohort", "cents").agg(
@@ -2597,9 +2599,9 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At 100 TB: groupBy on a 9-value key — map-side combine makes it free.
 # ---------------------------------------------------------------------------
 
-_BENFORD_ORACLE = """
+_BENFORD_ORACLE = f"""
 WITH c AS (
-  SELECT CAST(SUBSTR(CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT)
+  SELECT CAST(SUBSTR(CAST({sql_cents("o_totalprice")}
                           AS VARCHAR), 1, 1) AS BIGINT) AS digit
   FROM orders WHERE o_totalprice > 0
 ),
@@ -2639,8 +2641,7 @@ def agg_benford_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_totalprice") > 0)
         .select(
             F.substring(
-                F.round(F.col("o_totalprice") * 100)
-                .cast("long")
+                cents(F.col("o_totalprice"))
                 .cast("string"),
                 1,
                 1,
@@ -2704,7 +2705,7 @@ def agg_benford_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _POWER_ORACLE = f"""
 WITH v AS (
-  SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
+  SELECT event_type, {sql_cents("value")} AS cents
   FROM events
 ),
 m AS (
@@ -2752,7 +2753,7 @@ ORDER BY event_type
 def agg_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = t(spark, sf_dir, "events").select(
         "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     m = v.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2818,10 +2819,10 @@ def agg_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ECDF trick applied to a quantile.
 # ---------------------------------------------------------------------------
 
-_WMEDIAN_ORACLE = """
+_WMEDIAN_ORACLE = f"""
 WITH rows_ AS (
   SELECT l_returnflag AS flag,
-         CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents,
+         {sql_cents("l_extendedprice")} AS cents,
          CAST(l_quantity AS BIGINT) AS wt
   FROM lineitem
 ),
@@ -2868,7 +2869,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        cents(F.col("l_extendedprice")).alias("cents"),
         F.col("l_quantity").cast("long").alias("wt"),
     )
     grp = li.groupBy("flag", "cents").agg(F.sum("wt").alias("w"))
@@ -2940,10 +2941,10 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # volume away first.
 # ---------------------------------------------------------------------------
 
-_MANN_KENDALL_ORACLE = """
+_MANN_KENDALL_ORACLE = f"""
 WITH daily AS (
   SELECT user_id, date_trunc('day', ts) AS d,
-         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS x
+         CAST(SUM({sql_cents("value")}) AS BIGINT) AS x
   FROM events GROUP BY user_id, date_trunc('day', ts)
 ),
 s AS (
@@ -2997,7 +2998,7 @@ def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "user_id",
             F.date_trunc("day", "ts").alias("d"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents(F.col("value")).alias("cents"),
         )
         .groupBy("user_id", "d")
         .agg(F.sum("cents").alias("x"))
@@ -3068,10 +3069,10 @@ def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on two low-cardinality keys, a few-KB shuffle at any input size.
 # ---------------------------------------------------------------------------
 
-_GROUP_BY_ALL_TEXT = """
+_GROUP_BY_ALL_TEXT = f"""
 SELECT l_returnflag,
        l_linestatus,
-       CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_c,
+       CAST(SUM({sql_cents("l_quantity")}) AS BIGINT) AS qty_c,
        COUNT(*) AS n_rows
 FROM lineitem
 GROUP BY ALL
@@ -3144,11 +3145,11 @@ def agg_unpivot_include_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # agg_ols_normal_equations — exact-rational multiple regression.
 
-_OLS_ORACLE = """
+_OLS_ORACLE = f"""
 WITH r AS (
-  SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS y,
+  SELECT {sql_cents("l_extendedprice")} AS y,
          CAST(l_quantity AS BIGINT) AS x1,
-         CAST(ROUND(l_discount * 100) AS BIGINT) AS x2
+         {sql_cents("l_discount")} AS x2
   FROM lineitem
 ), m AS (
   SELECT CAST(COUNT(*) AS HUGEINT) AS n,
@@ -3215,9 +3216,9 @@ def agg_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = t(spark, sf_dir, "lineitem")
     r = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
+        cents(F.col("l_extendedprice")).alias("y"),
         F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("x2"),
+        cents(F.col("l_discount")).alias("x2"),
     )
     dec = "decimal(38,0)"
     m = r.agg(
@@ -3364,11 +3365,11 @@ def agg_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HIST_LOG2_ORACLE = """
+_HIST_LOG2_ORACLE = f"""
 WITH v AS (
-  SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
+  SELECT event_type, {sql_cents("value")} AS cents
   FROM events
-  WHERE CAST(ROUND(value * 100) AS BIGINT) > 0
+  WHERE {sql_cents("value")} > 0
 ),
 b AS (
   SELECT event_type,
@@ -3410,7 +3411,7 @@ def agg_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals (5 rows). Scale-free: output cardinality is types × ≤64.
     """
     v = t(spark, sf_dir, "events").select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", cents(F.col("value")).alias("cents")
     ).filter(F.col("cents") > 0)
     b = v.select(
         "event_type",
@@ -3438,11 +3439,11 @@ def agg_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PSI_ORACLE = """
+_PSI_ORACLE = f"""
 WITH v AS (
   SELECT CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 'a' ELSE 'b' END
            AS period,
-         LEAST(CAST(ROUND(value * 100) AS BIGINT) // 2000, 16) AS bucket
+         LEAST({sql_cents("value")} // 2000, 16) AS bucket
   FROM events
 ),
 g AS (
@@ -3496,7 +3497,7 @@ def agg_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("b")
         .alias("period"),
         F.least(
-            F.expr("CAST(ROUND(value * 100) AS BIGINT) div 2000"), F.lit(16)
+            F.expr(f"{sql_cents('value')} div 2000"), F.lit(16)
         ).alias("bucket"),
     )
     g = v.groupBy("bucket").agg(
@@ -3810,12 +3811,12 @@ def agg_empirical_bayes_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DID_ORACLE = """
+_DID_ORACLE = f"""
 WITH cells AS (
   SELECT user_id % 2 = 0 AS treated,
          ts >= TIMESTAMP '2024-01-16' AS post,
          COUNT(*) AS n,
-         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS s
+         CAST(SUM({sql_cents("value")}) AS BIGINT) AS s
   FROM events
   GROUP BY user_id % 2 = 0, ts >= TIMESTAMP '2024-01-16'
 ),
@@ -3869,7 +3870,7 @@ def agg_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("s"),
+            F.sum(cents(F.col("value"))).alias("s"),
         )
     )
 
@@ -3899,11 +3900,11 @@ def agg_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ACF_ORACLE = """
+_ACF_ORACLE = f"""
 WITH daily AS (
   SELECT event_type,
          date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
   FROM events GROUP BY event_type, date_diff('day', DATE '2024-01-01',
                                              CAST(ts AS DATE))
 ),
@@ -3963,7 +3964,7 @@ def agg_autocorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("day"),
         )
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+            F.sum(cents(F.col("value"))).alias("cents")
         )
     )
     spine = spark.range(1).select(
@@ -4018,10 +4019,10 @@ def agg_autocorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "lag")
 
 
-_SKYLINE_ORACLE = """
+_SKYLINE_ORACLE = f"""
 WITH cust AS (
   SELECT c.c_custkey, c.c_mktsegment,
-         CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         CAST(SUM({sql_cents("o.o_totalprice")}) AS BIGINT)
            AS spend_cents,
          CAST(COUNT(*) AS BIGINT) AS n_orders
   FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
@@ -4063,7 +4064,7 @@ def agg_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_mktsegment")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            F.sum(cents(F.col("o_totalprice"))).alias(
                 "spend_cents"
             ),
             F.count(F.lit(1)).alias("n_orders"),
@@ -4173,11 +4174,11 @@ def agg_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql(spark, sf_dir, _BH_TEXT)
 
 
-_IPW_ORACLE = """
+_IPW_ORACLE = f"""
 WITH e AS (
   SELECT event_type AS bucket,
          (user_id % 2 = 0) AS treated,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 cells AS (
@@ -4252,13 +4253,13 @@ def agg_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("user_id") % 2 == 0,
-                F.round(F.col("value") * 100).cast("long"),
+                cents(F.col("value")),
             ).otherwise(F.lit(0))
         ).alias("sy_t"),
         F.sum(
             F.when(
                 F.col("user_id") % 2 != 0,
-                F.round(F.col("value") * 100).cast("long"),
+                cents(F.col("value")),
             ).otherwise(F.lit(0))
         ).alias("sy_c"),
     )
@@ -4327,10 +4328,10 @@ def agg_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_cell.unionAll(total).orderBy("bucket")
 
 
-_CONFORMAL_ORACLE = """
+_CONFORMAL_ORACLE = f"""
 WITH e AS (
   SELECT event_id, event_type,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents,
+         {sql_cents("value")} AS cents,
          (ts < TIMESTAMP '2024-01-16') AS is_cal
   FROM events
 ),
@@ -4400,7 +4401,7 @@ def agg_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
         (F.col("ts") < F.lit("2024-01-16").cast("timestamp")).alias(
             "is_cal"
         ),
@@ -4454,10 +4455,10 @@ def agg_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QSKETCH_ORACLE = """
+_QSKETCH_ORACLE = f"""
 WITH pts AS (
   SELECT date_trunc('month', l_shipdate) AS g,
-         CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents
+         {sql_cents("l_extendedprice")} AS cents
   FROM lineitem
 ),
 gn AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n FROM pts GROUP BY g),
@@ -4548,7 +4549,7 @@ def agg_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = 64
     li = t(spark, sf_dir, "lineitem").select(
         F.date_trunc("month", F.col("l_shipdate")).alias("g"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        cents(F.col("l_extendedprice")).alias("cents"),
     )
     # r13: gn feeds two branches (boundary targets AND the nt/ng
     # totals); truncate so the month fold runs once (12 rows).
@@ -4677,10 +4678,10 @@ def agg_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HHI_ORACLE = """
+_HHI_ORACLE = f"""
 WITH rev AS (
   SELECT s.s_nationkey AS nation, l.l_suppkey AS s,
-         CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT))
+         CAST(SUM({sql_cents("l.l_extendedprice")})
               AS BIGINT) AS cents
   FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
   GROUP BY s.s_nationkey, l.l_suppkey
@@ -4727,9 +4728,7 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(sup), "l_suppkey")
         .groupBy("nation", "l_suppkey")
         .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-            ).alias("cents")
+            F.sum(cents(F.col("l_extendedprice"))).alias("cents")
         )
     )
     tot = rev.groupBy("nation").agg(
@@ -4925,7 +4924,7 @@ def agg_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ATT_MATCH_ORACLE = """
+_ATT_MATCH_ORACLE = f"""
 WITH y AS (
   SELECT l_orderkey AS okey, CAST(COUNT(*) AS BIGINT) AS y
   FROM lineitem GROUP BY l_orderkey
@@ -4933,7 +4932,7 @@ WITH y AS (
 u AS (
   SELECT o.o_orderkey AS okey,
          CAST(date_trunc('month', o.o_orderdate) AS TIMESTAMP) AS m,
-         CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents,
+         {sql_cents("o.o_totalprice")} AS cents,
          (o.o_orderpriority LIKE '1-%' OR o.o_orderpriority LIKE '2-%')
            AS treated,
          y.y
@@ -5014,7 +5013,7 @@ def agg_att_nn_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("okey"),
         F.date_trunc("month", F.col("o_orderdate")).alias("m"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         (
             F.col("o_orderpriority").like("1-%")
             | F.col("o_orderpriority").like("2-%")
@@ -5079,10 +5078,10 @@ def agg_att_nn_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("month")
 
 
-_OAXACA_ORACLE = """
+_OAXACA_ORACLE = f"""
 WITH e AS (
   SELECT event_type AS k, (user_id % 2 = 0) AS treated,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 cells AS (
@@ -5179,13 +5178,13 @@ def agg_oaxaca_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("user_id") % 2 == 0,
-                F.round(F.col("value") * 100).cast("long"),
+                cents(F.col("value")),
             ).otherwise(F.lit(0))
         ).alias("s_t"),
         F.sum(
             F.when(
                 F.col("user_id") % 2 != 0,
-                F.round(F.col("value") * 100).cast("long"),
+                cents(F.col("value")),
             ).otherwise(F.lit(0))
         ).alias("s_c"),
     )
@@ -5380,7 +5379,7 @@ def agg_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _THEIL_ORACLE = f"""
 WITH rev AS (
   SELECT s.s_nationkey AS nation, l.l_suppkey AS s,
-         CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT))
+         CAST(SUM({sql_cents("l.l_extendedprice")})
               AS BIGINT) AS x
   FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
   GROUP BY s.s_nationkey, l.l_suppkey
@@ -5393,8 +5392,8 @@ tot AS (
 terms AS (
   SELECT r.nation,
          CAST((CAST(r.x AS HUGEINT) *
-               ({sql_micros("ROUND(ln(CAST(t.n AS DOUBLE) * CAST(r.x AS DOUBLE)), 9)")}
-                - {sql_micros("ROUND(ln(CAST(t.xt AS DOUBLE)), 9)")})) // t.xt
+               ({sql_ln_micros("CAST(t.n AS DOUBLE) * CAST(r.x AS DOUBLE)")}
+                - {sql_ln_micros("CAST(t.xt AS DOUBLE)")})) // t.xt
               AS BIGINT) AS t_micros
   FROM rev r JOIN tot t ON t.nation = r.nation
 )
@@ -5415,7 +5414,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     perfect equality, ln(n) under maximal concentration. Completes the
     concentration trio with agg_gini_by_segment (rank-based) and
     agg_hhi_concentration (share-squared). Determinism: each supplier
-    term is share · (lnq(n·x_i) − lnq(X)) with the two logs
+    term is share · (ln_micros(n·x_i) − ln_micros(X)) with the two logs
     independently micros-quantized (ln of the DOUBLE product n·x with
     the identical expression order in both engines, then the PMI
     9-dp-round micros) and the share applied as ONE sign-magnitude
@@ -5436,9 +5435,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(sup), "l_suppkey")
         .groupBy("nation", "l_suppkey")
         .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-            ).alias("x")
+            F.sum(cents(F.col("l_extendedprice"))).alias("x")
         )
     )
     tot = rev.groupBy("nation").agg(
@@ -5446,13 +5443,8 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dec = "decimal(38,0)"
     dln = (
-        micros(
-            F.round(
-                F.log(F.col("n").cast("double") * F.col("x").cast("double")),
-                9,
-            )
-        )
-        - micros(F.round(F.log(F.col("xt").cast("double")), 9))
+        ln_micros(F.col("n").cast("double") * F.col("x").cast("double"))
+        - ln_micros(F.col("xt"))
     )
     num = F.col("x").cast(dec) * dln
     den = F.col("xt").cast(dec)
@@ -5479,12 +5471,12 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SMAPE_ORACLE = """
+_SMAPE_ORACLE = f"""
 WITH daily AS (
   SELECT event_type,
          date_diff('day', DATE '2024-01-01',
                    CAST(date_trunc('day', ts) AS DATE)) AS day,
-         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS a
+         CAST(SUM({sql_cents("value")}) AS BIGINT) AS a
   FROM events GROUP BY event_type, day
 ),
 eval_ AS (
@@ -5537,7 +5529,7 @@ def agg_forecast_eval_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("2024-01-01").cast("timestamp"),
         ).alias("day"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("a")
+        F.sum(cents(F.col("value"))).alias("a")
     )
     c = daily.alias("c")
     p = daily.alias("p")
@@ -5729,7 +5721,7 @@ def agg_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("stratum")
 
 
-_RDD_ORACLE = """
+_RDD_ORACLE = f"""
 WITH yc AS (
   SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS y
   FROM lineitem GROUP BY l_orderkey
@@ -5737,7 +5729,7 @@ WITH yc AS (
 r AS (
   -- INNER join: an order with no lineitems has no outcome (mirrors
   -- the Spark fold-then-join; the synthetic fixture HAS such orders)
-  SELECT (CAST(ROUND(o_totalprice * 100) AS BIGINT) - 15000000) // 100
+  SELECT ({sql_cents("o_totalprice")} - 15000000) // 100
            AS x,
          yc.y
   FROM orders o JOIN yc ON yc.l_orderkey = o.o_orderkey
@@ -5819,7 +5811,7 @@ def agg_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r = o.join(ycnt, "o_orderkey").select(
         F.expr(
-            "(CAST(ROUND(o_totalprice * 100) AS BIGINT) - 15000000)"
+            f"({sql_cents('o_totalprice')} - 15000000)"
             " div 100"
         ).alias("x"),
         "y",
@@ -5885,7 +5877,7 @@ def agg_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MEDIATION_ORACLE = """
+_MEDIATION_ORACLE = f"""
 WITH yc AS (
   SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS m
   FROM lineitem GROUP BY l_orderkey
@@ -5894,7 +5886,7 @@ r AS (
   SELECT CASE WHEN o.o_orderpriority LIKE '1-%'
                 OR o.o_orderpriority LIKE '2-%' THEN 1 ELSE 0 END AS x,
          yc.m,
-         CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS y
+         {sql_cents("o.o_totalprice")} AS y
   FROM orders o JOIN yc ON yc.l_orderkey = o.o_orderkey
 ),
 mo AS (
@@ -5982,7 +5974,7 @@ def agg_mediation_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("x"),
             "m",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("y"),
+            cents(F.col("o_totalprice")).alias("y"),
         )
     )
     dec = "decimal(38,0)"

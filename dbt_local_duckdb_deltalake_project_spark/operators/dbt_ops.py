@@ -16,7 +16,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import dsum, micros, sql_dsum, sql_micros
+from ..functions.deterministic import (
+    cents,
+    dsum,
+    micros,
+    sql_cents,
+    sql_dsum,
+    sql_micros,
+)
 from ..plans.graph import ModelGraph
 from ..sources.workspace import workdir
 from .registry import register
@@ -1445,10 +1452,10 @@ def dbt_microbatch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- dbt clone-based CI environments (dbt 1.6 `dbt clone`) ------------------
 
-_CLONE_CI_ORACLE = """
+_CLONE_CI_ORACLE = f"""
 WITH bronze AS (
   SELECT o_orderkey, o_custkey, o_orderstatus,
-         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+         {sql_cents("o_totalprice")} AS cents
   FROM orders WHERE o_orderkey % 2 = 0
 ),
 silver AS (
@@ -1521,7 +1528,7 @@ def dbt_clone_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_custkey",
             "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
 
     def silver_v1(sp, deps):

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import micros, sql_micros
+from ..functions.deterministic import cents, micros, sql_cents, sql_micros
 from ..sources.deltalike import DeltaLikeTable
 from ..sources.workspace import staged, workdir
 from .registry import register
@@ -1111,14 +1111,14 @@ def delta_merge_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "delta_update",
-    """
+    f"""
     WITH c AS (
       SELECT c_custkey, c_mktsegment, ROUND(c_acctbal, 2) AS acctbal,
              -- cents derive from the SAME stored ROUND(.,2) value the
              -- Spark side reads back (ADVICE r7): deriving from raw
              -- c_acctbal is identical only while fixtures are exactly
              -- 2dp — a >2dp source value would skew the two by 1 cent
-             CAST(ROUND(ROUND(c_acctbal, 2) * 100) AS BIGINT) AS cents
+             {sql_cents("ROUND(c_acctbal, 2)")} AS cents
       FROM customer
     )
     SELECT c_custkey,
@@ -1161,9 +1161,9 @@ def delta_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounding on one sf0.1 row (found r7); the final /100 division of
     # identical longs is bit-identical in both engines
     uplift = F.expr(
-        "CAST(CASE WHEN CAST(ROUND(acctbal * 100) AS BIGINT) < 0 "
-        "THEN -((-CAST(ROUND(acctbal * 100) AS BIGINT) * 110 + 50) div 100) "
-        "ELSE (CAST(ROUND(acctbal * 100) AS BIGINT) * 110 + 50) div 100 "
+        f"CAST(CASE WHEN {sql_cents('acctbal')} < 0 "
+        f"THEN -((-{sql_cents('acctbal')} * 110 + 50) div 100) "
+        f"ELSE ({sql_cents('acctbal')} * 110 + 50) div 100 "
         "END AS DOUBLE) / 100"
     )
     tbl.rewrite(spark, lambda cur: cur.select(
@@ -1348,12 +1348,12 @@ def delta_merge_insert_only(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "delta_replace_where",
-    """
+    f"""
     WITH fresh AS (
       -- cents derive from the STORED ROUND(.,2) price the engine reads
       -- back, not raw o_totalprice (identical only on 2dp fixtures)
       SELECT o_orderkey, o_orderstatus,
-             CAST((CAST(ROUND(ROUND(o_totalprice, 2) * 100) AS BIGINT) * 9)
+             CAST(({sql_cents("ROUND(o_totalprice, 2)")} * 9)
                   // 10 AS DOUBLE) / 100 AS price
       FROM orders WHERE o_orderstatus = 'F'
     )
@@ -1387,10 +1387,7 @@ def delta_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ROUND(x*0.9, 2) was measured to round differently across engines
     # at representation boundaries.
     fresh = o.filter(pred).withColumn(
-        "price",
-        (F.round(F.col("price") * 100).cast("long") * 9)
-        .cast("long")
-        .alias("c"),
+        "price", cents(F.col("price")) * 9
     ).withColumn(
         "price", F.expr("CAST(price DIV 10 AS DOUBLE) / 100")
     )
@@ -1425,12 +1422,12 @@ def _replace_where(spark: SparkSession, tbl: DeltaLikeTable, pred, fresh) -> int
 
 @register(
     "delta_dynamic_partition_overwrite",
-    """
+    f"""
     WITH fresh AS (
       -- cents derive from the STORED ROUND(.,2) price the engine reads
       -- back (the delta_replace_where exact-integer uplift pattern)
       SELECT o_orderkey, o_orderstatus,
-             CAST((CAST(ROUND(ROUND(o_totalprice, 2) * 100) AS BIGINT) * 11)
+             CAST(({sql_cents("ROUND(o_totalprice, 2)")} * 11)
                   // 10 AS DOUBLE) / 100 AS price
       FROM orders WHERE o_orderstatus = 'O'
     )
@@ -1467,9 +1464,7 @@ def delta_dynamic_partition_overwrite(
     tbl.write(o, mode="overwrite", partition_by=["o_orderstatus"])
     fresh = (
         o.filter(F.col("o_orderstatus") == "O")
-        .withColumn(
-            "price", (F.round(F.col("price") * 100).cast("long") * 11)
-        )
+        .withColumn("price", cents(F.col("price")) * 11)
         .withColumn("price", F.expr("CAST(price DIV 10 AS DOUBLE) / 100"))
     )
     tbl.write_dynamic_partition_overwrite(fresh, ["o_orderstatus"])

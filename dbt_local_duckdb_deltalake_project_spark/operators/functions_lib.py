@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import sql, t
+from ..functions.deterministic import sql_cents
 from .registry import register
 
 
@@ -869,9 +870,9 @@ def fn_base64(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nesting level per derived column.
 # ---------------------------------------------------------------------------
 
-_LATERAL_ALIAS_TEXT = """
+_LATERAL_ALIAS_TEXT = f"""
 SELECT o_orderkey,
-       CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+       {sql_cents("o_totalprice")} AS cents,
        cents - cents % 100 AS whole_dollar_c,
        cents % 100 AS rem_c,
        whole_dollar_c + rem_c AS recombined_c

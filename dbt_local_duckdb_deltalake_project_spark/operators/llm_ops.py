@@ -22,7 +22,14 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import micros, sql_micros
+from ..functions.deterministic import (
+    cents,
+    ln_micros,
+    micros,
+    sql_cents,
+    sql_ln_micros,
+    sql_micros,
+)
 from .registry import register
 
 DEC12 = "decimal(38,12)"
@@ -2888,7 +2895,7 @@ tot AS (SELECT COUNT(*) AS n FROM tok),
 vocab AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
 q AS (
   SELECT w,
-         {sql_micros("ROUND(ln(CAST((SELECT n FROM tot) AS DOUBLE) / c), 9)")} AS nll_m
+         {sql_ln_micros("CAST((SELECT n FROM tot) AS DOUBLE) / c")} AS nll_m
   FROM vocab
 )
 SELECT t.doc_id,
@@ -2923,7 +2930,7 @@ def llm_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     q = vocab.crossJoin(F.broadcast(tot)).select(
         "w",
-        micros(F.round(F.log(F.col("n").cast("double") / F.col("c")), 9))
+        ln_micros(F.col("n").cast("double") / F.col("c"))
         .alias("nll_m"),
     )
     return (
@@ -3203,11 +3210,11 @@ WITH tok AS (
 ), agg AS (
   SELECT doc_id,
          CAST(SUM(c) AS BIGINT) AS n_tokens,
-         CAST(SUM(c * {sql_micros("ROUND(ln(CAST(c AS DOUBLE)), 9)")}) AS BIGINT) AS s_clnc_m
+         CAST(SUM(c * {sql_ln_micros("CAST(c AS DOUBLE)")}) AS BIGINT) AS s_clnc_m
   FROM cnt GROUP BY doc_id
 )
 SELECT doc_id, n_tokens, s_clnc_m,
-       CAST({sql_micros("ROUND(ln(CAST(n_tokens AS DOUBLE)), 9)")} AS DOUBLE) / 1000000
+       CAST({sql_ln_micros("CAST(n_tokens AS DOUBLE)")} AS DOUBLE) / 1000000
        - CAST(s_clnc_m AS DOUBLE) / 1000000 / CAST(n_tokens AS DOUBLE)
          AS entropy_nats
 FROM agg
@@ -3234,16 +3241,12 @@ def llm_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    q_ln_c = (
-        micros(F.round(F.log(F.col("c").cast("double")), 9))
-    )
+    q_ln_c = ln_micros(F.col("c"))
     agg = cnt.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
         F.sum(F.col("c") * q_ln_c).alias("s_clnc_m"),
     )
-    q_ln_n = (
-        micros(F.round(F.log(F.col("n_tokens").cast("double")), 9))
-    )
+    q_ln_n = ln_micros(F.col("n_tokens"))
     return agg.select(
         "doc_id", "n_tokens", "s_clnc_m",
         (
@@ -4108,13 +4111,12 @@ sizes AS (
 ),
 wt AS (
   SELECT c.w,
-         {sql_micros(
-             "ROUND(ln((COALESCE(t.c_t, 0) + 1.0) / ((SELECT n_t FROM "
-             "sizes) + (SELECT v FROM sizes))), 9)"
+         {sql_ln_micros(
+             "(COALESCE(t.c_t, 0) + 1.0)"
+             " / ((SELECT n_t FROM sizes) + (SELECT v FROM sizes))"
          )}
-         - {sql_micros(
-             "ROUND(ln((c.c_a + 1.0) / ((SELECT n_a FROM sizes) + "
-             "(SELECT v FROM sizes))), 9)"
+         - {sql_ln_micros(
+             "(c.c_a + 1.0) / ((SELECT n_a FROM sizes) + (SELECT v FROM sizes))"
          )} AS lr_m
   FROM corpus c LEFT JOIN tgt t ON t.w = c.w
 ),
@@ -4169,24 +4171,19 @@ def llm_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("w").alias("v"),
     )
 
-    def _logm(num, den):
-        return (
-            micros(F.round(F.log(num / den), 9))
-        )
-
     wt = (
         corpus.join(tgt, "w", "left")
         .crossJoin(F.broadcast(sizes))
         .select(
             "w",
             (
-                _logm(
-                    (F.coalesce("c_t", F.lit(0)) + F.lit(1.0)),
-                    (F.col("n_t") + F.col("v")).cast("double"),
+                ln_micros(
+                    (F.coalesce("c_t", F.lit(0)) + F.lit(1.0))
+                    / (F.col("n_t") + F.col("v")).cast("double")
                 )
-                - _logm(
-                    (F.col("c_a") + F.lit(1.0)),
-                    (F.col("n_a") + F.col("v")).cast("double"),
+                - ln_micros(
+                    (F.col("c_a") + F.lit(1.0))
+                    / (F.col("n_a") + F.col("v")).cast("double")
                 )
             ).alias("lr_m"),
         )
@@ -4811,7 +4808,7 @@ c1 AS (
 ),
 q AS (
   SELECT c2.w1, c2.w2,
-         {sql_micros("ROUND(ln(CAST(c1.c AS DOUBLE) / c2.c), 9)")} AS nll_m
+         {sql_ln_micros("CAST(c1.c AS DOUBLE) / c2.c")} AS nll_m
   FROM c2 JOIN c1 USING (w1)
 )
 SELECT b.doc_id,
@@ -4852,7 +4849,7 @@ def llm_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = c2.join(c1, "w1").select(
         "w1",
         "w2",
-        micros(F.round(F.log(F.col("c1").cast("double") / F.col("c")), 9))
+        ln_micros(F.col("c1").cast("double") / F.col("c"))
         .alias("nll_m"),
     )
     return (
@@ -5433,7 +5430,7 @@ vocab AS (
 ),
 q AS (
   SELECT w,
-         {sql_micros("ROUND(ln(CAST((SELECT n FROM tot) AS DOUBLE) / c), 9)")} AS nll_m
+         {sql_ln_micros("CAST((SELECT n FROM tot) AS DOUBLE) / c")} AS nll_m
   FROM vocab
 ),
 scored AS (
@@ -5484,7 +5481,7 @@ def llm_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     q = vocab.crossJoin(F.broadcast(tot)).select(
         "w",
-        micros(F.round(F.log(F.col("n").cast("double") / F.col("c")), 9))
+        ln_micros(F.col("n").cast("double") / F.col("c"))
         .alias("nll_m"),
     )
     scored = (
@@ -6091,7 +6088,7 @@ WITH scored AS (
   SELECT user_id, event_id,
          CAST(('0x' || substr(md5('p:' || CAST(event_id AS VARCHAR)), 1, 8))
               AS BIGINT) % 1000000 AS pred_ppm,
-         CAST(ROUND(value * 100) AS BIGINT) % 4 AS grade
+         {sql_cents("value")} % 4 AS grade
   FROM events
 ),
 ranked AS (
@@ -6163,7 +6160,7 @@ def llm_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long")
             % 1_000_000
         ).alias("pred_ppm"),
-        (F.round(F.col("value") * 100).cast("long") % 4).alias("grade"),
+        (cents(F.col("value")) % 4).alias("grade"),
     )
 
     def fold(ordered: DataFrame, out: str) -> DataFrame:
@@ -7710,9 +7707,9 @@ def llm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distribution-free keep-probabilities from raw classifier scores.
 # ---------------------------------------------------------------------------
 
-_ISOTONIC_ORACLE = """
+_ISOTONIC_ORACLE = f"""
 WITH ev AS (
-  SELECT CAST(ROUND(value * 100) AS BIGINT) AS cents,
+  SELECT {sql_cents("value")} AS cents,
          CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
   FROM events
 ),
@@ -7769,7 +7766,7 @@ def llm_calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     iso_ppm guaranteed nondecreasing in bin (tested).
     """
     ev = t(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
     b = (
@@ -8650,8 +8647,8 @@ ranked AS (
   FROM vocab
 ),
 head AS (
-  SELECT {sql_micros("ROUND(ln(CAST(rnk AS DOUBLE)), 9)")} AS x,
-         {sql_micros("ROUND(ln(CAST(freq AS DOUBLE)), 9)")} AS y
+  SELECT {sql_ln_micros("CAST(rnk AS DOUBLE)")} AS x,
+         {sql_ln_micros("CAST(freq AS DOUBLE)")} AS y
   FROM ranked WHERE rnk <= 1024
 ),
 m AS (
@@ -8734,11 +8731,8 @@ def agg_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = local.join(F.broadcast(offsets), "pid").select(
         "w", "freq", (F.col("lrn") + F.col("off")).alias("rnk")
     )
-    mic = lambda c: (  # noqa: E731 — 9-dp-round micros quantization
-        micros(F.round(F.log(c.cast("double")), 9))
-    )
     head = ranked.filter(F.col("rnk") <= 1024).select(
-        mic(F.col("rnk")).alias("x"), mic(F.col("freq")).alias("y")
+        ln_micros(F.col("rnk")).alias("x"), ln_micros(F.col("freq")).alias("y")
     )
     dec = "decimal(38,0)"
     m = head.agg(
@@ -9740,10 +9734,10 @@ ln_ AS (SELECT lang, CAST(SUM(c_ab) AS BIGINT) AS n_pairs
         FROM pc GROUP BY lang),
 scored AS (
   SELECT p.lang, p.a, p.b, p.c_ab, la.c_a, lb.c_b, ln_.n_pairs,
-         {sql_micros("ROUND(ln(CAST(p.c_ab AS DOUBLE)), 9)")}
-         + {sql_micros("ROUND(ln(CAST(ln_.n_pairs AS DOUBLE)), 9)")}
-         - {sql_micros("ROUND(ln(CAST(la.c_a AS DOUBLE)), 9)")}
-         - {sql_micros("ROUND(ln(CAST(lb.c_b AS DOUBLE)), 9)")} AS pmi_micros
+         {sql_ln_micros("CAST(p.c_ab AS DOUBLE)")}
+         + {sql_ln_micros("CAST(ln_.n_pairs AS DOUBLE)")}
+         - {sql_ln_micros("CAST(la.c_a AS DOUBLE)")}
+         - {sql_ln_micros("CAST(lb.c_b AS DOUBLE)")} AS pmi_micros
   FROM pc p
   JOIN la ON la.lang = p.lang AND la.a = p.a
   JOIN lb ON lb.lang = p.lang AND lb.b = p.b
@@ -9799,11 +9793,6 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     lb = pc.groupBy("lang", "b").agg(F.sum("c_ab").alias("c_b"))
     ln_ = pc.groupBy("lang").agg(F.sum("c_ab").alias("n_pairs"))
 
-    def lnq(col):
-        return (
-            micros(F.round(F.log(col.cast("double")), 9))
-        )
-
     scored = (
         pc.filter(F.col("c_ab") >= 5)
         .join(la, ["lang", "a"])
@@ -9812,8 +9801,8 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang", "a", "b", "c_ab", "c_a", "c_b", "n_pairs",
             (
-                lnq(F.col("c_ab")) + lnq(F.col("n_pairs"))
-                - lnq(F.col("c_a")) - lnq(F.col("c_b"))
+                ln_micros(F.col("c_ab")) + ln_micros(F.col("n_pairs"))
+                - ln_micros(F.col("c_a")) - ln_micros(F.col("c_b"))
             ).alias("pmi_micros"),
         )
     )
@@ -9877,8 +9866,8 @@ t0 AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot,
               CAST(COUNT(*) AS BIGINT) AS v FROM v0),
 sc0 AS MATERIALIZED (
   SELECT piece,
-         {sql_micros("ROUND(ln(CAST(t0.tot + t0.v AS DOUBLE)), 9)")}
-         - {sql_micros("ROUND(ln(CAST(v0.cnt + 1 AS DOUBLE)), 9)")} AS score
+         {sql_ln_micros("CAST(t0.tot + t0.v AS DOUBLE)")}
+         - {sql_ln_micros("CAST(v0.cnt + 1 AS DOUBLE)")} AS score
   FROM v0, t0
 ),
 m1 AS (
@@ -9909,8 +9898,8 @@ t2 AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot,
               CAST(COUNT(*) AS BIGINT) AS v FROM v2),
 sc2 AS MATERIALIZED (
   SELECT piece,
-         {sql_micros("ROUND(ln(CAST(t2.tot + t2.v AS DOUBLE)), 9)")}
-         - {sql_micros("ROUND(ln(CAST(v2.cnt + 1 AS DOUBLE)), 9)")} AS score
+         {sql_ln_micros("CAST(t2.tot + t2.v AS DOUBLE)")}
+         - {sql_ln_micros("CAST(v2.cnt + 1 AS DOUBLE)")} AS score
   FROM v2, t2
 ),
 m2 AS (
@@ -10074,11 +10063,6 @@ def llm_unigram_lm_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mask",
     )
 
-    def lnq(col):
-        return (
-            micros(F.round(F.log(col.cast("double")), 9))
-        )
-
     def scored(vocab):
         # vocab (piece, cnt) -> (piece, score): -ln p in micros, p
         # Laplace-(+1)-smoothed over the vocab total
@@ -10087,7 +10071,7 @@ def llm_unigram_lm_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return vocab.crossJoin(F.broadcast(tot)).select(
             "piece",
-            (lnq(F.col("tot") + F.col("v")) - lnq(F.col("cnt") + 1)).alias(
+            (ln_micros(F.col("tot") + F.col("v")) - ln_micros(F.col("cnt") + 1)).alias(
                 "score"
             ),
         )
@@ -10356,13 +10340,10 @@ cw AS (SELECT w2, CAST(SUM(c_vw) AS BIGINT) AS c_w FROM pc GROUP BY w2),
 nn AS (SELECT CAST(SUM(c_vw) AS BIGINT) AS n FROM pc),
 terms AS (
   SELECT o.doc_id,
-         {sql_micros(
-             "ROUND(ln(CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n AS "
-             "DOUBLE)), 9)"
-         )}
-         - {sql_micros(
-             "ROUND(ln(CAST(3 * CAST(p.c_vw AS HUGEINT) * nn.n + "
-             "CAST(cw.c_w AS HUGEINT) * cv.c_v AS DOUBLE)), 9)"
+         {sql_ln_micros("CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n AS DOUBLE)")}
+         - {sql_ln_micros(
+             "CAST(3 * CAST(p.c_vw AS HUGEINT) * nn.n"
+             " + CAST(cw.c_w AS HUGEINT) * cv.c_v AS DOUBLE)"
          )} AS nll
   FROM occ o
   JOIN pc p ON p.v = o.v AND p.w2 = o.w2
@@ -10385,7 +10366,7 @@ def llm_ngram_lm_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     with lambda = 3/4, the classic fixed-weight backoff mix. The mixed
     probability is ONE exact integer rational — num = 3*c(vw)*N +
     c(w)*c(v), den = 4*c(v)*N — so each occurrence's -ln P is
-    lnq(den) - lnq(num), two independently micros-quantized logs of
+    ln_micros(den) - ln_micros(num), two independently micros-quantized logs of
     exact integers (the PMI discipline; no float mixing anywhere).
     Products clear int64 at ~1e9-bigram corpora, so they are computed
     in DECIMAL(38,0) Spark-side / HUGEINT in the oracle BEFORE the
@@ -10414,11 +10395,6 @@ def llm_ngram_lm_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     cw = pc.groupBy("w2").agg(F.sum("c_vw").alias("c_w"))
     nn = pc.agg(F.sum("c_vw").alias("n"))
 
-    def lnq(col):
-        return (
-            micros(F.round(F.log(col.cast("double")), 9))
-        )
-
     dec = "decimal(38,0)"
     den = F.lit(4).cast(dec) * F.col("c_v") * F.col("n")
     num = (
@@ -10430,7 +10406,7 @@ def llm_ngram_lm_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cv, "v")
         .join(cw, "w2")
         .crossJoin(F.broadcast(nn))
-        .select("doc_id", (lnq(den) - lnq(num)).alias("nll"))
+        .select("doc_id", (ln_micros(den) - ln_micros(num)).alias("nll"))
     )
     return (
         terms.groupBy("doc_id")
@@ -11192,22 +11168,17 @@ nn AS (
 ),
 terms AS (
   SELECT o.doc_id,
-         {sql_micros(
-             "ROUND(ln(CAST(3 * CAST(p.c_vw AS HUGEINT) * nn.n + "
-             "CAST(cw.c_w AS HUGEINT) * cv.c_v AS DOUBLE)), 9)"
+         {sql_ln_micros(
+             "CAST(3 * CAST(p.c_vw AS HUGEINT) * nn.n"
+             " + CAST(cw.c_w AS HUGEINT) * cv.c_v AS DOUBLE)"
          )}
-         - {sql_micros(
-             "ROUND(ln(CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n AS "
-             "DOUBLE)), 9)"
+         - {sql_ln_micros("CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n AS DOUBLE)")}
+         - {sql_ln_micros(
+             "CAST((4 * CAST(p.c_vw AS HUGEINT) - 3) * nn.n_types"
+             " + 3 * CAST(cv.n1p_left AS HUGEINT) * cw.n1p_right AS DOUBLE)"
          )}
-         - {sql_micros(
-             "ROUND(ln(CAST((4 * CAST(p.c_vw AS HUGEINT) - 3) * "
-             "nn.n_types + 3 * CAST(cv.n1p_left AS HUGEINT) * "
-             "cw.n1p_right AS DOUBLE)), 9)"
-         )}
-         + {sql_micros(
-             "ROUND(ln(CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n_types "
-             "AS DOUBLE)), 9)"
+         + {sql_ln_micros(
+             "CAST(4 * CAST(cv.c_v AS HUGEINT) * nn.n_types AS DOUBLE)"
          )} AS klt
   FROM occ o
   JOIN pc p ON p.v = o.v AND p.w2 = o.w2
@@ -11259,11 +11230,6 @@ def llm_policy_kl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_vw").alias("n"), F.count(F.lit(1)).alias("n_types")
     )
 
-    def lnq(col):
-        return (
-            micros(F.round(F.log(col.cast("double")), 9))
-        )
-
     dec = "decimal(38,0)"
     num_jm = (
         F.lit(3).cast(dec) * F.col("c_vw") * F.col("n")
@@ -11283,7 +11249,8 @@ def llm_policy_kl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (
-                lnq(num_jm) - lnq(den_jm) - lnq(num_kn) + lnq(den_kn)
+                ln_micros(num_jm) - ln_micros(den_jm)
+                - ln_micros(num_kn) + ln_micros(den_kn)
             ).alias("klt"),
         )
     )
@@ -11837,8 +11804,8 @@ def llm_nucleus_sampling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the 8 nested doc_id ranges doc_id*8 <= max_doc_id*k (pure integer
 # membership test — no division, so both engines draw identical
 # prefixes); the loss proxy is the prefix's own unigram-LM mean token
-# NLL (micros): y_k = Sigma_w c_w*(lnq(T_k) - lnq(c_w)) div T_k with
-# the house 9-dp-round micros log quantization, x_k = lnq(T_k). The
+# NLL (micros): y_k = Sigma_w c_w*(ln_micros(T_k) - ln_micros(c_w)) div T_k with
+# the house 9-dp-round micros log quantization, x_k = ln_micros(T_k). The
 # 8-point OLS uses the agg_ols_normal_equations discipline (decimal-
 # widened moments, signed pmod-floor micros coefficients). Plan at
 # 100 TB: the k-membership explode is a bounded x8 map-side blowup,
@@ -11871,10 +11838,10 @@ tkt AS (
 ),
 pts AS (
   SELECT c.k, t.t_k,
-         {sql_micros("ROUND(ln(CAST(t.t_k AS DOUBLE)), 9)")} AS x_micros,
+         {sql_ln_micros("CAST(t.t_k AS DOUBLE)")} AS x_micros,
          CAST(CAST(SUM(CAST(c.c AS HUGEINT) *
-           ({sql_micros("ROUND(ln(CAST(t.t_k AS DOUBLE)), 9)")}
-            - {sql_micros("ROUND(ln(CAST(c.c AS DOUBLE)), 9)")})) AS HUGEINT) // t.t_k AS BIGINT)
+           ({sql_ln_micros("CAST(t.t_k AS DOUBLE)")}
+            - {sql_ln_micros("CAST(c.c AS DOUBLE)")})) AS HUGEINT) // t.t_k AS BIGINT)
            AS y_micros
   FROM cnt c JOIN tkt t ON t.k = c.k
   GROUP BY c.k, t.t_k
@@ -11931,11 +11898,6 @@ def llm_scaling_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = member.groupBy("k", "w").agg(F.count(F.lit(1)).alias("c"))
     tkt = cnt.groupBy("k").agg(F.sum("c").alias("t_k"))
 
-    def lnq(col):
-        return (
-            micros(F.round(F.log(col.cast("double")), 9))
-        )
-
     dec = "decimal(38,0)"
     pts = (
         cnt.join(tkt, "k")
@@ -11943,13 +11905,13 @@ def llm_scaling_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.col("c").cast(dec)
-                * (lnq(F.col("t_k")) - lnq(F.col("c")))
+                * (ln_micros(F.col("t_k")) - ln_micros(F.col("c")))
             ).alias("terms")
         )
         .select(
             "k",
             "t_k",
-            lnq(F.col("t_k")).alias("x_micros"),
+            ln_micros(F.col("t_k")).alias("x_micros"),
             F.expr("CAST(terms div t_k AS LONG)").alias("y_micros"),
         )
     )

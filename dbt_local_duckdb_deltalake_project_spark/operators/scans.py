@@ -13,7 +13,14 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import dsum, micros, sql_dsum, sql_micros
+from ..functions.deterministic import (
+    cents,
+    dsum,
+    micros,
+    sql_cents,
+    sql_dsum,
+    sql_micros,
+)
 from ..sources.workspace import workdir
 from .registry import register
 
@@ -623,10 +630,10 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CSV_SINK_ORACLE = """
+_CSV_SINK_ORACLE = f"""
 SELECT c_mktsegment, COUNT(*) AS n_rows,
        CAST(SUM(c_custkey) AS BIGINT) AS key_checksum,
-       CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_cents("c_acctbal")}) AS BIGINT)
          AS bal_checksum_c
 FROM customer
 GROUP BY c_mktsegment
@@ -660,9 +667,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("c_custkey").alias("key_checksum"),
-            F.sum(
-                F.round(F.col("c_acctbal") * 100).cast("long")
-            ).alias("bal_checksum_c"),
+            F.sum(cents(F.col("c_acctbal"))).alias("bal_checksum_c"),
         )
         .orderBy("c_mktsegment")
     )

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import t
-from ..functions.deterministic import micros, sql_micros
+from ..functions.deterministic import cents, micros, sql_cents, sql_micros
 from .registry import register
 
 
@@ -279,10 +279,10 @@ def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ITER_UDF_ORACLE = """
+_ITER_UDF_ORACLE = f"""
 SELECT event_type,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)
+       CAST(SUM({sql_cents("value")}
                 * (CASE event_type
                      WHEN 'purchase' THEN 5 WHEN 'click' THEN 3
                      WHEN 'view' THEN 2 ELSE 1 END)) AS BIGINT)
@@ -333,7 +333,7 @@ def udf_pandas_scalar_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         score(
             F.col("event_type"),
-            F.round(F.col("value") * 100).cast("long"),
+            cents(F.col("value")),
         ).alias("s"),
     )
     return (
@@ -449,11 +449,11 @@ def udf_python_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udf_pandas_window_agg",
-    """
+    f"""
     SELECT o_orderkey,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) OVER w3
+           CAST(SUM({sql_cents("o_totalprice")}) OVER w3
                 AS DOUBLE) / (100 * COUNT(*) OVER w3) AS roll3_avg,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) OVER wrun
+           CAST(SUM({sql_cents("o_totalprice")}) OVER wrun
                 AS DOUBLE) / (100 * COUNT(*) OVER wrun) AS run_avg
     FROM orders
     WHERE o_custkey % 100 = 0
@@ -473,8 +473,9 @@ def udf_pandas_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark ships each frame's slice to the Python worker as an Arrow
     batch per partition; the frame bounds are enforced JVM-side, so the
     UDAF body sees exactly the SQL-defined window. Determinism is the
-    house rule inside Python: cents as exact int64, one float division
-    written token-for-token like the oracle's (SUM cents AS DOUBLE) /
+    house rule inside Python: cents as exact int64 (deterministic.py's
+    FLOOR(x*100 + 0.5), spelled in numpy), one float division written
+    token-for-token like the oracle's (SUM cents AS DOUBLE) /
     (100 * COUNT) — bit-identical IEEE ops on bit-identical integers.
     The (o_orderdate, o_orderkey) ordering makes every frame unique, and
     the window partitions by o_custkey. COST MODEL (measured sf0.1):
@@ -490,7 +491,9 @@ def udf_pandas_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf(T.DoubleType())
     def cents_mean(v: pd.Series) -> float:
-        cents = (v * 100).round().astype("int64")
+        import numpy as np
+
+        cents = np.floor(v.to_numpy() * 100 + 0.5).astype(np.int64)
         return float(int(cents.sum())) / (100 * len(cents))
 
     o = t(spark, sf_dir, "orders").filter(F.col("o_custkey") % 100 == 0)

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import t
-from ..functions.deterministic import micros, sql_micros
+from ..functions.deterministic import cents, micros, sql_cents, sql_micros
 from .registry import register
 
 
@@ -302,10 +302,10 @@ def win_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZSCORE_ORACLE = """
+_ZSCORE_ORACLE = f"""
 WITH v AS (
   SELECT event_id, user_id, ts,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 w AS (
@@ -359,7 +359,7 @@ def win_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     win = (
         W.partitionBy("user_id")
@@ -584,7 +584,7 @@ _EWMA_W = [4**k * 5 ** (9 - k) for k in range(10)]
 _EWMA_ORACLE = f"""
 WITH x AS (
   SELECT user_id, event_id,
-         CAST(ROUND(value * 100) AS BIGINT) AS v_c
+         {sql_cents("value")} AS v_c
   FROM events
 ), l AS (
   SELECT user_id, event_id, v_c,
@@ -617,7 +617,7 @@ def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = t(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("event_id")
-    v = F.round(F.col("value") * 100).cast("long")
+    v = cents(F.col("value"))
     x = e.select("user_id", "event_id", v.alias("v_c"))
     lags = [F.col("v_c")] + [
         F.lag("v_c", k).over(w) for k in range(1, 10)
@@ -904,11 +904,11 @@ def win_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_YOY_ORACLE = """
+_YOY_ORACLE = f"""
 WITH yearly AS (
   SELECT o_orderpriority,
          CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
-         CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         CAST(SUM({sql_cents("o_totalprice")}) AS BIGINT)
            AS rev_c
   FROM orders GROUP BY o_orderpriority, EXTRACT(year FROM o_orderdate)
 )
@@ -946,9 +946,7 @@ def win_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     yearly = o.groupBy(
         "o_orderpriority", F.year("o_orderdate").cast("long").alias("yr")
     ).agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100).cast("long")
-        ).alias("rev_c")
+        F.sum(cents(F.col("o_totalprice"))).alias("rev_c")
     )
     w = W.partitionBy("o_orderpriority").orderBy("yr")
     prev = F.lag("rev_c").over(w)
@@ -1143,10 +1141,10 @@ def win_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLMED_ORACLE = """
+_ROLLMED_ORACLE = f"""
 WITH v AS (
   SELECT event_id, user_id, ts,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 )
 SELECT event_id, user_id,
@@ -1179,7 +1177,7 @@ def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     ow = W.partitionBy("user_id").orderBy("ts", "event_id")
     arr = F.array_sort(
@@ -1201,10 +1199,10 @@ def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANOMALY_MAD_ORACLE = """
+_ANOMALY_MAD_ORACLE = f"""
 WITH v AS (
   SELECT event_id, user_id, ts,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 w AS (
@@ -1248,7 +1246,7 @@ def win_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        (F.round(F.col("value") * 100).cast("long") * 2).alias("c2"),
+        (cents(F.col("value")) * 2).alias("c2"),
     )
     ow = W.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = v.select(
@@ -1311,12 +1309,12 @@ def win_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 # key — the window shuffle IS the rollup shuffle, nothing global.
 # ---------------------------------------------------------------------------
 
-_OHLC_ORACLE = """
+_OHLC_ORACLE = f"""
 WITH v AS (
   SELECT user_id,
          CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
          ts, event_id,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 r AS (
@@ -1349,7 +1347,7 @@ def win_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", F.col("ts")).alias("day"),
         "ts",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     pw = W.partitionBy("user_id", "day")
     r = v.select(
@@ -1395,10 +1393,10 @@ def win_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-user drift rate.
 # ---------------------------------------------------------------------------
 
-_CUSUM_ORACLE = """
+_CUSUM_ORACLE = f"""
 WITH v AS (
   SELECT user_id, event_id, ts,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents
+         {sql_cents("value")} AS cents
   FROM events
 ),
 g1 AS (
@@ -1442,7 +1440,7 @@ def win_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     g1 = v.groupBy("user_id").agg(
         F.expr("sum(cents) div count(*)").alias("mu0")
@@ -1492,10 +1490,10 @@ def win_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLING_CORR_ORACLE = """
+_ROLLING_CORR_ORACLE = f"""
 WITH v AS (
   SELECT event_id, user_id, ts,
-         CAST(ROUND(value * 100) AS BIGINT) AS x,
+         {sql_cents("value")} AS x,
          epoch_us(ts) // 1000000 - 1704000000 AS y
   FROM events
 ),
@@ -1551,7 +1549,7 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("x"),
+        cents(F.col("value")).alias("x"),
         (F.expr("unix_micros(ts) div 1000000") - F.lit(1_704_000_000))
         .cast("long")
         .alias("y"),
@@ -1600,11 +1598,11 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "event_id")
 
 
-_THEIL_SEN_ORACLE = """
+_THEIL_SEN_ORACLE = f"""
 WITH daily AS (
   SELECT user_id,
          date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
   FROM events GROUP BY user_id, date_diff('day', DATE '2024-01-01',
                                           CAST(ts AS DATE))
 ),
@@ -1648,7 +1646,7 @@ def win_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("day"),
         )
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+            F.sum(cents(F.col("value"))).alias("cents")
         )
     )
     a = daily.select(
@@ -1679,11 +1677,11 @@ def win_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEASONAL_ORACLE = """
+_SEASONAL_ORACLE = f"""
 WITH daily AS (
   SELECT event_type,
          date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(SUM({sql_cents("value")}) AS BIGINT) AS cents
   FROM events GROUP BY event_type, date_diff('day', DATE '2024-01-01',
                                              CAST(ts AS DATE))
 ),
@@ -1756,7 +1754,7 @@ def win_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("day"),
         )
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+            F.sum(cents(F.col("value"))).alias("cents")
         )
     )
     w = W.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
@@ -1807,10 +1805,10 @@ def win_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ATTRIBUTION_ORACLE = """
+_ATTRIBUTION_ORACLE = f"""
 WITH e AS (
   SELECT event_id, user_id, event_type, ts,
-         CAST(ROUND(value * 100) AS BIGINT) AS cents,
+         {sql_cents("value")} AS cents,
          CASE WHEN event_type = 'click' THEN event_id END AS click_id
   FROM events
 ),
@@ -1859,7 +1857,7 @@ def win_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_type",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
         F.when(F.col("event_type") == "click", F.col("event_id")).alias(
             "click_id"
         ),

@@ -1,9 +1,9 @@
-"""The exact-money encoding of functions/deterministic.py, JVM-free.
+"""The exact-money encodings of functions/deterministic.py, JVM-free.
 
-``sql_micros`` (run by DuckDB here) and a float mirror of ``micros``'
-Spark expression must both return the exact micros of every ≤6-dp
-money value within the documented per-row bound, and no operator
-module may spell the encoding itself.
+``sql_micros`` / ``sql_cents`` (run by DuckDB here) and float mirrors
+of ``micros``' and ``cents``' Spark expressions must return the exact
+micros (cents) of every ≤6-dp (2-dp) money value within the documented
+per-row bound, and no operator module may spell an encoding itself.
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
 from dbt_local_duckdb_deltalake_project_spark.functions.deterministic import (
+    sql_cents,
     sql_micros,
 )
 
@@ -53,6 +54,20 @@ def test_micros_are_exact_in_duckdb_and_the_spark_float_chain(factors):
     assert _CON.execute(_SQL, [a, b, c]).fetchone()[0] == want
 
 
+# one 2-dp value of either sign, in cents, within the per-row bound
+# |x| <= 10^10 that deterministic.py documents for cents
+_CENTS_SQL = f"SELECT {sql_cents('x')} FROM (SELECT ?::DOUBLE x)"
+
+
+@settings(max_examples=400, deadline=None, derandomize=True)
+@given(st.integers(min_value=-10**12, max_value=10**12))
+def test_cents_are_exact_in_duckdb_and_the_spark_float_chain(c):
+    x = float(Decimal(c).scaleb(-2))
+    # Spark: floor(x * 100.0 + 0.5)
+    assert math.floor(x * 100.0 + 0.5) == c
+    assert _CON.execute(_CENTS_SQL, [x]).fetchone()[0] == c
+
+
 def _calls(text: str, opener: str):
     """(start offset, argument text) of each ``opener(`` call."""
     for m in re.finditer(opener + r"\(", text):
@@ -69,9 +84,16 @@ def test_no_operator_spells_the_money_encoding():
     for path in sorted(_OPS.glob("*.py")):
         text = path.read_text()
         line = lambda pos: f"{path.name}:{text.count(chr(10), 0, pos) + 1}"  # noqa: E731
-        # ROUND(x * 1000000) in SQL, F.round(x * 1e6) in Spark
+        # ROUND(x * 100 | 1000000) in SQL, F.round(x * 100 | 1e6) in Spark
         for pos, arg in _calls(text, r"(?i)\bround"):
-            if re.search(r"\*\s*(1000000|1_000_000|1e6)(\.0)?\s*$", arg):
+            if re.search(r"\*\s*(100|1000000|1_000_000|1e6)(\.0)?\s*$", arg):
+                forms.append(line(pos))
+        # micros of a hand-rounded log, in Spark and in SQL
+        for pos, arg in _calls(text, r"\bmicros"):
+            if re.match(r"\s*F\.round\(\s*F\.log\(", arg):
+                forms.append(line(pos))
+        for pos, arg in _calls(text, r"\bsql_micros"):
+            if re.match(r"""(?i)\s*f?["']\s*ROUND\(\s*ln\(""", arg):
                 forms.append(line(pos))
         # the TPC-H DECIMAL(18,6) micros constants
         forms += [line(m.start()) for m in re.finditer(r"(?i)decimal\(18,\s*6\)", text)]
